@@ -23,8 +23,8 @@ def entry(spark: SparkSession) -> DataFrame:
     Derives a transcripts table (conv_id, turn_idx, role, text, tool,
     ts) from sf0.001 documents with planted gazetteer mentions, builds
     the chennai gazetteer + broadcast match structure, runs the fused
-    extraction stage, links + canonicalizes, and returns the
-    (subj, pred, obj) mention triples.
+    extraction stage, links each mention through the best-per-norm
+    lookup, and returns the (subj, pred, obj) mention triples.
     """
     from lnex_spark.data import fixtures as FX
     from lnex_spark.data.derive import transcripts_from_documents

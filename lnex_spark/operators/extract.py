@@ -20,7 +20,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import re
 from typing import Iterator
 
 import pandas as pd
@@ -34,64 +33,15 @@ MENTIONS_SCHEMA = (
 )
 
 
-def candidate_prefilter(transcripts: DataFrame, struct) -> DataFrame:
-    """JVM-side candidate gate: keep only turns that can possibly
-    contain a mention — a token equal to some variant's FIRST token
-    (every match starts with one, by construction of the prefix set),
-    or a hashtag (segmentation can surface a name from any '#...').
-
-    MEASURED TRADE-OFF (sf0.1-derived bench, 300-entry gazetteer): the
-    literal-array arrays_overlap form costs O(tokens x first_tokens)
-    string compares per row — 5x SLOWER than just running the Python
-    matcher on everything. It pays only when the candidate rate is low
-    AND the filter is cheap, i.e. as a broadcast semi-join on exploded
-    tokens (hash probe per token, not a scan) — that is the form to use
-    on a real cluster with a big gazetteer. Left available but OFF by
-    default (see extract_mentions_df).
-    """
-    first_tokens = sorted({p for p in struct.prefixes if " " not in p})
-    toks = F.split(F.lower(F.col("text")), r"[^a-z0-9']+")
-    cond = F.arrays_overlap(toks, F.array(*[F.lit(t) for t in first_tokens]))
-    cond = cond | F.col("text").contains("#")
-    return transcripts.filter(cond)
-
-
-def extract_mentions_df(
-    transcripts: DataFrame, bc_struct, prefilter: bool = False, batch_gate: bool = False
-) -> DataFrame:
+def extract_mentions_df(transcripts: DataFrame, bc_struct) -> DataFrame:
     """transcripts(conv_id, turn_idx, ..., text) → mentions(conv_id,
-    turn_idx, start, end, surface, norm); text[start:end] == surface.
-
-    ``batch_gate``: before the per-row Python matcher, one vectorized
-    pandas ``str.contains`` pass per Arrow batch drops rows with no
-    gazetteer first-token substring and no '#'. Substring match (no
-    word boundaries) is a strict SUPERSET of token-level matches, so
-    skipped rows are provably mention-free; kept rows still go through
-    the exact matcher (A/B at sf0.1: identical outputs). MEASURED
-    TRADE-OFF: neutral at city-scale gazetteers — Python's re
-    alternation over ~300 first tokens costs about what the matcher's
-    own cheap unigram gate costs on a mention-free row — and re's
-    alternation degrades linearly with gazetteer size, so the gate is
-    OFF by default, same verdict as the JVM-side candidate_prefilter
-    above. It pays only if swapped for an Aho-Corasick scanner
-    (pyahocorasick) on a cluster where that wheel is available."""
-    if prefilter:
-        transcripts = candidate_prefilter(transcripts, bc_struct.value)
-
-    first_tokens = sorted({p for p in bc_struct.value.prefixes if " " not in p})
-    gate_pattern = (
-        "#|" + "|".join(re.escape(t) for t in first_tokens) if first_tokens else "#"
-    )
+    turn_idx, start, end, surface, norm); text[start:end] == surface."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         struct = bc_struct.value
         segmenter = HashtagSegmenter(struct.unigram)
         full, pref, mx = struct.full_names, struct.prefixes, struct.max_tokens
-        gate_rx = re.compile(gate_pattern) if batch_gate else None
         for pdf in batches:
-            if gate_rx is not None and len(pdf):
-                mask = pdf["text"].str.lower().str.contains(gate_rx, regex=True, na=False)
-                pdf = pdf[mask.values]
             out_conv, out_turn, out_s, out_e, out_surf, out_norm = [], [], [], [], [], []
             for conv_id, turn_idx, text in zip(
                 pdf["conv_id"].values, pdf["turn_idx"].values, pdf["text"].values

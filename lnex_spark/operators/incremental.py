@@ -24,6 +24,11 @@ the from-scratch result (asserted by tests/test_incremental.py).
 At cluster scale the vote table is a single small partitioned table
 merged with one keyed aggregation per batch; the rewrite is the same
 broadcast join as apply_canonical.
+
+Like link.canonicalize, these are the reference chain: with a
+context-free L2 (see pipeline.py) the vote is the identity and the KG
+build paths link through GazetteerModel.best instead. perfbench's
+kg_incremental workload drives them.
 """
 
 from __future__ import annotations

@@ -9,9 +9,12 @@ of physical partitioning, and aligned with an Iceberg
 Protocol:
   1. plan: all bucket ids minus the manifest's completed buckets
      (a broadcast anti-join at planning time);
-  2. run: process remaining buckets, write triples partitioned by
-     bucket, then append (bucket, n_turns, n_mentions, n_triples,
-     wall_ms, batch_id) rows to the manifest;
+  2. run: process remaining buckets, write linked mentions
+     partitioned by bucket, then append one (bucket, n_turns,
+     n_mentions, wall_ms, batch_id) row per bucket to the manifest —
+     the bucket's own counts, and the wall time of the batch that
+     wrote it (older manifests also carry an n_triples column; only
+     ``bucket`` is read back);
   3. a killed job reruns step 1 and skips finished buckets; bucket
      output is overwritten atomically per-partition → idempotent.
 """
@@ -23,9 +26,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MANIFEST_SCHEMA = (
-    "bucket int, n_turns long, n_mentions long, n_triples long, wall_ms long, batch_id string"
-)
+MANIFEST_SCHEMA = "bucket int, n_turns long, n_mentions long, wall_ms long, batch_id string"
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -65,7 +66,7 @@ def pending_buckets(spark: SparkSession, manifest_path: str, n_buckets: int) -> 
 def record_buckets(
     spark: SparkSession,
     manifest_path: str,
-    rows: list[tuple[int, int, int, int, int, str]],
+    rows: list[tuple[int, int, int, int, str]],
 ) -> None:
     if rows:
         spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(manifest_path)

@@ -1,17 +1,19 @@
-"""Entity linking, candidate scoring, canonicalization (L1, L2, L3).
+"""Entity linking (L1-L3), all relational built-ins.
 
 Reference behavior: LNEx returns the full candidate geo-id set per
 mention (a dict lookup at match time ≙ a broadcast hash equi-join);
-the scoring/canonicalization layer is the KG mandate on top (SURVEY.md
-§2A L2/L3). All relational, all built-ins:
+scoring and canonicalization are the KG mandate on top (SURVEY.md §2A
+L2/L3). The L2 score (match_type desc, cat_priority asc, geo_id asc)
+reads only the variant row, so the KG build paths link through one
+lookup, ``best_by_norm`` (the L2 winner per norm, built once per
+gazetteer model): ``link_mentions(mentions, best)`` is one broadcast
+join, no shuffle.
 
-  L1  mentions ⋈ broadcast(variants) on norm     — broadcast hash join,
-      zero shuffle (gazetteer ≪ transcripts, the defining asymmetry)
-  L2  row_number over (mention) ordered by the deterministic score
-      (match_type desc, cat_priority asc, geo_id asc)
-  L3  two-stage hash agg: votes per (norm, geo_id) → majority winner
-      per norm (count desc, geo_id asc) — tiny shuffle (distinct
-      surface forms, not turns)
+The per-mention reference chain — ``link_mentions`` over all variants
+(L1), ``score_candidates`` (L2), ``canonicalize`` + ``apply_canonical``
+(L3 corpus vote, the identity on context-free L2 output) — serves the
+§2A SQL-twin oracles, perfbench's traced and incremental paths, and the
+differential test that pins the lookup to it (tests/test_link_lookup.py).
 """
 
 from __future__ import annotations
@@ -19,50 +21,65 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_CANDIDATE_COLS = ("norm", "geo_id", "match_type", "cat_priority", "category", "region")
+
+
+def _top1_by(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Best row per ``keys`` group, all columns kept, under the L2
+    linking policy — the one place it is written: match_type desc,
+    cat_priority asc, geo_id asc. The key is unique per candidate of a
+    norm (geo_id), so the pick is deterministic."""
+    cols = df.columns
+    l2_key = F.struct(
+        (-F.col("match_type")).alias("mt"),
+        F.col("cat_priority").alias("cp"),
+        F.col("geo_id").alias("g"),
+    )
+    picked = df.groupBy(*keys).agg(
+        F.min_by(F.struct(*[F.col(c) for c in cols]), l2_key).alias("_best")
+    )
+    return picked.select(*[F.col(f"_best.{c}").alias(c) for c in cols])
+
+
+def best_by_norm(variants: DataFrame) -> DataFrame:
+    """The L2 winner of every normalized name: (norm, geo_id,
+    match_type, cat_priority, category, region), one row per norm."""
+    return _top1_by(variants.select(*_CANDIDATE_COLS), ["norm"])
+
 
 def link_mentions(
     mentions: DataFrame, variants: DataFrame, hint_broadcast: bool = True
 ) -> DataFrame:
-    """L1: surface form → candidate geo entities (broadcast hash join).
+    """L1: surface form → gazetteer candidates (broadcast hash join):
+    every candidate per mention against the variant table, the linked
+    mention itself against ``best_by_norm``.
 
     ``hint_broadcast=False`` drops the hint for the planet-scale case
     where the gazetteer exceeds broadcast limits — Catalyst then picks
-    sort-merge, and results are identical (plan-invariance is tested in
-    tests/test_scale_fallbacks.py)."""
-    gaz = variants.select("norm", "geo_id", "match_type", "cat_priority", "category", "region")
+    sort-merge, and results are identical
+    (plan-invariance is tested in tests/test_scale_fallbacks.py)."""
+    gaz = variants.select(*_CANDIDATE_COLS)
     if hint_broadcast:
         gaz = F.broadcast(gaz)
     return mentions.join(gaz, on="norm", how="inner")
 
 
 def score_candidates(linked: DataFrame) -> DataFrame:
-    """L2: keep the best candidate per mention span, deterministically
-    — order (match_type desc, cat_priority asc, geo_id asc).
+    """L2 reference: keep the best candidate per mention span under the
+    same key as ``best_by_norm``.
 
     Top-1-per-group is an AGGREGATION (min_by over a sort-key struct),
-    not a ranking window, on purpose: windows get no map-side partial
-    aggregation, so a window would shuffle every candidate row; the
-    agg form combines candidates within each map partition and
-    shuffles ~one row per mention — at 10^12 turns that is the
-    difference between shuffling all L1 output and shuffling the
-    mention set. The key struct is unique per candidate (geo_id), so
-    the result is deterministic and identical to the window form
+    not a ranking window: windows get no map-side partial aggregation,
+    so a window would shuffle every candidate row; the agg form
+    combines candidates within each map partition and shuffles ~one
+    row per mention. The result is identical to the window form
     (asserted by the kg_e2e_sql / flagship oracles)."""
-    cols = linked.columns
-    sort_key = F.struct(
-        (-F.col("match_type")).alias("mt"),
-        F.col("cat_priority").alias("cp"),
-        F.col("geo_id").alias("g"),
-    )
-    picked = linked.groupBy("conv_id", "turn_idx", "start", "end").agg(
-        F.min_by(F.struct(*[F.col(c) for c in cols]), sort_key).alias("_best")
-    )
-    return picked.select(*[F.col(f"_best.{c}").alias(c) for c in cols])
+    return _top1_by(linked, ["conv_id", "turn_idx", "start", "end"])
 
 
 def canonicalize(winners: DataFrame) -> DataFrame:
-    """L3: one geo entity per normalized surface form, corpus-wide
-    majority vote over L2 winners (ties → smaller geo_id).
+    """L3 reference: one geo entity per normalized surface form,
+    corpus-wide majority vote over L2 winners (ties → smaller geo_id).
 
     Two hash aggregations, both partial+final (same agg-over-window
     rationale as score_candidates): vote counting keyed by
@@ -77,7 +94,8 @@ def canonicalize(winners: DataFrame) -> DataFrame:
 
 
 def apply_canonical(winners: DataFrame, canon: DataFrame) -> DataFrame:
-    """Rewrite every mention to its surface form's canonical entity."""
+    """L3 reference: rewrite every mention to its surface form's
+    canonical entity."""
     return (
         winners.join(F.broadcast(canon), on="norm", how="inner")
         .drop("geo_id")

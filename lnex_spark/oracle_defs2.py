@@ -397,11 +397,12 @@ def compat_extract_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload aggregated per doc — same multiset ⟺ same spans."""
     from lnex_spark import compat
     from lnex_spark.gazetteer.build import build_match_struct, build_unigram_lm
+    from lnex_spark.operators.link import best_by_norm
     from lnex_spark.pipeline import GazetteerModel
 
     variants = _oracle_variants(spark)
     bc = build_match_struct(spark, variants, build_unigram_lm(variants, None))
-    model = GazetteerModel(variants=variants, unigram=None, bc_struct=bc)
+    model = GazetteerModel(variants=variants, best=best_by_norm(variants), unigram=None, bc_struct=bc)
     out = compat.extract(model, _docs_as_transcripts(spark, sf_dir))
     # rank spans per doc by char start to align with token-position rank
     w = Window.partitionBy("conv_id").orderBy(F.col("start").asc())

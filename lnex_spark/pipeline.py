@@ -1,14 +1,24 @@
 """The flagship job: transcripts → location-mention KG triples
-(SURVEY.md §3.3). Composes G1-G7 → X2 → (T2+T3+M1-M3) → L1-L3 → K1-K2.
+(SURVEY.md §3.3). Composes G1-G7 → X2 → (T2+T3+M1-M3) → L → K1-K2.
 
-Physical plan of record (§4.4): three shuffles total —
-  #1 the salted repartition in front of the extraction UDF (skew),
-  #2 the L2 best-candidate aggregation (keyed by mention; min_by with
-     map-side partial aggregation — see operators/link.py),
-  #3 the L3 canonical vote (keyed by distinct surface form — tiny).
-The gazetteer side never shuffles the big table: L1 is a broadcast
-hash join. The extraction stage is one mapInPandas (one Arrow
-boundary).
+Physical plan of record (§4.4): one shuffle on the transcript side —
+the salted repartition in front of the extraction UDF (skew). The
+extraction stage is one mapInPandas (one Arrow boundary); linking is
+one broadcast hash join of its mentions against ``GazetteerModel.best``,
+the L2 winner per normalized name (operators/link.best_by_norm), built
+once per gazetteer model. Every production path — ``extract_link``,
+``run_resumable`` → ``finalize_triples`` and the streaming
+``foreachBatch`` sink — links that way.
+
+Decision record: L2 stays context-free. Its score (match_type desc,
+cat_priority asc, geo_id asc) reads only the variant row and the M2
+overlap resolver keeps one norm per span, so a mention's winner is a
+function of its norm and the L3 corpus vote is the identity. That is
+what makes the lookup exact (tests/test_link_lookup.py pins it to the
+per-mention L1 → L2 → L3 reference chain). A context-aware L2 — e.g.
+geo proximity to the other mentions of a conversation (SURVEY §2A L2)
+— would need the per-mention chain back, and a resumable run would
+again need a corpus-global canonicalization in ``finalize_triples``.
 """
 
 from __future__ import annotations
@@ -24,20 +34,30 @@ from lnex_spark.gazetteer.build import (
     build_unigram_lm,
     scan_gazetteer,
 )
-from lnex_spark.operators.extract import extract_mentions_df
-from lnex_spark.operators.link import apply_canonical, canonicalize, link_mentions, score_candidates
+from lnex_spark.operators.extract import extract_mentions_dedup_df, extract_mentions_df
+from lnex_spark.operators.link import best_by_norm, link_mentions
 from lnex_spark.operators.skew import salt_repartition
 from lnex_spark.operators.triples import mention_triples, region_triples
 
 
 @dataclass
 class GazetteerModel:
-    """Built gazetteer artifacts: the variant table (relational side of
-    L1) and the broadcast match structure (imperative side of M1)."""
+    """Built gazetteer artifacts: the variant table, its L2 winner per
+    norm (the link lookup) and the broadcast match structure
+    (imperative side of M1)."""
 
     variants: DataFrame
+    best: DataFrame
     unigram: DataFrame
     bc_struct: object = field(repr=False, default=None)
+
+
+def _cached_best(variants: DataFrame) -> DataFrame:
+    """The link lookup, cached and materialized now: it is gazetteer-
+    sized and every build reads it."""
+    best = best_by_norm(variants).cache()
+    best.count()
+    return best
 
 
 def build_gazetteer(
@@ -50,12 +70,12 @@ def build_gazetteer(
 ) -> GazetteerModel:
     gaz = scan_gazetteer(spark, gazetteer_df, bbox)
     variants = build_name_variants(gaz, stopwords_df, mode=mode)
-    # the variant table is read twice (L1 join + G7 collect) and is
-    # small by construction (region-scoped) → cache it
+    # the variant table is read three times (link lookup, unigram LM,
+    # G7 collect) and is small by construction (region-scoped) → cache it
     variants = variants.cache()
     unigram = build_unigram_lm(variants, wordlist_df)
     bc = build_match_struct(spark, variants, unigram)
-    return GazetteerModel(variants=variants, unigram=unigram, bc_struct=bc)
+    return GazetteerModel(variants=variants, best=_cached_best(variants), unigram=unigram, bc_struct=bc)
 
 
 def save_gazetteer_model(model: GazetteerModel, path: str) -> None:
@@ -72,29 +92,21 @@ def load_gazetteer_model(spark: SparkSession, path: str) -> GazetteerModel:
     """Load a saved gazetteer model and rebuild the broadcast match
     structure (skips the scan/normalize/augment/filter stages — the
     cache-hit path of the reference's ``initialize(cache=True)``)."""
-    from lnex_spark.gazetteer.build import build_match_struct
-
     variants = spark.read.parquet(f"{path}/variants").cache()
     unigram = spark.read.parquet(f"{path}/unigram")
     bc = build_match_struct(spark, variants, unigram)
-    return GazetteerModel(variants=variants, unigram=unigram, bc_struct=bc)
+    return GazetteerModel(variants=variants, best=_cached_best(variants), unigram=unigram, bc_struct=bc)
 
 
 def extract_link(
     transcripts: DataFrame,
     model: GazetteerModel,
     salt_partitions: int | None = None,
-    persist_winners: bool = True,
     dedup_texts: bool | str = False,
 ) -> DataFrame:
-    """transcripts → canonical linked mentions (conv_id, turn_idx,
-    start, end, surface, norm, geo_id, ...).
-
-    ``winners`` feeds BOTH the canonical-vote aggregation and the final
-    rewrite join; without materialization Catalyst would recompute the
-    expensive extraction UDF stage twice, so the winner set (tiny
-    relative to input) is persisted — the batch analogue of the
-    checkpoint run_resumable writes to parquet.
+    """transcripts → linked mentions (conv_id, turn_idx, start, end,
+    surface, norm, geo_id, ...): extraction, then one broadcast join
+    against ``model.best``.
 
     ``dedup_texts``: False → direct extraction over every turn;
     True → extract once per distinct text and join back
@@ -111,8 +123,6 @@ def extract_link(
     toward 1.0, so the threshold is a job parameter, not an engine
     constant).
     """
-    from lnex_spark.operators.extract import extract_mentions_dedup_df
-
     t = transcripts
     if salt_partitions:
         t = salt_repartition(t, salt_partitions)
@@ -122,23 +132,8 @@ def extract_link(
             F.approx_count_distinct("text").alias("d"),
         ).first()
         dedup_texts = stats.n > 0 and stats.d / stats.n < 0.3
-    if dedup_texts:
-        mentions = extract_mentions_dedup_df(t, model.bc_struct)
-    else:
-        mentions = extract_mentions_df(t, model.bc_struct, prefilter=False)
-    linked = link_mentions(mentions, model.variants)
-    winners = score_candidates(linked)
-    if persist_winners:
-        # lazy persist, deliberately: the canonical vote and the rewrite
-        # join both read winners in the final job, and the BlockManager's
-        # per-partition cache locking already guarantees the extraction
-        # computes once (the second branch blocks on the lock and reads
-        # the cached block). An eager .count() was A/B-measured at both
-        # 200k/local[32] and 2M/local[16] pinned: differences were inside
-        # host noise, and eager adds a job barrier — so one job, lazily.
-        winners = winners.persist()
-    canon = canonicalize(winners)
-    return apply_canonical(winners, canon)
+    extract = extract_mentions_dedup_df if dedup_texts else extract_mentions_df
+    return link_mentions(extract(t, model.bc_struct), model.best)
 
 
 def run_pipeline(
@@ -171,14 +166,14 @@ def run_resumable(
 ) -> list[int]:
     """X3 stage 1: checkpoint-resumable extraction over conv_id buckets.
 
-    The EXPENSIVE stage (extract + link + score) is the unit of resume:
-    each batch of buckets writes its L2-winner mentions partitioned by
-    bucket (dynamic partition overwrite → idempotent) and appends
-    lineage+metrics rows to the manifest. Canonicalization is corpus-
-    global, so it deliberately lives in ``finalize_triples`` — run once
-    after all buckets complete; this makes a resumed run bit-identical
-    to an uninterrupted one regardless of where it was killed.
-    Returns the bucket ids processed in this invocation.
+    The EXPENSIVE stage (extract + link) is the unit of resume: each
+    batch of buckets writes its linked mentions partitioned by bucket
+    (dynamic partition overwrite → idempotent) and appends one lineage
+    row per bucket to the manifest: the bucket's turns and linked
+    mentions, and the batch's wall time. Linked mentions are final
+    (context-free L2, see the module docstring), so a resumed run is
+    bit-identical to an uninterrupted one regardless of where it was
+    killed. Returns the bucket ids processed in this invocation.
     """
     from lnex_spark.operators.lineage import (
         StageTimer,
@@ -190,60 +185,43 @@ def run_resumable(
     pending = pending_buckets(spark, manifest_path, n_buckets)
     bucketed = with_bucket(transcripts, n_buckets)
     processed: list[int] = []
-    batch_no = 0
-    for i in range(0, len(pending), buckets_per_batch):
+    for batch_no, i in enumerate(range(0, len(pending), buckets_per_batch)):
         if fail_after_batches is not None and batch_no >= fail_after_batches:
             break
         batch = pending[i : i + buckets_per_batch]
-        subset = bucketed.filter(F.col("bucket").isin(batch))
+        # per-bucket counts ride along the ONE write job via
+        # CollectMetrics (df.observe) — counting with separate actions
+        # would run the expensive Arrow extraction stage twice per batch
+        per_bucket = [F.count_if(F.col("bucket") == b).alias(f"b{b}") for b in batch]
+        obs_turns = Observation(f"turns-{batch_no}")
+        obs_mentions = Observation(f"mentions-{batch_no}")
         with StageTimer() as timer:
-            # metrics ride along the ONE write job via CollectMetrics
-            # (df.observe) — counting with separate actions would run
-            # the expensive Arrow extraction stage twice per batch
-            obs_turns = Observation(f"turns-{batch_no}")
-            obs_mentions = Observation(f"mentions-{batch_no}")
-            t = subset.drop("bucket").observe(
-                obs_turns, F.count(F.lit(1)).alias("n")
-            )
-            if salt_partitions:
-                t = salt_repartition(t, salt_partitions)
-            if dedup_texts:
-                from lnex_spark.operators.extract import extract_mentions_dedup_df
-
-                mentions = extract_mentions_dedup_df(t, model.bc_struct)
-            else:
-                mentions = extract_mentions_df(t, model.bc_struct)
-            winners = score_candidates(link_mentions(mentions, model.variants))
-            winners = winners.withColumn(
-                "bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
-            ).observe(obs_mentions, F.count(F.lit(1)).alias("n"))
+            t = bucketed.filter(F.col("bucket").isin(batch)).observe(obs_turns, *per_bucket)
+            linked = extract_link(t.drop("bucket"), model, salt_partitions, dedup_texts)
             (
-                winners.write.mode("overwrite")
+                with_bucket(linked, n_buckets)
+                .observe(obs_mentions, *per_bucket)
+                .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(winners_path)
             )
-            n_turns = int(obs_turns.get["n"])
-            n_mentions = int(obs_mentions.get["n"])
-        per = max(len(batch), 1)
-        batch_id = f"batch-{batch_no}"
+            turns, mentions = obs_turns.get, obs_mentions.get
         record_buckets(
             spark,
             manifest_path,
             [
-                (int(b), n_turns // per, n_mentions // per, 0, timer.wall_ms // per, batch_id)
+                (b, turns[f"b{b}"], mentions[f"b{b}"], timer.wall_ms, f"batch-{batch_no}")
                 for b in batch
             ],
         )
         processed.extend(batch)
-        batch_no += 1
     return processed
 
 
 def finalize_triples(spark: SparkSession, winners_path: str) -> DataFrame:
-    """X3 stage 2: global canonicalize + triple emit over all
-    checkpointed winner partitions (cheap: keyed on distinct surface
-    forms). Deterministic given complete stage-1 output."""
-    winners = spark.read.parquet(winners_path).drop("bucket")
-    canon = canonicalize(winners)
-    return mention_triples(apply_canonical(winners, canon))
+    """X3 stage 2: triple emit over all checkpointed linked-mention
+    partitions. A winners directory written before the link lookup
+    (L2 winners, canonicalized here) finalizes to the same triples,
+    since that canonicalization was the identity."""
+    return mention_triples(spark.read.parquet(winners_path))

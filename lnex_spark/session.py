@@ -35,6 +35,17 @@ _BASE_CONF: dict[str, str] = {
 }
 
 
+_MAX_DRIVER_MB = 24 * 1024
+
+
+def _default_driver_memory() -> str:
+    """Local-mode driver heap: half of physical RAM, capped at 24g. In
+    local mode the driver JVM hosts every executor task, and the Python
+    workers and the OS need the other half."""
+    physical_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    return f"{min(physical_mb // 2, _MAX_DRIVER_MB)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "lnex_spark",
@@ -61,7 +72,7 @@ def get_spark(
         shuffle_partitions = 32 if n in ("*", "") else max(int(n), 4)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if "local" in master:
-        conf.setdefault("spark.driver.memory", "24g")
+        conf["spark.driver.memory"] = _default_driver_memory()
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

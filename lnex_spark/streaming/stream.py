@@ -9,13 +9,12 @@ operators over a streaming DataFrame:
     per-mention rows. No watermark needed (no aggregation state).
   * ``stream_mention_rates``: windowed mention counts with a watermark
     for late data — the monitoring companion query.
-  * ``stream_triples_foreach_batch``: foreachBatch sink that runs the
-    per-batch link+score stages and appends mention triples; epoch id
-    is recorded so replayed batches stay idempotent. Canonicalization
-    stays a periodic batch job over the accumulated winners
-    (corpus-global majority vote has no bounded-state streaming form —
-    an explicit design decision, same split as pipeline.run_resumable /
-    finalize_triples).
+  * ``stream_triples_foreach_batch``: foreachBatch sink that links
+    each micro-batch's mentions through the gazetteer model's
+    best-per-norm lookup and appends them; epoch id is recorded so
+    replayed batches stay idempotent. Linked mentions are final when
+    written (context-free L2, see pipeline.py), so no periodic
+    canonicalization job runs over the accumulated output.
 """
 
 from __future__ import annotations
@@ -24,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lnex_spark.operators.extract import extract_mentions_df
-from lnex_spark.operators.link import link_mentions, score_candidates
+from lnex_spark.operators.link import link_mentions
 
 
 def stream_mentions(transcripts_stream: DataFrame, bc_struct) -> DataFrame:
@@ -95,15 +94,15 @@ def stream_triples_foreach_batch(
     trigger_once: bool = True,
 ):
     """writeStream with a foreachBatch sink: per micro-batch, run
-    extract → link → score and append winners partitioned by epoch
+    extract → link and append the linked mentions partitioned by epoch
     (idempotent on replay: epoch partition is overwritten). Returns the
     StreamingQuery."""
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         mentions = extract_mentions_df(batch_df, model.bc_struct)
-        winners = score_candidates(link_mentions(mentions, model.variants))
         (
-            winners.withColumn("epoch", F.lit(epoch_id))
+            link_mentions(mentions, model.best)
+            .withColumn("epoch", F.lit(epoch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("epoch")

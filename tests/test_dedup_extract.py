@@ -55,10 +55,10 @@ def test_dedup_path_identical_on_duplicated_corpus(model_and_turns):
 
 def test_extract_link_auto_picks_dedup_and_matches(model_and_turns):
     model, _, dup = model_and_turns
-    base = extract_link(dup, model, persist_winners=False).select(
+    base = extract_link(dup, model).select(
         "conv_id", "turn_idx", "start", "end", "norm", "geo_id"
     )
-    auto = extract_link(dup, model, persist_winners=False, dedup_texts="auto").select(
+    auto = extract_link(dup, model, dedup_texts="auto").select(
         "conv_id", "turn_idx", "start", "end", "norm", "geo_id"
     )
     assert sorted(map(tuple, base.collect())) == sorted(map(tuple, auto.collect()))
@@ -72,6 +72,6 @@ def test_auto_stays_direct_on_unique_corpus(spark, model_and_turns):
     n = turns.count()
     d = turns.select("text").distinct().count()
     assert d / n > 0.6  # fixture corpus is (near-)unique per turn
-    base = extract_link(turns, model, persist_winners=False)
-    auto = extract_link(turns, model, persist_winners=False, dedup_texts="auto")
+    base = extract_link(turns, model)
+    auto = extract_link(turns, model, dedup_texts="auto")
     assert base.count() == auto.count()

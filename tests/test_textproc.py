@@ -128,7 +128,7 @@ def test_urls_and_mentions_ignored():
 
 def test_extract_df_adversarial_rows(spark, fixture_data):
     """The extraction stage must tolerate null / empty / unicode /
-    whitespace-only text rows, with and without the batch gate."""
+    whitespace-only text rows."""
     from lnex_spark.gazetteer.build import (
         build_match_struct,
         build_name_variants,
@@ -152,14 +152,13 @@ def test_extract_df_adversarial_rows(spark, fixture_data):
         ("c1", 5, "a" * 5000),
     ]
     t = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    for gate in (False, True):
-        got = extract_mentions_df(t, bc, batch_gate=gate).collect()
-        # the planted plain mention must be found on the unicode row
-        assert any(r["turn_idx"] == 3 and r["norm"] == name for r in got)
-        # null/empty/whitespace rows produce nothing and no crash
-        assert all(r["turn_idx"] not in (0, 1, 2) for r in got)
-        for r in got:
-            assert rows[r["turn_idx"]][2][r["start"] : r["end"]] == r["surface"]
+    got = extract_mentions_df(t, bc).collect()
+    # the planted plain mention must be found on the unicode row
+    assert any(r["turn_idx"] == 3 and r["norm"] == name for r in got)
+    # null/empty/whitespace rows produce nothing and no crash
+    assert all(r["turn_idx"] not in (0, 1, 2) for r in got)
+    for r in got:
+        assert rows[r["turn_idx"]][2][r["start"] : r["end"]] == r["surface"]
 
 
 # --- round-2 Twokenize-parity hardening: emoticons & unicode ------------

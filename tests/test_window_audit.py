@@ -5,13 +5,17 @@ windows (0 raw / 0 raw-agg after the scalable_windows conversion); the
 table alone cannot stop a future edit from silently reintroducing an
 unpartitioned window over row-scale input.  This test re-runs
 tools/window_audit.py's plan walk over ALL registry ops and asserts
-the raw / raw-agg set never grows past the two known classifier
-false-positives documented in BENCH.md:
+every raw / raw-agg finding is one of the two known classifier
+false-positives documented in BENCH.md, pinned to its evidence so a
+new genuine finding in the same op still fails:
 
   energy_distance_docs  2-group per-side aggregate; the key "side"
                         matches the classifier's "id" fragment
   err_ranking_docs      cascade window over a rank<=20-filtered
                         frame the static plan walk cannot bound
+
+It also asserts that every op still plans: an op that stops planning
+drops out of the audit's coverage.
 
 Planning 652 ops boots Spark and takes ~4-6 min, so it is env-gated:
 
@@ -34,8 +38,18 @@ pytestmark = pytest.mark.skipif(
     reason="plans all registry ops (~4-6 min); opt in with WINDOW_AUDIT=1",
 )
 
-# classifier false-positives, dispositioned in BENCH.md round-4 audit
-KNOWN_FALSE_POSITIVES = {"energy_distance_docs", "err_ranking_docs"}
+# classifier false-positives, dispositioned in BENCH.md round-4 audit:
+# (op, fragment of the finding's evidence)
+KNOWN_FALSE_POSITIVES = {
+    ("energy_distance_docs", "HashAggregate(keys=[side#"),
+    ("err_ranking_docs", "HashAggregate(keys=[doc_id#"),
+}
+# ops allowed to fail planning on the sf0.001 inputs (none today)
+PLANNING_ERRORS_ALLOWED: frozenset[str] = frozenset()
+
+
+def _known(name: str, evidence: str) -> bool:
+    return any(name == op and frag in evidence for op, frag in KNOWN_FALSE_POSITIVES)
 
 
 def _load_audit():
@@ -53,7 +67,7 @@ def test_no_new_raw_scale_global_windows(spark):
     import __spark_entry__ as E
 
     sf_dir = "/root/testdata/sf0.001"
-    offenders: dict[str, str] = {}
+    offenders: dict[str, list[str]] = {}
     errors: dict[str, str] = {}
     for name, fn in E.queries().items():
         try:
@@ -63,19 +77,15 @@ def test_no_new_raw_scale_global_windows(spark):
             errors[name] = str(e)[:200]
             continue
         for f in audit.audit_plan(plan):
-            if f["class"] in ("raw", "raw-agg"):
-                offenders[name] = f"{f['class']}: {f['evidence'][:100]}"
-                break
+            if f["class"] in ("raw", "raw-agg") and not _known(name, f["evidence"]):
+                offenders.setdefault(name, []).append(f"{f['class']}: {f['evidence'][:100]}")
 
-    new = {n: v for n, v in offenders.items() if n not in KNOWN_FALSE_POSITIVES}
-    assert not new, (
+    assert not offenders, (
         "new raw-scale global windows (unpartitioned window over "
-        f"row-proportional input): {new}"
+        f"row-proportional input): {offenders}"
     )
     # the audit must actually have seen the registry (catch silent
     # registry-load failures masquerading as a clean audit)
     assert len(E.queries()) > 600
-    # planning errors should stay rare (a handful of eager-collect ops
-    # can legitimately fail on edge-case tiny inputs; a spike means the
-    # audit silently skipped real plans)
-    assert len(errors) <= 5, errors
+    # an op that fails planning is silently skipped by the audit
+    assert errors.keys() <= PLANNING_ERRORS_ALLOWED, errors

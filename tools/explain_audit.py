@@ -133,7 +133,7 @@ CHECKS = {
 }
 
 
-def main() -> None:
+def main() -> int:
     from lnex_spark.data import fixtures as FX
     from lnex_spark.data.derive import transcripts_from_documents
     from lnex_spark.gazetteer.build import GAZETTEER_SCHEMA
@@ -297,7 +297,8 @@ def main() -> None:
         n_ex = plan.count("Exchange")
         print(f"  exchanges: {n_ex}")
     print(f"\n{bad} plan-check failures")
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
