@@ -1,11 +1,9 @@
 """Name normalization + flexible/skip-gram augmentation (G2, G4).
 
-Pure functions — no Spark imports. Used three ways:
-  * row semantics for the Spark built-in column chain (G2 mirrors
-    ``normalize_name`` exactly; tests assert parity),
-  * inside the G4 pandas UDF that generates skip-gram variants,
-  * by the fixture generator / gold annotator so gold annotations share
-    one definition of "what counts as a name variant".
+Pure functions — no Spark imports. The one definition of "what counts
+as a name variant": the engine's gazetteer build runs them on the
+driver (``build.build_variants``), and the fixture generator and the
+gold annotator call them too.
 
 Behavioral model (reference: halolimat/LNEx
 ``LNEx/gaz_augmentation_and_filtering.py`` — see SURVEY.md §0 citation
@@ -57,9 +55,7 @@ _PUNCT = re.compile(r"[^a-z0-9 ']")
 
 def normalize_name(name: str) -> str:
     """G2: lowercase, strip non-ASCII, split hyphen/slash, strip
-    punctuation, collapse whitespace. Mirrored 1:1 by the Spark
-    built-in chain in ``build.normalize_names_col`` (tested for parity).
-    """
+    punctuation, collapse whitespace."""
     s = _NON_ASCII.sub(" ", name.lower())
     s = _HYPHEN_SLASH.sub(" ", s)
     s = _PUNCT.sub(" ", s)
@@ -96,7 +92,7 @@ def name_variants(norm: str, mode: str = "hp") -> set[str]:
 
     # subset enumeration is 2^k — cap k so a pathological name (OSM
     # data does contain garbage like repeated filler words) degrades to
-    # partial augmentation instead of hanging the executor UDF; real
+    # partial augmentation instead of hanging the gazetteer build; real
     # location names have <= a handful of removable tokens
     removable_idx = [i for i, t in enumerate(tokens) if t in _REMOVABLE][:_MAX_SUBSET_TOKENS]
     essential = [t for t in tokens if t not in _REMOVABLE]
@@ -123,9 +119,7 @@ def name_variants(norm: str, mode: str = "hp") -> set[str]:
 
 def is_noise_name(norm: str, stopwords: frozenset[str] | set[str]) -> bool:
     """G5 predicate: True if a (variant) name is too noisy to keep —
-    empty, digits-only, a bare stopword, or a bare generic word.
-    Mirrored by the Spark filter in ``build.filter_noise``.
-    """
+    empty, digits-only, a bare stopword, or a bare generic word."""
     if not norm:
         return True
     if norm.replace(" ", "").isdigit():

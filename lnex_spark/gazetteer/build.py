@@ -1,38 +1,45 @@
-"""Gazetteer build: scan → normalize → explode variants → skip-gram
-augment → noise filter → unigram LM → broadcast match structure
-(G1-G7, SURVEY.md §2A).
+"""Gazetteer build: bbox scan → normalize → one key per name →
+skip-gram augment → noise filter → unigram LM → broadcast match
+structure (G1-G7, SURVEY.md §2A).
 
-Everything set-oriented is a Catalyst-planned DataFrame transform
-(built-in functions only — whole-stage codegen'd); the single pandas
-UDF is the G4 skip-gram generator (general subset-removal is not
-expressible with array built-ins alone). The final matching structure
-is collected and broadcast — the Spark correspondence of the
-reference's process-global dictionaries (LNEx ``set_global_env``,
-``LNEx/core.py``; mount empty, see SURVEY.md §0).
+G1 is the one Spark stage: a pruned columnar scan that scopes the
+gazetteer table to a region. Its output is collected once, bounded by
+``MAX_NAMES``, and G2-G7 run in process on the driver over the pure
+functions of ``augment`` — the ones the gold annotator uses too, so
+"what is a name variant" has one definition. That is how LNEx builds
+its dictionaries (COLING 2018 §3.2); the match structure is then
+broadcast — the Spark correspondence of the reference's
+process-global dictionaries (LNEx ``set_global_env``,
+``LNEx/core.py``; mount empty, see SURVEY.md §0). The variant table
+goes back to Spark as Arrow batches handed to the JVM, so the build
+adds no Python boundary of its own.
 
-Scale notes (100 TB / planet-OSM):
-  * the gazetteer is region-scoped BEFORE augmentation (G1 bbox filter
-    → partition pruning on a `region`-partitioned table), so the
-    broadcast stays city-sized even when the source table is planet-
-    sized;
-  * every stage before G7 is shuffle-free except the two hash
-    aggregations (distinct variants, unigram counts) — both keyed on
-    short strings, partial+final aggregated by Catalyst;
-  * if a region's gazetteer ever exceeds broadcast limits the L1 link
-    join degrades gracefully to sort-merge (Catalyst decides); the
-    match structure would shard by token-prefix — documented fallback,
-    not needed at city scale.
+Decision record: G2-G6 used to be a Spark plan with a pandas UDF for
+G4, but every path that builds a variant table also builds the
+broadcast struct, which collects every distinct variant to the
+driver. Variant generation therefore never ran where the driver could
+not hold its output, and the plan bought no scale — only a second
+normalizer and a second Python boundary. At 1M synthetic names the
+plan's build peaked the Python driver at ~2.0 GB in ~104 s; this one
+peaks at ~2.2 GB in ~108 s, with G4 single-threaded. A region past the
+``MAX_NAMES`` guard needs the documented fallback — shard the
+gazetteer by token prefix and union per-shard mentions, or the
+broadcast-free relational matcher (operators/extract_relational.py) —
+not a Spark G4.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from collections import Counter
+from collections.abc import Collection, Iterable, Iterator, Mapping
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from lnex_spark.common import cat_priority
 from lnex_spark.gazetteer import augment as A
 
 GAZETTEER_SCHEMA = T.StructType(
@@ -47,7 +54,39 @@ GAZETTEER_SCHEMA = T.StructType(
     ]
 )
 
-from lnex_spark.common import CATEGORY_PRIORITY, DEFAULT_CATEGORY_PRIORITY
+# one row per (norm variant, geo entity); match_type 1 exact / 0 augmented
+VARIANTS_SCHEMA = T.StructType(
+    [
+        T.StructField("norm", T.StringType(), True),
+        T.StructField("geo_id", T.LongType(), False),
+        T.StructField("match_type", T.IntegerType(), True),
+        T.StructField("category", T.StringType(), True),
+        T.StructField("lat", T.DoubleType(), True),
+        T.StructField("lon", T.DoubleType(), True),
+        T.StructField("region", T.StringType(), True),
+        T.StructField("cat_priority", T.IntegerType(), False),
+    ]
+)
+
+# Driver-OOM guard: the build is meant for a REGION-SCOPED gazetteer
+# (city ≈ 10^4-10^5 names ≈ a few MB broadcast). It bounds the rows
+# collected for the build, the variant rows augmentation holds (before
+# the noise filter) and the names a load collects. Measured on 4 vCPU,
+# local[4]: 1M synthetic names (3.15M hp variant rows) peak the Python
+# driver at ~2.2 GB and build in ~108 s (G2-G5 ~70 s of it), so near
+# the limit the driver needs ~10 GB. Past the limit the caller forgot
+# the bbox scope (G1) or genuinely needs the sharded fallback (module
+# docstring). The limit is read when checked.
+MAX_NAMES = 5_000_000
+
+
+def check_max_names(n: int, what: str) -> None:
+    if n > MAX_NAMES:
+        raise ValueError(
+            f"{what} would exceed {MAX_NAMES}; scope the gazetteer with a "
+            "bounding box (scan_gazetteer bbox) or shard by token prefix "
+            "and union per-shard mentions"
+        )
 
 
 def scan_gazetteer(spark: SparkSession, path_or_df, bbox: list[float] | None = None) -> DataFrame:
@@ -64,117 +103,65 @@ def scan_gazetteer(spark: SparkSession, path_or_df, bbox: list[float] | None = N
     return df
 
 
-def normalize_names_col(c: Column) -> Column:
-    """G2 as a pure built-in column chain — parity with
-    ``augment.normalize_name`` is asserted in tests."""
-    s = F.lower(c)
-    s = F.regexp_replace(s, r"[^\x00-\x7F]", " ")
-    s = F.regexp_replace(s, r"[-/_]+", " ")
-    s = F.regexp_replace(s, r"[^a-z0-9 ']", " ")
-    s = F.regexp_replace(s, r"(^|\s)'+|'+(\s|$)", " ")  # edge apostrophes per token
-    s = F.trim(F.regexp_replace(s, r"\s+", " "))
-    return s
+def collect_gazetteer(gaz: DataFrame) -> Iterator[dict]:
+    """The one collect of the (region-scoped) gazetteer rows (one Spark
+    job). The limit bounds the collect itself, so the guard cannot OOM
+    while checking. The rows stay an Arrow table and become Python
+    dicts one batch at a time, as they are consumed."""
+    table = gaz.select(*GAZETTEER_SCHEMA.names).limit(MAX_NAMES + 1).toArrow()
+    check_max_names(table.num_rows, "scoped gazetteer rows")
+    return (row for batch in table.to_batches() for row in batch.to_pylist())
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _variants_udf(norm: pd.Series) -> pd.Series:
-    """G4 skip-gram generator (the one vectorized UDF of the build)."""
-    return norm.map(lambda s: sorted(A.name_variants(s, "hp")))
+def collect_norms(variants: DataFrame) -> list[str]:
+    """The distinct names of a (saved) variant table, under the guard."""
+    norms = [r[0] for r in variants.select("norm").distinct().limit(MAX_NAMES + 1).collect()]
+    check_max_names(len(norms), "match structure names")
+    return norms
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _variants_hr_udf(norm: pd.Series) -> pd.Series:
-    return norm.map(lambda s: sorted(A.name_variants(s, "hr")))
+def build_variants(gazetteer: Iterable[Mapping], stopwords: Collection[str], mode: str = "hp") -> list[tuple]:
+    """G2-G5: one row per (norm variant, geo entity), in
+    ``VARIANTS_SCHEMA`` order, sorted by (norm, geo_id).
 
-
-def build_name_variants(
-    gaz: DataFrame, stopwords: DataFrame, mode: str = "hp"
-) -> DataFrame:
-    """G2+G3+G4+G5: one row per (norm variant, geo entity).
-
-    Output: norm, geo_id, match_type (1 exact / 0 augmented), category,
-    lat, lon, region, cat_priority.
+    G2 ``augment.normalize_name``; G3 the name and every alt-name are
+    keys of the same entity; G4 ``augment.name_variants`` — an augmented
+    variant that collides with an exact name of the same entity keeps
+    the exact row only; G5 ``augment.is_noise_name`` plus the stopword
+    list. The guard bounds the variant rows held while augmenting.
     """
-    # G3: every name variant is its own key pointing at the same geo id
-    names = gaz.select(
-        "geo_id",
-        "category",
-        "lat",
-        "lon",
-        "region",
-        F.explode(
-            F.array_distinct(
-                F.array_union(
-                    F.array(F.col("name")),
-                    F.coalesce(F.col("alt_names"), F.array().cast("array<string>")),
-                )
-            )
-        ).alias("raw_name"),
-    )
-    # G2
-    names = names.withColumn("norm", normalize_names_col(F.col("raw_name"))).filter(
-        F.length("norm") > 0
-    )
-    # G4: exact rows + exploded augmented rows
-    var_udf = _variants_hr_udf if mode == "hr" else _variants_udf
-    exact = names.select(
-        "norm", "geo_id", "category", "lat", "lon", "region", F.lit(1).alias("match_type")
-    )
-    augmented = (
-        names.withColumn("variants", var_udf(F.col("norm")))
-        .select(
-            F.explode("variants").alias("norm"),
-            "geo_id",
-            "category",
-            "lat",
-            "lon",
-            "region",
-            F.lit(0).alias("match_type"),
-        )
-    )
-    variants = exact.unionByName(augmented)
-    # an augmented variant that collides with an exact name of the same
-    # entity keeps the exact row only
-    variants = variants.groupBy("norm", "geo_id").agg(
-        F.max("match_type").alias("match_type"),
-        F.first("category", ignorenulls=True).alias("category"),
-        F.first("lat", ignorenulls=True).alias("lat"),
-        F.first("lon", ignorenulls=True).alias("lon"),
-        F.first("region", ignorenulls=True).alias("region"),
-    )
-    # G5: noise filter — built-in predicates + broadcast anti-join
-    variants = variants.filter(
-        (F.length("norm") > 0) & (~F.regexp_replace("norm", " ", "").rlike(r"^[0-9]+$"))
-    )
-    generic = F.array([F.lit(w) for w in sorted(A.CATEGORY_WORDS | A.MODIFIER_WORDS | A.NAME_STOPWORDS)])
-    variants = variants.filter(
-        F.col("norm").contains(" ") | ~F.array_contains(generic, F.col("norm"))
-    )
-    variants = variants.join(
-        F.broadcast(stopwords.select(F.col("word").alias("norm"))), on="norm", how="left_anti"
-    )
-    cat_prio = F.create_map(
-        *[x for k, v in CATEGORY_PRIORITY.items() for x in (F.lit(k), F.lit(v))]
-    )
-    return variants.withColumn(
-        "cat_priority", F.coalesce(cat_prio[F.col("category")], F.lit(DEFAULT_CATEGORY_PRIORITY))
-    )
+    # (norm, geo_id) -> (match_type, the entity's attribute tuple, shared
+    # by all its variants; the first row of a geo_id supplies it)
+    rows: dict[tuple[str, int], tuple[int, tuple]] = {}
+    for e in gazetteer:
+        geo_id = e["geo_id"]
+        attrs = (e["category"], e["lat"], e["lon"], e["region"], cat_priority(e["category"]))
+        for raw in [e["name"], *(e["alt_names"] or [])]:
+            norm = A.normalize_name(raw) if raw is not None else ""
+            if not norm:
+                continue
+            for v, mt in [(norm, 1), *((x, 0) for x in A.name_variants(norm, mode))]:
+                old = rows.get((v, geo_id))
+                if old is None:
+                    rows[v, geo_id] = (mt, attrs)
+                elif mt > old[0]:
+                    rows[v, geo_id] = (mt, old[1])
+        check_max_names(len(rows), "name-variant rows")
+    out = []
+    for key in sorted(rows):
+        if not (A.is_noise_name(key[0], stopwords) or key[0] in stopwords):
+            mt, attrs = rows[key]
+            out.append((*key, mt, *attrs))
+    return out
 
 
-def build_unigram_lm(variants: DataFrame, wordlist: DataFrame | None) -> DataFrame:
-    """G6: unigram counts over gazetteer variant tokens ∪ wordlist.
-    Pure hash aggregation (partial+final by Catalyst)."""
-    toks = variants.select(F.explode(F.split("norm", " ")).alias("word")).filter(
-        F.length("word") > 0
-    )
-    counts = toks.groupBy("word").agg(F.count("*").alias("freq"))
-    if wordlist is not None:
-        counts = (
-            counts.unionByName(wordlist.select("word", "freq"))
-            .groupBy("word")
-            .agg(F.sum("freq").alias("freq"))
-        )
-    return counts
+def build_unigram(variants: Iterable[tuple], wordlist: Iterable[tuple] = ()) -> dict[str, int]:
+    """G6: unigram counts over the tokens of the variant rows (norm
+    first) ∪ the (word, freq) wordlist."""
+    freq: Counter[str] = Counter(t for v in variants for t in v[0].split(" "))
+    for word, f in wordlist:
+        freq[word] += f
+    return dict(freq)
 
 
 class MatchStruct:
@@ -197,41 +184,24 @@ class MatchStruct:
         self.max_tokens = max_tokens
 
 
-def build_match_struct(
-    spark: SparkSession,
-    variants: DataFrame,
-    unigram: DataFrame,
-    max_names: int = 5_000_000,
-):
-    """Collect the (small, region-scoped) variant names + LM and
-    broadcast the matching structure.
-
-    ``max_names`` is a driver-OOM guard: the struct is meant for a
-    REGION-SCOPED gazetteer (city ≈ 10^4-10^5 names ≈ a few MB
-    broadcast). 5M names ≈ ~0.5 GB driver-side — past that the caller
-    forgot the bbox scope (G1) or genuinely needs the documented
-    sharded fallback (shard the gazetteer by token prefix, run one
-    extraction pass per shard, union mentions — same results because
-    matches are independent per name). The limit bounds the collect
-    itself, so the guard cannot OOM while checking."""
-    names = [
-        r[0]
-        for r in variants.select("norm").distinct().limit(max_names + 1).collect()
-    ]
-    if len(names) > max_names:
-        raise ValueError(
-            f"match structure would exceed {max_names} names; scope the "
-            "gazetteer with a bounding box (scan_gazetteer bbox) or shard "
-            "by token prefix and union per-shard mentions"
-        )
-    full_names = frozenset(names)
+def build_match_struct(norms: Iterable[str], unigram: dict[str, int]) -> MatchStruct:
+    """G7 over the variant names (duplicates allowed) and the G6 LM."""
+    full_names = frozenset(norms)
     prefixes = set()
     max_tokens = 1
-    for n in names:
+    for n in full_names:
         toks = n.split(" ")
         max_tokens = max(max_tokens, len(toks))
         for i in range(1, len(toks) + 1):
             prefixes.add(" ".join(toks[:i]))
-    unigram_d = {r[0]: int(r[1]) for r in unigram.collect()}
-    struct = MatchStruct(full_names, frozenset(prefixes), unigram_d, max_tokens)
-    return spark.sparkContext.broadcast(struct)
+    return MatchStruct(full_names, frozenset(prefixes), unigram, max_tokens)
+
+
+def variants_frame(spark: SparkSession, variants: list[tuple]) -> DataFrame:
+    """The variant rows as a DataFrame, handed to the JVM as Arrow
+    batches. A Python list would become a pickled RDD that a Python
+    worker unpickles on every read. Each column is filled straight from
+    the rows, without a transposed copy of them."""
+    schema = to_arrow_schema(VARIANTS_SCHEMA)
+    cols = [pa.array((v[i] for v in variants), f.type, size=len(variants)) for i, f in enumerate(schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=schema), VARIANTS_SCHEMA)

@@ -42,8 +42,9 @@ def _as_double(col):
 # must use the DataFrame-native relational form instead
 # (cosine_topk_bruteforce / cosine_topk_lsh / cosine_topk_ivf), whose
 # query side is a distributed table, not a broadcast closure.  Mirrors
-# gazetteer/build.build_match_struct's max_names guard: the limit
-# bounds the collect itself, so checking cannot OOM.
+# the MAX_NAMES guard of gazetteer/build.collect_gazetteer and
+# check_max_names: the limit bounds the collect itself, so checking
+# cannot OOM.
 MAX_DRIVER_QUERIES = 100_000
 
 

@@ -222,18 +222,10 @@ def t3_hashtag_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("g7_match_struct")
 def g7_match_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lnex_spark.data import fixtures as FX
-    from lnex_spark.gazetteer.build import (
-        GAZETTEER_SCHEMA,
-        build_match_struct,
-        build_name_variants,
-        build_unigram_lm,
-    )
+    from lnex_spark.gazetteer.build import build_match_struct, build_unigram, build_variants
 
-    gaz = spark.createDataFrame(FX.gen_gazetteer("chennai"), GAZETTEER_SCHEMA)
-    stop = spark.createDataFrame([(w,) for w in FX.gen_stopwords()], "word string")
-    variants = build_name_variants(gaz, stop)
-    bc = build_match_struct(spark, variants, build_unigram_lm(variants, None))
-    st = bc.value
+    variants = build_variants(FX.gen_gazetteer("chennai"), set(FX.gen_stopwords()))
+    st = build_match_struct((v[0] for v in variants), build_unigram(variants))
     rows = [(n, len(n.split(" ")), n in st.prefixes) for n in sorted(st.full_names)]
     return spark.createDataFrame(rows, "norm string, n_tokens int, is_own_prefix boolean")
 
@@ -243,22 +235,14 @@ def g7_match_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m1_ngram_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lnex_spark.data import fixtures as FX
     from lnex_spark.data.derive import transcripts_from_documents
-    from lnex_spark.gazetteer.build import (
-        GAZETTEER_SCHEMA,
-        build_match_struct,
-        build_name_variants,
-        build_unigram_lm,
-    )
+    from lnex_spark.gazetteer.build import build_match_struct, build_unigram, build_variants
     from lnex_spark.operators.extract import extract_mentions_df
 
     docs = _t(spark, sf_dir, "documents")
     transcripts = transcripts_from_documents(docs, "chennai")
-    gaz = spark.createDataFrame(FX.gen_gazetteer("chennai"), GAZETTEER_SCHEMA)
-    stop = spark.createDataFrame([(w,) for w in FX.gen_stopwords()], "word string")
-    wl = spark.createDataFrame(FX.gen_wordlist(), "word string, freq long")
-    variants = build_name_variants(gaz, stop)
-    bc = build_match_struct(spark, variants, build_unigram_lm(variants, wl))
-    return extract_mentions_df(transcripts, bc)
+    variants = build_variants(FX.gen_gazetteer("chennai"), set(FX.gen_stopwords()))
+    st = build_match_struct((v[0] for v in variants), build_unigram(variants, FX.gen_wordlist()))
+    return extract_mentions_df(transcripts, spark.sparkContext.broadcast(st))
 
 
 # --- M2 overlap_resolve (relational containment form) -------------------
@@ -1364,8 +1348,8 @@ def _g4_sql() -> str:
 
 @register("g4_skipgram_augment", _g4_sql())
 def g4_skipgram_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G4 via the engine's _variants_udf (gazetteer/build.py — the one
-    pandas UDF of the gazetteer build, wrapping augment.name_variants;
+    """G4 via augment.name_variants, the augmentation the engine's
+    gazetteer build runs on the driver (gazetteer/build.build_variants;
     reference: LNEx/gaz_augmentation_and_filtering.py per SURVEY §0).
     Names are constructed with a known removable-token shape
     ("<tok> international airport" / "the <tok> mall") whose full HP
@@ -1376,8 +1360,8 @@ def g4_skipgram_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
         CATEGORY_WORDS,
         MODIFIER_WORDS,
         NAME_STOPWORDS,
+        name_variants,
     )
-    from lnex_spark.gazetteer.build import _variants_udf
 
     removable = sorted(CATEGORY_WORDS | MODIFIER_WORDS | NAME_STOPWORDS)
     p = _t(spark, sf_dir, "part")
@@ -1388,9 +1372,9 @@ def g4_skipgram_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_partkey") % 2 == 0,
         F.concat_ws(" ", F.col("tok"), F.lit("international airport")),
     ).otherwise(F.concat_ws(" ", F.lit("the"), F.col("tok"), F.lit("mall")))
-    return base.select(
-        "p_partkey", F.explode(_variants_udf(norm)).alias("variant")
-    )
+    names = base.select("p_partkey", norm.alias("norm")).collect()
+    rows = [(r.p_partkey, v) for r in names for v in sorted(name_variants(r.norm, "hp"))]
+    return spark.createDataFrame(rows, "p_partkey long, variant string")
 
 
 # --- M3 offset_align: engine tokenizer spans vs independent SQL offsets --

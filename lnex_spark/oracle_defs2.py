@@ -113,6 +113,14 @@ def _oracle_variants(spark: SparkSession) -> DataFrame:
     )
 
 
+def _oracle_struct(spark: SparkSession):
+    """The broadcast match structure of the literal gazetteer."""
+    from lnex_spark.gazetteer.build import build_match_struct, build_unigram
+
+    struct = build_match_struct((n for n, *_ in ORACLE_GAZ), build_unigram(ORACLE_GAZ))
+    return spark.sparkContext.broadcast(struct)
+
+
 def _docs_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> one-turn transcripts with the same injected breaks
     as the SQL side (' the ' -> ', ')."""
@@ -128,12 +136,9 @@ def _docs_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the REAL engine matcher (build_match_struct + the fused
     mapInPandas extraction) over documents with the literal gazetteer."""
-    from lnex_spark.gazetteer.build import build_match_struct, build_unigram_lm
     from lnex_spark.operators.extract import extract_mentions_df
 
-    variants = _oracle_variants(spark)
-    bc = build_match_struct(spark, variants, build_unigram_lm(variants, None))
-    return extract_mentions_df(_docs_as_transcripts(spark, sf_dir), bc)
+    return extract_mentions_df(_docs_as_transcripts(spark, sf_dir), _oracle_struct(spark))
 
 
 @register(
@@ -396,13 +401,11 @@ def compat_extract_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Spark side, so the checked columns are the per-span candidate
     payload aggregated per doc — same multiset ⟺ same spans."""
     from lnex_spark import compat
-    from lnex_spark.gazetteer.build import build_match_struct, build_unigram_lm
     from lnex_spark.operators.link import best_by_norm
     from lnex_spark.pipeline import GazetteerModel
 
     variants = _oracle_variants(spark)
-    bc = build_match_struct(spark, variants, build_unigram_lm(variants, None))
-    model = GazetteerModel(variants=variants, best=best_by_norm(variants), unigram=None, bc_struct=bc)
+    model = GazetteerModel(variants, best_by_norm(variants), _oracle_struct(spark))
     out = compat.extract(model, _docs_as_transcripts(spark, sf_dir))
     # rank spans per doc by char start to align with token-position rank
     w = Window.partitionBy("conv_id").orderBy(F.col("start").asc())

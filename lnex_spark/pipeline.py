@@ -8,7 +8,9 @@ one broadcast hash join of its mentions against ``GazetteerModel.best``,
 the L2 winner per normalized name (operators/link.best_by_norm), built
 once per gazetteer model. Every production path — ``extract_link``,
 ``run_resumable`` → ``finalize_triples`` and the streaming
-``foreachBatch`` sink — links that way.
+``foreachBatch`` sink — links that way. The gazetteer build adds no
+Python boundary: G1 is a Spark scan, G2-G7 run on the driver
+(gazetteer/build.py).
 
 Decision record: L2 stays context-free. Its score (match_type desc,
 cat_priority asc, geo_id asc) reads only the variant row and the M2
@@ -29,10 +31,14 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.gazetteer.build import (
+    MatchStruct,
     build_match_struct,
-    build_name_variants,
-    build_unigram_lm,
+    build_unigram,
+    build_variants,
+    collect_gazetteer,
+    collect_norms,
     scan_gazetteer,
+    variants_frame,
 )
 from lnex_spark.operators.extract import extract_mentions_dedup_df, extract_mentions_df
 from lnex_spark.operators.link import best_by_norm, link_mentions
@@ -44,20 +50,20 @@ from lnex_spark.operators.triples import mention_triples, region_triples
 class GazetteerModel:
     """Built gazetteer artifacts: the variant table, its L2 winner per
     norm (the link lookup) and the broadcast match structure
-    (imperative side of M1)."""
+    (imperative side of M1; its ``unigram`` is the G6 LM)."""
 
     variants: DataFrame
     best: DataFrame
-    unigram: DataFrame
     bc_struct: object = field(repr=False, default=None)
 
 
-def _cached_best(variants: DataFrame) -> DataFrame:
-    """The link lookup, cached and materialized now: it is gazetteer-
-    sized and every build reads it."""
+def _model(spark: SparkSession, variants: DataFrame, struct: MatchStruct) -> GazetteerModel:
+    """Cache the variant table and materialize the link lookup now: both
+    are gazetteer-sized and every build reads them."""
+    variants = variants.cache()
     best = best_by_norm(variants).cache()
     best.count()
-    return best
+    return GazetteerModel(variants, best, spark.sparkContext.broadcast(struct))
 
 
 def build_gazetteer(
@@ -68,14 +74,15 @@ def build_gazetteer(
     bbox: list[float] | None = None,
     mode: str = "hp",
 ) -> GazetteerModel:
-    gaz = scan_gazetteer(spark, gazetteer_df, bbox)
-    variants = build_name_variants(gaz, stopwords_df, mode=mode)
-    # the variant table is read three times (link lookup, unigram LM,
-    # G7 collect) and is small by construction (region-scoped) → cache it
-    variants = variants.cache()
-    unigram = build_unigram_lm(variants, wordlist_df)
-    bc = build_match_struct(spark, variants, unigram)
-    return GazetteerModel(variants=variants, best=_cached_best(variants), unigram=unigram, bc_struct=bc)
+    """G1 in Spark, G2-G7 on the driver (gazetteer/build.py): one
+    bounded collect of the bbox-scoped rows, one DataFrame back for the
+    variant table."""
+    gaz = collect_gazetteer(scan_gazetteer(spark, gazetteer_df, bbox))
+    stop = {r[0] for r in stopwords_df.select("word").collect()}
+    wordlist = wordlist_df.select("word", "freq").collect() if wordlist_df is not None else []
+    variants = build_variants(gaz, stop, mode)
+    struct = build_match_struct((v[0] for v in variants), build_unigram(variants, wordlist))
+    return _model(spark, variants_frame(spark, variants), struct)
 
 
 def save_gazetteer_model(model: GazetteerModel, path: str) -> None:
@@ -84,18 +91,22 @@ def save_gazetteer_model(model: GazetteerModel, path: str) -> None:
     unigram LM are parquet, rebuildable into a broadcast on load —
     table-format artifacts a whole cluster can share, not a local
     pickle)."""
+    unigram = model.variants.sparkSession.createDataFrame(
+        list(model.bc_struct.value.unigram.items()), "word string, freq long"
+    )
     model.variants.write.mode("overwrite").parquet(f"{path}/variants")
-    model.unigram.write.mode("overwrite").parquet(f"{path}/unigram")
+    unigram.write.mode("overwrite").parquet(f"{path}/unigram")
 
 
 def load_gazetteer_model(spark: SparkSession, path: str) -> GazetteerModel:
     """Load a saved gazetteer model and rebuild the broadcast match
     structure (skips the scan/normalize/augment/filter stages — the
-    cache-hit path of the reference's ``initialize(cache=True)``)."""
-    variants = spark.read.parquet(f"{path}/variants").cache()
-    unigram = spark.read.parquet(f"{path}/unigram")
-    bc = build_match_struct(spark, variants, unigram)
-    return GazetteerModel(variants=variants, best=_cached_best(variants), unigram=unigram, bc_struct=bc)
+    cache-hit path of the reference's ``initialize(cache=True)``),
+    under the build's ``MAX_NAMES`` guard."""
+    variants = spark.read.parquet(f"{path}/variants")
+    norms = collect_norms(variants)
+    unigram = {r[0]: int(r[1]) for r in spark.read.parquet(f"{path}/unigram").collect()}
+    return _model(spark, variants, build_match_struct(norms, unigram))
 
 
 def extract_link(

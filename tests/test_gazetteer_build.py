@@ -1,36 +1,41 @@
-"""Spark gazetteer build (G1-G7) vs the pure-Python semantics."""
+"""Gazetteer build (G1 in Spark, G2-G7 on the driver) vs the gold
+annotator's independent variant map and LM, plus the model contract
+the link, relational-matcher and compat paths read."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
+from pyspark.sql import types as T
 
+from lnex_spark.common import cat_priority
 from lnex_spark.data import fixtures as FX
-from lnex_spark.gazetteer.augment import normalize_name
-from lnex_spark.gazetteer.build import (
-    build_match_struct,
-    build_name_variants,
-    build_unigram_lm,
-    normalize_names_col,
-    scan_gazetteer,
-)
+from lnex_spark.gazetteer.build import scan_gazetteer
+from lnex_spark.pipeline import build_gazetteer, load_gazetteer_model, save_gazetteer_model
 from tests.conftest import to_spark_gaz, to_spark_stopwords, to_spark_wordlist
 
-
-def test_normalize_col_parity(spark):
-    """G2 column chain must agree with augment.normalize_name."""
-    samples = [
-        "Chennai International Airport",
-        "  Guindy-Velachery   Road ",
-        "T'Nagar!!",
-        "Adyar/Besant Nagar",
-        "café corner",
-        "LAND of the Lakes MALL",
-        "#weird (name)",
+# the variant table's schema before G2-G6 moved to the driver
+VARIANTS_SCHEMA_CONTRACT = T.StructType(
+    [
+        T.StructField("norm", T.StringType(), True),
+        T.StructField("geo_id", T.LongType(), False),
+        T.StructField("match_type", T.IntegerType(), True),
+        T.StructField("category", T.StringType(), True),
+        T.StructField("lat", T.DoubleType(), True),
+        T.StructField("lon", T.DoubleType(), True),
+        T.StructField("region", T.StringType(), True),
+        T.StructField("cat_priority", T.IntegerType(), False),
     ]
-    df = spark.createDataFrame([(s,) for s in samples], "raw string")
-    got = {r["raw"]: r["norm"] for r in df.select("raw", normalize_names_col(F.col("raw")).alias("norm")).collect()}
-    for s in samples:
-        assert got[s] == normalize_name(s), s
+)
+
+
+@pytest.fixture(scope="module")
+def model(spark, fixture_data):
+    return build_gazetteer(
+        spark,
+        to_spark_gaz(spark, fixture_data["gaz"]),
+        to_spark_stopwords(spark, fixture_data["stopwords"]),
+        to_spark_wordlist(spark, fixture_data["wordlist"]),
+    )
 
 
 def test_bbox_scan_filters(spark, fixture_data):
@@ -40,51 +45,67 @@ def test_bbox_scan_filters(spark, fixture_data):
     assert scan_gazetteer(spark, gaz, [0.0, 0.0, 1.0, 1.0]).count() == 0
 
 
-def test_variant_table_matches_gold_map(spark, fixture_data):
-    """The Spark variant table must equal the gold annotator's
-    variant map: same (norm, geo_id, match_type) set."""
-    gaz_df = to_spark_gaz(spark, fixture_data["gaz"])
-    stop_df = to_spark_stopwords(spark, fixture_data["stopwords"])
-    variants = build_name_variants(gaz_df, stop_df)
-    got = {
-        (r["norm"], r["geo_id"], r["match_type"])
-        for r in variants.select("norm", "geo_id", "match_type").collect()
-    }
-    vmap = FX.build_variant_map(fixture_data["gaz"], set(fixture_data["stopwords"]))
-    want = {(v, gid, mt) for v, cands in vmap.items() for gid, mt, _ in cands}
-    assert got == want
+def test_variant_table_matches_gold_map(spark):
+    """For every event x mode, the variant table must equal the gold
+    annotator's variant map on (norm, geo_id, match_type,
+    cat_priority), and every row must carry its source gazetteer row's
+    category / lat / lon / region."""
+    stop = FX.gen_stopwords()
+    stop_df = to_spark_stopwords(spark, stop)
+    for event in ("chennai", "louisiana", "houston"):
+        gaz = FX.gen_gazetteer(event)
+        src = {e["geo_id"]: e for e in gaz}
+        for mode in ("hp", "hr"):
+            m = build_gazetteer(spark, to_spark_gaz(spark, gaz), stop_df, mode=mode)
+            rows = m.variants.collect()
+            got = {(r["norm"], r["geo_id"], r["match_type"], r["cat_priority"]) for r in rows}
+            assert len(got) == len(rows), (event, mode)
+            vmap = FX.build_variant_map(gaz, set(stop), mode)
+            want = {(v, gid, mt, cp) for v, cands in vmap.items() for gid, mt, cp in cands}
+            assert got == want, (event, mode)
+            for r in rows:
+                e = src[r["geo_id"]]
+                assert (r["category"], r["lat"], r["lon"], r["region"]) == (
+                    e["category"], e["lat"], e["lon"], e["region"]
+                ), (event, mode, r)
+                assert r["cat_priority"] == cat_priority(e["category"]), (event, mode, r)
 
 
-def test_generic_names_filtered(spark, fixture_data):
+def test_generic_names_filtered(model):
     """G5: gazetteer names colliding with filler vocab must be dropped."""
-    gaz_df = to_spark_gaz(spark, fixture_data["gaz"])
-    stop_df = to_spark_stopwords(spark, fixture_data["stopwords"])
-    variants = build_name_variants(gaz_df, stop_df)
-    norms = {r[0] for r in variants.select("norm").distinct().collect()}
+    norms = {r[0] for r in model.variants.select("norm").distinct().collect()}
     for w in FX.GENERIC_NAME_WORDS:
         assert w not in norms
 
 
-def test_unigram_lm_matches_gold(spark, fixture_data):
-    gaz_df = to_spark_gaz(spark, fixture_data["gaz"])
-    stop_df = to_spark_stopwords(spark, fixture_data["stopwords"])
-    wl_df = to_spark_wordlist(spark, fixture_data["wordlist"])
-    variants = build_name_variants(gaz_df, stop_df)
-    lm = {r[0]: r[1] for r in build_unigram_lm(variants, wl_df).collect()}
+def test_unigram_lm_matches_gold(model, fixture_data):
     vmap = FX.build_variant_map(fixture_data["gaz"], set(fixture_data["stopwords"]))
-    want = FX.build_lm(vmap, fixture_data["wordlist"])
-    assert lm == want
+    assert model.bc_struct.value.unigram == FX.build_lm(vmap, fixture_data["wordlist"])
 
 
-def test_match_struct(spark, fixture_data):
-    gaz_df = to_spark_gaz(spark, fixture_data["gaz"])
-    stop_df = to_spark_stopwords(spark, fixture_data["stopwords"])
-    variants = build_name_variants(gaz_df, stop_df)
-    unigram = build_unigram_lm(variants, to_spark_wordlist(spark, fixture_data["wordlist"]))
-    bc = build_match_struct(spark, variants, unigram)
-    st = bc.value
+def test_match_struct(model):
+    st = model.bc_struct.value
     assert "adyar river" in st.prefixes or "adyar" in st.prefixes
     for name in st.full_names:
         toks = name.split(" ")
         assert len(toks) <= st.max_tokens
         assert " ".join(toks[:1]) in st.prefixes
+
+
+def test_variants_schema_contract(model):
+    """perfbench, jobs/run_kg.py, compat and the relational matcher read
+    these columns: names, types, nullability and order are fixed."""
+    assert model.variants.schema == VARIANTS_SCHEMA_CONTRACT
+
+
+def test_save_load_roundtrip_contract(spark, model, tmp_path):
+    """A saved model (parquet variants/ + unigram/) loads back to the
+    same match structure and the same link lookup."""
+    save_gazetteer_model(model, str(tmp_path / "model"))
+    loaded = load_gazetteer_model(spark, str(tmp_path / "model"))
+    a, b = model.bc_struct.value, loaded.bc_struct.value
+    assert b.full_names == a.full_names
+    assert b.prefixes == a.prefixes
+    assert b.unigram == a.unigram
+    assert b.max_tokens == a.max_tokens
+    assert sorted(map(tuple, loaded.best.collect())) == sorted(map(tuple, model.best.collect()))

@@ -7,9 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from lnex_spark.data import fixtures as FX
-from lnex_spark.gazetteer.build import build_name_variants
 from lnex_spark.operators.evaluate import gold_triples, precision_recall
-from lnex_spark.pipeline import run_pipeline
+from lnex_spark.pipeline import build_gazetteer, run_pipeline
 from tests.conftest import (
     to_spark_gaz,
     to_spark_stopwords,
@@ -77,8 +76,8 @@ def test_hr_mode_superset(spark, fixture_data):
     ]
     gaz_df = to_spark_gaz(spark, rows)
     stop_df = to_spark_stopwords(spark, fixture_data["stopwords"])
-    hp = build_name_variants(gaz_df, stop_df, mode="hp")
-    hr = build_name_variants(gaz_df, stop_df, mode="hr")
+    hp = build_gazetteer(spark, gaz_df, stop_df, mode="hp").variants
+    hr = build_gazetteer(spark, gaz_df, stop_df, mode="hr").variants
     hp_set = {(r["norm"], r["geo_id"]) for r in hp.select("norm", "geo_id").collect()}
     hr_set = {(r["norm"], r["geo_id"]) for r in hr.select("norm", "geo_id").collect()}
     assert hp_set <= hr_set

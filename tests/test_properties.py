@@ -179,3 +179,64 @@ def test_segmenter_equals_exhaustive_dp(s, freq):
     # floats associate differently between the two evaluations)
     best_any = max(score(g) for g in all_segs(s.lower()))
     assert score(tuple(got)) >= best_any * (1 - 1e-9)
+
+
+# gazetteer-name pieces: category / modifier / stop words, free tokens,
+# digits, apostrophes and non-ASCII; joined by spaces, hyphens, slashes
+_NAME_TOKENS = (
+    "airport road lake mall nagar park river street".split()
+    + "international north old central".split()
+    + "the of de la and".split()
+    + ["adyar", "guindy", "velachery", "42", "7th", "o'brien", "t'nagar", "'s"]
+    + ["café", "münchen", "東京", "x2"]
+)
+_SEPS = [" ", " ", " ", "-", "/", " / ", "_", "  "]
+
+
+@st.composite
+def _gaz_names(draw):
+    toks = draw(st.lists(st.sampled_from(_NAME_TOKENS), min_size=1, max_size=6))
+    return "".join(t if i == 0 else draw(st.sampled_from(_SEPS)) + t for i, t in enumerate(toks))
+
+
+@st.composite
+def _gazetteers(draw):
+    n = draw(st.integers(min_value=1, max_value=6))
+    return [
+        {
+            "geo_id": i + 1,
+            "name": draw(_gaz_names()),
+            "alt_names": draw(st.lists(_gaz_names(), max_size=2)),
+            "category": draw(st.sampled_from([None, "place", "aeroway", "highway", "amenity", "shop"])),
+            "lat": 13.0,
+            "lon": 80.0,
+            "region": "r",
+        }
+        for i in range(n)
+    ]
+
+
+_STOP_POOL = ["the", "of", "a", "adyar", "lake", "42", "north", "café", "x2"]
+
+
+@given(_gazetteers(), st.data(), st.sampled_from(["hp", "hr"]))
+@settings(max_examples=300, deadline=None)
+def test_engine_variants_equal_gold(gaz, data, mode):
+    """The engine's driver-side G2-G6 equals the gold annotator's
+    independent variant map and LM on random gazetteers. Stopwords mix
+    single words with whole gazetteer names, which only the stopword
+    list (not the single-token noise rule) removes."""
+    from lnex_spark.data import fixtures as FX
+    from lnex_spark.gazetteer.augment import normalize_name
+    from lnex_spark.gazetteer.build import build_unigram, build_variants
+
+    pool = _STOP_POOL + sorted({normalize_name(e["name"]) for e in gaz})
+    stopwords = data.draw(st.sets(st.sampled_from(pool), max_size=5))
+    wordlist = data.draw(
+        st.lists(st.tuples(st.sampled_from(_STOP_POOL + ["flood"]), st.integers(1, 99)), max_size=4)
+    )
+    rows = build_variants(gaz, stopwords, mode)
+    vmap = FX.build_variant_map(gaz, stopwords, mode)
+    got = sorted((r[0], r[1], r[2], r[7]) for r in rows)
+    assert got == sorted((v, gid, mt, cp) for v, cands in vmap.items() for gid, mt, cp in cands)
+    assert build_unigram(rows, wordlist) == FX.build_lm(vmap, wordlist)

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lnex_spark.gazetteer.build import build_match_struct, build_unigram_lm
+from lnex_spark.gazetteer.build import build_match_struct
 from lnex_spark.operators.extract import extract_mentions_df
 from lnex_spark.operators.extract_relational import (
     extract_mentions_relational,
@@ -92,13 +92,8 @@ def test_fuzz_differential_random_texts(spark):
         "norm string, geo_id long, match_type int, category string, "
         "lat double, lon double, region string, cat_priority int",
     )
-    unigram = spark.createDataFrame(
-        [(w, 5) for w in vocab], "token string, freq long"
-    )
-
-    from lnex_spark.gazetteer.build import build_match_struct
-
-    bc = build_match_struct(spark, variants, unigram)
+    unigram = {w: 5 for w in vocab}
+    bc = spark.sparkContext.broadcast(build_match_struct(names, unigram))
     bc_uni = spark.sparkContext.broadcast(bc.value.unigram)
     got_b = sorted(map(tuple, extract_mentions_df(t, bc).collect()))
     got_r = sorted(

@@ -11,7 +11,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from lnex_spark.gazetteer.build import build_match_struct, build_unigram_lm
+from lnex_spark.gazetteer import build
+from lnex_spark.gazetteer.build import (
+    build_match_struct,
+    build_unigram,
+    build_variants,
+    collect_gazetteer,
+)
 from lnex_spark.operators.link import link_mentions, score_candidates
 from tests.conftest import (
     to_spark_gaz,
@@ -53,13 +59,47 @@ def test_l1_results_identical_under_sort_merge_fallback(spark, fixture_data):
     assert len(baseline) > 0
 
 
-def test_match_struct_guard_rejects_unscoped_gazetteer(spark):
-    variants = spark.range(0, 50).select(
-        F.concat(F.lit("name"), F.col("id")).alias("norm")
+def test_match_struct_guard_rejects_unscoped_gazetteer(spark, monkeypatch):
+    """The MAX_NAMES guard bounds both the gazetteer collect and the
+    variant rows augmentation makes from it."""
+    gaz = spark.range(0, 50).select(
+        F.col("id").alias("geo_id"),
+        F.concat(F.lit("name"), F.col("id"), F.lit(" road")).alias("name"),
+        F.lit(None).cast("array<string>").alias("alt_names"),
+        F.lit("highway").alias("category"),
+        F.lit(13.0).alias("lat"),
+        F.lit(80.0).alias("lon"),
+        F.lit("chennai").alias("region"),
     )
-    lm = build_unigram_lm(variants.select("norm"), None)
+    monkeypatch.setattr(build, "MAX_NAMES", 10)
     with pytest.raises(ValueError, match="bounding box"):
-        build_match_struct(spark, variants, lm, max_names=10)
+        collect_gazetteer(gaz)
+    monkeypatch.setattr(build, "MAX_NAMES", 100)
+    rows = list(collect_gazetteer(gaz))
+    assert len(rows) == 50
+    # each "nameN road" also spawns "nameN": 100 variant rows
+    monkeypatch.setattr(build, "MAX_NAMES", 60)
+    with pytest.raises(ValueError, match="bounding box"):
+        build_variants(rows, set())
     # under the limit: builds fine
-    bc = build_match_struct(spark, variants, lm, max_names=100)
-    assert len(bc.value.full_names) == 50
+    monkeypatch.setattr(build, "MAX_NAMES", 100)
+    variants = build_variants(rows, set())
+    struct = build_match_struct((v[0] for v in variants), build_unigram(variants))
+    assert len(struct.full_names) == 100
+
+
+def test_load_guard_rejects_oversized_model(spark, fixture_data, tmp_path, monkeypatch):
+    """load_gazetteer_model keeps the build's guard on the names it
+    collects from a saved variant table; build_gazetteer reads the same
+    module-level limit."""
+    from lnex_spark import pipeline
+
+    gaz = to_spark_gaz(spark, fixture_data["gaz"])
+    stop = to_spark_stopwords(spark, fixture_data["stopwords"])
+    model = pipeline.build_gazetteer(spark, gaz, stop)
+    pipeline.save_gazetteer_model(model, str(tmp_path / "model"))
+    monkeypatch.setattr(build, "MAX_NAMES", 10)
+    with pytest.raises(ValueError, match="bounding box"):
+        pipeline.load_gazetteer_model(spark, str(tmp_path / "model"))
+    with pytest.raises(ValueError, match="bounding box"):
+        pipeline.build_gazetteer(spark, gaz, stop)

@@ -129,19 +129,15 @@ def test_urls_and_mentions_ignored():
 def test_extract_df_adversarial_rows(spark, fixture_data):
     """The extraction stage must tolerate null / empty / unicode /
     whitespace-only text rows."""
-    from lnex_spark.gazetteer.build import (
-        build_match_struct,
-        build_name_variants,
-        build_unigram_lm,
-    )
     from lnex_spark.operators.extract import extract_mentions_df
-    from tests.conftest import to_spark_gaz, to_spark_stopwords, to_spark_wordlist
+    from lnex_spark.pipeline import build_gazetteer
+    from tests.conftest import to_spark_gaz, to_spark_stopwords
 
-    variants = build_name_variants(
+    bc = build_gazetteer(
+        spark,
         to_spark_gaz(spark, fixture_data["gaz"]),
         to_spark_stopwords(spark, fixture_data["stopwords"]),
-    )
-    bc = build_match_struct(spark, variants, build_unigram_lm(variants, None))
+    ).bc_struct
     name = sorted(bc.value.full_names)[0]
     rows = [
         ("c1", 0, None),
