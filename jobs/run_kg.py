@@ -39,10 +39,6 @@ def parse_args(argv=None):
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--buckets-per-batch", type=int, default=8)
     p.add_argument("--salt-partitions", type=int, default=None)
-    p.add_argument("--dedup-texts", action="store_true",
-                   help="extract once per distinct text and join back "
-                        "(pays off only on heavily duplicated corpora; "
-                        "see pipeline.extract_link docstring)")
     p.add_argument("--derive-from-documents", action="store_true",
                    help="input is a documents table; derive transcripts (testing)")
     return p.parse_args(argv)
@@ -84,7 +80,6 @@ def main(argv=None) -> None:
         n_buckets=args.buckets,
         buckets_per_batch=args.buckets_per_batch,
         salt_partitions=args.salt_partitions,
-        dedup_texts=args.dedup_texts,
     )
     triples = finalize_triples(spark, f"{args.out}/winners")
     write_triples(triples, f"{args.out}/mention_triples")

@@ -17,12 +17,19 @@ Layout:
                  gold annotations) — seed=42, pure function of inputs
     gazetteer/   G1-G7: gazetteer scan, normalize, explode, skip-gram
                  augment, filter, unigram LM, broadcast match structure
-    operators/   T/M/L/K/X/E ops: preprocess, match, link, canonicalize,
-                 triples, geo math, skew salting, lineage, eval; plus
-                 training-data-pipeline ops (dedup, similarity, text
-                 quality, multimodal plumbing)
-    sources/     table-format seam (parquet locally, Iceberg on cluster)
+    operators/   T/M/L/K/X/E ops: preprocess, match (broadcast and
+                 relational), link, canonicalize, triples, geo math,
+                 skew salting, lineage, incremental maintenance, eval;
+                 plus library operators kept for their unit tests
+                 (dedup, similarity, curation, graph, media decode, ...)
+    sources/     table-format seam (parquet locally, Iceberg on
+                 cluster); Avro / sink / synthetic-transcript sources
     streaming/   Structured Streaming wrapper for incremental extraction
+    oracles.py, oracle_defs*.py
+                 the operator registry: (Spark, DuckDB-SQL) pairs behind
+                 queries() / oracle_sql() in __spark_entry__.py — the
+                 §2A ops first, then the library-operator checks and
+                 the tested analytics ops
 """
 
 __version__ = "0.1.0"

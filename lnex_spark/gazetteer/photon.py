@@ -82,8 +82,7 @@ PHOTON_HIT_SCHEMA = T.StructType(
 
 def parse_photon_hits(spark: SparkSession, path: str) -> DataFrame:
     """Read ES hits JSONL with the explicit schema (bad lines become
-    all-null structs and are dropped by the osm_id filter downstream —
-    same quarantine stance as sources/readers.py)."""
+    all-null structs and are dropped by the osm_id filter downstream)."""
     return (
         spark.read.text(path)
         .select(F.from_json(F.col("value"), PHOTON_HIT_SCHEMA).alias("h"))

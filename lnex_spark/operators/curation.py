@@ -402,8 +402,7 @@ def curate_transcripts(
     cores), at most 65536 (the md5-prefix width backing the shard
     key) — measured on this host, shards=8 capped 4→16-core scaling
     at 0.44 efficiency.  The value changes seq_id assignment, so pin
-    it when comparing runs.
-    Oracle twin: oracle_defs224.curation_flagship."""
+    it when comparing runs."""
     from pyspark.sql import Window
 
     # ONE text scan.  The previous shape (surviving_conversations pass,

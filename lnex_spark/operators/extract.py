@@ -71,70 +71,6 @@ def extract_mentions_df(transcripts: DataFrame, bc_struct) -> DataFrame:
     )
 
 
-def extract_mentions_by_text(texts: DataFrame, bc_struct) -> DataFrame:
-    """texts(text) → (text, start, end, surface, norm): the matcher as
-    a pure function of the text column, keyed by the text itself."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        struct = bc_struct.value
-        segmenter = HashtagSegmenter(struct.unigram)
-        full, pref, mx = struct.full_names, struct.prefixes, struct.max_tokens
-        for pdf in batches:
-            out_t, out_s, out_e, out_surf, out_norm = [], [], [], [], []
-            for text in pdf["text"].values:
-                if not text:
-                    continue
-                for s, e, surface, norm in extract_mentions(text, full, pref, mx, segmenter):
-                    out_t.append(text)
-                    out_s.append(s)
-                    out_e.append(e)
-                    out_surf.append(surface)
-                    out_norm.append(norm)
-            yield pd.DataFrame(
-                {
-                    "text": pd.Series(out_t, dtype="object"),
-                    "start": pd.Series(out_s, dtype="int32"),
-                    "end": pd.Series(out_e, dtype="int32"),
-                    "surface": pd.Series(out_surf, dtype="object"),
-                    "norm": pd.Series(out_norm, dtype="object"),
-                }
-            )
-
-    return texts.select("text").mapInPandas(
-        run, schema="text string, start int, end int, surface string, norm string"
-    )
-
-
-def extract_mentions_dedup_df(transcripts: DataFrame, bc_struct) -> DataFrame:
-    """Dedup-aware variant of ``extract_mentions_df``: run the Python
-    matcher once per DISTINCT text, then join the per-text mentions
-    back to the turns.
-
-    Extraction is a pure function of ``text``, so the output row set
-    is identical to the direct path (tests/test_dedup_extract.py
-    asserts byte-equality).  The trade: two extra shuffles (the
-    distinct and the join-back, both keyed on the text) buy a
-    reduction of the expensive Arrow/Python stage proportional to the
-    corpus duplication ratio.  At 10^12-turn transcript scale,
-    templated agent/tool turns repeat heavily, so this is the default
-    worth considering; for near-unique corpora it is pure overhead —
-    measure the distinct-to-total ratio first (one cheap columnar
-    approx_count_distinct pass) and pick the path, which is what
-    ``extract_link(dedup_texts='auto')`` does.  MEASURED (sf0.1-derived
-    transcripts, local[16], 200k turns): 40x verbatim duplication
-    direct 1.36s vs dedup 1.16s; 2.4x duplication direct 1.40s vs
-    dedup 1.64s — see extract_link's docstring for the resulting
-    auto threshold.
-    """
-    distinct_texts = transcripts.select("text").filter(F.col("text").isNotNull()).distinct()
-    per_text = extract_mentions_by_text(distinct_texts, bc_struct)
-    return (
-        transcripts.select("conv_id", "turn_idx", "text")
-        .join(per_text, "text")
-        .select("conv_id", "turn_idx", "start", "end", "surface", "norm")
-    )
-
-
 def preprocess_cols(transcripts: DataFrame) -> DataFrame:
     """T2 (relational half): the cheap regex cleanup as a pure built-in
     chain — used by reporting queries / the DuckDB oracle; the matcher

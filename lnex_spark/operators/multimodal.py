@@ -161,7 +161,7 @@ def synthesize_real_media(docs: DataFrame) -> DataFrame:
     """mapInPandas synthesis of REAL encoded payloads (BMP/PPM/WAV/VID0)
     keyed off doc_id — deterministic, no RNG, no external data.  This is
     test/bench scaffolding; production reads binary columns from parquet
-    or the binaryFile source (oracle_defs23.binaryfile_manifest)."""
+    or the binaryFile source."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

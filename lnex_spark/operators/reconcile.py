@@ -6,8 +6,8 @@ routinely:
 
 * ``table_diff`` — classify every key of two table versions as
   added / deleted / changed / same.  This is the audit step after an
-  incremental KG merge (operators/incremental.py) or a MERGE INTO
-  (oracle_defs6): one full-outer join on the key, column-wise
+  incremental KG merge (operators/incremental.py) or a MERGE INTO:
+  one full-outer join on the key, column-wise
   null-safe comparison — NO row hashing, so engine-specific value
   formatting (double→string) can never produce a false diff.  At
   scale this is one keyed shuffle of each side; with both versions

@@ -15,7 +15,7 @@ re-shuffle on conv_id anyway.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -30,13 +30,6 @@ def salt_repartition(df: DataFrame, num_partitions: int, salt_buckets: int | Non
         "_salt", F.pmod(F.hash(F.col("conv_id"), F.col("turn_idx")), F.lit(salt_buckets))
     )
     return salted.repartition(num_partitions, F.col("conv_id"), F.col("_salt")).drop("_salt")
-
-
-def turn_order(df: DataFrame) -> DataFrame:
-    """T1: deterministic per-conversation turn numbering — the ordering
-    contract under which per-turn text equality vs the reference holds."""
-    w = Window.partitionBy("conv_id").orderBy(F.col("turn_idx").asc())
-    return df.withColumn("turn_rank", F.row_number().over(w))
 
 
 def suggest_salt_partitions(
@@ -74,54 +67,3 @@ def suggest_salt_partitions(
     if stats.hot <= max_rows_per_task_factor * mean_task:
         return None
     return target_parallelism
-
-
-def key_skew_profile(df: DataFrame, key: str = "conv_id") -> DataFrame:
-    """One-row concentration report of a key distribution: the
-    measurement behind ``suggest_salt_partitions``'s yes/no decision,
-    kept as an auditable artifact (how skewed IS this corpus?).
-
-    Columns: ``n_keys``, ``total`` rows, ``gini`` (0 = uniform,
-    →1 = one key holds everything; computed from the exact rank-
-    weighted form 2·Σ i·c_(i) / (k·Σc) − (k+1)/k over counts sorted
-    ascending), ``top1_share`` and ``top10_share`` (fraction of all
-    rows held by the hottest 1 / 10 keys).
-
-    The rank runs over the per-key COUNT table (key-cardinality-sized)
-    — but key cardinality is itself raw-scale for conv_id at 10^12
-    turns (up to ~10^9 distinct keys), so the rank is computed with
-    the DISTRIBUTED form (operators/scalable_windows.attach_rank:
-    range-partition + per-partition offsets — no single-partition
-    window over the count table; converted in the round-4 global-
-    window audit).  The descending "hot" rank is derived arithmetically
-    (rk_hot = n_keys − rk + 1: ordering by (c desc, key desc) is the
-    exact reverse of (c asc, key asc)) rather than ranked twice.
-    Ordering is fully specified (count, then key) so ranks — and
-    therefore the Gini sum — are deterministic under ties.
-    """
-    from lnex_spark.operators.scalable_windows import attach_rank
-
-    cnt = df.groupBy(key).agg(F.count("*").alias("c"))
-    n_keys = cnt.agg(F.count("*").alias("k"))
-    ranked = (
-        attach_rank(cnt, [F.col("c").asc(), F.col(key).asc()], rank_col="rk")
-        .crossJoin(F.broadcast(n_keys))
-        .select("c", "rk", (F.col("k") - F.col("rk") + 1).alias("rk_hot"))
-    )
-    return ranked.agg(
-        F.count("*").alias("n_keys"),
-        F.sum("c").alias("total"),
-        F.round(
-            2.0 * F.sum(F.col("rk") * F.col("c")) / (F.count("*") * F.sum("c"))
-            - (F.count("*") + 1.0) / F.count("*"),
-            6,
-        ).alias("gini"),
-        F.round(
-            F.sum(F.when(F.col("rk_hot") <= 1, F.col("c")).otherwise(0)) / F.sum("c"),
-            6,
-        ).alias("top1_share"),
-        F.round(
-            F.sum(F.when(F.col("rk_hot") <= 10, F.col("c")).otherwise(0)) / F.sum("c"),
-            6,
-        ).alias("top10_share"),
-    )

@@ -9,7 +9,7 @@ partition) so a resumed job converges to the same table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PRED_MENTIONS = "mentionsLocation"

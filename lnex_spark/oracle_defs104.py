@@ -1,16 +1,4 @@
-"""Hundred-fourth oracle-registry module: clustered-sampling design
-math and systematic selection.
-
-  * design_effect_events — the design effect of user-clustered
-    sampling: one-way ANOVA decomposition of value into
-    between-user and within-user components, intraclass correlation
-    ICC = (MSB − MSW)/(MSB + (m̄−1)·MSW) with the standard
-    unequal-cluster-size m̄ correction, and DEFF = 1 + (m̄−1)·ICC —
-    how many times more samples clustered selection needs over
-    simple random sampling to reach the same variance.  The reason
-    "sample whole conversations" and "sample random turns" are NOT
-    interchangeable at 10^12 rows; closes the survey-design suite
-    (Neyman allocation, Horvitz-Thompson, stratified gates).
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * systematic_sample_orders — every-k-th systematic sampling under
     a fully-specified order (totalprice, orderkey) with a
@@ -24,7 +12,7 @@ math and systematic selection.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -32,85 +20,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-_DEFF_SQL = """
-    WITH per_user AS (
-      SELECT user_id, COUNT(*) AS m, AVG(value) AS ybar, SUM(value) AS ysum
-      FROM events GROUP BY user_id
-    ),
-    tot AS (
-      SELECT COUNT(*) AS k, SUM(m) AS n, SUM(ysum) / SUM(m) AS gmean,
-             AVG(m * 1.0) AS mbar
-      FROM per_user
-    ),
-    ssb AS (
-      SELECT SUM(p.m * (p.ybar - t.gmean) * (p.ybar - t.gmean)) AS ss_between
-      FROM per_user p CROSS JOIN tot t
-    ),
-    ssw AS (
-      SELECT SUM((e.value - p.ybar) * (e.value - p.ybar)) AS ss_within
-      FROM events e JOIN per_user p ON e.user_id = p.user_id
-    ),
-    ms AS (
-      SELECT t.k, t.n, t.mbar,
-             b.ss_between / (t.k - 1) AS msb,
-             w.ss_within / (t.n - t.k) AS msw
-      FROM tot t, ssb b, ssw w
-    )
-    SELECT CAST(k AS BIGINT) AS n_clusters, CAST(n AS BIGINT) AS n_rows,
-           ROUND(mbar, 6) AS mean_cluster_size,
-           ROUND((msb - msw) / (msb + (mbar - 1.0) * msw), 6) AS icc,
-           ROUND(1.0 + (mbar - 1.0)
-                 * ((msb - msw) / (msb + (mbar - 1.0) * msw)), 6) AS deff
-    FROM ms
-"""
-
-
-@register("design_effect_events", _DEFF_SQL)
-def design_effect_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.count("*").alias("m"),
-        F.avg("value").alias("ybar"),
-        F.sum("value").alias("ysum"),
-    )
-    tot = per_user.agg(
-        F.count("*").alias("k"),
-        F.sum("m").alias("n"),
-        (F.sum("ysum") / F.sum("m")).alias("gmean"),
-        F.avg(F.col("m") * 1.0).alias("mbar"),
-    )
-    ssb = per_user.crossJoin(tot).agg(
-        F.sum(
-            F.col("m") * (F.col("ybar") - F.col("gmean")) * (F.col("ybar") - F.col("gmean"))
-        ).alias("ss_between")
-    )
-    ssw = (
-        ev.join(per_user.select("user_id", "ybar"), "user_id")
-        .agg(
-            F.sum((F.col("value") - F.col("ybar")) * (F.col("value") - F.col("ybar"))).alias(
-                "ss_within"
-            )
-        )
-    )
-    ms = tot.crossJoin(ssb).crossJoin(ssw).select(
-        "k",
-        "n",
-        "mbar",
-        (F.col("ss_between") / (F.col("k") - 1)).alias("msb"),
-        (F.col("ss_within") / (F.col("n") - F.col("k"))).alias("msw"),
-    )
-    icc = (F.col("msb") - F.col("msw")) / (
-        F.col("msb") + (F.col("mbar") - 1.0) * F.col("msw")
-    )
-    return ms.select(
-        F.col("k").cast("long").alias("n_clusters"),
-        F.col("n").cast("long").alias("n_rows"),
-        F.round("mbar", 6).alias("mean_cluster_size"),
-        F.round(icc, 6).alias("icc"),
-        F.round(1.0 + (F.col("mbar") - 1.0) * icc, 6).alias("deff"),
-    )
 
 
 _SYS_K = 20

@@ -1,5 +1,4 @@
-"""Hundred-ninth oracle-registry module: budgeted curation and
-labeling-batch selection.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * budget_selection_docs — greedy quality-per-token selection under
     a 100k-token budget: each doc scored by the deterministic
@@ -11,19 +10,11 @@ labeling-batch selection.
     prefix sum.  This is the "assemble the best corpus that fits
     the training budget" step, reported as per-selection-decile
     aggregates so the output is scale-stable.
-
-  * active_learning_batch_docs — the next labeling batch under
-    uncertainty sampling with a diversity quota: rank docs by
-    |p − 0.5| ascending (most uncertain first, rounded margins,
-    doc_id tiebreak) but cap the batch at 3 docs per language —
-    without the quota the batch collapses onto one stratum and the
-    labels teach the model nothing new.  One per-language window +
-    one global re-rank; top-12 emitted.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -107,49 +98,4 @@ def budget_selection_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("p"), 6).alias("total_quality"),
             F.round(F.min(F.col("p") / F.col("toks")), 9).alias("min_density"),
         )
-    )
-
-
-_AL_SQL = """
-    WITH scored AS (
-      SELECT doc_id, lang,
-             ROUND(abs(1.0 / (1.0 + exp(-(n_chars - 400) / 150.0)) - 0.5), 6)
-               AS margin
-      FROM documents
-    ),
-    quota AS (
-      SELECT doc_id, lang, margin,
-             row_number() OVER (PARTITION BY lang
-                                ORDER BY margin, doc_id) AS lang_rk
-      FROM scored
-    ),
-    batch AS (
-      SELECT doc_id, lang, margin,
-             row_number() OVER (ORDER BY margin, doc_id) AS rk
-      FROM quota WHERE lang_rk <= 3
-    )
-    SELECT rk, doc_id, lang, margin FROM batch WHERE rk <= 12
-"""
-
-
-@register("active_learning_batch_docs", _AL_SQL)
-def active_learning_batch_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    scored = d.select(
-        "doc_id",
-        "lang",
-        F.round(
-            F.abs(1.0 / (1.0 + F.exp(-(F.col("n_chars") - 400) / 150.0)) - 0.5), 6
-        ).alias("margin"),
-    )
-    wq = Window.partitionBy("lang").orderBy("margin", "doc_id")
-    quota = scored.withColumn("lang_rk", F.row_number().over(wq)).filter(
-        F.col("lang_rk") <= 3
-    )
-    # the global re-rank runs over at most 3 x |languages| rows
-    wb = Window.orderBy("margin", "doc_id")
-    return (
-        quota.withColumn("rk", F.row_number().over(wb))
-        .filter(F.col("rk") <= 12)
-        .select("rk", "doc_id", "lang", "margin")
     )

@@ -1,5 +1,4 @@
-"""Hundred-twelfth oracle-registry module: set-valued classification
-guarantees and embedding precision planning.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * conformal_sets_events — split-conformal CLASSIFICATION (the
     set-valued sibling of conformal_events' regression intervals):
@@ -11,14 +10,6 @@ guarantees and embedding precision planning.
     empirical coverage, which the conformal guarantee says should
     be near 90% regardless of how wrong the model is — distribution-
     free correctness from exact integer counts.
-
-  * quant_error_embeddings — precision planning for embedding
-    storage: per-vector affine quantization to 8-bit and 4-bit
-    grids (the mapInArrow int8 op's math, here as pure higher-order
-    column functions), corpus mean MSE and SNR(dB) for both widths.
-    The 24 dB/4-bit rule-of-thumb made measurable: the readout that
-    decides whether the ANN index can drop to int4 before recall
-    pays for it.
 """
 
 from __future__ import annotations
@@ -128,80 +119,4 @@ def conformal_sets_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "set_size",
         F.col("n_test").cast("long").alias("n_test"),
         F.round(F.col("n_cov") * 1.0 / F.col("n_test"), 6).alias("coverage"),
-    )
-
-
-_QE_SQL = """
-    WITH base AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE vec_id < 1000
-    ),
-    rng AS (
-      SELECT vec_id, v,
-             list_min(v) AS lo,
-             (list_max(v) - list_min(v)) AS span
-      FROM base
-    ),
-    err AS (
-      SELECT vec_id,
-             list_sum(list_transform(v, x -> x * x)) AS energy,
-             list_sum(list_transform(v,
-               x -> pow(x - (lo + (span / 255.0) *
-                    floor((x - lo) / (span / 255.0) + 0.5)), 2))) AS mse8,
-             list_sum(list_transform(v,
-               x -> pow(x - (lo + (span / 15.0) *
-                    floor((x - lo) / (span / 15.0) + 0.5)), 2))) AS mse4,
-             len(v) AS d
-      FROM rng WHERE span > 0
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           ROUND(AVG(mse8 / d), 9) AS mean_mse_int8,
-           ROUND(AVG(mse4 / d), 9) AS mean_mse_int4,
-           ROUND(10.0 * ln(SUM(energy) / SUM(mse8)) / ln(10.0), 6) AS snr_db_int8,
-           ROUND(10.0 * ln(SUM(energy) / SUM(mse4)) / ln(10.0), 6) AS snr_db_int4
-    FROM err
-"""
-
-
-@register("quant_error_embeddings", _QE_SQL)
-def quant_error_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 1000)
-    base = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    rng = base.select(
-        "vec_id",
-        "v",
-        F.array_min("v").alias("lo"),
-        (F.array_max("v") - F.array_min("v")).alias("span"),
-    ).filter(F.col("span") > 0)
-
-    def mse(levels: float):
-        step = F.col("span") / F.lit(levels)
-        return F.aggregate(
-            "v",
-            F.lit(0.0),
-            lambda acc, x: acc
-            + F.pow(
-                x - (F.col("lo") + step * F.floor((x - F.col("lo")) / step + 0.5)), 2
-            ),
-        )
-
-    energy = F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x)
-    err = rng.select(
-        energy.alias("energy"),
-        mse(255.0).alias("mse8"),
-        mse(15.0).alias("mse4"),
-        F.size("v").alias("d"),
-    )
-    return err.agg(
-        F.count("*").cast("long").alias("n_vecs"),
-        F.round(F.avg(F.col("mse8") / F.col("d")), 9).alias("mean_mse_int8"),
-        F.round(F.avg(F.col("mse4") / F.col("d")), 9).alias("mean_mse_int4"),
-        F.round(
-            10.0 * F.log(F.sum("energy") / F.sum("mse8")) / F.log(F.lit(10.0)), 6
-        ).alias("snr_db_int8"),
-        F.round(
-            10.0 * F.log(F.sum("energy") / F.sum("mse4")) / F.log(F.lit(10.0)), 6
-        ).alias("snr_db_int4"),
     )

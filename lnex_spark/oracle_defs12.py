@@ -1,7 +1,8 @@
-"""Twelfth oracle-registry module: embedding-column analytics —
-per-label centroids (positional unnest + two-key agg, the reduce
-behind k-means/IVF training) and L2 norms via higher-order array
-aggregation (the normalize step ahead of cosine similarity).
+"""Oracle pairs for two library operators: per-stratum deterministic
+sampling (``operators.curation.hash_bucket``: en 50%, de 20%, the rest
+10%, gated on an md5 bucket both engines derive the same way) and
+3-round synchronous label propagation over the hour-bucket
+co-occurrence graph (``operators.graph.label_propagation``).
 """
 
 from __future__ import annotations
@@ -14,51 +15,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- per-label centroid, componentwise ----------------------------------
-@register(
-    "label_centroids",
-    """
-    SELECT label, i AS pos, round(avg(v), 6) AS mean_v
-    FROM (
-      SELECT label,
-             unnest(embedding) AS v,
-             generate_subscripts(embedding, 1) AS i
-      FROM embeddings
-    )
-    GROUP BY label, i
-    """,
-)
-def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Componentwise label centroids: posexplode → (label, pos) hash
-    agg. At 100 TB this is the canonical map-side-combining reduce —
-    shuffle volume is labels x dims, independent of row count."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return (
-        emb.select("label", F.posexplode("embedding").alias("p", "v"))
-        .groupBy("label", (F.col("p") + 1).alias("pos"))
-        .agg(F.round(F.avg("v"), 6).alias("mean_v"))
-    )
-
-
-# --- L2 norms via higher-order aggregate --------------------------------
-@register(
-    "vector_norms",
-    """
-    SELECT vec_id,
-           round(sqrt(list_sum(list_transform(embedding, x -> x * x))), 6) AS l2_norm
-    FROM embeddings WHERE vec_id < 300
-    """,
-)
-def vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
-    sq_sum = F.aggregate(
-        "embedding",
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
-    return emb.select("vec_id", F.round(F.sqrt(sq_sum), 6).alias("l2_norm"))
 
 
 # --- stratified deterministic sampling ----------------------------------
@@ -132,9 +88,10 @@ _LPA_SQL = (
 @register("lpa_communities_events", _LPA_SQL)
 def lpa_communities_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round synchronous LPA over the hour-bucket co-occurrence graph
-    (same edge construction as tri_count_events) — the Spark side is
-    the genuinely iterative operators/graph.label_propagation job, the
-    DuckDB side an independent fully-unrolled re-derivation."""
+    (users linked by the same event type in the same hour) — the
+    Spark side is the genuinely iterative
+    operators/graph.label_propagation job, the DuckDB side an
+    independent fully-unrolled re-derivation."""
     from lnex_spark.operators.graph import label_propagation
 
     ev = (

@@ -1,5 +1,4 @@
-"""Hundred-twenty-fifth oracle-registry module: top-weighted rank
-agreement and normalized dependence.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * quant_rank_rbo — rank-biased overlap (p = 0.9, truncated at
     depth 5) between the exact-cosine and int8-quantized-cosine
@@ -8,20 +7,12 @@ agreement and normalized dependence.
     tiebreaks.  RBO is TOP-weighted where Kendall/Spearman treat
     every position equally — the right agreement metric for
     retrieval lists, here answering "does int8 storage change what
-    the user actually sees" and closing the loop opened by
-    quant_error_embeddings' SNR numbers.
-
-  * symmetric_uncertainty_events — symmetric uncertainty
-    SU = 2·IG(X;Y)/(H(X)+H(Y)) between event type and user bucket:
-    the [0,1]-normalized form of infogain_type_user that makes
-    dependence comparable across feature pairs with different
-    entropies — the feature-selection normalization step, one
-    contingency aggregation.
+    the user actually sees".
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -177,65 +168,3 @@ def quant_rank_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("overlap_at_5"),
     )
     return agg
-
-
-_SU_SQL = """
-    WITH base AS (
-      SELECT event_type AS x, CAST(user_id % 4 AS INTEGER) AS y FROM events
-    ),
-    joint AS (SELECT x, y, COUNT(*) AS c FROM base GROUP BY x, y),
-    tot AS (SELECT SUM(c) AS n FROM joint),
-    mx AS (SELECT x, SUM(c) AS cx FROM joint GROUP BY x),
-    my AS (SELECT y, SUM(c) AS cy FROM joint GROUP BY y),
-    ents AS (
-      SELECT
-        (SELECT SUM(-(cx * 1.0 / t.n) * ln(cx * 1.0 / t.n) / ln(2.0))
-         FROM mx, tot t) AS hx,
-        (SELECT SUM(-(cy * 1.0 / t.n) * ln(cy * 1.0 / t.n) / ln(2.0))
-         FROM my, tot t) AS hy,
-        (SELECT SUM(-(j.c * 1.0 / t.n) * ln(j.c * 1.0 / t.n) / ln(2.0))
-         FROM joint j, tot t) AS hxy
-    )
-    SELECT ROUND(hx, 6) AS h_x, ROUND(hy, 6) AS h_y,
-           ROUND(hx + hy - hxy, 6) AS mutual_info,
-           ROUND(2.0 * (hx + hy - hxy) / (hx + hy), 6) AS symmetric_uncertainty
-    FROM ents
-"""
-
-
-@register("symmetric_uncertainty_events", _SU_SQL)
-def symmetric_uncertainty_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    base = ev.select(
-        F.col("event_type").alias("x"), (F.col("user_id") % 4).cast("int").alias("y")
-    )
-    joint = base.groupBy("x", "y").agg(F.count("*").alias("c"))
-    tot = joint.agg(F.sum("c").alias("n"))
-
-    def entropy(df, key):
-        marg = df.groupBy(*key).agg(F.sum("c").alias("ck"))
-        p = F.col("ck") * 1.0 / F.col("n")
-        return marg.crossJoin(tot).agg(
-            F.sum(-p * F.log(p) / F.log(F.lit(2.0))).alias("h")
-        )
-
-    hx = entropy(joint, ["x"]).select(F.col("h").alias("hx"))
-    hy = entropy(joint, ["y"]).select(F.col("h").alias("hy"))
-    hxy = entropy(joint.select("x", "y", "c"), ["x", "y"]).select(
-        F.col("h").alias("hxy")
-    )
-    return (
-        hx.crossJoin(hy)
-        .crossJoin(hxy)
-        .select(
-            F.round("hx", 6).alias("h_x"),
-            F.round("hy", 6).alias("h_y"),
-            F.round(F.col("hx") + F.col("hy") - F.col("hxy"), 6).alias("mutual_info"),
-            F.round(
-                2.0
-                * (F.col("hx") + F.col("hy") - F.col("hxy"))
-                / (F.col("hx") + F.col("hy")),
-                6,
-            ).alias("symmetric_uncertainty"),
-        )
-    )

@@ -1,16 +1,4 @@
-"""Hundred-twenty-eighth oracle-registry module: robust centers and
-inventory classification.
-
-  * geomedian_embeddings — two unrolled Weiszfeld iterations toward
-    the geometric median of the embedding cloud: start at the
-    per-dimension centroid, then m ← Σ x_i/d_i / Σ 1/d_i with
-    d_i = ||x_i − m|| (per-round rounding, the iterative-solver
-    determinism discipline; one distances join + one weighted
-    per-dimension aggregate per round, shuffle volume = dims).
-    The L1-robust center an outlier-polluted embedding cloud needs
-    where the mean gets dragged; emits the first dimensions of
-    centroid vs geomedian plus the mean-distance improvement that
-    justifies the iterations.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * abc_analysis_orders — ABC (Pareto-class) analysis of customer
     revenue: customers ranked by revenue, A = cumulative share ≤
@@ -23,7 +11,7 @@ inventory classification.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -31,109 +19,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _gm_round(prev: str, cur: str) -> str:
-    return f"""
-    dist_{cur} AS MATERIALIZED (
-      SELECT d.vec_id, sqrt(SUM(pow(d.x - m.v, 2))) AS dist
-      FROM dims d JOIN {prev} m ON d.dim = m.dim
-      GROUP BY d.vec_id
-    ),
-    wsum_{cur} AS MATERIALIZED (
-      SELECT SUM(1.0 / dist) AS wz FROM dist_{cur} WHERE dist > 0
-    ),
-    {cur} AS MATERIALIZED (
-      SELECT d.dim, ROUND(SUM(d.x / t.dist) / MAX(w.wz), 6) AS v
-      FROM dims d
-      JOIN dist_{cur} t ON t.vec_id = d.vec_id AND t.dist > 0
-      CROSS JOIN wsum_{cur} w
-      GROUP BY d.dim
-    )"""
-
-
-_GM_SQL = f"""
-    WITH vecs AS MATERIALIZED (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500
-    ),
-    idx AS MATERIALIZED (
-      SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
-      FROM vecs
-    ),
-    dims AS MATERIALIZED (
-      SELECT vec_id, i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS x FROM idx
-    ),
-    m0 AS MATERIALIZED (
-      SELECT dim, ROUND(AVG(x), 6) AS v FROM dims GROUP BY dim
-    ),
-    {_gm_round("m0", "m1")},
-    {_gm_round("m1", "m2")},
-    quality AS (
-      SELECT
-        (SELECT AVG(dist) FROM dist_m1) AS mean_dist_centroid,
-        (SELECT AVG(sqrt(s)) FROM (
-           SELECT d.vec_id, SUM(pow(d.x - m.v, 2)) AS s
-           FROM dims d JOIN m2 m ON d.dim = m.dim GROUP BY d.vec_id))
-          AS mean_dist_geomedian
-    )
-    SELECT c.dim,
-           c.v AS centroid_v,
-           g.v AS geomedian_v,
-           ROUND((SELECT mean_dist_centroid FROM quality), 6) AS mean_dist_centroid,
-           ROUND((SELECT mean_dist_geomedian FROM quality), 6) AS mean_dist_geomedian
-    FROM m0 c JOIN m2 g ON c.dim = g.dim
-    WHERE c.dim < 8
-"""
-
-
-@register("geomedian_embeddings", _GM_SQL)
-def geomedian_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
-    dims = emb.select(
-        "vec_id", F.posexplode("embedding").alias("dim", "x")
-    ).select("vec_id", "dim", F.col("x").cast("double").alias("x"))
-    m = dims.groupBy("dim").agg(F.round(F.avg("x"), 6).alias("v"))
-    m0 = m
-
-    def dist_to(center: DataFrame) -> DataFrame:
-        return (
-            dims.join(center.withColumnRenamed("v", "mv"), "dim")
-            .groupBy("vec_id")
-            .agg(F.sqrt(F.sum(F.pow(F.col("x") - F.col("mv"), 2))).alias("dist"))
-        )
-
-    d1 = None
-    for _ in range(2):
-        d = dist_to(m).filter(F.col("dist") > 0)
-        if d1 is None:
-            d1 = d
-        wz = d.agg(F.sum(1.0 / F.col("dist")).alias("wz"))
-        m = (
-            dims.join(d, "vec_id")
-            .crossJoin(wz)
-            .groupBy("dim")
-            .agg(
-                F.round(
-                    F.sum(F.col("x") / F.col("dist")) / F.max("wz"), 6
-                ).alias("v")
-            )
-        )
-    mean_c = d1.agg(F.avg("dist").alias("mc"))
-    mean_g = dist_to(m).agg(F.avg("dist").alias("mg"))
-    return (
-        m0.withColumnRenamed("v", "centroid_v")
-        .join(m.withColumnRenamed("v", "geomedian_v"), "dim")
-        .filter(F.col("dim") < 8)
-        .crossJoin(mean_c)
-        .crossJoin(mean_g)
-        .select(
-            "dim",
-            "centroid_v",
-            "geomedian_v",
-            F.round("mc", 6).alias("mean_dist_centroid"),
-            F.round("mg", 6).alias("mean_dist_geomedian"),
-        )
-    )
 
 
 _ABC_SQL = """

@@ -1,5 +1,4 @@
-"""Hundred-thirty-fourth oracle-registry module: queueing-identity
-and cumulative-hazard machinery.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * littles_law_events — Little's law L = λW verified as data over
     30-min-gap user sessions: λW comes from the session table
@@ -8,16 +7,8 @@ and cumulative-hazard machinery.
     (+1 at start, −1 at end) boundary deltas, running-cumsum the
     concurrency, integrate concurrency × interval length over the
     observation window.  The two derivations agree exactly up to
-    float noise (same mergeable-identity discipline as
-    jackknife_identity_events); the sweep-line running sum is the
+    float noise; the sweep-line running sum is the
     same bounded boundary-sized global window as the KS op.
-
-  * nelson_aalen_episodes — the Nelson-Aalen cumulative hazard
-    H(t) = Σ_{t_i ≤ t} d_i/n_i over the same censored user×type
-    episode table as kaplan_meier_episodes (deaths = episodes ending
-    >2 days before the user's horizon), with the Breslow survivor
-    exp(−H) emitted next to it — the hazard-scale twin of the KM
-    product-limit curve, sharing its risk-set construction.
 """
 
 from __future__ import annotations
@@ -27,7 +18,7 @@ from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
 
-_DAY_US = 86_400_000_000
+
 _GAP_S = 1800
 
 
@@ -146,92 +137,4 @@ def littles_law_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.round(F.col("total_dur") / span, 6).alias("l_littles"),
         F.round(F.col("area") / span, 6).alias("l_sweep"),
-    )
-
-
-_NA_SQL = f"""
-    WITH lives AS (
-      SELECT user_id, event_type,
-             CAST(floor((epoch_us(MAX(ts)) - epoch_us(MIN(ts)))
-                        / {_DAY_US}.0) AS BIGINT) AS dur,
-             epoch_us(MAX(ts)) AS last_us
-      FROM events GROUP BY user_id, event_type
-    ),
-    horizon AS (
-      SELECT user_id, MAX(last_us) AS u_last FROM lives GROUP BY user_id
-    ),
-    labeled AS (
-      SELECT dur,
-             CASE WHEN last_us < u_last - 2 * {_DAY_US} THEN 1 ELSE 0 END
-               AS ev
-      FROM lives JOIN horizon USING (user_id)
-    ),
-    per_dur AS (
-      SELECT dur, SUM(ev) AS deaths, COUNT(*) AS leavers
-      FROM labeled GROUP BY dur
-    ),
-    risked AS (
-      SELECT dur, deaths,
-             (SELECT COUNT(*) FROM labeled)
-               - COALESCE(SUM(leavers) OVER (ORDER BY dur
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS at_risk
-      FROM per_dur
-    )
-    SELECT dur AS duration_days,
-           CAST(at_risk AS BIGINT) AS at_risk,
-           CAST(deaths AS BIGINT) AS deaths,
-           ROUND(SUM(deaths * 1.0 / at_risk) OVER (ORDER BY dur
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
-             AS cum_hazard,
-           ROUND(exp(-SUM(deaths * 1.0 / at_risk) OVER (ORDER BY dur
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6)
-             AS breslow_survival
-    FROM risked WHERE deaths > 0
-"""
-
-
-@register("nelson_aalen_episodes", _NA_SQL)
-def nelson_aalen_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
-    lives = e.groupBy("user_id", "event_type").agg(
-        F.floor(
-            (F.unix_micros(F.max("ts").cast("timestamp")) - F.unix_micros(F.min("ts").cast("timestamp")))
-            / float(_DAY_US)
-        )
-        .cast("long")
-        .alias("dur"),
-        F.unix_micros(F.max("ts").cast("timestamp")).alias("last_us"),
-    )
-    horizon = lives.groupBy("user_id").agg(F.max("last_us").alias("u_last"))
-    labeled = lives.join(horizon, "user_id").select(
-        "dur",
-        F.when(
-            F.col("last_us") < F.col("u_last") - 2 * _DAY_US, 1
-        )
-        .otherwise(0)
-        .alias("ev"),
-    )
-    per_dur = labeled.groupBy("dur").agg(
-        F.sum("ev").alias("deaths"), F.count("*").alias("leavers")
-    )
-    total = labeled.agg(F.count("*").alias("n_total"))
-    wd = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, -1)
-    risked = (
-        per_dur.crossJoin(F.broadcast(total))
-        .withColumn(
-            "at_risk",
-            F.col("n_total")
-            - F.coalesce(F.sum("leavers").over(wd), F.lit(0)),
-        )
-        .filter(F.col("deaths") > 0)
-    )
-    wh = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
-    hz = F.sum(F.col("deaths") * 1.0 / F.col("at_risk")).over(wh)
-    return risked.select(
-        F.col("dur").alias("duration_days"),
-        F.col("at_risk").cast("long").alias("at_risk"),
-        F.col("deaths").cast("long").alias("deaths"),
-        F.round(hz, 6).alias("cum_hazard"),
-        F.round(F.exp(-hz), 6).alias("breslow_survival"),
     )

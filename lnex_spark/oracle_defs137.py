@@ -1,8 +1,4 @@
-"""Hundred-thirty-seventh oracle-registry module: inequality of the
-customer revenue distribution — the Lorenz/Gini and Atkinson views
-that complete the concentration family (hhi_events is market-share
-concentration, pareto_parts is the 80/20 cut, theil_decomp_events is
-between/within decomposition; none emits the Gini itself):
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * gini_lorenz_customers — Lorenz curve at decile resolution plus
     the Gini coefficient over per-customer revenue, using the exact
@@ -14,13 +10,6 @@ between/within decomposition; none emits the Gini itself):
     at 10^12-turn scale the per-entity aggregate is the shuffle and
     the rank runs over entities, with the decile emission keeping
     the output constant-sized.
-
-  * atkinson_customers — Atkinson inequality index at ε=1
-    (A = 1 − geomean/mean, the welfare-theoretic counterpart of the
-    Gini, more sensitive at the bottom of the distribution) and at
-    ε=2 (A = 1 − harmonic-mean/mean), both from single-pass
-    aggregates (sum, count, sum of logs, sum of reciprocals) — no
-    window at all, pure partial+final hash aggregation.
 """
 
 from __future__ import annotations
@@ -127,42 +116,4 @@ def gini_lorenz_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("decile_revenue").over(wc) / F.col("total"), 6
         ).alias("cum_rev_share"),
         "gini",
-    )
-
-
-_ATKINSON_SQL = """
-    WITH rev AS (
-      SELECT o_custkey, SUM(o_totalprice) AS revenue
-      FROM orders GROUP BY o_custkey
-    )
-    SELECT COUNT(*) AS n_customers,
-           ROUND(AVG(revenue), 2) AS mean_revenue,
-           ROUND(1.0 - EXP(AVG(LN(revenue))) / AVG(revenue), 6)
-             AS atkinson_eps1,
-           ROUND(1.0 - (COUNT(*) / SUM(1.0 / revenue)) / AVG(revenue), 6)
-             AS atkinson_eps2
-    FROM rev WHERE revenue > 0
-"""
-
-
-@register("atkinson_customers", _ATKINSON_SQL)
-def atkinson_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rev = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.sum("o_totalprice").alias("revenue"))
-        .filter(F.col("revenue") > 0)
-    )
-    return rev.agg(
-        F.count("*").cast("long").alias("n_customers"),
-        F.round(F.avg("revenue"), 2).alias("mean_revenue"),
-        F.round(
-            1.0 - F.exp(F.avg(F.log("revenue"))) / F.avg("revenue"), 6
-        ).alias("atkinson_eps1"),
-        F.round(
-            1.0
-            - (F.count("*") / F.sum(1.0 / F.col("revenue")))
-            / F.avg("revenue"),
-            6,
-        ).alias("atkinson_eps2"),
     )

@@ -1,14 +1,5 @@
-"""Fourteenth oracle-registry module: KG sequence analytics + source
-profiling.
+"""Oracle pairs that run ``sources.synth``.
 
-  * kg_location_transitions — the movement graph: consecutive linked
-    locations within a document become (from_geo, to_geo) transition
-    edges with counts (lag window over the canonical winners, ordered
-    by mention offset).  Built on the same literal-gazetteer
-    derivation as kg_e2e_sql, so the transition table is value-checked
-    end-to-end — this is the KG edge type the north star's
-    (geo, locatedIn, region) triples don't capture: how locations
-    co-occur IN SEQUENCE inside a conversation.
   * conv_profile_synth — conversation profiling over the custom
     Python Data Source (turns, roles, tool-call count, text volume
     per conversation): the ingest-QA summary a transcript pipeline
@@ -18,56 +9,10 @@ profiling.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs2 import _SQL_LINK, _SQL_TOKENIZE, _oracle_mentions, _oracle_variants
 from lnex_spark.oracles import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- location transition (movement) graph --------------------------------
-@register(
-    "kg_location_transitions",
-    f"""
-    WITH {_SQL_TOKENIZE},
-    {_SQL_LINK},
-    seq AS (
-      SELECT w.doc_id, w.s, c.canonical AS geo,
-             lag(c.canonical) OVER (PARTITION BY w.doc_id ORDER BY w.s, w.e) AS prev_geo
-      FROM winners w JOIN canon c ON w.norm = c.norm
-    )
-    SELECT prev_geo AS from_geo, geo AS to_geo, count(*) AS n
-    FROM seq WHERE prev_geo IS NOT NULL AND prev_geo <> geo
-    GROUP BY 1, 2
-    """,
-)
-def kg_location_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lnex_spark.operators.link import (
-        apply_canonical,
-        canonicalize,
-        link_mentions,
-        score_candidates,
-    )
-
-    variants = _oracle_variants(spark)
-    mentions = _oracle_mentions(spark, sf_dir)
-    winners = score_candidates(link_mentions(mentions, variants))
-    final = apply_canonical(winners, canonicalize(winners))
-    w = Window.partitionBy("conv_id").orderBy("start", "end")
-    seq = final.select(
-        "conv_id",
-        F.col("geo_id").alias("geo"),
-        F.lag("geo_id").over(w).alias("prev_geo"),
-    )
-    return (
-        seq.filter(F.col("prev_geo").isNotNull() & (F.col("prev_geo") != F.col("geo")))
-        .groupBy(F.col("prev_geo").alias("from_geo"), F.col("geo").alias("to_geo"))
-        .agg(F.count("*").alias("n"))
-    )
 
 
 # --- conversation profiling over the custom Python Data Source ----------
@@ -87,7 +32,7 @@ def kg_location_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_turns,
            count(DISTINCT role) AS n_roles,
            count(tool) AS n_tool_calls,
-           sum(length(text)) AS text_chars,
+           CAST(sum(length(text)) AS BIGINT) AS text_chars,
            min(turn_idx) AS first_turn,
            max(turn_idx) AS last_turn
     FROM t GROUP BY conv_id
@@ -111,54 +56,4 @@ def conv_profile_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.length("text")).alias("text_chars"),
         F.min("turn_idx").alias("first_turn"),
         F.max("turn_idx").alias("last_turn"),
-    )
-
-
-# --- rank / dense_rank / percent-of-total --------------------------------
-@register(
-    "rank_share_orders",
-    """
-    WITH c AS (
-      SELECT o_orderpriority, round(sum(o_totalprice), 2) AS revenue
-      FROM orders GROUP BY 1
-    )
-    SELECT o_orderpriority,
-           revenue,
-           rank() OVER (ORDER BY revenue DESC) AS rnk,
-           dense_rank() OVER (ORDER BY revenue DESC) AS drnk,
-           round(revenue / sum(revenue) OVER (), 6) AS share
-    FROM c
-    """,
-)
-def rank_share_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = o.groupBy("o_orderpriority").agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"))
-    w = Window.orderBy(F.desc("revenue"))
-    wall = Window.partitionBy()
-    return c.select(
-        "o_orderpriority",
-        "revenue",
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.round(F.col("revenue") / F.sum("revenue").over(wall), 6).alias("share"),
-    )
-
-
-# --- boolean aggregates ----------------------------------------------------
-@register(
-    "bool_agg_orders",
-    """
-    SELECT o_orderpriority,
-           bool_and(o_totalprice > 1000) AS all_over_1k,
-           bool_or(o_orderstatus = 'F') AS any_final,
-           count(*) AS n
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def bool_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.bool_and(F.col("o_totalprice") > 1000).alias("all_over_1k"),
-        F.bool_or(F.col("o_orderstatus") == "F").alias("any_final"),
-        F.count("*").alias("n"),
     )

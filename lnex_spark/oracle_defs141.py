@@ -1,8 +1,4 @@
-"""Hundred-forty-first oracle-registry module: ranking-quality and
-calibration decomposition over the shared documents scorer (the
-sigmoid-of-length confidence p and the lang='en' label y that
-calibration_bins_docs / ece_docs / auc_nchars_en_docs already use —
-same scored relation, new summaries):
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * average_precision_docs — average precision (the area under the
     precision-recall curve in its standard step form):
@@ -14,21 +10,11 @@ same scored relation, new summaries):
     production this runs on the labeled eval slice (bounded), never
     the full corpus; the scorer itself stays embarrassingly
     parallel.  Also emits precision@100 from the same ranking.
-
-  * brier_decomposition_docs — Murphy's decomposition of the Brier
-    score over the same decile bins as calibration_bins_docs:
-    reliability Σ n_k(conf̄_k − acc_k)²/N (penalty, smaller better),
-    resolution Σ n_k(acc_k − ȳ)²/N (reward, larger better),
-    uncertainty ȳ(1−ȳ), plus the exact Brier and the within-bin
-    variance gap brier − (rel − res + unc) — the decomposition is
-    exact only for bin-constant forecasts, and the gap term measures
-    how far these continuous scores are from that.  Two bin-sized
-    aggregates after one corpus pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -109,86 +95,5 @@ def average_precision_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_pos").cast("long").alias("n_pos"),
             "average_precision",
             "precision_at_100",
-        )
-    )
-
-
-_BRIER_SQL = f"""
-    WITH scored AS ({_SCORED_SQL}),
-    binned AS (
-      SELECT LEAST(9, CAST(floor(p * 10) AS INTEGER)) AS bin, p, y
-      FROM scored
-    ),
-    bins AS (
-      SELECT bin, COUNT(*) AS n_k, AVG(p) AS conf_k, AVG(y * 1.0) AS acc_k,
-             SUM((p - y) * (p - y)) AS brier_sum
-      FROM binned GROUP BY bin
-    ),
-    tot AS (
-      SELECT SUM(n_k) AS n, SUM(n_k * acc_k) / SUM(n_k) AS ybar,
-             SUM(brier_sum) / SUM(n_k) AS brier
-      FROM bins
-    )
-    SELECT CAST(t.n AS BIGINT) AS n,
-           ROUND(SUM(b.n_k * POW(b.conf_k - b.acc_k, 2)) / t.n, 6)
-             AS reliability,
-           ROUND(SUM(b.n_k * POW(b.acc_k - t.ybar, 2)) / t.n, 6)
-             AS resolution,
-           ROUND(t.ybar * (1 - t.ybar), 6) AS uncertainty,
-           ROUND(t.brier, 6) AS brier,
-           ROUND(t.brier
-                 - (SUM(b.n_k * POW(b.conf_k - b.acc_k, 2)) / t.n
-                    - SUM(b.n_k * POW(b.acc_k - t.ybar, 2)) / t.n
-                    + t.ybar * (1 - t.ybar)), 6) AS within_bin_gap
-    FROM bins b CROSS JOIN tot t
-    GROUP BY t.n, t.ybar, t.brier
-"""
-
-
-@register("brier_decomposition_docs", _BRIER_SQL)
-def brier_decomposition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    scored = d.select(
-        (1.0 / (1.0 + F.exp(-(F.col("n_chars") - 400) / 150.0))).alias("p"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    binned = scored.select(
-        F.least(F.lit(9), F.floor(F.col("p") * 10).cast("int")).alias("bin"),
-        "p",
-        "y",
-    )
-    bins = binned.groupBy("bin").agg(
-        F.count("*").alias("n_k"),
-        F.avg("p").alias("conf_k"),
-        F.avg(F.col("y") * 1.0).alias("acc_k"),
-        F.sum((F.col("p") - F.col("y")) * (F.col("p") - F.col("y"))).alias(
-            "brier_sum"
-        ),
-    )
-    tot = bins.agg(
-        F.sum("n_k").alias("n"),
-        (F.sum(F.col("n_k") * F.col("acc_k")) / F.sum("n_k")).alias("ybar"),
-        (F.sum("brier_sum") / F.sum("n_k")).alias("brier"),
-    )
-    rel = F.sum(F.col("n_k") * F.pow(F.col("conf_k") - F.col("acc_k"), 2)) / F.col("n")
-    res = F.sum(F.col("n_k") * F.pow(F.col("acc_k") - F.col("ybar"), 2)) / F.col("n")
-    unc = F.col("ybar") * (1 - F.col("ybar"))
-    return (
-        bins.crossJoin(F.broadcast(tot))
-        .groupBy("n", "ybar", "brier")
-        .agg(
-            F.round(rel, 6).alias("reliability"),
-            F.round(res, 6).alias("resolution"),
-            F.round(
-                F.col("brier") - (rel - res + unc), 6
-            ).alias("within_bin_gap"),
-        )
-        .select(
-            F.col("n").cast("long").alias("n"),
-            "reliability",
-            "resolution",
-            F.round(unc, 6).alias("uncertainty"),
-            F.round("brier", 6).alias("brier"),
-            "within_bin_gap",
         )
     )

@@ -1,19 +1,4 @@
-"""Hundred-forty-seventh oracle-registry module: a trained text
-classifier and the paired test that compares classifiers on the same
-held-out items.
-
-  * naive_bayes_docs — multinomial naive Bayes language
-    classification: train on the first 70% of doc_ids (the standard
-    floor-division split of this registry), per-language Laplace
-    token likelihoods ln((c(w,l)+1)/(n_l+V)) over the union training
-    vocabulary plus the document-count log prior; held-out docs
-    scored by exploding tokens against all five candidate languages
-    (candidate set is a broadcast: |langs| x |vocab| likelihood
-    table), argmax per doc over the ROUNDED score with language-code
-    tie-break so the decision is cross-engine exact.  Reported as
-    per-true-language n_docs / n_correct / accuracy.  Unlike the
-    marker heuristic (text_lang_id) this is a TRAINED model — it can
-    classify zh, which has no hand-picked markers.
+"""Oracle pairs that run ``operators.textquality``.
 
   * mcnemar_docs — McNemar's paired test on the held-out docs:
     the marker-word heuristic vs naive Bayes against the corpus
@@ -77,19 +62,6 @@ _NB_CTES = r"""
       WHERE rn = 1
     )
 """
-
-_NB_SQL = (
-    "WITH "
-    + _NB_CTES
-    + """
-    SELECT true_lang, COUNT(*) AS n_docs,
-           CAST(SUM(CASE WHEN nb_lang = true_lang THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_correct,
-           ROUND(SUM(CASE WHEN nb_lang = true_lang THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 6) AS accuracy
-    FROM nb_pred GROUP BY true_lang
-"""
-)
 
 
 def _nb_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,19 +131,8 @@ def _nb_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("naive_bayes_docs", _NB_SQL)
-def naive_bayes_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pred = _nb_pred(spark, sf_dir)
-    hit = F.when(F.col("nb_lang") == F.col("true_lang"), 1).otherwise(0)
-    return pred.groupBy("true_lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(hit).cast("long").alias("n_correct"),
-        F.round(F.sum(hit) * 1.0 / F.count("*"), 6).alias("accuracy"),
-    )
-
-
 def _heur_sql() -> str:
-    from lnex_spark.oracle_defs import _dd_word_count as wc
+    from lnex_spark.oracle_defs_library import _dd_word_count as wc
 
     return f"""
     heur_hits AS (

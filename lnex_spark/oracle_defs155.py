@@ -1,19 +1,4 @@
-"""Hundred-fifty-fifth oracle-registry module: a mergeable
-relative-error quantile sketch and the closed-form Lindley queue
-replay — two patterns that stay one-pass/one-sort at any scale.
-
-  * ddsketch_quantiles_lineitem — DDSketch-style quantiles of
-    l_extendedprice with relative accuracy alpha = 0.01: gamma =
-    (1+a)/(1-a), bucket = ceil(round(ln(x)/ln(gamma), 9)) (the inner
-    round-9 pins the engines' 1-ulp libm differences away from the
-    ceil boundary), per-bucket counts are a plain groupBy — i.e. the
-    sketch is MERGEABLE map-side, unlike exact percentiles which need
-    a full sort.  Quantile q is read from the first bucket whose
-    cumulative count reaches ceil(q*n), estimated at 2*gamma^b /
-    (gamma+1), guaranteed within 1% relative error.  The
-    production-grade alternative to approx_percentile whose error is
-    RELATIVE (tail-accurate), with the bucket table itself as the
-    shippable sketch.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * lindley_backlog_events — single-server queue backlog replay over
     the full event stream via the unrolled Lindley recursion: work
@@ -29,9 +14,7 @@ replay — two patterns that stay one-pass/one-sort at any scale.
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -39,67 +22,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-_ALPHA = 0.01
-_GAMMA = (1 + _ALPHA) / (1 - _ALPHA)
-_LNG = math.log(_GAMMA)
-
-
-_DDSKETCH_SQL = f"""
-    WITH buckets AS (
-      SELECT CAST(CEIL(ROUND(LN(l_extendedprice) / {_LNG!r}, 9)) AS BIGINT)
-               AS b,
-             COUNT(*) AS c
-      FROM lineitem WHERE l_extendedprice > 0
-      GROUP BY 1
-    ),
-    cum AS (
-      SELECT b, c, SUM(c) OVER (ORDER BY b) AS cc,
-             SUM(c) OVER () AS n
-      FROM buckets
-    ),
-    qs AS (SELECT CAST(UNNEST([0.5, 0.9, 0.99]) AS DOUBLE) AS q)
-    SELECT q.q AS q,
-           MIN(cum.b) AS bucket,
-           ROUND(2 * POW({_GAMMA!r}, MIN(cum.b)) / ({_GAMMA!r} + 1), 4)
-             AS est
-    FROM qs q JOIN cum ON cum.cc >= CEIL(q.q * cum.n)
-    GROUP BY q.q
-    ORDER BY q
-"""
-
-
-@register("ddsketch_quantiles_lineitem", _DDSKETCH_SQL)
-def ddsketch_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_extendedprice") > 0)
-    buckets = li.groupBy(
-        F.ceil(F.round(F.log(F.col("l_extendedprice")) / _LNG, 9))
-        .cast("long")
-        .alias("b")
-    ).agg(F.count("*").alias("c"))
-    w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
-    cum = buckets.withColumn("cc", F.sum("c").over(w)).withColumn(
-        "n", F.sum("c").over(Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-    )
-    qs = li.sparkSession.createDataFrame(
-        [(0.5,), (0.9,), (0.99,)], "q double"
-    )
-    j = F.broadcast(qs).join(
-        cum, F.col("cc") >= F.ceil(F.col("q") * F.col("n"))
-    )
-    return (
-        j.groupBy("q")
-        .agg(F.min("b").alias("bucket"))
-        .select(
-            "q",
-            "bucket",
-            F.round(
-                2 * F.pow(F.lit(_GAMMA), F.col("bucket")) / (_GAMMA + 1), 4
-            ).alias("est"),
-        )
-        .orderBy("q")
-    )
 
 
 _LINDLEY_SQL = """

@@ -24,7 +24,7 @@ and reliability growth tracking.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register

@@ -1,18 +1,4 @@
-"""Hundred-fifty-eighth oracle-registry module: threshold-based
-causal identification and fully-sequential hypothesis testing.
-
-  * rdd_cutoff_orders — sharp regression-discontinuity estimate of
-    the completion-rate (status 'F') jump at a total-price cutoff:
-    cutoff c = global mean price and bandwidth h = 0.5 * stddev, both
-    ROUNDED to 2 so each engine selects the identical local sample;
-    separate closed-form local-linear OLS of y on (x - c) within
-    [c-h, c) and [c, c+h]; the LATE is the difference of the two
-    intercepts at the cutoff.  The quasi-experimental design for
-    "does crossing the threshold change the outcome" when
-    randomization is impossible — completes the causal suite next to
-    did_events / psm_events / iv_wald_events.  (Expected effect here
-    ≈ 0: statuses are price-independent — the point is the
-    estimator, and a ~0 readout doubles as a placebo check.)
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * sprt_events — Wald sequential probability-ratio test replayed
     over the click/view stream in (ts, event_id) order: H0 p=0.5 vs
@@ -21,15 +7,14 @@ causal identification and fully-sequential hypothesis testing.
     scan, boundaries ±ln(19) (alpha = beta = 0.05).  Reports the
     first boundary crossing (index, time-fraction of the stream,
     decision) and the final LLR — the always-valid early-stopping
-    monitor that fixed-horizon ab_test_events cannot provide; sibling
-    of hoeffding_seq_events with parametric (tighter) boundaries.
+    monitor that fixed-horizon ab_test_events cannot provide.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -37,86 +22,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-_RDD_SQL = """
-    WITH params AS (
-      SELECT ROUND(AVG(o_totalprice), 2) AS c,
-             ROUND(0.5 * STDDEV_POP(o_totalprice), 2) AS h
-      FROM orders
-    ),
-    loc AS (
-      SELECT o_totalprice - p.c AS x,
-             CASE WHEN o_orderstatus = 'F' THEN 1.0 ELSE 0.0 END AS y,
-             CASE WHEN o_totalprice >= p.c THEN 1 ELSE 0 END AS side
-      FROM orders o CROSS JOIN params p
-      WHERE o_totalprice >= p.c - p.h AND o_totalprice <= p.c + p.h
-    ),
-    fit AS (
-      SELECT side, COUNT(*) AS n, AVG(x) AS xb, AVG(y) AS yb,
-             SUM(x * y) - COUNT(*) * AVG(x) * AVG(y) AS sxy,
-             SUM(x * x) - COUNT(*) * AVG(x) * AVG(x) AS sxx
-      FROM loc GROUP BY side
-    ),
-    ab AS (
-      SELECT side, n, yb - sxy / sxx * xb AS icpt, sxy / sxx AS slope
-      FROM fit
-    )
-    SELECT MAX(CASE WHEN side = 0 THEN n END) AS n_left,
-           MAX(CASE WHEN side = 1 THEN n END) AS n_right,
-           ROUND(MAX(CASE WHEN side = 0 THEN icpt END), 6) AS int_left,
-           ROUND(MAX(CASE WHEN side = 1 THEN icpt END), 6) AS int_right,
-           ROUND(MAX(CASE WHEN side = 0 THEN slope END), 8) AS slope_left,
-           ROUND(MAX(CASE WHEN side = 1 THEN slope END), 8) AS slope_right,
-           ROUND(MAX(CASE WHEN side = 1 THEN icpt END)
-                 - MAX(CASE WHEN side = 0 THEN icpt END), 6) AS late
-    FROM ab
-"""
-
-
-@register("rdd_cutoff_orders", _RDD_SQL)
-def rdd_cutoff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    params = o.agg(
-        F.round(F.avg("o_totalprice"), 2).alias("c"),
-        F.round(0.5 * F.stddev_pop("o_totalprice"), 2).alias("h"),
-    )
-    loc = (
-        o.crossJoin(F.broadcast(params))
-        .where(
-            (F.col("o_totalprice") >= F.col("c") - F.col("h"))
-            & (F.col("o_totalprice") <= F.col("c") + F.col("h"))
-        )
-        .select(
-            (F.col("o_totalprice") - F.col("c")).alias("x"),
-            F.when(F.col("o_orderstatus") == "F", 1.0).otherwise(0.0).alias("y"),
-            F.when(F.col("o_totalprice") >= F.col("c"), 1).otherwise(0).alias("side"),
-        )
-    )
-    fit = loc.groupBy("side").agg(
-        F.count("*").alias("n"),
-        F.avg("x").alias("xb"),
-        F.avg("y").alias("yb"),
-        (F.sum(F.col("x") * F.col("y")) - F.count("*") * F.avg("x") * F.avg("y")).alias("sxy"),
-        (F.sum(F.col("x") * F.col("x")) - F.count("*") * F.avg("x") * F.avg("x")).alias("sxx"),
-    )
-    ab = fit.select(
-        "side",
-        "n",
-        (F.col("yb") - F.col("sxy") / F.col("sxx") * F.col("xb")).alias("icpt"),
-        (F.col("sxy") / F.col("sxx")).alias("slope"),
-    )
-    l = lambda c: F.max(F.when(F.col("side") == 0, F.col(c)))
-    r = lambda c: F.max(F.when(F.col("side") == 1, F.col(c)))
-    return ab.agg(
-        l("n").alias("n_left"),
-        r("n").alias("n_right"),
-        F.round(l("icpt"), 6).alias("int_left"),
-        F.round(r("icpt"), 6).alias("int_right"),
-        F.round(l("slope"), 8).alias("slope_left"),
-        F.round(r("slope"), 8).alias("slope_right"),
-        F.round(r("icpt") - l("icpt"), 6).alias("late"),
-    )
 
 
 _P0, _P1 = 0.5, 0.55

@@ -1,6 +1,4 @@
-"""Hundred-sixty-third oracle-registry module: sequencing-rule
-economics and market-style candle rollups — two ordered-stream
-summaries built from nothing but window scans.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * spt_schedule_orders — single-machine scheduling replay over the
     final order month: jobs = orders, processing time = o_totalprice
@@ -12,19 +10,11 @@ summaries built from nothing but window scans.
     Smith's-rule value of ordering a work queue by size — the same
     argument for processing small conversations first in a skewed
     backfill.
-
-  * vwap_ohlc_events — daily OHLC + VWAP candles over the value
-    stream: open/close via first/last value in strict (ts, event_id)
-    order, high/low, and volume-weighted average price with volume =
-    the numeric props key k (json_extract), all in ONE groupBy over
-    min/max-by structs — the resample primitive every monitoring
-    dashboard and backtest feed needs, shuffle-bounded by day count
-    not event count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -103,66 +93,4 @@ def spt_schedule_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return summarize(fifo, "fifo").unionByName(summarize(spt, "spt")).orderBy(
         "rule"
-    )
-
-
-_VWAP_SQL = """
-    WITH base AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
-             printf('%020d#%012d', epoch_us(ts), event_id) AS ord,
-             value AS px,
-             CAST(json_extract(props, '$.k') AS DOUBLE) AS vol
-      FROM events
-    )
-    SELECT d AS day,
-           ROUND(MIN_BY(px, ord), 2) AS open,
-           ROUND(MAX(px), 2) AS high,
-           ROUND(MIN(px), 2) AS low,
-           ROUND(MAX_BY(px, ord), 2) AS close,
-           ROUND(SUM(px * vol) / SUM(vol), 6) AS vwap,
-           ROUND(SUM(vol), 2) AS volume,
-           CAST(COUNT(*) AS BIGINT) AS n_trades
-    FROM base
-    GROUP BY d
-    ORDER BY day
-"""
-
-
-@register("vwap_ohlc_events", _VWAP_SQL)
-def vwap_ohlc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    base = ev.select(
-        F.date_trunc("day", "ts").cast("date").alias("d"),
-        F.format_string(
-            "%020d#%012d",
-            F.unix_micros(F.col("ts").cast("timestamp")),
-            F.col("event_id"),
-        ).alias("ord"),
-        F.col("value").alias("px"),
-        F.get_json_object("props", "$.k").cast("double").alias("vol"),
-    )
-    return (
-        base.groupBy("d")
-        .agg(
-            F.round(F.min_by("px", "ord"), 2).alias("open"),
-            F.round(F.max("px"), 2).alias("high"),
-            F.round(F.min("px"), 2).alias("low"),
-            F.round(F.max_by("px", "ord"), 2).alias("close"),
-            F.round(F.sum(F.col("px") * F.col("vol")) / F.sum("vol"), 6).alias(
-                "vwap"
-            ),
-            F.round(F.sum("vol"), 2).alias("volume"),
-            F.count("*").cast("long").alias("n_trades"),
-        )
-        .select(
-            F.col("d").alias("day"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "vwap",
-            "volume",
-            "n_trades",
-        )
-        .orderBy("day")
     )

@@ -1,16 +1,4 @@
-"""Hundred-seventy-third oracle-registry module: tail-aware
-normality testing and moment-corrected quantiles.
-
-  * anderson_darling_events — Anderson-Darling normality statistic
-    for the 30 daily mean values: standardize by sample moments,
-    A^2 = -n - (1/n) sum (2i-1)(ln F(z_(i)) + ln(1 - F(z_(n+1-i)))),
-    with the small-sample correction A*^2 = A^2 (1 + 0.75/n +
-    2.25/n^2).  The normal CDF uses the Abramowitz-Stegun 7.1.26
-    rational erf approximation (|eps| < 1.5e-7), spelled out
-    IDENTICALLY in both engines — the registry's answer to neither
-    engine shipping erf.  AD weights the tails ~x2 harder than
-    KS/Jarque-Bera, catching exactly the tail deviations that break
-    k-sigma alerting.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * cornish_fisher_events — Cornish-Fisher fourth-moment expansion
     of the 95% quantile of event value: from skewness g1 and excess
@@ -23,7 +11,7 @@ normality testing and moment-corrected quantiles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -31,133 +19,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# Abramowitz-Stegun 7.1.26 erf; Phi(z) = 0.5 (1 + erf(z/sqrt 2)).
-_PHI_SQL = """(
-  CASE WHEN {z} >= 0 THEN
-    1 - 0.5 * (((((1.061405429 * (1 / (1 + 0.3275911 * ({z} / 1.4142135623730951)))
-        - 1.453152027) * (1 / (1 + 0.3275911 * ({z} / 1.4142135623730951)))
-        + 1.421413741) * (1 / (1 + 0.3275911 * ({z} / 1.4142135623730951)))
-        - 0.284496736) * (1 / (1 + 0.3275911 * ({z} / 1.4142135623730951)))
-        + 0.254829592) * (1 / (1 + 0.3275911 * ({z} / 1.4142135623730951))))
-        * EXP(-({z} / 1.4142135623730951) * ({z} / 1.4142135623730951))
-  ELSE
-    0.5 * (((((1.061405429 * (1 / (1 + 0.3275911 * (-{z} / 1.4142135623730951)))
-        - 1.453152027) * (1 / (1 + 0.3275911 * (-{z} / 1.4142135623730951)))
-        + 1.421413741) * (1 / (1 + 0.3275911 * (-{z} / 1.4142135623730951)))
-        - 0.284496736) * (1 / (1 + 0.3275911 * (-{z} / 1.4142135623730951)))
-        + 0.254829592) * (1 / (1 + 0.3275911 * (-{z} / 1.4142135623730951))))
-        * EXP(-({z} / 1.4142135623730951) * ({z} / 1.4142135623730951))
-  END)"""
-
-
-def _phi_col(z: Column) -> Column:
-    az = F.abs(z) / 1.4142135623730951
-    t = 1 / (1 + 0.3275911 * az)
-    poly = (
-        (((1.061405429 * t - 1.453152027) * t + 1.421413741) * t - 0.284496736)
-        * t
-        + 0.254829592
-    ) * t
-    upper = 1 - 0.5 * poly * F.exp(-az * az)
-    lower = 0.5 * poly * F.exp(-az * az)
-    return F.when(z >= 0, upper).otherwise(lower)
-
-
-_AD_SQL = f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
-             ROUND(AVG(value), 6) AS x
-      FROM events GROUP BY 1
-    ),
-    mom AS (
-      SELECT COUNT(*) AS n, AVG(x) AS mu,
-             SQRT((SUM(x * x) - COUNT(*) * AVG(x) * AVG(x))
-                  / (COUNT(*) - 1)) AS sd
-      FROM daily
-    ),
-    z AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY x, d) AS i,
-             ROUND((x - m.mu) / m.sd, 6) AS z, m.n
-      FROM daily CROSS JOIN mom m
-    ),
-    paired AS (
-      SELECT a.i, a.n, a.z AS zi, b.z AS zr
-      FROM z a JOIN z b ON b.i = a.n + 1 - a.i
-    ),
-    terms AS (
-      SELECT n,
-             (2 * i - 1)
-               * (LN({_PHI_SQL.format(z='zi')})
-                  + LN(1 - {_PHI_SQL.format(z='zr')})) AS t
-      FROM paired
-    )
-    SELECT CAST(MAX(n) AS BIGINT) AS n,
-           ROUND(-MAX(n) - SUM(t) / MAX(n), 6) AS a2,
-           ROUND((-MAX(n) - SUM(t) / MAX(n))
-                 * (1 + 0.75 / MAX(n) + 2.25 / (MAX(n) * MAX(n))), 6)
-             AS a2_star
-    FROM terms
-"""
-
-
-@register("anderson_darling_events", _AD_SQL)
-def anderson_darling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_trunc("day", "ts").cast("date").alias("d")
-    ).agg(F.round(F.avg("value"), 6).alias("x"))
-    mom = daily.agg(
-        F.count("*").alias("n"),
-        F.avg("x").alias("mu"),
-        F.sqrt(
-            (
-                F.sum(F.col("x") * F.col("x"))
-                - F.count("*") * F.avg("x") * F.avg("x")
-            )
-            / (F.count("*") - 1)
-        ).alias("sd"),
-    )
-    z = daily.crossJoin(F.broadcast(mom)).select(
-        F.row_number().over(Window.orderBy("x", "d")).alias("i"),
-        F.round((F.col("x") - F.col("mu")) / F.col("sd"), 6).alias("z"),
-        "n",
-    )
-    a = z.alias("a")
-    b = z.alias("b")
-    paired = a.join(
-        b, F.col("b.i") == F.col("a.n") + 1 - F.col("a.i")
-    ).select(
-        F.col("a.i").alias("i"),
-        F.col("a.n").alias("n"),
-        F.col("a.z").alias("zi"),
-        F.col("b.z").alias("zr"),
-    )
-    terms = paired.select(
-        "n",
-        (
-            (2 * F.col("i") - 1)
-            * (
-                F.log(_phi_col(F.col("zi")))
-                + F.log(1 - _phi_col(F.col("zr")))
-            )
-        ).alias("t"),
-    )
-    a2 = -F.max("n") - F.sum("t") / F.max("n")
-    return terms.agg(
-        F.max("n").cast("long").alias("n"),
-        F.round(a2, 6).alias("a2"),
-        F.round(
-            a2
-            * (
-                1
-                + 0.75 / F.max("n")
-                + 2.25 / (F.max("n") * F.max("n"))
-            ),
-            6,
-        ).alias("a2_star"),
-    )
 
 
 _CF_SQL = """

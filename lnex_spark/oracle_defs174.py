@@ -1,15 +1,4 @@
-"""Hundred-seventy-fourth oracle-registry module: directional
-information flow and the modern rank test for unequal variances.
-
-  * transfer_entropy_events — lag-1 discrete transfer entropy
-    between the binarized daily moves (up/down vs previous day) of
-    the purchase and click mean-value series, BOTH directions:
-    TE(X→Y) = sum p(y_t, y_{t-1}, x_{t-1})
-              ln [ p(y_t | y_{t-1}, x_{t-1}) / p(y_t | y_{t-1}) ],
-    estimated from plain triple/pair/marginal counts.  The
-    nonlinear, directional complement of granger_events (which only
-    sees linear mean dependence); asymmetry TE(X→Y) != TE(Y→X) is
-    the leading-indicator readout.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * brunner_munzel_events — Brunner-Munzel rank statistic for
     purchase vs view values (scipy convention): tie-stable average
@@ -17,7 +6,7 @@ information flow and the modern rank test for unequal variances.
     variances S_i^2 = var(Rc - Rw), W = n1 n2 (Rbar1c - Rbar2c) /
     (N sqrt(n1 S1^2 + n2 S2^2)), plus the stochastic-superiority
     estimate p_hat = P(X < Y) + 0.5 P(X = Y).  The
-    Behrens-Fisher-robust replacement for mann_whitney_events,
+    Behrens-Fisher-robust replacement for the Mann-Whitney test,
     which assumes equal shape/variance under H0.
 """
 
@@ -31,141 +20,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-_TE_SQL = """
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
-             ROUND(AVG(CASE WHEN event_type = 'purchase' THEN value END), 6)
-               AS px,
-             ROUND(AVG(CASE WHEN event_type = 'click' THEN value END), 6)
-               AS cx
-      FROM events GROUP BY 1
-    ),
-    moves AS (
-      SELECT d,
-             CASE WHEN px > LAG(px) OVER (ORDER BY d) THEN 1 ELSE 0 END AS x,
-             CASE WHEN cx > LAG(cx) OVER (ORDER BY d) THEN 1 ELSE 0 END AS y,
-             LAG(px) OVER (ORDER BY d) AS _lp
-      FROM daily WHERE px IS NOT NULL AND cx IS NOT NULL
-    ),
-    lagged AS (
-      SELECT x AS xt, y AS yt,
-             LAG(x) OVER (ORDER BY d) AS xp,
-             LAG(y) OVER (ORDER BY d) AS yp
-      FROM moves WHERE _lp IS NOT NULL
-    ),
-    ok AS (
-      SELECT * FROM lagged WHERE xp IS NOT NULL
-    ),
-    n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM ok),
-    dir AS (
-      SELECT 'x_to_y' AS direction, yt AS tgt, yp AS tgt_lag, xp AS src_lag
-      FROM ok
-      UNION ALL
-      SELECT 'y_to_x', xt, xp, yp FROM ok
-    ),
-    c3 AS (
-      SELECT direction, tgt, tgt_lag, src_lag, COUNT(*) AS c
-      FROM dir GROUP BY 1, 2, 3, 4
-    ),
-    c2p AS (
-      SELECT direction, tgt_lag, src_lag, SUM(c) AS cp
-      FROM c3 GROUP BY 1, 2, 3
-    ),
-    c2t AS (
-      SELECT direction, tgt, tgt_lag, SUM(c) AS ct
-      FROM c3 GROUP BY 1, 2, 3
-    ),
-    c1 AS (
-      SELECT direction, tgt_lag, SUM(c) AS cl FROM c3 GROUP BY 1, 2
-    )
-    SELECT c3.direction AS direction,
-           ROUND(SUM((c3.c / (SELECT n FROM n))
-                     * LN((CAST(c3.c AS DOUBLE) / c2p.cp)
-                          / (CAST(c2t.ct AS DOUBLE) / c1.cl))), 6) AS te
-    FROM c3
-    JOIN c2p ON c2p.direction = c3.direction
-            AND c2p.tgt_lag = c3.tgt_lag AND c2p.src_lag = c3.src_lag
-    JOIN c2t ON c2t.direction = c3.direction
-            AND c2t.tgt = c3.tgt AND c2t.tgt_lag = c3.tgt_lag
-    JOIN c1 ON c1.direction = c3.direction AND c1.tgt_lag = c3.tgt_lag
-    GROUP BY c3.direction
-    ORDER BY c3.direction
-"""
-
-
-@register("transfer_entropy_events", _TE_SQL)
-def transfer_entropy_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_trunc("day", "ts").cast("date").alias("d")
-    ).agg(
-        F.round(
-            F.avg(F.when(F.col("event_type") == "purchase", F.col("value"))), 6
-        ).alias("px"),
-        F.round(
-            F.avg(F.when(F.col("event_type") == "click", F.col("value"))), 6
-        ).alias("cx"),
-    ).where(F.col("px").isNotNull() & F.col("cx").isNotNull())
-    wd = Window.orderBy("d")
-    moves = daily.select(
-        "d",
-        F.when(F.col("px") > F.lag("px").over(wd), 1).otherwise(0).alias("x"),
-        F.when(F.col("cx") > F.lag("cx").over(wd), 1).otherwise(0).alias("y"),
-        F.lag("px").over(wd).alias("_lp"),
-    ).where(F.col("_lp").isNotNull())
-    lagged = moves.select(
-        F.col("x").alias("xt"),
-        F.col("y").alias("yt"),
-        F.lag("x").over(wd).alias("xp"),
-        F.lag("y").over(wd).alias("yp"),
-    ).where(F.col("xp").isNotNull())
-    n = lagged.count()
-    d1 = lagged.select(
-        F.lit("x_to_y").alias("direction"),
-        F.col("yt").alias("tgt"),
-        F.col("yp").alias("tgt_lag"),
-        F.col("xp").alias("src_lag"),
-    )
-    d2 = lagged.select(
-        F.lit("y_to_x").alias("direction"),
-        F.col("xt").alias("tgt"),
-        F.col("xp").alias("tgt_lag"),
-        F.col("yp").alias("src_lag"),
-    )
-    dirs = d1.unionByName(d2)
-    c3 = dirs.groupBy("direction", "tgt", "tgt_lag", "src_lag").agg(
-        F.count("*").alias("c")
-    )
-    c2p = c3.groupBy("direction", "tgt_lag", "src_lag").agg(
-        F.sum("c").alias("cp")
-    )
-    c2t = c3.groupBy("direction", "tgt", "tgt_lag").agg(
-        F.sum("c").alias("ct")
-    )
-    c1 = c3.groupBy("direction", "tgt_lag").agg(F.sum("c").alias("cl"))
-    joined = (
-        c3.join(c2p, ["direction", "tgt_lag", "src_lag"])
-        .join(c2t, ["direction", "tgt", "tgt_lag"])
-        .join(c1, ["direction", "tgt_lag"])
-    )
-    return (
-        joined.groupBy("direction")
-        .agg(
-            F.round(
-                F.sum(
-                    (F.col("c") / F.lit(float(n)))
-                    * F.log(
-                        (F.col("c").cast("double") / F.col("cp"))
-                        / (F.col("ct").cast("double") / F.col("cl"))
-                    )
-                ),
-                6,
-            ).alias("te")
-        )
-        .orderBy("direction")
-    )
 
 
 _BM_SQL = """

@@ -1,6 +1,6 @@
 """Hundred-eighty-fifth oracle-registry module: peaks-over-threshold
-extreme-value machinery — the tail model between hill_tail_docs
-(pure power law) and gumbel_maxima_events (block maxima).
+extreme-value machinery — the tail model between a pure power law
+and block maxima.
 
   * gpd_tail_events — generalized Pareto fit to the value excesses
     over the 90th-percentile threshold (explicit rank pick), by
@@ -22,7 +22,7 @@ extreme-value machinery — the tail model between hill_tail_docs
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register

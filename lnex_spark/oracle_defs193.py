@@ -1,6 +1,4 @@
-"""Hundred-ninety-third oracle-registry module: selection-pressure
-arithmetic — what you get by sampling more and by upweighting the
-worst group.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * best_of_n_events — exact E[max of n iid draws] from the
     EMPIRICAL value distribution (no simulation): with the sorted
@@ -10,20 +8,11 @@ worst group.
     rejection-sampling return curve: how much reward does another
     doubling of samples buy — the marginal-gain table that decides
     BoN inference budgets.
-
-  * group_dro_weights_docs — Group-DRO style worst-group weights
-    over sources: per-source "loss" = mean document quality deficit
-    (1 - n_chars / max n_chars, ROUNDED to 6), weights w_s ∝
-    exp(eta * loss_s) normalized, for eta in {1, 5, 20}, with the
-    weighted vs unweighted mean loss.  eta → 0 recovers uniform,
-    eta → inf puts all mass on the worst source — the robust-
-    optimization dual of temperature_mixing_docs' frequency-based
-    weights.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -114,84 +103,4 @@ def best_of_n_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("m", 4).alias("median_max"),
         )
         .orderBy("n_samples")
-    )
-
-
-_DRO_SQL = """
-    WITH mx AS (SELECT CAST(MAX(n_chars) AS DOUBLE) AS mx FROM documents),
-    loss AS (
-      SELECT source,
-             ROUND(AVG(1 - n_chars / (SELECT mx FROM mx)), 6) AS l,
-             COUNT(*) AS n
-      FROM documents GROUP BY source
-    ),
-    etas AS (SELECT CAST(UNNEST([1.0, 5.0, 20.0]) AS DOUBLE) AS eta),
-    w AS (
-      SELECT e.eta, l.source, l.l, l.n,
-             EXP(e.eta * l.l)
-               / SUM(EXP(e.eta * l.l)) OVER (PARTITION BY e.eta) AS w
-      FROM loss l CROSS JOIN etas e
-    ),
-    agg AS (
-      SELECT eta,
-             SUM(w * l) AS weighted_loss,
-             AVG(l) AS uniform_loss,
-             MAX(l) AS worst_loss
-      FROM w GROUP BY eta
-    )
-    SELECT w.eta, w.source, CAST(w.n AS BIGINT) AS n_docs,
-           ROUND(w.l, 6) AS group_loss,
-           ROUND(w.w, 6) AS dro_weight,
-           ROUND(a.weighted_loss, 6) AS weighted_loss,
-           ROUND(a.uniform_loss, 6) AS uniform_loss,
-           ROUND(a.worst_loss, 6) AS worst_loss
-    FROM w JOIN agg a ON a.eta = w.eta
-    ORDER BY w.eta, w.source
-"""
-
-
-@register("group_dro_weights_docs", _DRO_SQL)
-def group_dro_weights_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    mx = d.agg(F.max("n_chars").cast("double").alias("mx"))
-    loss = (
-        d.crossJoin(F.broadcast(mx))
-        .groupBy("source")
-        .agg(
-            F.round(F.avg(1 - F.col("n_chars") / F.col("mx")), 6).alias("l"),
-            F.count("*").alias("n"),
-        )
-    )
-    etas = d.sparkSession.createDataFrame(
-        [(1.0,), (5.0,), (20.0,)], "eta double"
-    )
-    we = Window.partitionBy("eta")
-    w = loss.crossJoin(F.broadcast(etas)).select(
-        "eta",
-        "source",
-        "l",
-        "n",
-        (
-            F.exp(F.col("eta") * F.col("l"))
-            / F.sum(F.exp(F.col("eta") * F.col("l"))).over(we)
-        ).alias("w"),
-    )
-    agg = w.groupBy("eta").agg(
-        F.sum(F.col("w") * F.col("l")).alias("weighted_loss"),
-        F.avg("l").alias("uniform_loss"),
-        F.max("l").alias("worst_loss"),
-    )
-    return (
-        w.join(F.broadcast(agg), "eta")
-        .select(
-            "eta",
-            "source",
-            F.col("n").cast("long").alias("n_docs"),
-            F.round("l", 6).alias("group_loss"),
-            F.round("w", 6).alias("dro_weight"),
-            F.round("weighted_loss", 6).alias("weighted_loss"),
-            F.round("uniform_loss", 6).alias("uniform_loss"),
-            F.round("worst_loss", 6).alias("worst_loss"),
-        )
-        .orderBy("eta", "source")
     )

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
 
+
 _Q = ("spark", "join")
 
 

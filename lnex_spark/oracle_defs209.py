@@ -1,6 +1,4 @@
-"""Two-hundred-ninth oracle-registry module: market-design order
-statistics — auction revenue from the empirical value distribution
-and revenue-management protection levels.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * auction_order_stats_events — exact first- and second-highest
     order statistics of n iid draws from the EMPIRICAL value
@@ -12,20 +10,11 @@ and revenue-management protection levels.
     the equilibrium first-price auction (revenue equivalence) with
     n bidders — the spread E[max] - E[2nd max] is the winner's
     information rent.
-
-  * emsr_booking_events — EMSR two-class protection level: fares
-    p1 = 100 (purchase class), p2 = 60; protect y* seats for class
-    1 where P(D1 > y*) = p2/p1, i.e. y* = the (1 - p2/p1) quantile
-    of the empirical daily purchase-count distribution (explicit
-    rank pick); booking limit for class 2 = capacity - y* at
-    capacity = ceil(1.2 * mean daily demand).  Littlewood's rule on
-    real demand data — the yield-management sibling of
-    newsvendor_events.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -117,72 +106,4 @@ def auction_order_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "info_rent",
         )
         .orderBy("n_bidders")
-    )
-
-
-_EMSR_SQL = """
-    WITH demand AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS d, COUNT(*) AS d1
-      FROM events WHERE event_type = 'purchase'
-      GROUP BY 1
-    ),
-    ranked AS (
-      SELECT d1, ROW_NUMBER() OVER (ORDER BY d1, d) AS rn,
-             COUNT(*) OVER () AS nn
-      FROM demand
-    ),
-    q AS (
-      SELECT MAX(CASE WHEN rn = CAST(CEIL((1 - 60.0 / 100.0) * nn)
-                                     AS BIGINT)
-                      THEN d1 END) AS protect,
-             MAX(nn) AS n_days
-      FROM ranked
-    ),
-    cap AS (
-      SELECT CAST(CEIL(1.2 * AVG(d1)) AS BIGINT) AS capacity FROM demand
-    )
-    SELECT CAST(q.n_days AS BIGINT) AS n_days,
-           (SELECT capacity FROM cap) AS capacity,
-           CAST(q.protect AS BIGINT) AS protection_level,
-           (SELECT capacity FROM cap) - q.protect AS class2_booking_limit,
-           ROUND(60.0 / 100.0, 2) AS critical_ratio
-    FROM q
-"""
-
-
-@register("emsr_booking_events", _EMSR_SQL)
-def emsr_booking_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").where(
-        F.col("event_type") == "purchase"
-    )
-    demand = ev.groupBy(
-        F.date_trunc("day", "ts").cast("date").alias("d")
-    ).agg(F.count("*").alias("d1"))
-    wall = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ranked = demand.select(
-        "d1",
-        F.row_number().over(Window.orderBy("d1", "d")).alias("rn"),
-        F.count("*").over(wall).alias("nn"),
-    )
-    q = ranked.agg(
-        F.max(
-            F.when(
-                F.col("rn")
-                == F.ceil((1 - 60.0 / 100.0) * F.col("nn")).cast("long"),
-                F.col("d1"),
-            )
-        ).alias("protect"),
-        F.max("nn").alias("n_days"),
-    )
-    cap = demand.agg(
-        F.ceil(1.2 * F.avg("d1")).cast("long").alias("capacity")
-    )
-    return q.crossJoin(F.broadcast(cap)).select(
-        F.col("n_days").cast("long").alias("n_days"),
-        "capacity",
-        F.col("protect").cast("long").alias("protection_level"),
-        (F.col("capacity") - F.col("protect")).alias("class2_booking_limit"),
-        F.round(F.lit(60.0 / 100.0), 2).alias("critical_ratio"),
     )

@@ -22,10 +22,11 @@ table with 1000-row "pages" (parquet row-group stand-ins).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
+
 
 _PAGE = 1000
 

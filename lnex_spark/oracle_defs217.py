@@ -1,7 +1,4 @@
-"""Two-hundred-seventeenth oracle-registry module: epidemiological
-rate comparison — the exact conditional test and the indirect
-standardization every incident-rate dashboard should use instead of
-naive rate division.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * rate_ratio_events — weekend-vs-weekday error rate ratio with
     the EXACT conditional test: given k1 + k2 total errors, k1 is
@@ -11,21 +8,11 @@ naive rate division.
     any count).  Reports the rate ratio, its exact two-sided
     p-value, and the mid-p variant (the less-conservative standard
     in modern epi).
-
-  * sir_events — standardized incidence ratio of ERROR events per
-    user decile, indirectly standardized by hour of day: reference
-    rates = hourly error share over everyone, expected errors for a
-    decile = sum over hours of rate_h x its exposure there, SIR =
-    observed / expected with Byar's approximate exact-Poisson 95%
-    CI.  SIR != 1 AFTER hour standardization means the decile
-    genuinely errs more, not that it is merely active at bad hours
-    — the adjustment kitagawa_events decomposes, applied per
-    entity.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -160,72 +147,3 @@ def rate_ratio_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("midp_two_sided"),
     )
-
-
-_SIR_SQL = """
-    WITH base AS (
-      SELECT EXTRACT(hour FROM ts) AS h,
-             CAST(user_id % 10 AS INTEGER) AS grp,
-             CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS err
-      FROM events
-    ),
-    ref AS (
-      SELECT h, CAST(SUM(err) AS DOUBLE) / COUNT(*) AS rate
-      FROM base GROUP BY h
-    ),
-    exposure AS (
-      SELECT grp, h, COUNT(*) AS n, SUM(err) AS o
-      FROM base GROUP BY grp, h
-    ),
-    sir AS (
-      SELECT e.grp, SUM(e.o) AS obs, SUM(e.n * r.rate) AS exp
-      FROM exposure e JOIN ref r ON r.h = e.h
-      GROUP BY e.grp
-    )
-    SELECT grp AS user_decile,
-           CAST(obs AS BIGINT) AS observed,
-           ROUND(exp, 4) AS expected,
-           ROUND(obs / exp, 6) AS sir,
-           ROUND(POW(SQRT(CAST(obs AS DOUBLE)) - 1.96 / 2, 2) / exp, 6)
-             AS byar_lo,
-           ROUND(POW(SQRT(obs + 1.0) + 1.96 / 2, 2) / exp, 6) AS byar_hi
-    FROM sir
-    ORDER BY user_decile
-"""
-
-@register("sir_events", _SIR_SQL)
-def sir_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    base = ev.select(
-        F.hour("ts").alias("h"),
-        (F.col("user_id") % 10).cast("int").alias("grp"),
-        F.when(F.col("event_type") == "error", 1).otherwise(0).alias("err"),
-    )
-    ref = base.groupBy("h").agg(
-        (F.sum("err").cast("double") / F.count("*")).alias("rate")
-    )
-    exposure = base.groupBy("grp", "h").agg(
-        F.count("*").alias("n"), F.sum("err").alias("o")
-    )
-    sir = (
-        exposure.join(F.broadcast(ref), "h")
-        .groupBy("grp")
-        .agg(
-            F.sum("o").alias("obs"),
-            F.sum(F.col("n") * F.col("rate")).alias("exp"),
-        )
-    )
-    return sir.select(
-        F.col("grp").alias("user_decile"),
-        F.col("obs").cast("long").alias("observed"),
-        F.round("exp", 4).alias("expected"),
-        F.round(F.col("obs") / F.col("exp"), 6).alias("sir"),
-        F.round(
-            F.pow(F.sqrt(F.col("obs").cast("double")) - 1.96 / 2, 2)
-            / F.col("exp"),
-            6,
-        ).alias("byar_lo"),
-        F.round(
-            F.pow(F.sqrt(F.col("obs") + 1.0) + 1.96 / 2, 2) / F.col("exp"), 6
-        ).alias("byar_hi"),
-    ).orderBy("user_decile")

@@ -1,7 +1,4 @@
-"""Transcript / tool-call analytics over the synthetic conversation
-source, plus Gopher-style document quality gates — the round-2
-completion of the north-rule input shape (conv_id, turn_idx, role,
-text, tool, ts):
+"""Oracle pairs that run ``sources.synth``.
 
   * tool_usage_stats / tool_chain_transitions / tool_next_reply_len —
     the `tool` column finally gets first-class analytics: usage
@@ -11,31 +8,18 @@ text, tool, ts):
     deterministic tool VARIANT from md5(conv_id:turn_idx) — the same
     md5 the source already embeds in `text` — keeping both engines'
     derivations exact and value-hashable.
+
   * turn_context_assembly — the training-example idiom: for every
     assistant turn, assemble the previous ≤3 turns as the context
     window (ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING), target = the
     turn text.  Pure window functions, zero UDFs, one shuffle on
     conv_id.
+
   * conv_dedup_fingerprint — conversation-granularity exact dedup:
     md5 over the turn texts in turn order.  Spark side uses
     sort_array(struct(turn_idx, text)) so the aggregation order is
     deterministic without a window (collect_list over groupBy has no
     order guarantee).
-  * gopher_quality_gates / top_bigram_share — Gopher/C4-style filter
-    rules as relational plans: word-count band, mean-word-length
-    band, top-word share cap, stopword presence; and the
-    fraction-of-characters-in-the-most-frequent-2-gram rule with a
-    deterministic tie-break (max count, then lexicographically least
-    bigram).
-  * mixture_blend_docs — deterministic source-weighted mixture
-    sampling (the Pile/Dolma blend idiom): per-source keep-rates
-    gated on an md5 16-bit prefix, reproducible across engines.
-
-Scale notes: every op is built-ins only (no Python rows), groupings
-key on conv_id / doc_id (uniform in the synth and testdata), and the
-transcript ops read the partition-planned transcripts_synth source —
-generation is embarrassingly parallel and the only shuffles are the
-final keyed aggregations.
 """
 
 from __future__ import annotations
@@ -44,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
+
 
 _N_CONVS, _TURNS = 200, 25
 
@@ -92,10 +77,6 @@ def _transcripts(spark: SparkSession) -> DataFrame:
         .option("num_partitions", 8)
         .load()
     )
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 # --- tool usage profile -----------------------------------------------------
@@ -265,230 +246,4 @@ def conv_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         ).alias("fingerprint"),
-    )
-
-
-# --- Gopher-style quality gates ----------------------------------------------
-_SQL_DOC_WORDS = r"""
-    words AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
-      FROM documents
-    ),
-    wf AS (SELECT doc_id, w, count(*) AS c FROM words WHERE w <> '' GROUP BY doc_id, w),
-    stats AS (
-      SELECT doc_id,
-             CAST(sum(c) AS BIGINT) AS n_words,
-             round(sum(length(w) * c) * 1.0 / sum(c), 6) AS mean_word_len,
-             round(max(c) * 1.0 / sum(c), 6) AS top_word_share,
-             CAST(max(CASE WHEN w IN ('the','a','of','and','to') THEN 1 ELSE 0 END) AS BIGINT)
-               AS has_stopword
-      FROM wf GROUP BY doc_id
-    )
-"""
-
-
-@register(
-    "gopher_quality_gates",
-    f"""
-    WITH {_SQL_DOC_WORDS}
-    SELECT doc_id, n_words, mean_word_len, top_word_share, has_stopword,
-           (n_words BETWEEN 15 AND 100000
-            AND mean_word_len BETWEEN 2 AND 10
-            AND top_word_share < 0.25
-            AND has_stopword = 1) AS passes
-    FROM stats
-    """,
-)
-def gopher_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-rules quality gate (Rae et al. 2021 §A1.1 adapted to the
-    testdata corpus): word-count band, mean-word-length band, max
-    single-word share, stopword presence — composed into one boolean.
-    All built-ins; the explode+two-level aggregate is one shuffle on
-    (doc_id, w) with map-side partials, then a doc_id-local rollup."""
-    d = _docs(spark, sf_dir)
-    words = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
-    ).where(F.col("w") != "")
-    wf = words.groupBy("doc_id", "w").agg(F.count("*").alias("c"))
-    stats = wf.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_words"),
-        F.round(F.sum(F.length("w") * F.col("c")) / F.sum("c"), 6).alias("mean_word_len"),
-        F.round(F.max("c") / F.sum("c"), 6).alias("top_word_share"),
-        F.max(
-            F.when(F.col("w").isin("the", "a", "of", "and", "to"), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("has_stopword"),
-    )
-    return stats.withColumn(
-        "passes",
-        F.col("n_words").between(15, 100000)
-        & F.col("mean_word_len").between(2, 10)
-        & (F.col("top_word_share") < 0.25)
-        & (F.col("has_stopword") == 1),
-    )
-
-
-# --- most-frequent-2-gram character share ------------------------------------
-@register(
-    "top_bigram_share",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, w, row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
-      FROM (
-        SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w,
-               generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-        FROM documents
-      ) WHERE w <> ''
-    ),
-    bg AS (
-      SELECT t1.doc_id, t1.w || ' ' || t2.w AS bigram
-      FROM toks t1 JOIN toks t2 ON t1.doc_id = t2.doc_id AND t2.rn = t1.rn + 1
-    ),
-    bf AS (SELECT doc_id, bigram, count(*) AS c FROM bg GROUP BY doc_id, bigram),
-    ranked AS (
-      SELECT doc_id, bigram, c, sum(c) OVER (PARTITION BY doc_id) AS total,
-             row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, bigram ASC) AS rk
-      FROM bf
-    )
-    SELECT doc_id, bigram AS top_bigram, CAST(c AS BIGINT) AS top_count,
-           round(c * 1.0 / total, 6) AS top_share
-    FROM ranked WHERE rk = 1
-    """,
-)
-def top_bigram_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher repetition rule: share of the most frequent word 2-gram
-    per document, with a deterministic tie-break (max count, then
-    lexicographically least bigram — encoded as min(struct(-c,
-    bigram))).  Bigrams come from a zip-with-next transform over the
-    split array (no self-join, no posexplode+window): the array is
-    already row-local."""
-    d = _docs(spark, sf_dir)
-    toks = d.select(
-        "doc_id",
-        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda w: w != "").alias("ws"),
-    )
-    bigrams = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                # greatest(…, 0): slice throws on negative length, which
-                # size(ws) - 1 hits when a document is empty/whitespace-only
-                "transform(slice(ws, 1, greatest(size(ws) - 1, 0)),"
-                " (w, i) -> concat(w, ' ', ws[i + 1]))"
-            )
-        ).alias("bigram"),
-    )
-    bf = bigrams.groupBy("doc_id", "bigram").agg(F.count("*").alias("c"))
-    top = bf.groupBy("doc_id").agg(
-        F.min(F.struct((-F.col("c")).alias("neg_c"), F.col("bigram"))).alias("best"),
-        F.sum("c").alias("total"),
-    )
-    return top.select(
-        "doc_id",
-        F.col("best.bigram").alias("top_bigram"),
-        (-F.col("best.neg_c")).cast("long").alias("top_count"),
-        F.round(-F.col("best.neg_c") / F.col("total"), 6).alias("top_share"),
-    )
-
-
-# --- duplicate n-gram span detection (exact-substring dedup signal) ----------
-@register(
-    "dup_ngram_spans",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, unnest(list_transform(range(1, greatest(1, len(ws) - 3)),
-                     i -> array_to_string(ws[i:i+4], ' '))) AS g
-      FROM toks
-    ),
-    gf AS (SELECT g, count(DISTINCT doc_id) AS nd FROM grams GROUP BY g),
-    per_doc AS (
-      SELECT gr.doc_id,
-             count(*) AS n_grams,
-             sum(CASE WHEN gf.nd > 1 THEN 1 ELSE 0 END) AS n_dup
-      FROM grams gr JOIN gf ON gr.g = gf.g
-      GROUP BY gr.doc_id
-    )
-    SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams, CAST(n_dup AS BIGINT) AS n_dup,
-           round(n_dup * 1.0 / n_grams, 6) AS dup_frac
-    FROM per_doc
-    """,
-)
-def dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring duplication signal (Lee et al. 2022's
-    suffix-array dedup, bounded to 5-gram granularity — the shape that
-    distributes): every word 5-gram position, flagged when the gram
-    occurs in >1 document; per-doc duplicated-span fraction.  Gram
-    frequency is one (g) hash agg; the flag-back join re-shuffles on g
-    — at 100 TB the gf side is Zipf-small after the >1-doc filter and
-    Spark's AQE converts the join to broadcast when it fits."""
-    d = _docs(spark, sf_dir)
-    toks = d.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("ws")
-    )
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("ws") >= 5,
-                F.expr("transform(sequence(1, size(ws) - 4), i -> concat_ws(' ', slice(ws, i, 5)))"),
-            ).otherwise(F.expr("array()"))
-        ).alias("g"),
-    )
-    gf = grams.groupBy("g").agg(F.countDistinct("doc_id").alias("nd"))
-    per_doc = grams.join(gf, "g").groupBy("doc_id").agg(
-        F.count("*").alias("n_grams"),
-        F.sum(F.when(F.col("nd") > 1, 1).otherwise(0)).alias("n_dup"),
-    )
-    return per_doc.select(
-        "doc_id",
-        F.col("n_grams").cast("long").alias("n_grams"),
-        F.col("n_dup").cast("long").alias("n_dup"),
-        F.round(F.col("n_dup") / F.col("n_grams"), 6).alias("dup_frac"),
-    )
-
-
-# --- deterministic source-weighted mixture -----------------------------------
-_RATES = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.125}
-
-
-@register(
-    "mixture_blend_docs",
-    f"""
-    WITH rates(source, rate) AS (
-      -- CAST: bare decimal literals land as DECIMAL(4,3) in DuckDB and
-      -- canonicalize as '0.500' where Spark's DOUBLE prints '0.5'
-      VALUES {", ".join(f"('{s}', CAST({r} AS DOUBLE))" for s, r in _RATES.items())}
-    ),
-    gated AS (
-      SELECT d.doc_id, d.source, r.rate
-      FROM documents d JOIN rates r ON d.source = r.source
-      WHERE CAST(('0x' || substr(md5('blend#' || CAST(d.doc_id AS VARCHAR)), 1, 4)) AS INTEGER)
-            < CAST(r.rate * 65536 AS INTEGER)
-    )
-    SELECT source, rate, count(*) AS n_kept
-    FROM gated GROUP BY source, rate
-    """,
-)
-def mixture_blend_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source-weighted mixture sampling (the Pile/Dolma blend idiom):
-    per-source keep-rates applied via an md5 16-bit gate — exactly
-    reproducible across engines and reruns, unlike df.sample(seed=).
-    The rates table broadcasts; the gate is a row-local predicate, so
-    the only shuffle is the final 4-row rollup."""
-    d = _docs(spark, sf_dir)
-    rates = spark.createDataFrame(list(_RATES.items()), "source string, rate double")
-    gate = F.conv(
-        F.substring(F.md5(F.concat(F.lit("blend#"), F.col("doc_id").cast("string"))), 1, 4),
-        16,
-        10,
-    ).cast("long")
-    return (
-        d.join(F.broadcast(rates), "source")
-        .where(gate < (F.col("rate") * 65536).cast("int"))
-        .groupBy("source", "rate")
-        .agg(F.count("*").alias("n_kept"))
     )

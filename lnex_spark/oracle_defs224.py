@@ -50,11 +50,12 @@ windows are keyed by conv_id / shard — nothing global, no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracle_defs223 import _SQL_TR, _transcripts
 from lnex_spark.oracles import register
+
 
 _BUDGET = 120
 _SHARDS = 8

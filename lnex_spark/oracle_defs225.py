@@ -26,9 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs import _ANN_TOPK_SQL
-from lnex_spark.oracle_defs2 import _kmeans_sql, _t
+from lnex_spark.oracle_defs2 import _t
 from lnex_spark.oracle_defs224 import _SEMDEDUP_SQL
+from lnex_spark.oracle_defs_library import _ANN_TOPK_SQL, _CENTROIDS_SQL, _centroid_text
 from lnex_spark.oracles import register
 
 
@@ -41,15 +41,17 @@ def ann_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk_bruteforce_arrow(e, q, k=5).withColumn("rank", F.col("rank").cast("long"))
 
 
-@register("kmeans_cells_arrow", _kmeans_sql())
+@register("kmeans_cells_arrow", _CENTROIDS_SQL)
 def kmeans_cells_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lnex_spark.operators.clustering import kmeans_lloyd_arrow
 
     e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
     centroids, assignment = kmeans_lloyd_arrow(e, k=8, iters=3)
     counts = assignment.groupBy("cell_id").agg(F.count("*").alias("n_members"))
-    return centroids.join(counts, "cell_id").select(
-        "cell_id", "n_members", F.col("cemb").alias("centroid")
+    return _centroid_text(
+        centroids.join(counts, "cell_id").select(
+            "cell_id", "n_members", F.col("cemb").alias("centroid")
+        )
     )
 
 

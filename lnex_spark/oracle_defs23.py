@@ -1,21 +1,23 @@
-"""Twenty-third oracle-registry module: reconciliation, interval
-concurrency, KG negative sampling, bounded spatial nearest-join, and
-the binaryFile source.
+"""Oracle pairs that run ``operators.geomath``,
+``operators.reconcile``, ``operators.triples``.
 
   * table_diff_orders — version reconciliation: classify every order
     key as added/deleted/changed between two table versions (the
     audit step after an incremental merge).  One full-outer join,
     column-wise null-safe comparison — no row hashing, so value
     formatting can never fake a diff (operators/reconcile.py).
+
   * concurrency_sweep_events — max-concurrent-users analytics via the
     classic +1/-1 boundary sweep: linear, one hash agg + one running
     sum, vs the O(n²) interval self-join it replaces.
+
   * kg_negative_samples — deterministic corrupted-object negatives
     for KG-embedding training over the REAL pipeline's canonical
     mention triples (same literal-gazetteer derivation as kg_e2e_sql):
     md5-gated vocabulary pick, collision advances one slot, so the
     negative set is a pure function of the triples — stable across
     engines/reruns/cluster sizes (operators/triples.negative_samples).
+
   * nearest_site_cells — grid-bucketed nearest-neighbor spatial join
     (reverse geocoding): each site replicated into its 3x3 neighbor
     cells (dimension side, broadcast), each point probes exactly its
@@ -25,22 +27,9 @@ the binaryFile source.
     constructed so the true nearest always lies inside the 3x3 ring
     and no two sites are near-equidistant from any point (margins are
     km-scale, so libm last-ulp differences cannot flip the argmin).
-  * binaryfile_manifest — the `binaryFile` source (the multimodal
-    ingest path: image/audio blobs as opaque binary columns): write
-    deterministic fixture blobs, read them back with pathGlobFilter
-    pruning, and verify (name, size, md5) of every file against
-    DuckDB's re-derivation of the same generation rule — the source's
-    content plumbing is value-checked, not just row-counted.
-
-Reference parity note: none of these exist in LNEx (single-process,
-no tables, no binary media — SURVEY.md §0); all five are host-engine
-infrastructure for the 100 TB deployment of its semantics.
 """
 
 from __future__ import annotations
-
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -235,34 +224,3 @@ def nearest_site_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(F.col("n_nationkey") / 5) * 8.0 + 4.0).alias("lon"),
     )
     return grid_nearest_join(points, sites, cell_deg=8.0, point_id="pid", site_id="site_id")
-
-
-# --- binaryFile source (multimodal ingest plumbing) ------------------------
-_BINFILE_SQL = """
-    SELECT 'blob-' || lpad(CAST(i AS VARCHAR), 2, '0') || '.bin' AS fname,
-           CAST(length(repeat('payload-' || CAST(i AS VARCHAR) || ';', CAST(i + 1 AS INTEGER))) AS BIGINT) AS n_bytes,
-           md5(repeat('payload-' || CAST(i AS VARCHAR) || ';', CAST(i + 1 AS INTEGER))) AS digest
-    FROM range(0, 32) t(i)
-"""
-
-
-@register("binaryfile_manifest", _BINFILE_SQL)
-def binaryfile_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = os.path.join(tempfile.gettempdir(), "lnex_binaryfile_fixture")
-    os.makedirs(d, exist_ok=True)
-    for i in range(32):
-        payload = (f"payload-{i};" * (i + 1)).encode("ascii")
-        with open(os.path.join(d, f"blob-{i:02d}.bin"), "wb") as f:
-            f.write(payload)
-    with open(os.path.join(d, "ignore.txt"), "w") as f:
-        f.write("not a blob — pathGlobFilter must exclude this file\n")
-    df = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.bin")
-        .load(d)
-    )
-    return df.select(
-        F.regexp_extract(F.col("path"), r"([^/]+)$", 1).alias("fname"),
-        F.col("length").alias("n_bytes"),
-        F.md5(F.col("content")).alias("digest"),
-    )

@@ -4,9 +4,8 @@
     stream onto a dense hourly grid (generated per-key spine via
     sequence+explode, bounded by span/granularity) and forward-fill
     empty hours with the last observed hourly sum
-    (operators/timeseries.resample_hourly_locf).  Complements
-    locf_fill_events (oracle_defs21), which fills nulls at EXISTING
-    rows — resampling materializes the missing rows first, the step
+    (operators/timeseries.resample_hourly_locf).  Unlike a plain
+    LOCF fill, which fills nulls at EXISTING rows, resampling materializes the missing rows first, the step
     every equal-spacing consumer (rate math, drift windows, sequence
     models) needs.  Same IGNORE NULLS dialect split as locf: DuckDB
     parses ``last_value(v IGNORE NULLS)``, the Spark side uses

@@ -29,8 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs import _ANN_TOPK_SQL
-from lnex_spark.oracle_defs2 import _ANN_IVF_SQL
+from lnex_spark.oracle_defs_library import _ANN_IVF_SQL, _ANN_TOPK_SQL
 from lnex_spark.oracles import register
 
 

@@ -1,6 +1,5 @@
-"""Twenty-eighth oracle-registry module: exact bounded set-similarity
-join, landmark BFS distances, dialogue template grouping, and the key
-skew concentration profile.
+"""Oracle pairs that run ``operators.dedup``, ``operators.graph``,
+``sources.synth``.
 
   * setsim_prefix_docs — AllPairs/PPJoin prefix-filtered EXACT
     shingle-Jaccard join (dedup.prefix_filter_pairs): candidates come
@@ -11,6 +10,7 @@ skew concentration profile.
     data, at every sf.  Completes the dedup candidate-generation
     matrix: postings-unroll (lossy cap), MinHash-LSH (probabilistic),
     SimHash (probabilistic), prefix filter (exact and bounded).
+
   * bfs_landmarks_events — multi-source BFS distances from landmark
     nodes (node % 10 = 0) over the hour-bucket co-occurrence graph
     (graph.bfs_distances, fixed 3 rounds of min-distance relaxation
@@ -18,6 +18,7 @@ skew concentration profile.
     re-derivation.  The landmark-distance sketch joins components /
     PageRank / LPA / k-core / triangles / link-prediction in the
     oracle-verified graph suite.
+
   * conv_template_groups — conversations sharing an identical ordered
     (role|tool) state sequence collapse into one dialogue template:
     the transcript-level analogue of exact text dedup (agent corpora
@@ -26,12 +27,6 @@ skew concentration profile.
     the custom Python Data Source, with a deterministic per-conv turn
     cap so templates actually vary; DuckDB re-derives the source's
     generation rule independently.
-  * key_skew_profile_events — the one-row Gini / top-k-share
-    concentration report (skew.key_skew_profile) over the events
-    user_id distribution: the quantified form of the long-tail-skew
-    premise behind X2 salting and suggest_salt_partitions.  Exact
-    rank-weighted Gini with a fully-specified tie order, identical
-    formula on both engines.
 """
 
 from __future__ import annotations
@@ -179,8 +174,8 @@ def conv_template_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic per-conversation turn cap (5 + conv % 7) makes the
     fixed-turn synth source produce genuinely distinct templates.
     Sort-then-transform inside the aggregate keeps the ordered
-    concatenation shuffle-free beyond the one conv_id agg (same
-    sorted-struct collect trick as string_agg_orders — no window)."""
+    concatenation shuffle-free beyond the one conv_id agg (a
+    sorted-struct collect — no window)."""
     from lnex_spark.sources import synth
 
     synth.register(spark)
@@ -208,31 +203,3 @@ def conv_template_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seq.groupBy("template").agg(
         F.count("*").alias("n_convs"), F.min("conv_id").alias("first_conv")
     )
-
-
-# --- key skew concentration profile ---------------------------------------
-_SKEW_SQL = """
-    WITH cnt AS (SELECT user_id, count(*) AS c FROM events GROUP BY user_id),
-    ranked AS (
-      SELECT c,
-             row_number() OVER (ORDER BY c ASC, user_id ASC) AS rk,
-             row_number() OVER (ORDER BY c DESC, user_id DESC) AS rk_hot
-      FROM cnt
-    )
-    SELECT count(*) AS n_keys,
-           sum(c) AS total,
-           round(2.0 * sum(rk * c) / (count(*) * sum(c))
-                 - (count(*) + 1.0) / count(*), 6) AS gini,
-           round(sum(CASE WHEN rk_hot <= 1 THEN c ELSE 0 END) * 1.0 / sum(c), 6)
-             AS top1_share,
-           round(sum(CASE WHEN rk_hot <= 10 THEN c ELSE 0 END) * 1.0 / sum(c), 6)
-             AS top10_share
-    FROM ranked
-"""
-
-
-@register("key_skew_profile_events", _SKEW_SQL)
-def key_skew_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lnex_spark.operators.skew import key_skew_profile
-
-    return key_skew_profile(_t(spark, sf_dir, "events"), key="user_id")

@@ -1,5 +1,5 @@
-"""Twenty-ninth oracle-registry module: BPE tokenizer training,
-labeler agreement, skip-gram training pairs, and a Benford audit.
+"""Oracle pairs that run ``operators.textquality``,
+``operators.textstats``.
 
   * bpe_merges_docs — byte-pair-encoding merge induction
     (textstats.bpe_merges): the first 3 learned merges over the
@@ -12,30 +12,21 @@ labeler agreement, skip-gram training pairs, and a Benford audit.
     including the data-dependent top-pair choice, as nested CTEs —
     so the value check covers the whole training loop, merge
     decisions included.
+
   * labeler_agreement_docs — Cohen's kappa between the engine's
     heuristic language ID and the corpus ``lang`` column: the
     annotation-QA statistic (chance-corrected agreement) every
     labeling pipeline reports.  Marginal products via one tiny
     per-label join; the kappa formula is written identically on both
     engines over exact integer counts.
-  * skipgram_pairs_docs — (center, context) co-occurrence counts
-    within a ±2 token window: the word2vec/GloVe training-pair
-    extraction job.  One positional self-join per doc (doc_id-equi
-    join + band predicate), corpus-aggregated; vocabulary-bounded
-    output.
-  * benford_totalprice — first-significant-digit distribution of
-    order totals vs Benford's law expectation: the classic
-    fabricated-data audit.  Digit taken from the decimal string of
-    the exact integer floor — no float log in the digit derivation
-    (log10 appears only in the rounded expected-share column).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs import _dd_word_count
+from lnex_spark.oracle_defs_library import _dd_word_count
 from lnex_spark.oracles import register
 
 
@@ -87,9 +78,9 @@ _BPE_SQL = (
     ),"""
     + ",".join(_bpe_round(f"s{r - 1}", r) for r in range(1, 4))
     + """
-    SELECT 1 AS rank, a AS lhs, b AS rhs, cnt AS freq FROM m1
-    UNION ALL SELECT 2, a, b, cnt FROM m2
-    UNION ALL SELECT 3, a, b, cnt FROM m3
+    SELECT 1 AS rank, a AS lhs, b AS rhs, CAST(cnt AS BIGINT) AS freq FROM m1
+    UNION ALL SELECT 2, a, b, CAST(cnt AS BIGINT) FROM m2
+    UNION ALL SELECT 3, a, b, CAST(cnt AS BIGINT) FROM m3
     """
 )
 
@@ -172,87 +163,4 @@ def labeler_agreement_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(po_expr, 6).alias("po"),
         F.round(pe_expr, 6).alias("pe_chance"),
         F.round((po_expr - pe_expr) / (1 - pe_expr), 6).alias("kappa"),
-    )
-
-
-# --- word2vec skip-gram training pairs -------------------------------------
-_SKIPGRAM_SQL = r"""
-    WITH t AS (
-      SELECT doc_id, i AS pos, toks[CAST(i AS INT)] AS tok
-      FROM (
-        SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
-        FROM documents WHERE doc_id % 5 = 0),
-      unnest(range(1, len(toks) + 1)) AS r(i)
-      WHERE toks[CAST(i AS INT)] <> ''
-    )
-    SELECT a.tok AS center, b.tok AS context, count(*) AS n_pairs
-    FROM t a JOIN t b
-      ON a.doc_id = b.doc_id AND abs(a.pos - b.pos) BETWEEN 1 AND 2
-    GROUP BY 1, 2
-"""
-
-
-@register("skipgram_pairs_docs", _SKIPGRAM_SQL)
-def skipgram_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(center, context) counts within a ±2 raw-position window — the
-    word2vec training-pair extraction job.  doc_id-equi self-join with
-    a band predicate (positions of a doc are co-partitioned by the
-    join key, so the band check is a local filter), then one
-    vocabulary²-bounded hash agg."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    t = d.select(
-        "doc_id",
-        F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-            "pos", "tok"
-        ),
-    ).filter(F.col("tok") != "")
-    a, b = t.alias("a"), t.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.abs(F.col("a.pos") - F.col("b.pos")).between(1, 2)),
-        )
-        .groupBy(F.col("a.tok").alias("center"), F.col("b.tok").alias("context"))
-        .agg(F.count("*").alias("n_pairs"))
-    )
-
-
-# --- Benford first-digit audit ---------------------------------------------
-_BENFORD_SQL = """
-    WITH d AS (
-      SELECT substr(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1)
-               AS digit,
-             count(*) AS n
-      FROM orders WHERE o_totalprice >= 1 GROUP BY 1
-    )
-    SELECT digit, n,
-           round(n * 1.0 / (SELECT sum(n) FROM d), 6) AS share,
-           round(log10(1 + 1.0 / CAST(digit AS INT)), 6) AS benford_expected
-    FROM d
-"""
-
-
-@register("benford_totalprice", _BENFORD_SQL)
-def benford_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-significant-digit histogram of order totals against the
-    Benford expectation log10(1 + 1/d) — the standard fabricated-data
-    screen a data-quality intake runs on monetary columns.  The digit
-    comes from the decimal string of the exact integer floor (no
-    float log in the digit path — floor of a double ≥ 1 is exact, and
-    its first digit equals the value's first significant digit)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
-    d = o.select(
-        F.substring(
-            F.floor("o_totalprice").cast("long").cast("string"), 1, 1
-        ).alias("digit")
-    ).groupBy("digit").agg(F.count("*").alias("n"))
-    total = Window.partitionBy()
-    return d.select(
-        "digit",
-        "n",
-        F.round(F.col("n") * 1.0 / F.sum("n").over(total), 6).alias("share"),
-        F.round(F.log10(1 + 1.0 / F.col("digit").cast("int")), 6).alias(
-            "benford_expected"
-        ),
     )

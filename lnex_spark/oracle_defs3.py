@@ -1,27 +1,23 @@
-"""Third oracle-registry module (round-1 continuation).
+"""Oracle pairs for the graph layer, the Python data source and the
+incremental vote merge.
 
-Contents:
-  * graph layer — transitive dedup clustering via distributed
-    connected components (dedup_components), the location co-mention
-    graph (kg_comention), 3-iteration PageRank over it (kg_pagerank);
-  * the broadcast-free matcher and the FULL KG pipeline on it
-    (m1_relational_sql, kg_e2e_relational_sql);
-  * the custom Python Data Source (source_synth_transcripts) and the
-    stream-stream join's batch twin (response_latency_pairs);
-  * UDF-surface coverage — Python UDTF (udtf_shingles), grouped-agg
-    pandas UDF (gmean_grouped_udf);
-  * relational/semi-structured coverage — unpivot/melt, correlated
-    LATERAL top-k, correlated scalar (Q17) and EXISTS (Q4)
-    subqueries, VARIANT extraction, FULL OUTER join, CUBE,
-    quantile-sketch sanity, deterministic md5-gated corpus sampling.
-
-The connected-components oracle is the interesting one: the Spark side
-is a genuinely iterative min-label-propagation job
-(operators/graph.py), the DuckDB side an independent WITH RECURSIVE
-reachability fixpoint — two different algorithms agreeing on the exact
-(node, component) assignment, including multi-hop chains (the edge set
-mixes near-dup Jaccard pairs with relational chain edges so components
-have diameter > 1).
+  * dedup_components — transitive near-dup clustering by distributed
+    connected components (``operators.graph.dedup_clusters``).  The
+    Spark side is an iterative min-label-propagation job, the DuckDB
+    side an independent WITH RECURSIVE reachability fixpoint: two
+    algorithms agreeing on the exact (node, component) assignment,
+    including multi-hop chains (the edge set mixes near-dup Jaccard
+    pairs with relational chain edges, so components have diameter
+    > 1).
+  * kg_comention / kg_pagerank — the location co-mention graph over
+    the canonical mention triples and 3-iteration PageRank over it
+    (``operators.graph.comention_edges`` / ``pagerank``).
+  * source_synth_transcripts — every row of the custom Python Data
+    Source (``sources.synth``), regenerated in SQL.
+  * incremental_votes_merge — incremental KG maintenance: the L2
+    winners split into two batches (even/odd conv_id), their vote
+    tables merged (``operators.incremental.batch_votes`` /
+    ``merge_votes``) equal DuckDB's whole-corpus vote count.
 """
 
 from __future__ import annotations
@@ -29,13 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs2 import (
-    _SQL_LINK,
-    _SQL_TOKENIZE,
-    _docs_as_transcripts,
-    _oracle_mentions,
-    _oracle_variants,
-)
+from lnex_spark.oracle_defs2 import _SQL_LINK, _SQL_TOKENIZE, _oracle_mentions, _oracle_variants
 from lnex_spark.oracles import register
 
 
@@ -214,33 +204,6 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "lateral_topk_customers",
-    """
-    SELECT n.n_name, t.c_name, t.c_acctbal
-    FROM nation n JOIN LATERAL (
-      SELECT c_name, c_acctbal FROM customer c
-      WHERE c.c_nationkey = n.n_nationkey
-      ORDER BY c_acctbal DESC, c_name LIMIT 2) t ON true
-    """,
-)
-def lateral_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery with per-group ORDER BY LIMIT
-    (Spark 3.2+ lateral join) vs DuckDB LATERAL — the subquery-shaped
-    twin of the window-function top-k ops."""
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("nation_lat")
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_lat")
-    return spark.sql(
-        """
-        SELECT n.n_name, t.c_name, t.c_acctbal
-        FROM nation_lat n JOIN LATERAL (
-          SELECT c_name, c_acctbal FROM customer_lat c
-          WHERE c.c_nationkey = n.n_nationkey
-          ORDER BY c_acctbal DESC, c_name LIMIT 2) t
-        """
-    )
-
-
-@register(
     "source_synth_transcripts",
     """
     WITH convs AS (SELECT unnest(range(0, 40)) AS i),
@@ -271,65 +234,6 @@ def source_synth_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "m1_relational_sql",
-    f"""
-    WITH {_SQL_TOKENIZE}
-    SELECT doc_id, norm, count(*) AS n_mentions
-    FROM final GROUP BY doc_id, norm
-    """,
-)
-def m1_relational_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BROADCAST-FREE matcher (operators/extract_relational.py —
-    tokens → windowed n-grams → distributed semi-join vs the gazetteer
-    → exact greedy resolve) against the same independent DuckDB
-    re-derivation that checks the broadcast matcher
-    (m1_ngram_match_sql): three implementations, one answer."""
-    from lnex_spark.operators.extract_relational import extract_mentions_relational
-
-    m = extract_mentions_relational(
-        _docs_as_transcripts(spark, sf_dir), _oracle_variants(spark), max_tokens=3
-    )
-    return m.groupBy(
-        F.col("conv_id").cast("long").alias("doc_id"), "norm"
-    ).agg(F.count("*").alias("n_mentions"))
-
-
-@register(
-    "kg_e2e_relational_sql",
-    f"""
-    WITH {_SQL_TOKENIZE},
-    {_SQL_LINK}
-    SELECT DISTINCT CAST(w.doc_id AS VARCHAR) || '#0' AS subj,
-           'mentionsLocation' AS pred, CAST(c.canonical AS VARCHAR) AS obj
-    FROM winners w JOIN canon c ON w.norm = c.norm
-    """,
-)
-def kg_e2e_relational_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL KG pipeline with the matcher swapped for the
-    broadcast-free relational path (M1rel → L1 → L2 → L3 → K1):
-    proves the whole flagship runs gazetteer-as-DataFrame end to end,
-    against the same DuckDB derivation as kg_e2e_sql."""
-    from lnex_spark.operators.extract_relational import extract_mentions_relational
-    from lnex_spark.operators.link import (
-        apply_canonical,
-        canonicalize,
-        link_mentions,
-        score_candidates,
-    )
-    from lnex_spark.operators.triples import mention_triples
-
-    variants = _oracle_variants(spark)
-    mentions = extract_mentions_relational(
-        _docs_as_transcripts(spark, sf_dir), variants, max_tokens=3
-    )
-    winners = score_candidates(link_mentions(mentions, variants, hint_broadcast=False))
-    final = apply_canonical(winners, canonicalize(winners))
-    return mention_triples(final).select(
-        "subj", "pred", F.col("obj").cast("string").alias("obj")
-    )
-
-
-@register(
     "incremental_votes_merge",
     f"""
     WITH {_SQL_TOKENIZE},
@@ -352,353 +256,3 @@ def incremental_votes_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     odd = winners.where(F.col("conv_id").cast("long") % 2 == 1)
     merged = merge_votes(batch_votes(even), batch_votes(odd))
     return merged.select("norm", "geo_id", "votes")
-
-
-@register(
-    "variant_props_extract",
-    """
-    SELECT event_type,
-           sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS sum_k,
-           max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k,
-           count(*) AS n
-    FROM events GROUP BY event_type
-    """,
-)
-def variant_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark-4 VARIANT path over semi-structured props:
-    parse_json -> variant_get typed extraction (vs the string-path
-    get_json_object in json_props_extract) — the open-schema idiom for
-    Iceberg/transcript metadata columns."""
-    e = _t(spark, sf_dir, "events")
-    k = F.variant_get(F.parse_json(F.col("props")), "$.k", "long")
-    return e.select("event_type", k.alias("k")).groupBy("event_type").agg(
-        F.sum("k").alias("sum_k"), F.max("k").alias("max_k"), F.count("*").alias("n")
-    )
-
-
-_Q17_SQL = """
-    SELECT round(coalesce(sum(l_extendedprice), 0) / CAST(7.0 AS DOUBLE), 2) AS avg_yearly
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE p_brand = 'Brand#13'
-      AND l_quantity < (SELECT CAST(0.2 AS DOUBLE) * avg(l_quantity)
-                        FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
-"""
-
-
-@register("scalar_subquery_q17", _Q17_SQL)
-def scalar_subquery_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated SCALAR subquery in a predicate —
-    exercises Catalyst's subquery decorrelation (rewritten to an agg +
-    join; never a per-row subquery execution)."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(_Q17_SQL)
-
-
-_Q4_SQL = """
-    SELECT o_orderpriority, count(*) AS n_orders
-    FROM orders
-    WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-04-01'
-      AND EXISTS (SELECT 1 FROM lineitem
-                  WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-    GROUP BY o_orderpriority
-"""
-
-
-@register("exists_subquery_q4", _Q4_SQL)
-def exists_subquery_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: correlated EXISTS subquery (decorrelated to a
-    left-semi join) — the subquery-syntax twin of semi_anti_join."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_Q4_SQL)
-
-
-@register(
-    "response_latency_pairs",
-    """
-    WITH convs AS (SELECT unnest(range(0, 40)) AS i),
-    turns AS (SELECT unnest(range(0, 25)) AS j)
-    SELECT 'c' || i AS conv_id, CAST(j AS INT) AS user_turn,
-           CAST(j + 1 AS INT) AS assistant_turn, CAST(60 AS BIGINT) AS latency_sec
-    FROM convs CROSS JOIN turns
-    WHERE j % 2 = 0 AND j + 1 < 25
-    """,
-)
-def response_latency_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form of the stream-stream interval join
-    (streaming/join.py response_latency_join) over the synthetic
-    source, value-checked against the closed-form pairing the
-    generator implies (user turn j even → assistant j+1, 60s later).
-    Stream ≡ batch is covered by tests/test_stream_join.py."""
-    from lnex_spark.sources import synth
-    from lnex_spark.streaming.join import response_latency_join
-
-    synth.register(spark)
-    turns = (
-        spark.read.format("transcripts_synth")
-        .option("n_convs", 40)
-        .option("turns_per_conv", 25)
-        .option("num_partitions", 4)
-        .load()
-    )
-    return response_latency_join(turns)
-
-
-@register(
-    "udtf_shingles",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-      FROM documents WHERE doc_id < 100
-    ),
-    pos AS (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks WHERE len(t) >= 2)
-    SELECT doc_id, CAST(i - 1 AS INT) AS pos,
-           array_to_string(t[i:i+1], ' ') AS shingle
-    FROM pos
-    """,
-)
-def udtf_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Python UDTF surface: SQL LATERAL table function emitting bigram
-    shingles per document (Arrow-optimized), value-checked against
-    DuckDB's unnest-based relational twin."""
-    from lnex_spark.operators.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    _t(spark, sf_dir, "documents").where(F.col("doc_id") < 100).createOrReplaceTempView(
-        "docs_udtf"
-    )
-    return spark.sql(
-        "SELECT d.doc_id, s.pos, s.shingle "
-        "FROM docs_udtf d, LATERAL shingle_udtf(d.text) s"
-    )
-
-
-@register(
-    "gmean_grouped_udf",
-    """
-    SELECT event_type, round(exp(avg(ln(value))), 6) AS gmean
-    FROM events WHERE value > 0 GROUP BY event_type
-    """,
-)
-def gmean_grouped_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-aggregate pandas UDF (vectorized UDAF): geometric mean
-    of event values per type, oracle exp(avg(ln(x))). Zero values are
-    excluded on both sides — gmean is undefined at 0 (sf0.1 has one;
-    found by the multi-scale sweep)."""
-    from lnex_spark.operators.udtfs import gmean_udf
-
-    e = _t(spark, sf_dir, "events").where(F.col("value") > 0)
-    return e.groupBy("event_type").agg(
-        F.round(gmean_udf("value"), 6).alias("gmean")
-    )
-
-
-@register(
-    "full_outer_nation_counts",
-    """
-    WITH c AS (SELECT c_nationkey AS nk, count(*) AS n_cust FROM customer GROUP BY 1),
-    s AS (SELECT s_nationkey AS nk, count(*) AS n_supp
-          FROM supplier WHERE s_acctbal > 9000 GROUP BY 1)
-    SELECT coalesce(c.nk, s.nk) AS nationkey,
-           coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
-    FROM c FULL OUTER JOIN s ON c.nk = s.nk
-    """,
-)
-def full_outer_nation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER join coverage (the one join type the engine had not
-    exercised): per-nation customer vs high-balance supplier counts,
-    with nulls surviving on either side."""
-    c = (
-        _t(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("nk"))
-        .agg(F.count("*").alias("n_cust"))
-    )
-    s = (
-        _t(spark, sf_dir, "supplier")
-        .where(F.col("s_acctbal") > 9000)
-        .groupBy(F.col("s_nationkey").alias("nk"))
-        .agg(F.count("*").alias("n_supp"))
-    )
-    return c.join(s, "nk", "full_outer").select(
-        F.col("nk").alias("nationkey"),
-        F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-        F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-    )
-
-
-@register(
-    "approx_percentile_sanity",
-    """
-    SELECT round(quantile_cont(o_totalprice, 0.5), 2) AS p50_exact,
-           round(quantile_cont(o_totalprice, 0.95), 2) AS p95_exact,
-           true AS approx_within_1pct
-    FROM orders
-    """,
-)
-def approx_percentile_sanity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile-sketch sanity (same pattern as approx_distinct_sanity):
-    approx_percentile (accuracy 10000 → rank error ≤ 0.01%) must land
-    within 1% of the exact interpolated quantile on both p50 and p95;
-    the checked values are the exact quantiles + the tolerance
-    predicate."""
-    o = _t(spark, sf_dir, "orders")
-    exact = F.expr("percentile(o_totalprice, array(0.5, 0.95))")
-    approx = F.expr("approx_percentile(o_totalprice, array(0.5, 0.95), 10000)")
-    return o.agg(
-        F.round(exact.getItem(0), 2).alias("p50_exact"),
-        F.round(exact.getItem(1), 2).alias("p95_exact"),
-        (
-            (F.abs(approx.getItem(0) - exact.getItem(0)) <= 0.01 * exact.getItem(0))
-            & (F.abs(approx.getItem(1) - exact.getItem(1)) <= 0.01 * exact.getItem(1))
-        ).alias("approx_within_1pct"),
-    )
-
-
-@register(
-    "cube_orders_agg",
-    """
-    SELECT coalesce(o_orderpriority, 'ALL') AS pri,
-           coalesce(o_orderstatus, 'ALL') AS status,
-           count(*) AS n, round(sum(o_totalprice), 2) AS total
-    FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)
-    """,
-)
-def cube_orders_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE coverage (rollup/grouping-sets' sibling): all 2^2 grouping
-    combinations over order priority × status."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.cube("o_orderpriority", "o_orderstatus")
-        .agg(F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-        .select(
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("pri"),
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            "n",
-            "total",
-        )
-    )
-
-
-@register(
-    "sample_deterministic",
-    """
-    SELECT doc_id, length(text) AS n_chars
-    FROM documents
-    WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) < 13107
-    """,
-)
-def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible ~20% corpus sampling — the training-data idiom for
-    deterministic subsetting across engines and reruns: keep rows
-    whose md5(doc_id) 16-bit prefix falls under 0.2·2^16 (13107).
-    ``df.sample(seed=)`` is engine-private RNG and NOT reproducible
-    outside Spark; content-hash gating is."""
-    d = _t(spark, sf_dir, "documents")
-    gate = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-    return d.where(gate.cast("long") < 13107).select(
-        "doc_id", F.length("text").cast("long").alias("n_chars")
-    )
-
-
-@register(
-    "map_funcs_events",
-    """
-    SELECT user_id, event_type, n FROM (
-      SELECT user_id, event_type, count(*) AS n
-      FROM events GROUP BY 1, 2
-    ) WHERE n >= 3
-    """,
-)
-def map_funcs_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map-function surface: per-user counts packed into a
-    map<event_type, n> (map_from_entries), thresholded map-side with a
-    map_filter lambda, then unpacked via explode(map_entries) — the
-    relational twin is a plain HAVING. Exercises the MapType column
-    path the engine otherwise never touches."""
-    e = _t(spark, sf_dir, "events")
-    per = e.groupBy("user_id", "event_type").agg(F.count("*").alias("n"))
-    mapped = per.groupBy("user_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("event_type", "n"))).alias("m")
-    )
-    filtered = mapped.select(
-        "user_id", F.map_filter("m", lambda _k, v: v >= 3).alias("m")
-    )
-    return filtered.select(
-        "user_id", F.explode(F.map_entries("m")).alias("kv")
-    ).select("user_id", F.col("kv.key").alias("event_type"), F.col("kv.value").alias("n"))
-
-
-@register(
-    "xml_roundtrip_events",
-    """
-    SELECT event_type, sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS sum_k,
-           count(*) AS n
-    FROM events GROUP BY event_type
-    """,
-)
-def xml_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark-4 XML surface: pack each event's (type, k) into an XML
-    string, parse it back with from_xml, aggregate the PARSED values —
-    equal to aggregating the source directly (DuckDB side). Proves the
-    XML path loses nothing, without needing XML in the oracle engine."""
-    e = _t(spark, sf_dir, "events")
-    xml = F.concat(
-        F.lit("<e><t>"),
-        F.col("event_type"),
-        F.lit("</t><k>"),
-        F.get_json_object("props", "$.k"),
-        F.lit("</k></e>"),
-    )
-    parsed = e.select(F.from_xml(xml, "t STRING, k LONG").alias("p"))
-    return parsed.groupBy(F.col("p.t").alias("event_type")).agg(
-        F.sum("p.k").alias("sum_k"), F.count("*").alias("n")
-    )
-
-
-@register(
-    "try_arithmetic_orders",
-    """
-    SELECT o_orderpriority,
-           round(sum(CASE WHEN o_custkey % 3 = 0 THEN NULL
-                          ELSE o_totalprice / (o_custkey % 3) END), 2) AS safe_ratio,
-           count(*) AS n
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def try_arithmetic_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANSI-safety surface: try_divide yields NULL on division by zero
-    instead of failing the job — the divisor (custkey mod 3) is zero on
-    a third of real rows, so the guard is exercised throughout; oracle
-    is the explicit CASE."""
-    o = _t(spark, sf_dir, "orders")
-    div = F.col("o_custkey") % 3
-    return o.groupBy("o_orderpriority").agg(
-        F.round(F.sum(F.try_divide(F.col("o_totalprice"), div)), 2).alias("safe_ratio"),
-        F.count("*").alias("n"),
-    )
-
-
-@register(
-    "unpivot_part_metrics",
-    """
-    SELECT p_brand, metric, count(*) AS n, round(sum(val), 2) AS total
-    FROM (UNPIVOT (SELECT p_brand, CAST(p_size AS DOUBLE) AS p_size, p_retailprice
-                   FROM part)
-          ON p_size, p_retailprice INTO NAME metric VALUE val)
-    GROUP BY 1, 2
-    """,
-)
-def unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """melt/unpivot coverage: wide part metrics -> long (metric, val),
-    aggregated per brand. Spark ``DataFrame.unpivot`` vs DuckDB UNPIVOT."""
-    p = _t(spark, sf_dir, "part").select(
-        "p_brand",
-        F.col("p_size").cast("double").alias("p_size"),
-        "p_retailprice",
-    )
-    return (
-        p.unpivot(["p_brand"], ["p_size", "p_retailprice"], "metric", "val")
-        .groupBy("p_brand", "metric")
-        .agg(F.count("*").alias("n"), F.round(F.sum("val"), 2).alias("total"))
-    )

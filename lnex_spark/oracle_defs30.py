@@ -1,5 +1,5 @@
-"""Thirtieth oracle-registry module: sequence packing, PSI drift, and
-KG entity context profiles.
+"""Oracle pairs that run ``operators.curation``,
+``operators.scalable_windows``.
 
   * pack_sequences_docs — greedy first-fit token-budget packing
     (curation.pack_sequences): the LLM training-batch construction
@@ -8,6 +8,7 @@ KG entity context profiles.
     DuckDB twin replays the same greedy recurrence as a RECURSIVE CTE
     stepping one doc per iteration across all shards at once — the
     accumulate-with-reset class of computation, value-checked.
+
   * psi_drift_events — Population Stability Index between the first
     and second half-month of the events timeline, over exact
     row-picked decile edges of the baseline window (no quantile-type
@@ -15,13 +16,6 @@ KG entity context profiles.
     by construction), with Laplace-smoothed shares so empty current
     bins stay finite.  The binned complement of the KS statistic —
     PSI is what ML monitoring actually alerts on.
-  * kg_entity_contexts — per canonical geo entity, the top-5 tokens
-    co-occurring in mentioning documents (entity-context profile — the
-    bag-of-context corpus behind KG-entity embeddings), excluding the
-    entity's own surface tokens.  Composes the verified literal-
-    gazetteer pipeline derivation (oracle_defs2), so the whole report
-    — matcher, linker, canonicalizer, context join, top-k — is
-    value-checked end to end.
 """
 
 from __future__ import annotations
@@ -29,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs2 import _SQL_LINK, _SQL_TOKENIZE
 from lnex_spark.oracles import register
 
 
@@ -97,7 +90,7 @@ _PSI_SQL = """
       FROM binned GROUP BY bin
     ),
     tot AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM bins)
-    SELECT bin, n_a, n_b,
+    SELECT CAST(bin AS BIGINT) AS bin, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
            round(((n_b + 0.5) / (tb + 5.0) - (n_a + 0.5) / (ta + 5.0))
                  * ln(((n_b + 0.5) / (tb + 5.0)) / ((n_a + 0.5) / (ta + 5.0))), 6)
              AS contrib,
@@ -162,90 +155,4 @@ def psi_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(contrib, 6).alias("contrib"),
             F.round(F.sum(contrib).over(Window.partitionBy()), 6).alias("psi_total"),
         )
-    )
-
-
-# --- KG entity context profiles --------------------------------------------
-_CTX_SQL = f"""
-    WITH {_SQL_TOKENIZE},
-    {_SQL_LINK},
-    docgeo AS (
-      SELECT DISTINCT w.doc_id, c.canonical AS geo_id
-      FROM winners w JOIN canon c ON w.norm = c.norm
-    ),
-    words AS (
-      SELECT doc_id, tk[i] AS tok FROM p
-      WHERE regexp_matches(tk[i], '^[a-z]')
-    ),
-    gaz_toks AS (
-      SELECT DISTINCT geo_id, unnest(string_split(norm, ' ')) AS tok FROM gaz
-    ),
-    ctx AS (
-      SELECT dg.geo_id, w.tok, count(*) AS c
-      FROM docgeo dg JOIN words w ON w.doc_id = dg.doc_id
-      WHERE NOT EXISTS (
-        SELECT 1 FROM gaz_toks gt
-        WHERE gt.geo_id = dg.geo_id AND gt.tok = w.tok)
-      GROUP BY 1, 2
-    )
-    SELECT geo_id, tok, c, rk FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY geo_id ORDER BY c DESC, tok ASC) AS rk
-      FROM ctx)
-    WHERE rk <= 5
-"""
-
-_TOK_PATTERN = "[a-z][a-z']*|[0-9][a-z0-9_]*|[^ a-z0-9']"
-
-
-@register("kg_entity_contexts", _CTX_SQL)
-def kg_entity_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 co-occurring tokens per canonical entity, excluding the
-    entity's own surface tokens — the context corpus for KG-entity
-    embedding training.  Runs the REAL pipeline (Arrow matcher →
-    link → canonicalize) and joins mentioning docs to a builtin
-    regexp_extract_all tokenization (doc-membership profile; token
-    exclusion uses the canonical entity's gazetteer surfaces)."""
-    from lnex_spark.oracle_defs2 import _oracle_mentions, _oracle_variants
-    from lnex_spark.operators.link import (
-        apply_canonical,
-        canonicalize,
-        link_mentions,
-        score_candidates,
-    )
-
-    variants = _oracle_variants(spark)
-    winners = score_candidates(
-        link_mentions(_oracle_mentions(spark, sf_dir), variants)
-    )
-    final = apply_canonical(winners, canonicalize(winners))
-    docgeo = final.select(
-        F.col("conv_id").cast("long").alias("doc_id"), "geo_id"
-    ).distinct()
-    words = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.explode(
-                F.regexp_extract_all(
-                    F.regexp_replace(F.lower("text"), " the ", ", "),
-                    F.lit(_TOK_PATTERN),
-                    F.lit(0),
-                )
-            ).alias("tok"),
-        )
-        .filter(F.col("tok").rlike("^[a-z]"))
-    )
-    gaz_toks = variants.select(
-        "geo_id", F.explode(F.split("norm", " ")).alias("tok")
-    ).distinct()
-    ctx = (
-        docgeo.join(words, "doc_id")
-        .join(gaz_toks, ["geo_id", "tok"], "left_anti")
-        .groupBy("geo_id", "tok")
-        .agg(F.count("*").alias("c"))
-    )
-    w = Window.partitionBy("geo_id").orderBy(F.col("c").desc(), F.col("tok").asc())
-    return ctx.select("geo_id", "tok", "c", F.row_number().over(w).alias("rk")).filter(
-        F.col("rk") <= 5
     )

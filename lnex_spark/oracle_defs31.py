@@ -1,17 +1,5 @@
-"""Thirty-first oracle-registry module: event debouncing, interval
-union spans, MinHash calibration, and hierarchical share-of-parent.
+"""Oracle pairs that run ``operators.dedup``.
 
-  * debounce_events — gap-based event thinning: drop an event when the
-    SAME (user, type) fired less than 5 s earlier (one lag window per
-    key; fully-specified (ts, event_id) tie order).  The relational
-    form of sensor/click debouncing — the corpus-cleaning twin of
-    dropDuplicatesWithinWatermark, as a deterministic batch op.
-  * active_span_users — total active time per user after merging
-    overlapping 5-minute activity intervals: the classic
-    islands-and-gaps computation (running max(end) over earlier rows →
-    island flag → cumulative island id → per-island min/max), exact to
-    the microsecond via integer date_diff.  Complements
-    concurrency_sweep_events (max overlap) with the union-length dual.
   * minhash_calibration_docs — MinHash estimate vs true shingle
     Jaccard on adjacent-doc pairs: how well does the k=8 signature
     agreement track the exact overlap it approximates?  The
@@ -19,15 +7,11 @@ union spans, MinHash calibration, and hierarchical share-of-parent.
     scale — composes the md5-deterministic signature derivation
     (verified as dedup_minhash_sig) with the exact Jaccard
     (dedup_ngram_jaccard's construction) in one value-checked report.
-  * share_of_parent_revenue — revenue per nation with percent-of-
-    parent at both hierarchy levels (nation within region, region
-    within grand total): the drill-down report shape that needs two
-    window levels over one aggregate, no second scan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -35,107 +19,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- gap-based debouncing --------------------------------------------------
-_DEBOUNCE_SQL = """
-    WITH s AS (
-      SELECT event_id, user_id, event_type, ts,
-             lag(ts) OVER (PARTITION BY user_id, event_type
-                           ORDER BY ts, event_id) AS prev_ts
-      FROM events
-    )
-    SELECT event_id, user_id, event_type, ts FROM s
-    WHERE prev_ts IS NULL OR date_diff('microsecond', prev_ts, ts) >= 5000000
-"""
-
-
-@register("debounce_events", _DEBOUNCE_SQL)
-def debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keep an event only if the previous event of the same
-    (user, type) is at least 5 s older — lag-based thinning (an event
-    is judged against its immediate predecessor, kept or not; the
-    kept-anchor variant needs recursion and is deliberately not this
-    op).  One keyed window, microsecond-exact integer comparison."""
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    s = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", F.lag("ts").over(w).alias("prev_ts")
-    )
-    return s.filter(
-        F.col("prev_ts").isNull()
-        | (F.unix_micros(F.col("ts").cast("timestamp"))
-        - F.unix_micros(F.col("prev_ts").cast("timestamp")) >= 5_000_000)
-    ).select("event_id", "user_id", "event_type", "ts")
-
-
-# --- interval union length (islands and gaps) ------------------------------
-_SPAN_SQL = """
-    WITH iv AS (
-      SELECT user_id, ts AS s, ts + INTERVAL 5 MINUTE AS e
-      FROM events WHERE user_id < 50
-    ),
-    m AS (
-      SELECT user_id, s, e,
-             max(e) OVER (PARTITION BY user_id ORDER BY s, e
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS prev_max
-      FROM iv
-    ),
-    isl AS (
-      SELECT user_id, s, e,
-             sum(CASE WHEN prev_max IS NULL OR s > prev_max THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY s, e
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-      FROM m
-    ),
-    spans AS (
-      SELECT user_id, island, min(s) AS s0, max(e) AS e1
-      FROM isl GROUP BY user_id, island
-    )
-    SELECT user_id, count(*) AS n_spans,
-           sum(date_diff('microsecond', s0, e1)) AS active_us
-    FROM spans GROUP BY user_id
-"""
-
-
-@register("active_span_users", _SPAN_SQL)
-def active_span_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge each user's overlapping 5-minute activity intervals and
-    report span count + total covered time: running max(end) over
-    strictly-earlier rows marks island starts, a cumulative flag sum
-    numbers the islands, one agg per island then per user.  All
-    windows are keyed by user — no global ordering anywhere."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
-    iv = ev.select(
-        "user_id",
-        F.col("ts").alias("s"),
-        (F.col("ts") + F.expr("INTERVAL 5 MINUTES")).alias("e"),
-    )
-    w_prev = (
-        Window.partitionBy("user_id")
-        .orderBy("s", "e")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    m = iv.select("user_id", "s", "e", F.max("e").over(w_prev).alias("prev_max"))
-    w_run = (
-        Window.partitionBy("user_id")
-        .orderBy("s", "e")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    flag = F.when(
-        F.col("prev_max").isNull() | (F.col("s") > F.col("prev_max")), 1
-    ).otherwise(0)
-    isl = m.select("user_id", "s", "e", F.sum(flag).over(w_run).alias("island"))
-    spans = isl.groupBy("user_id", "island").agg(
-        F.min("s").alias("s0"), F.max("e").alias("e1")
-    )
-    return spans.groupBy("user_id").agg(
-        F.count("*").alias("n_spans"),
-        F.sum(
-            F.unix_micros(F.col("e1").cast("timestamp"))
-            - F.unix_micros(F.col("s0").cast("timestamp"))
-        ).alias("active_us"),
-    )
 
 
 # --- MinHash estimate vs exact Jaccard calibration -------------------------
@@ -168,7 +51,7 @@ _CALIB_SQL = r"""
       FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1 AND a.shingle = b.shingle
       GROUP BY 1
     )
-    SELECT g.doc_a, g.doc_b, g.n_agree,
+    SELECT g.doc_a, g.doc_b, CAST(g.n_agree AS BIGINT) AS n_agree,
            round(g.n_agree / 8.0, 6) AS est_jaccard,
            round(coalesce(i.n_common, 0) * 1.0
                  / (sa.n_sh + sb.n_sh - coalesce(i.n_common, 0)), 6)
@@ -238,56 +121,4 @@ def minhash_calibration_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(est, 6).alias("est_jaccard"),
         F.round(true_j, 6).alias("true_jaccard"),
         F.round(F.abs(est - true_j), 6).alias("abs_err"),
-    )
-
-
-# --- hierarchical percent-of-parent ----------------------------------------
-_SHARE_SQL = """
-    WITH rev AS (
-      SELECT r_name AS region, n_name AS nation,
-             sum(o_totalprice) AS revenue
-      FROM region
-      JOIN nation ON n_regionkey = r_regionkey
-      JOIN customer ON c_nationkey = n_nationkey
-      JOIN orders ON o_custkey = c_custkey
-      GROUP BY 1, 2
-    )
-    SELECT region, nation, round(revenue, 2) AS revenue,
-           round(revenue / sum(revenue) OVER (PARTITION BY region), 6)
-             AS share_of_region,
-           round(sum(revenue) OVER (PARTITION BY region)
-                 / sum(revenue) OVER (), 6) AS region_share_of_total
-    FROM rev
-"""
-
-
-@register("share_of_parent_revenue", _SHARE_SQL)
-def share_of_parent_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nation revenue with percent-of-parent at two hierarchy levels
-    from ONE aggregate: nation→region and region→grand-total shares
-    via stacked windows over the (region, nation)-sized result — no
-    second scan of the fact tables."""
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    rev = (
-        r.join(n, n.n_regionkey == r.r_regionkey)
-        .join(c, c.c_nationkey == n.n_nationkey)
-        .join(o, o.o_custkey == c.c_custkey)
-        .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
-        .agg(F.sum("o_totalprice").alias("revenue"))
-    )
-    w_region = Window.partitionBy("region")
-    w_all = Window.partitionBy()
-    return rev.select(
-        "region",
-        "nation",
-        F.round("revenue", 2).alias("revenue"),
-        F.round(F.col("revenue") / F.sum("revenue").over(w_region), 6).alias(
-            "share_of_region"
-        ),
-        F.round(
-            F.sum("revenue").over(w_region) / F.sum("revenue").over(w_all), 6
-        ).alias("region_share_of_total"),
     )

@@ -1,5 +1,5 @@
-"""Thirty-second oracle-registry module: rank fusion, per-class eval,
-activity streaks, rolling distinct reach, and table checksums.
+"""Oracle pairs that run ``operators.similarity``,
+``operators.textquality``.
 
   * ann_rrf_fusion — reciprocal-rank fusion (RRF, k=60) of the two
     verified ANN rankings (brute-force truth and the IVF index):
@@ -7,28 +7,13 @@ activity streaks, rolling distinct reach, and table checksums.
     normalization.  Composes two value-checked derivations; ties on
     the fused score break by vec_id, and ranking happens on the
     ROUNDED score so both engines order identically.
+
   * lang_confusion_docs — per-class precision/recall/F1 of the
     heuristic language ID against corpus labels: the per-class
     drill-down behind labeler_agreement_docs' single kappa (macro
     metrics need the class rows, not the trace).  Classes appearing
     only as truth ('zh') or only as prediction ('und') get explicit
     zero marginals via outer marginal joins.
-  * streaks_users — longest run of consecutive active days per user:
-    the date-anchor trick (day minus dense per-user day rank is
-    constant within a streak) — gaps-and-islands on the calendar,
-    all windows user-keyed.
-  * rolling_distinct_users — trailing-7-day distinct user reach per
-    day.  COUNT(DISTINCT) cannot ride a window frame, so the op joins
-    the (day, user) distinct grid to a day spine with a range
-    predicate (the spine is ~30 rows — broadcast) and aggregates:
-    the standard rolling-reach formulation.
-  * table_checksum_orders — order-insensitive table fingerprint:
-    per-row md5 over a canonical '|'-joined projection of the stable
-    columns, folded by SUM of a 32-bit prefix (+ row count).  The
-    replication/migration integrity check that complements
-    table_diff_orders when the two sides cannot be co-located; only
-    exactly-representable columns participate (no float formatting
-    in the hash path).
 """
 
 from __future__ import annotations
@@ -36,9 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs import _ANN_TOPK_SQL
-from lnex_spark.oracle_defs2 import _ANN_IVF_SQL
-from lnex_spark.oracle_defs29 import _KAPPA_SQL  # noqa: F401  (doc cross-ref)
+from lnex_spark.oracle_defs29 import _KAPPA_SQL
+from lnex_spark.oracle_defs_library import _ANN_IVF_SQL, _ANN_TOPK_SQL
 from lnex_spark.oracles import register
 
 
@@ -164,102 +148,4 @@ def lang_confusion_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0.0),
             6,
         ).alias("f1"),
-    )
-
-
-# --- longest consecutive-day activity streak -------------------------------
-_STREAK_SQL = """
-    WITH days AS (
-      SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
-    ),
-    anch AS (
-      SELECT user_id, d,
-             d - CAST(row_number() OVER (
-               PARTITION BY user_id ORDER BY d) AS INT) AS anchor
-      FROM days
-    ),
-    runs AS (
-      SELECT user_id, anchor, count(*) AS len FROM anch GROUP BY 1, 2
-    )
-    SELECT user_id, max(len) AS longest_streak, sum(len) AS n_active_days
-    FROM runs GROUP BY user_id
-"""
-
-
-@register("streaks_users", _STREAK_SQL)
-def streaks_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    days = (
-        _t(spark, sf_dir, "events")
-        .select("user_id", F.col("ts").cast("date").alias("d"))
-        .distinct()
-    )
-    w = Window.partitionBy("user_id").orderBy("d")
-    anch = days.select(
-        "user_id",
-        F.date_sub(F.col("d"), F.row_number().over(w)).alias("anchor"),
-    )
-    runs = anch.groupBy("user_id", "anchor").agg(F.count("*").alias("len"))
-    return runs.groupBy("user_id").agg(
-        F.max("len").alias("longest_streak"), F.sum("len").alias("n_active_days")
-    )
-
-
-# --- trailing-7-day distinct user reach ------------------------------------
-_ROLLING_SQL = """
-    WITH du AS (
-      SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events
-    ),
-    spine AS (SELECT DISTINCT d FROM du)
-    SELECT g.d, count(DISTINCT du.user_id) AS users_7d
-    FROM spine g JOIN du ON du.d BETWEEN g.d - 6 AND g.d
-    GROUP BY g.d
-"""
-
-
-@register("rolling_distinct_users", _ROLLING_SQL)
-def rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    du = (
-        _t(spark, sf_dir, "events")
-        .select(F.col("ts").cast("date").alias("d"), "user_id")
-        .distinct()
-    )
-    spine = du.select("d").distinct().withColumnRenamed("d", "g")
-    return (
-        F.broadcast(spine)
-        .join(
-            du,
-            (F.col("d") >= F.date_sub(F.col("g"), 6)) & (F.col("d") <= F.col("g")),
-        )
-        .groupBy(F.col("g").alias("d"))
-        .agg(F.count_distinct("user_id").alias("users_7d"))
-    )
-
-
-# --- order-insensitive table checksum --------------------------------------
-_CHECKSUM_SQL = """
-    WITH h AS (
-      SELECT CAST(('0x' || substr(md5(
-               CAST(o_orderkey AS VARCHAR) || '|' ||
-               CAST(o_custkey AS VARCHAR) || '|' ||
-               o_orderstatus || '|' ||
-               CAST(o_orderdate AS VARCHAR)), 1, 8)) AS BIGINT) AS hv
-      FROM orders
-    )
-    SELECT count(*) AS n_rows, sum(hv) AS checksum FROM h
-"""
-
-
-@register("table_checksum_orders", _CHECKSUM_SQL)
-def table_checksum_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    row_str = F.concat_ws(
-        "|",
-        F.col("o_orderkey").cast("string"),
-        F.col("o_custkey").cast("string"),
-        F.col("o_orderstatus"),
-        F.col("o_orderdate").cast("string"),
-    )
-    hv = F.conv(F.substring(F.md5(row_str), 1, 8), 16, 10).cast("long")
-    return o.select(hv.alias("hv")).agg(
-        F.count("*").alias("n_rows"), F.sum("hv").alias("checksum")
     )

@@ -1,37 +1,16 @@
-"""Thirty-third oracle-registry module: document chunking, relational
-message passing, a Markov backtest, and optimizer-style cardinality
-estimation checked against truth.
+"""Oracle pairs that run ``operators.graph``.
 
-  * chunk_docs — sliding-window token chunking (16-token chunks,
-    stride 8): the RAG / context-window preparation step.  Chunk
-    starts come from an integer sequence (no per-row Python), chunk
-    text from slice+array_join over the materialized token array —
-    all codegen'd builtins; Spark's inclusive sequence(0, n-1, 8)
-    and DuckDB's exclusive range(0, n, 8) generate identical start
-    sets for n ≥ 1.
   * gnn_aggregate_events — two rounds of mean-neighbor aggregation
     (degree as the initial feature) over the co-occurrence graph:
     the GraphSAGE/GCN message-passing primitive as a relational op —
     per layer one edge⋈feature join + one mean agg, the exact shuffle
     shape a distributed GNN feature pipeline runs.  Fully unrolled
     on the DuckDB side.
-  * markov_backtest_events — train a per-state next-event-type
-    predictor (argmax transition) on the first half-month, evaluate
-    top-1 accuracy on transitions wholly inside the second half:
-    the temporal-split backtest loop, per from-state.  Transition
-    pairs via one user-keyed lag window per split; the argmax is a
-    ranked pick under a fully-specified tie order.
-  * join_card_estimate_events — the textbook join-cardinality
-    estimate |A|·|B| / max(ndv_a, ndv_b) for the click⋈error
-    user_id join, against the TRUE size Σ c_a·c_b computed from the
-    key histograms without materializing the join.  The sanity loop
-    behind broadcast/shuffle planning decisions (and behind trusting
-    CBO stats at 100 TB).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -39,45 +18,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- sliding-window chunking -----------------------------------------------
-_CHUNK_SQL = r"""
-    WITH d AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-      FROM documents WHERE len(trim(text)) > 0
-    ),
-    s AS (
-      SELECT doc_id, t, unnest(range(0, greatest(len(t), 1), 8)) AS st FROM d
-    )
-    SELECT doc_id, st // 8 AS chunk_id,
-           array_to_string(t[CAST(st + 1 AS INT):CAST(st + 16 AS INT)], ' ')
-             AS chunk_text,
-           len(t[CAST(st + 1 AS INT):CAST(st + 16 AS INT)]) AS n_tokens
-    FROM s
-"""
-
-
-@register("chunk_docs", _CHUNK_SQL)
-def chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select(
-            "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t")
-        )
-    )
-    starts = F.sequence(
-        F.lit(0), F.greatest(F.size("t") - 1, F.lit(0)), F.lit(8)
-    )
-    s = d.select("doc_id", "t", F.explode(starts).alias("st"))
-    chunk = F.slice(F.col("t"), F.col("st") + 1, 16)
-    return s.select(
-        "doc_id",
-        F.expr("st DIV 8").alias("chunk_id"),
-        F.array_join(chunk, " ").alias("chunk_text"),
-        F.size(chunk).cast("long").alias("n_tokens"),
-    )
 
 
 # --- two message-passing rounds over the co-occurrence graph ---------------
@@ -147,139 +87,3 @@ def gnn_aggregate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(layers[1].select("node", F.round("h", 6).alias("h2")), "node")
     )
     return out
-
-
-# --- Markov next-event backtest --------------------------------------------
-_BACKTEST_SQL = """
-    WITH seq AS (
-      SELECT user_id, event_type, ts, event_id,
-             (ts < TIMESTAMP '2024-01-16') AS in_a,
-             lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS prev_type,
-             lag(ts < TIMESTAMP '2024-01-16') OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS prev_in_a
-      FROM events
-    ),
-    train AS (
-      SELECT prev_type, event_type, count(*) AS c FROM seq
-      WHERE prev_type IS NOT NULL AND in_a AND prev_in_a
-      GROUP BY 1, 2
-    ),
-    model AS (
-      SELECT prev_type, event_type AS pred FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY prev_type ORDER BY c DESC, event_type ASC) AS rk
-        FROM train) WHERE rk = 1
-    ),
-    eval AS (
-      SELECT s.prev_type, s.event_type, m.pred FROM seq s
-      JOIN model m ON m.prev_type = s.prev_type
-      WHERE s.prev_type IS NOT NULL AND NOT s.in_a AND NOT s.prev_in_a
-    )
-    SELECT prev_type AS from_state, count(*) AS n_eval,
-           sum(CASE WHEN pred = event_type THEN 1 ELSE 0 END) AS n_correct,
-           round(sum(CASE WHEN pred = event_type THEN 1 ELSE 0 END) * 1.0
-                 / count(*), 6) AS accuracy
-    FROM eval GROUP BY prev_type
-"""
-
-
-@register("markov_backtest_events", _BACKTEST_SQL)
-def markov_backtest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    split_ts = F.lit("2024-01-16").cast("timestamp")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        (F.col("ts") < split_ts).alias("in_a"),
-        F.lag("event_type").over(w).alias("prev_type"),
-        F.lag(F.col("ts") < split_ts).over(w).alias("prev_in_a"),
-    )
-    train = (
-        seq.filter(F.col("prev_type").isNotNull() & F.col("in_a") & F.col("prev_in_a"))
-        .groupBy("prev_type", "event_type")
-        .agg(F.count("*").alias("c"))
-    )
-    w_rk = Window.partitionBy("prev_type").orderBy(
-        F.col("c").desc(), F.col("event_type").asc()
-    )
-    model = (
-        train.select(
-            "prev_type",
-            F.col("event_type").alias("pred"),
-            F.row_number().over(w_rk).alias("rk"),
-        )
-        .filter(F.col("rk") == 1)
-        .drop("rk")
-    )
-    ev = (
-        seq.filter(
-            F.col("prev_type").isNotNull() & ~F.col("in_a") & ~F.col("prev_in_a")
-        )
-        .join(F.broadcast(model), "prev_type")
-    )
-    hit = F.when(F.col("pred") == F.col("event_type"), 1).otherwise(0)
-    return ev.groupBy(F.col("prev_type").alias("from_state")).agg(
-        F.count("*").alias("n_eval"),
-        F.sum(hit).alias("n_correct"),
-        F.round(F.sum(hit) * 1.0 / F.count("*"), 6).alias("accuracy"),
-    )
-
-
-# --- join cardinality: estimate vs truth -----------------------------------
-_CARD_SQL = """
-    WITH a AS (SELECT user_id FROM events WHERE event_type = 'click'),
-    b AS (SELECT user_id FROM events WHERE event_type = 'error'),
-    ca AS (SELECT user_id, count(*) AS c FROM a GROUP BY 1),
-    cb AS (SELECT user_id, count(*) AS c FROM b GROUP BY 1),
-    stats AS (
-      SELECT (SELECT count(*) FROM a) AS n_a,
-             (SELECT count(*) FROM b) AS n_b,
-             (SELECT count(*) FROM ca) AS ndv_a,
-             (SELECT count(*) FROM cb) AS ndv_b,
-             (SELECT coalesce(sum(ca.c * cb.c), 0)
-              FROM ca JOIN cb USING (user_id)) AS actual
-    )
-    SELECT n_a, n_b, ndv_a, ndv_b, actual,
-           round(n_a * 1.0 * n_b / greatest(ndv_a, ndv_b), 6) AS estimate,
-           round(n_a * 1.0 * n_b / greatest(ndv_a, ndv_b) / actual, 6)
-             AS est_over_actual
-    FROM stats
-"""
-
-
-@register("join_card_estimate_events", _CARD_SQL)
-def join_card_estimate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    a = ev.filter(F.col("event_type") == "click").select("user_id")
-    b = ev.filter(F.col("event_type") == "error").select("user_id")
-    ca = a.groupBy("user_id").agg(F.count("*").alias("c"))
-    cb = b.groupBy("user_id").agg(F.count("*").alias("c"))
-    actual = (
-        ca.alias("ca")
-        .join(cb.alias("cb"), "user_id")
-        .agg(
-            F.coalesce(
-                F.sum(F.col("ca.c") * F.col("cb.c")), F.lit(0).cast("long")
-            ).alias("actual")
-        )
-    )
-    stats = (
-        a.agg(F.count("*").alias("n_a"))
-        .crossJoin(b.agg(F.count("*").alias("n_b")))
-        .crossJoin(ca.agg(F.count("*").alias("ndv_a")))
-        .crossJoin(cb.agg(F.count("*").alias("ndv_b")))
-        .crossJoin(actual)
-    )
-    est = (
-        F.col("n_a") * 1.0 * F.col("n_b") / F.greatest("ndv_a", "ndv_b")
-    )
-    return stats.select(
-        "n_a",
-        "n_b",
-        "ndv_a",
-        "ndv_b",
-        "actual",
-        F.round(est, 6).alias("estimate"),
-        F.round(est / F.col("actual"), 6).alias("est_over_actual"),
-    )

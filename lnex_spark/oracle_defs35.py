@@ -1,26 +1,9 @@
-"""Thirty-fifth oracle-registry module: time-series diagnostics,
-community quality, and lexical diversity.
+"""Oracle pairs that run ``operators.graph``.
 
-  * autocorr_events — lag-1 and lag-7 autocorrelation of the daily
-    mean value series: the stationarity/seasonality diagnostic read
-    before trusting any drift statistic.  Lag pairs via a date-
-    arithmetic self-join on the (day-count-sized) daily table;
-    Pearson r written in the raw-moment form, identically on both
-    engines.
-  * seasonal_residuals_events — daily totals against their same-
-    weekday baseline, z-scored within weekday.  Weekday comes from
-    datediff-mod-7 against a fixed anchor (pure integer arithmetic —
-    sidesteps the Spark↔DuckDB dow-numbering divergence documented
-    at date_funcs_orders).  The seasonal-naive residual screen that
-    catches "this Monday is unlike other Mondays" where a global
-    z-score (zscore_outliers_events) cannot.
   * modularity_events — Newman modularity Q of the verified LPA
     communities over the co-occurrence graph: community detection
     plus its quality measurement in one value-checked op (compose
     the unrolled LPA fixpoint, then Q = Σ_c e_c/m − (deg_c/2m)²).
-  * lexical_diversity_docs — type-token ratio and hapax share per
-    language: the lexical-diversity profile (complements entropy and
-    Zipf slope in the corpus-statistics suite).
 """
 
 from __future__ import annotations
@@ -34,105 +17,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- lag-k autocorrelation of the daily series -----------------------------
-_AUTOCORR_SQL = """
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS d, avg(value) AS x FROM events GROUP BY 1
-    ),
-    lags(lag_k) AS (VALUES (1), (7)),
-    pairs AS (
-      SELECT l.lag_k, a.x AS x, b.x AS y
-      FROM lags l
-      JOIN daily a ON TRUE
-      JOIN daily b ON b.d = a.d - l.lag_k
-    )
-    SELECT lag_k, count(*) AS n_pairs,
-           round((count(*) * sum(x * y) - sum(x) * sum(y))
-                 / sqrt((count(*) * sum(x * x) - sum(x) * sum(x))
-                        * (count(*) * sum(y * y) - sum(y) * sum(y))), 6) AS r
-    FROM pairs GROUP BY lag_k
-"""
-
-
-@register("autocorr_events", _AUTOCORR_SQL)
-def autocorr_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
-        _t(spark, sf_dir, "events")
-        .groupBy(F.col("ts").cast("date").alias("d"))
-        .agg(F.avg("value").alias("x"))
-    )
-    lags = spark.createDataFrame([(1,), (7,)], "lag_k int")
-    a = daily.alias("a")
-    b = daily.select(F.col("d").alias("bd"), F.col("x").alias("y"))
-    pairs = (
-        F.broadcast(lags)
-        .crossJoin(a)
-        .join(b, F.col("bd") == F.expr("date_sub(d, lag_k)"))
-        .select("lag_k", "x", "y")
-    )
-    n = F.count("*")
-    num = n * F.sum(F.col("x") * F.col("y")) - F.sum("x") * F.sum("y")
-    den = F.sqrt(
-        (n * F.sum(F.col("x") * F.col("x")) - F.sum("x") * F.sum("x"))
-        * (n * F.sum(F.col("y") * F.col("y")) - F.sum("y") * F.sum("y"))
-    )
-    return pairs.groupBy("lag_k").agg(
-        n.alias("n_pairs"), F.round(num / den, 6).alias("r")
-    )
-
-
-# --- seasonal (same-weekday) residuals -------------------------------------
-_SEASONAL_SQL = """
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS d,
-             date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7 AS wd,
-             sum(value) AS total
-      FROM events GROUP BY 1, 2
-    ),
-    base AS (
-      SELECT wd, avg(total) AS wd_mean, stddev_pop(total) AS wd_std,
-             count(*) AS wd_n
-      FROM daily GROUP BY wd
-    )
-    SELECT d, daily.wd, round(total, 6) AS total,
-           round(wd_mean, 6) AS wd_mean,
-           round(total - wd_mean, 6) AS resid,
-           round(CASE WHEN wd_std > 0 THEN (total - wd_mean) / wd_std
-                      ELSE 0 END, 6) AS z
-    FROM daily JOIN base ON daily.wd = base.wd
-"""
-
-
-@register("seasonal_residuals_events", _SEASONAL_SQL)
-def seasonal_residuals_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    anchor = F.lit("2024-01-01").cast("date")
-    daily = (
-        _t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("ts").cast("date").alias("d"),
-            (F.datediff(F.col("ts").cast("date"), anchor) % 7).alias("wd"),
-        )
-        .agg(F.sum("value").alias("total"))
-    )
-    base = daily.groupBy("wd").agg(
-        F.avg("total").alias("wd_mean"),
-        F.stddev_pop("total").alias("wd_std"),
-        F.count("*").alias("wd_n"),
-    )
-    j = daily.join(F.broadcast(base), "wd")
-    z = F.when(
-        F.col("wd_std") > 0, (F.col("total") - F.col("wd_mean")) / F.col("wd_std")
-    ).otherwise(0.0)
-    return j.select(
-        "d",
-        "wd",
-        F.round("total", 6).alias("total"),
-        F.round("wd_mean", 6).alias("wd_mean"),
-        F.round(F.col("total") - F.col("wd_mean"), 6).alias("resid"),
-        F.round(z, 6).alias("z"),
-    )
 
 
 # --- modularity of the LPA communities -------------------------------------
@@ -210,43 +94,4 @@ def modularity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp.agg(
         F.count("*").alias("n_communities"),
         F.round(F.sum(term), 6).alias("modularity"),
-    )
-
-
-# --- lexical diversity per language ----------------------------------------
-_LEX_SQL = r"""
-    WITH toks AS (
-      SELECT lang, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-      FROM documents
-    ),
-    tf AS (
-      SELECT lang, tok, count(*) AS c FROM toks WHERE len(tok) > 0 GROUP BY 1, 2
-    )
-    SELECT lang,
-           CAST(sum(c) AS BIGINT) AS n_tokens,
-           count(*) AS n_types,
-           round(count(*) * 1.0 / sum(c), 6) AS ttr,
-           round(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 1.0 / count(*), 6)
-             AS hapax_share
-    FROM tf GROUP BY lang
-"""
-
-
-@register("lexical_diversity_docs", _LEX_SQL)
-def lexical_diversity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            "lang", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")
-        )
-        .filter(F.length("tok") > 0)
-    )
-    tf = toks.groupBy("lang", "tok").agg(F.count("*").alias("c"))
-    return tf.groupBy("lang").agg(
-        F.sum("c").alias("n_tokens"),
-        F.count("*").alias("n_types"),
-        F.round(F.count("*") * 1.0 / F.sum("c"), 6).alias("ttr"),
-        F.round(
-            F.sum(F.when(F.col("c") == 1, 1).otherwise(0)) * 1.0 / F.count("*"), 6
-        ).alias("hapax_share"),
     )

@@ -1,5 +1,4 @@
-"""Thirty-sixth oracle-registry module: sorted-neighborhood blocking,
-bigram language-model scoring, and RFM segmentation.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * sorted_neighborhood_docs — the OTHER classic ER blocking method
     (Hernández & Stolfo's sorted-neighborhood): sort on a content
@@ -12,11 +11,7 @@ bigram language-model scoring, and RFM segmentation.
     boundary overlap (the layout machinery already evidenced by the
     range-clustering test); here the rank window runs over the
     corpus-sized sorted table directly.
-  * bigram_lm_score_docs — per-document cross-entropy under the
-    corpus bigram LM with add-one smoothing: the n-gram upgrade of
-    lm_doc_score (unigram), the quality signal behind perplexity
-    filtering of training corpora.  Two count tables + one join per
-    doc bigram; smoothing denominators are exact integers.
+
   * rfm_users — recency/frequency/monetary quintile segmentation:
     the standard user-value report.  ntile(5) under fully-specified
     (metric, user_id) orderings so bucket edges are deterministic on
@@ -26,7 +21,7 @@ bigram language-model scoring, and RFM segmentation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -121,86 +116,6 @@ def sorted_neighborhood_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "pair_completeness"
             ),
         )
-    )
-
-
-# --- bigram LM cross-entropy per document ----------------------------------
-_BIGRAM_LM_SQL = r"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-      FROM documents WHERE len(trim(text)) > 0
-    ),
-    big AS (
-      SELECT doc_id, t[CAST(i AS INT)] AS w1, t[CAST(i + 1 AS INT)] AS w2
-      FROM toks, unnest(range(1, len(t))) AS r(i)
-    ),
-    c2 AS (SELECT w1, w2, count(*) AS c FROM big GROUP BY 1, 2),
-    c1 AS (SELECT w1, sum(c) AS c FROM c2 GROUP BY 1),
-    v AS (
-      SELECT count(DISTINCT w) AS v FROM (
-        SELECT w1 AS w FROM c2 UNION SELECT w2 FROM c2)
-    ),
-    scored AS (
-      SELECT b.doc_id,
-             ln((c2.c + 1.0) / (c1.c + v.v)) AS lp
-      FROM big b
-      JOIN c2 ON c2.w1 = b.w1 AND c2.w2 = b.w2
-      JOIN c1 ON c1.w1 = b.w1
-      CROSS JOIN v
-      WHERE b.doc_id < 200
-    )
-    SELECT doc_id, count(*) AS n_bigrams,
-           round(-avg(lp), 6) AS cross_entropy
-    FROM scored GROUP BY doc_id
-"""
-
-
-@register("bigram_lm_score_docs", _BIGRAM_LM_SQL)
-def bigram_lm_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-entropy of each doc (doc_id < 200) under the corpus
-    bigram LM with add-one smoothing: P(w2|w1) = (C12+1)/(C1+V).
-    The bigram/unigram count tables are vocabulary²-bounded and
-    broadcastable; the per-doc join is the only corpus-sized step."""
-    pos = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select(
-            "doc_id",
-            F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-                "pos", "tok"
-            ),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    big = (
-        pos.select(
-            "doc_id",
-            F.col("tok").alias("w1"),
-            F.lead("tok").over(w).alias("w2"),
-        )
-        .filter(F.col("w2").isNotNull())
-    )
-    c2 = big.groupBy("w1", "w2").agg(F.count("*").alias("c2"))
-    c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
-    v = (
-        c2.select(F.col("w1").alias("w"))
-        .union(c2.select("w2"))
-        .distinct()
-        .agg(F.count("*").alias("v"))
-    )
-    scored = (
-        big.filter(F.col("doc_id") < 200)
-        .join(F.broadcast(c2), ["w1", "w2"])
-        .join(F.broadcast(c1), "w1")
-        .crossJoin(F.broadcast(v))
-        .select(
-            "doc_id",
-            F.log((F.col("c2") + 1.0) / (F.col("c1") + F.col("v"))).alias("lp"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_bigrams"),
-        F.round(-F.avg("lp"), 6).alias("cross_entropy"),
     )
 
 

@@ -1,16 +1,5 @@
-"""Thirty-eighth oracle-registry module: keyset pagination, period
-deltas, and sequence-gap integrity.
+"""Oracle pairs that run ``sources.synth``.
 
-  * keyset_pagination_orders — keyset (seek-method) pagination: page 6
-    of orders under a total (o_orderdate, o_orderkey) order, fetched
-    with a tuple-comparison predicate from the previous page's last
-    key.  The DuckDB twin uses LIMIT/OFFSET — the value-hash match IS
-    the keyset ≡ offset proof, on the order every serving layer cares
-    about (keyset stays O(page) under an index where OFFSET scans and
-    discards).
-  * wow_change_events — week-over-week percent change of weekly
-    totals: the reporting delta shape (one lag over the
-    week-count-sized aggregate).
   * gap_detection_synth — missing-turn integrity check over the
     custom Python Data Source with a deterministic loss rule injected
     (drop turn_idx ≡ 3 mod 7 in even conversations): per damaged
@@ -22,96 +11,10 @@ deltas, and sequence-gap integrity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- keyset pagination ≡ offset pagination ---------------------------------
-_KEYSET_SQL = """
-    SELECT o_orderkey, o_custkey, CAST(o_orderdate AS VARCHAR) AS od
-    FROM orders
-    ORDER BY o_orderdate, o_orderkey
-    LIMIT 20 OFFSET 100
-"""
-
-
-@register("keyset_pagination_orders", _KEYSET_SQL)
-def keyset_pagination_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fetch page 6 (rows 101-120) the keyset way: take the page-5
-    boundary key (row 100 under the total order), then filter
-    (o_orderdate, o_orderkey) strictly beyond it and take the next
-    20.  The boundary comes from a rank pick here (a real pager
-    carries it from the previous response); the page fetch itself
-    never ranks the table."""
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    w = Window.orderBy("o_orderdate", "o_orderkey")
-    boundary = (
-        o.select(
-            "o_orderdate", "o_orderkey", F.row_number().over(w).alias("rn")
-        )
-        .filter(F.col("rn") == 100)
-        .select(
-            F.col("o_orderdate").alias("bd"), F.col("o_orderkey").alias("bk")
-        )
-    )
-    page = (
-        o.crossJoin(F.broadcast(boundary))
-        .filter(
-            (F.col("o_orderdate") > F.col("bd"))
-            | (
-                (F.col("o_orderdate") == F.col("bd"))
-                & (F.col("o_orderkey") > F.col("bk"))
-            )
-        )
-        .orderBy("o_orderdate", "o_orderkey")
-        .limit(20)
-    )
-    return page.select(
-        "o_orderkey", "o_custkey", F.col("o_orderdate").cast("string").alias("od")
-    )
-
-
-# --- week-over-week percent change -----------------------------------------
-_WOW_SQL = """
-    WITH weekly AS (
-      SELECT date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS wk,
-             sum(value) AS total, count(*) AS n
-      FROM events GROUP BY 1
-    )
-    SELECT wk, n, round(total, 6) AS total,
-           round((total - lag(total) OVER (ORDER BY wk))
-                 / lag(total) OVER (ORDER BY wk), 6) AS wow_change
-    FROM weekly
-"""
-
-
-@register("wow_change_events", _WOW_SQL)
-def wow_change_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    weekly = (
-        _t(spark, sf_dir, "events")
-        .groupBy(
-            F.expr(
-                "CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01') DIV 7 AS BIGINT)"
-            ).alias("wk")
-        )
-        .agg(F.sum("value").alias("total"), F.count("*").alias("n"))
-    )
-    w = Window.orderBy("wk")
-    prev = F.lag("total").over(w)
-    return weekly.select(
-        "wk",
-        "n",
-        F.round("total", 6).alias("total"),
-        F.round((F.col("total") - prev) / prev, 6).alias("wow_change"),
-    )
 
 
 # --- sequence-gap integrity over the synth source --------------------------

@@ -1,5 +1,4 @@
-"""Thirty-ninth oracle-registry module: containment dedup and a
-linker ablation study.
+"""Oracle pairs that run ``operators.dedup``.
 
   * containment_pairs_docs — shingle CONTAINMENT |A∩B|/|A| between
     injected half-length fragments and the corpus: the asymmetric
@@ -11,15 +10,6 @@ linker ablation study.
     source's and the 1.0 containments are provable by construction;
     the candidate join keys on shared shingles with the fragment set
     as the bounded probe side.
-  * l2_ablation_flips — ablation study of the L2 candidate scorer on
-    the verified literal-gazetteer pipeline: spans whose winning geo
-    entity CHANGES when the category-priority term is removed from
-    the ranking (match_type desc, cat_priority, geo_id vs match_type
-    desc, geo_id).  The measurement that justifies each scoring
-    feature's existence — here the 'customer' surface form is
-    engineered to flip (its two candidates tie on match_type and
-    differ on cat_priority), so the op must return exactly those
-    spans, value-checked end to end.
 """
 
 from __future__ import annotations
@@ -27,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs2 import _SQL_TOKENIZE
 from lnex_spark.oracles import register
 
 
@@ -100,70 +89,3 @@ def containment_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select(
         "frag_id", "base_id", F.round(cont, 6).alias("containment")
     ).filter(F.col("containment") >= 0.9)
-
-
-# --- L2 scoring ablation: which spans flip without cat_priority ------------
-_ABLATION_SQL = f"""
-    WITH {_SQL_TOKENIZE},
-    linked AS (
-      SELECT f.doc_id, f.s, f.e, f.norm, g.geo_id, g.match_type, g.cat_priority
-      FROM final f JOIN gaz g USING (norm)
-    ),
-    full_w AS (
-      SELECT doc_id, s, e, norm, geo_id FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY doc_id, s, e
-          ORDER BY match_type DESC, cat_priority ASC, geo_id ASC) AS rk
-        FROM linked) WHERE rk = 1
-    ),
-    abl_w AS (
-      SELECT doc_id, s, e, geo_id FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY doc_id, s, e
-          ORDER BY match_type DESC, geo_id ASC) AS rk
-        FROM linked) WHERE rk = 1
-    )
-    SELECT f.norm, f.geo_id AS geo_full, a.geo_id AS geo_ablated,
-           count(*) AS n_mentions
-    FROM full_w f JOIN abl_w a
-      ON f.doc_id = a.doc_id AND f.s = a.s AND f.e = a.e
-    WHERE f.geo_id <> a.geo_id
-    GROUP BY f.norm, f.geo_id, a.geo_id
-"""
-
-
-@register("l2_ablation_flips", _ABLATION_SQL)
-def l2_ablation_flips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spans whose L2 winner flips when cat_priority is dropped from
-    the ranking.  The Spark side runs the REAL matcher + linker with
-    both sort keys (min_by over a reduced key struct for the
-    ablation); 'customer' mentions must flip (candidates tie on
-    match_type, differ on cat_priority with the higher-priority one
-    having the larger geo_id), 'spark'/'vector' must not."""
-    from lnex_spark.oracle_defs2 import _oracle_mentions, _oracle_variants
-    from lnex_spark.operators.link import link_mentions, score_candidates
-
-    variants = _oracle_variants(spark)
-    linked = link_mentions(_oracle_mentions(spark, sf_dir), variants)
-    full = score_candidates(linked)
-    cols = linked.columns
-    abl_key = F.struct(
-        (-F.col("match_type")).alias("mt"), F.col("geo_id").alias("g")
-    )
-    abl = (
-        linked.groupBy("conv_id", "turn_idx", "start", "end")
-        .agg(F.min_by(F.struct(*[F.col(c) for c in cols]), abl_key).alias("_b"))
-        .select(*[F.col(f"_b.{c}").alias(c) for c in cols])
-    )
-    f_side = full.select(
-        "conv_id", "start", "end", "norm", F.col("geo_id").alias("geo_full")
-    )
-    a_side = abl.select(
-        "conv_id", "start", "end", F.col("geo_id").alias("geo_ablated")
-    )
-    return (
-        f_side.join(a_side, ["conv_id", "start", "end"])
-        .filter(F.col("geo_full") != F.col("geo_ablated"))
-        .groupBy("norm", "geo_full", "geo_ablated")
-        .agg(F.count("*").alias("n_mentions"))
-    )

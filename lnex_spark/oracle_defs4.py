@@ -1,29 +1,14 @@
-"""Fourth oracle-registry module (round-1 continuation, session 2).
-
-Widens the SQL-verified coverage in three directions:
-
-  * corpus statistics for the training-data story — TF-IDF top terms,
-    Okapi BM25 scoring, and PMI co-occurrence (operators/textstats.py:
-    pure built-in tokenize + hash aggs + broadcast joins, no UDFs);
-  * relational surface not yet exercised — full window-function suite
-    (lag/lead/ntile/percent_rank/cume_dist), INTERSECT ALL/EXCEPT ALL,
-    ordered string_agg, statistical aggregates (corr/covar/stddev/var),
-    histogram bucketing, deterministic mode + interpolated median,
-    date-part functions, bitwise aggregates, levenshtein fuzzy
-    matching, and a Pareto-frontier theta anti-join;
-  * more reference query shapes — TPC-H Q3 (3-way join + group +
-    top-k) and Q18 (HAVING-filtered semi-aggregation join), and a
-    triangle count over a co-occurrence graph (3-way self-join).
-
-Conventions follow oracle_defs.py: identical column aliases both
-sides, floats rounded identically before hashing, rankings ordered on
-the rounded value with an id tiebreak, absolute-id scopes so row
-volume is bounded at every sf.
+"""Oracle pairs for the corpus statistics in ``operators.textstats``:
+TF-IDF top terms, Okapi BM25 scoring and PMI co-occurrence pairs —
+built-in tokenize, hash aggregates and broadcast joins, no UDFs.
+Identical column aliases on both sides, floats rounded identically
+before hashing, rankings ordered on the rounded value with an id
+tiebreak.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -129,392 +114,3 @@ def pmi_copairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
     return op(docs, min_pair_count=40)
-
-
-# --- window-function suite: lag/lead/ntile/percent_rank/cume_dist -------
-@register(
-    "window_suite_orders",
-    """
-    SELECT o_custkey, o_orderkey,
-           round(lag(o_totalprice) OVER w, 2) AS prev_price,
-           round(lead(o_totalprice) OVER w, 2) AS next_price,
-           ntile(4) OVER w AS tile,
-           round(percent_rank() OVER w, 6) AS prank,
-           round(cume_dist() OVER w, 6) AS cdist
-    FROM orders WHERE o_custkey < 200
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    """,
-)
-def window_suite_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(F.lag("o_totalprice").over(w), 2).alias("prev_price"),
-        F.round(F.lead("o_totalprice").over(w), 2).alias("next_price"),
-        F.ntile(4).over(w).alias("tile"),
-        F.round(F.percent_rank().over(w), 6).alias("prank"),
-        F.round(F.cume_dist().over(w), 6).alias("cdist"),
-    )
-
-
-# --- multiset ops: INTERSECT ALL / EXCEPT ALL ---------------------------
-@register(
-    "set_all_priorities",
-    """
-    WITH hi AS (SELECT o_orderpriority FROM orders WHERE o_totalprice > 150000),
-    fin AS (SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'F')
-    SELECT 'both' AS tag, o_orderpriority FROM (
-      SELECT o_orderpriority FROM hi INTERSECT ALL SELECT o_orderpriority FROM fin)
-    UNION ALL
-    SELECT 'only_hi' AS tag, o_orderpriority FROM (
-      SELECT o_orderpriority FROM hi EXCEPT ALL SELECT o_orderpriority FROM fin)
-    """,
-)
-def set_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    hi = o.filter(F.col("o_totalprice") > 150000).select("o_orderpriority")
-    fin = o.filter(F.col("o_orderstatus") == "F").select("o_orderpriority")
-    both = hi.intersectAll(fin).select(F.lit("both").alias("tag"), "o_orderpriority")
-    only = hi.exceptAll(fin).select(F.lit("only_hi").alias("tag"), "o_orderpriority")
-    return both.unionByName(only)
-
-
-# --- ordered string aggregation -----------------------------------------
-@register(
-    "string_agg_orders",
-    """
-    SELECT o_custkey,
-           string_agg(o_orderpriority, ',' ORDER BY o_orderdate, o_orderkey) AS prio_seq
-    FROM orders WHERE o_custkey < 150 GROUP BY o_custkey
-    """,
-)
-def string_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 150)
-    # collect (date, key, prio) structs, sort by the struct prefix, project
-    # the payload — the ordered-aggregation idiom without a window
-    return o.groupBy("o_custkey").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("o_orderdate", "o_orderkey", "o_orderpriority"))
-                ),
-                lambda s: s["o_orderpriority"],
-            ),
-            ",",
-        ).alias("prio_seq")
-    )
-
-
-# --- statistical aggregates ---------------------------------------------
-@register(
-    "stats_corr_lineitem",
-    """
-    SELECT l_returnflag,
-           round(corr(l_quantity, l_extendedprice), 6) AS price_qty_corr,
-           round(stddev_samp(l_discount), 6) AS disc_sd,
-           round(var_pop(l_tax), 6) AS tax_var,
-           round(covar_samp(l_quantity, l_discount), 6) AS qty_disc_cov
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def stats_corr_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("price_qty_corr"),
-        F.round(F.stddev_samp("l_discount"), 6).alias("disc_sd"),
-        F.round(F.var_pop("l_tax"), 6).alias("tax_var"),
-        F.round(F.covar_samp("l_quantity", "l_discount"), 6).alias("qty_disc_cov"),
-    )
-
-
-# --- histogram bucketing -------------------------------------------------
-@register(
-    "hist_totalprice",
-    """
-    SELECT CAST(floor(o_totalprice / 25000) AS INT) AS bucket,
-           count(*) AS n,
-           round(min(o_totalprice), 2) AS lo,
-           round(max(o_totalprice), 2) AS hi
-    FROM orders GROUP BY 1
-    """,
-)
-def hist_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy(
-        F.floor(F.col("o_totalprice") / 25000).cast("int").alias("bucket")
-    ).agg(
-        F.count("*").alias("n"),
-        F.round(F.min("o_totalprice"), 2).alias("lo"),
-        F.round(F.max("o_totalprice"), 2).alias("hi"),
-    )
-
-
-# --- levenshtein fuzzy matching -----------------------------------------
-@register(
-    "fuzzy_link_brands",
-    """
-    WITH brands AS (SELECT DISTINCT p_brand FROM part),
-    q AS (SELECT unnest(['Brand#13', 'Brand#31', 'Bran#2']) AS query)
-    SELECT q.query, b.p_brand, levenshtein(q.query, b.p_brand) AS dist
-    FROM q CROSS JOIN brands b
-    WHERE levenshtein(q.query, b.p_brand) <= 2
-    """,
-)
-def fuzzy_link_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    brands = _t(spark, sf_dir, "part").select("p_brand").distinct()
-    q = spark.createDataFrame([("Brand#13",), ("Brand#31",), ("Bran#2",)], "query string")
-    dist = F.levenshtein(F.col("query"), F.col("p_brand"))
-    return (
-        brands.crossJoin(F.broadcast(q))
-        .withColumn("dist", dist)
-        .filter(F.col("dist") <= 2)
-        .select("query", "p_brand", "dist")
-    )
-
-
-# --- TPC-H Q3 shape: shipping priority ----------------------------------
-@register(
-    "tpch_q3_shipping",
-    """
-    SELECT l_orderkey,
-           cast(round(sum(cast(l_extendedprice * (1 - l_discount)
-                               AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
-           o_orderdate, o_orderpriority
-    FROM customer
-    JOIN orders ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-03-15'
-      AND l_shipdate > TIMESTAMP '1998-03-15'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, l_orderkey
-    LIMIT 10
-    """,
-)
-def tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-03-15")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1998-03-15")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("revenue")
-        )
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(10)
-    )
-
-
-# --- TPC-H Q18 shape: large-volume customers ----------------------------
-@register(
-    "tpch_q18_bigorders",
-    """
-    WITH big AS (
-      SELECT l_orderkey, sum(l_quantity) AS q
-      FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 250
-    )
-    SELECT c_name, c_custkey, o_orderkey, o_orderdate,
-           round(o_totalprice, 2) AS total_price, round(q, 2) AS sum_qty
-    FROM big
-    JOIN orders ON o_orderkey = l_orderkey
-    JOIN customer ON c_custkey = o_custkey
-    """,
-)
-def tpch_q18_bigorders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .filter(F.col("q") > 250)
-    )
-    # the HAVING survivors are a tiny fraction of orders → broadcast them
-    # into the fact-side joins instead of shuffling orders/customer
-    return (
-        o.join(F.broadcast(big), o.o_orderkey == big.l_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            F.round("o_totalprice", 2).alias("total_price"),
-            F.round("q", 2).alias("sum_qty"),
-        )
-    )
-
-
-# --- triangle count over an event co-occurrence graph -------------------
-@register(
-    "tri_count_events",
-    """
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS hb
-      FROM events WHERE user_id < 40
-    ),
-    edges AS (
-      SELECT DISTINCT a.user_id AS u, b.user_id AS v
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.hb = b.hb AND a.user_id < b.user_id
-    )
-    SELECT (SELECT count(*) FROM edges) AS n_edges,
-           (SELECT count(*)
-            FROM edges e1
-            JOIN edges e2 ON e1.v = e2.u
-            JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles
-    """,
-)
-def tri_count_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 40)
-        .select("user_id", "event_type", F.date_trunc("hour", "ts").alias("hb"))
-        .distinct()
-    )
-    a, b = ev.alias("a"), ev.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("a.hb") == F.col("b.hb"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
-        .select(F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v"))
-        .distinct()
-    )
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u"))
-        .join(e3, (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")))
-        .agg(F.count("*").alias("n_triangles"))
-    )
-    return edges.agg(F.count("*").alias("n_edges")).crossJoin(tri)
-
-
-# --- deterministic mode + interpolated median ---------------------------
-@register(
-    "mode_median_events",
-    """
-    WITH b AS (
-      SELECT event_type, CAST(floor(value) AS INT) AS bucket, value FROM events
-    ),
-    c AS (SELECT event_type, bucket, count(*) AS n FROM b GROUP BY 1, 2),
-    m AS (
-      SELECT event_type, bucket AS mode_bucket FROM (
-        SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY n DESC, bucket) AS rn
-        FROM c
-      ) WHERE rn = 1
-    ),
-    md AS (SELECT event_type, round(median(value), 6) AS med FROM b GROUP BY 1)
-    SELECT m.event_type, m.mode_bucket, md.med FROM m JOIN md USING (event_type)
-    """,
-)
-def mode_median_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", F.floor("value").cast("int").alias("bucket"), "value"
-    )
-    c = ev.groupBy("event_type", "bucket").agg(F.count("*").alias("n"))
-    # deterministic mode: max count, smallest bucket on ties — expressed
-    # as max_by over an orderable struct (no window, keeps partial aggs)
-    m = c.groupBy("event_type").agg(
-        F.max_by("bucket", F.struct(F.col("n"), -F.col("bucket"))).alias("mode_bucket")
-    )
-    md = ev.groupBy("event_type").agg(F.round(F.median("value"), 6).alias("med"))
-    return m.join(md, "event_type").select("event_type", "mode_bucket", "med")
-
-
-# --- date-part functions -------------------------------------------------
-@register(
-    "date_funcs_orders",
-    """
-    SELECT o_orderkey,
-           last_day(CAST(o_orderdate AS DATE)) AS month_end,
-           dayofweek(CAST(o_orderdate AS DATE)) AS dow,
-           weekofyear(CAST(o_orderdate AS DATE)) AS week,
-           quarter(CAST(o_orderdate AS DATE)) AS qtr
-    FROM orders WHERE o_orderkey < 1000
-    """,
-)
-def date_funcs_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 1000)
-    return o.select(
-        "o_orderkey",
-        F.last_day("o_orderdate").alias("month_end"),
-        # Spark: Sunday=1 … Saturday=7; DuckDB: Sunday=0 … Saturday=6
-        (F.dayofweek("o_orderdate") - 1).alias("dow"),
-        F.weekofyear("o_orderdate").alias("week"),
-        F.quarter("o_orderdate").alias("qtr"),
-    )
-
-
-# --- bitwise aggregates --------------------------------------------------
-@register(
-    "bit_agg_events",
-    """
-    SELECT event_type,
-           bit_or(user_id) AS uid_or,
-           bit_and(user_id) AS uid_and,
-           bit_xor(user_id) AS uid_xor,
-           count(*) AS n
-    FROM events GROUP BY event_type
-    """,
-)
-def bit_agg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.bit_or("user_id").alias("uid_or"),
-        F.bit_and("user_id").alias("uid_and"),
-        F.bit_xor("user_id").alias("uid_xor"),
-        F.count("*").alias("n"),
-    )
-
-
-# --- Pareto frontier: theta anti-join dominance -------------------------
-@register(
-    "pareto_parts",
-    """
-    WITH p AS (
-      SELECT p_partkey, p_retailprice, p_size FROM part WHERE p_partkey < 400
-    )
-    SELECT a.p_partkey, round(a.p_retailprice, 2) AS price, a.p_size
-    FROM p a
-    WHERE NOT EXISTS (
-      SELECT 1 FROM p b
-      WHERE b.p_retailprice <= a.p_retailprice AND b.p_size >= a.p_size
-        AND (b.p_retailprice < a.p_retailprice OR b.p_size > a.p_size)
-    )
-    """,
-)
-def pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = (
-        _t(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") < 400)
-        .select("p_partkey", "p_retailprice", "p_size")
-    )
-    a, b = p.alias("a"), p.alias("b")
-    dominated = (
-        (F.col("b.p_retailprice") <= F.col("a.p_retailprice"))
-        & (F.col("b.p_size") >= F.col("a.p_size"))
-        & (
-            (F.col("b.p_retailprice") < F.col("a.p_retailprice"))
-            | (F.col("b.p_size") > F.col("a.p_size"))
-        )
-    )
-    # broadcast nested-loop anti-join: the candidate set is bounded, so
-    # the dominance test never shuffles
-    return (
-        a.join(F.broadcast(b), dominated, "left_anti")
-        .select(
-            F.col("a.p_partkey").alias("p_partkey"),
-            F.round(F.col("a.p_retailprice"), 2).alias("price"),
-            F.col("a.p_size").alias("p_size"),
-        )
-    )

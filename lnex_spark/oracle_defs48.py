@@ -182,7 +182,7 @@ _AUC_SQL = """
              SUM(n_pos) AS np, SUM(n_neg) AS nn
       FROM ranked
     )
-    SELECT np, nn,
+    SELECT CAST(np AS BIGINT) AS np, CAST(nn AS BIGINT) AS nn,
            ROUND((pos_rank_sum - np * (np + 1) / 2.0) / (np * nn), 6) AS auc
     FROM sums
 """

@@ -52,8 +52,8 @@ _LB_SQL = """
     SELECT bucket, batch_id,
            COUNT(*) AS n_docs,
            MAX(n_chars) AS max_len,
-           SUM(n_chars) AS sum_len,
-           MAX(n_chars) * COUNT(*) - SUM(n_chars) AS padding_waste
+           CAST(SUM(n_chars) AS BIGINT) AS sum_len,
+           CAST(MAX(n_chars) * COUNT(*) - SUM(n_chars) AS BIGINT) AS padding_waste
     FROM placed
     GROUP BY bucket, batch_id
 """

@@ -20,10 +20,10 @@ calibration, and robust (MAD) outlier flagging.
 
   * mad_outliers_events — robust outliers per event type: median
     and MAD as EXACT ordered row picks under a fully-specified
-    ordering (value, event_id — engine-independent by construction,
-    like percentile_disc_prices), outlier = |v - med| beyond
-    3 * 1.4826 * MAD.  The heavy-tail-safe twin of
-    zscore_outliers_events; all windows are type-keyed.
+    ordering (value, event_id — engine-independent by
+    construction), outlier = |v - med| beyond
+    3 * 1.4826 * MAD, the heavy-tail-safe form of z-score outliers;
+    all windows are type-keyed.
 """
 
 from __future__ import annotations
@@ -72,7 +72,7 @@ _STUMP_SQL = """
              AS ig
       FROM cums, tot
     )
-    SELECT t, ln AS n_left, lp AS pos_left, ROUND(ig, 6) AS info_gain,
+    SELECT t, ln AS n_left, CAST(lp AS BIGINT) AS pos_left, ROUND(ig, 6) AS info_gain,
            CAST(ROUND(ig, 6) = (SELECT MAX(ROUND(ig, 6)) FROM gains) AS INTEGER) AS is_best
     FROM gains
 """
@@ -203,7 +203,7 @@ _MAD_SQL = """
     SELECT d.event_type,
            ROUND(m.med, 6) AS med,
            ROUND(m.mad, 6) AS mad,
-           SUM(CASE WHEN d.adev > 3 * 1.4826 * m.mad THEN 1 ELSE 0 END) AS n_outliers,
+           CAST(SUM(CASE WHEN d.adev > 3 * 1.4826 * m.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
            COUNT(*) AS n
     FROM dev d JOIN mad m ON d.event_type = m.event_type
     GROUP BY d.event_type, m.med, m.mad

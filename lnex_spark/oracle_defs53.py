@@ -1,5 +1,4 @@
-"""Fifty-third oracle-registry module: ANN ranking metrics (MRR,
-nDCG) and a deterministic differential-privacy-style noisy release.
+"""Oracle pairs that run ``operators.similarity``.
 
   * ann_mrr — mean reciprocal rank of the IVF index against
     brute-force truth: where does each query's TRUE nearest
@@ -15,14 +14,6 @@ nDCG) and a deterministic differential-privacy-style noisy release.
     Together with recall@k (set overlap), MRR (single-target rank)
     and RRF (fusion), the ANN suite now carries every standard
     retrieval metric family.
-
-  * dp_noisy_counts_events — the Laplace mechanism on the
-    event-type histogram, made deterministic: noise b=1/eps from an
-    md5-derived uniform through the inverse CDF
-    -b*sign(u-.5)*ln(1-2|u-.5|).  Real DP needs real randomness —
-    this op value-checks the RELEASE MECHANICS (sensitivity-1
-    count query, per-key noise, post-processing rounding) the same
-    way the md5-gated sampling ops stand in for engine RNG.
 """
 
 from __future__ import annotations
@@ -30,8 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs import _ANN_TOPK_SQL
-from lnex_spark.oracle_defs2 import _ANN_IVF_SQL
+from lnex_spark.oracle_defs_library import _ANN_IVF_SQL, _ANN_TOPK_SQL
 from lnex_spark.oracles import register
 
 
@@ -155,52 +145,4 @@ def ann_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("dcg", 6).alias("dcg"),
         F.round("idcg", 6).alias("idcg"),
         F.round(F.col("dcg") / F.col("idcg"), 6).alias("ndcg"),
-    )
-
-
-_DP_SQL = """
-    WITH counts AS (
-      SELECT event_type, COUNT(*) AS true_n FROM events GROUP BY event_type
-    ),
-    noised AS (
-      SELECT event_type, true_n,
-             CAST(('0x' || substr(md5('dp-v1#' || event_type), 1, 8)) AS BIGINT)
-               / 4294967296.0 AS u
-      FROM counts
-    )
-    SELECT event_type, true_n,
-           ROUND(true_n
-             - 1.0 * (CASE WHEN u >= 0.5 THEN 1 ELSE -1 END)
-                   * ln(1.0 - 2.0 * abs(u - 0.5)), 6) AS noisy_n
-    FROM noised
-"""
-
-
-@register("dp_noisy_counts_events", _DP_SQL)
-def dp_noisy_counts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Laplace mechanism (eps=1, sensitivity 1) on the event-type
-    histogram with md5-derived noise: one hash aggregate + per-key
-    scalar math — the release step costs nothing over the count."""
-    ev = _t(spark, sf_dir, "events")
-    counts = ev.groupBy("event_type").agg(F.count("*").alias("true_n"))
-    noised = counts.select(
-        "event_type",
-        "true_n",
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("dp-v1#"), F.col("event_type"))), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            / 4294967296.0
-        ).alias("u"),
-    )
-    sign = F.when(F.col("u") >= 0.5, 1).otherwise(-1)
-    return noised.select(
-        "event_type",
-        "true_n",
-        F.round(
-            F.col("true_n") - 1.0 * sign * F.log(1.0 - 2.0 * F.abs(F.col("u") - 0.5)),
-            6,
-        ).alias("noisy_n"),
     )

@@ -21,8 +21,7 @@ network assortativity, and LM domain transfer.
     the union vocabulary across languages, so unseen tokens are
     well-defined), then per-language average cross-entropy.  The
     quantified form of "how out-of-domain is corpus B for a model of
-    corpus A" — the decision input behind vocab_overlap_docs' raw
-    overlap counts.
+    corpus A".
 """
 
 from __future__ import annotations
@@ -125,7 +124,7 @@ _ASSORT_SQL = """
       SELECT da.d * 1.0 AS x, db.d * 1.0 AS y
       FROM und JOIN deg da ON und.a = da.node JOIN deg db ON und.b = db.node
     )
-    SELECT COUNT(*) / 2 AS n_edges,
+    SELECT CAST(COUNT(*) / 2 AS BIGINT) AS n_edges,
            ROUND((COUNT(*) * SUM(x * y) - SUM(x) * SUM(y))
                  / sqrt((COUNT(*) * SUM(x * x) - SUM(x) * SUM(x))
                         * (COUNT(*) * SUM(y * y) - SUM(y) * SUM(y))), 6) AS assortativity

@@ -4,23 +4,23 @@ decomposition, and weighted quantiles.
   * moments_events — per-type skewness and excess kurtosis written
     as explicit raw moments (population form), sidestepping the
     sample-vs-population and bias-correction divergences between the
-    engines' built-in skewness()/kurtosis() — the same
-    exact-formula-on-both-sides discipline as stats_corr_lineitem.
+    engines' built-in skewness()/kurtosis() — an exact formula on
+    both sides.
     One hash aggregate; moments are map-side combinable.
 
   * theil_decomp_events — the Theil-T inequality index of the value
     column decomposed into BETWEEN-type and WITHIN-type components
     (T = T_between + Σ share_g · T_g): the additive-decomposition
     property is what makes Theil the drill-down inequality measure
-    (unlike Gini, already covered by key_skew_profile_events).
+    (unlike Gini, covered by gini_lorenz_customers).
     Two hash aggregates over positive values.
 
   * weighted_median_lineitem — the quantity-weighted median of
     extended price as an exact cumulative-weight row pick under a
     fully-specified ordering: the first row whose running weight
     reaches half the total — integer weights, so the threshold
-    comparison is exact.  Complements the unweighted exact picks
-    (percentile_disc_prices, scalable_median_price).
+    comparison is exact.  Complements the unweighted exact pick
+    (scalable_median_price).
 """
 
 from __future__ import annotations
@@ -160,7 +160,7 @@ _WMED_SQL = """
       FROM w
     )
     SELECT ROUND(MIN(price), 6) AS weighted_median,
-           MIN(tw) AS total_weight
+           CAST(MIN(tw) AS BIGINT) AS total_weight
     FROM cum WHERE cw * 2 >= tw
 """
 

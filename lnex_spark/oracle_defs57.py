@@ -44,7 +44,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 _ECE_SQL = f"""
     WITH bins AS ({_CALIB_SQL})
-    SELECT SUM(n) AS n_total,
+    SELECT CAST(SUM(n) AS BIGINT) AS n_total,
            ROUND(SUM(n * abs(avg_conf - pos_rate)) / SUM(n), 6) AS ece,
            ROUND(SUM(brier_sum) / SUM(n), 6) AS brier
     FROM bins
@@ -162,7 +162,7 @@ _AB_SQL = """
              MAX(CASE WHEN arm = 'B' THEN conv END) AS cb
       FROM per_arm
     )
-    SELECT na, ca, nb, cb,
+    SELECT na, CAST(ca AS BIGINT) AS ca, nb, CAST(cb AS BIGINT) AS cb,
            ROUND(ca * 1.0 / na, 6) AS rate_a,
            ROUND(cb * 1.0 / nb, 6) AS rate_b,
            ROUND((ca * 1.0 / na - cb * 1.0 / nb)

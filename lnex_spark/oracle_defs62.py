@@ -32,8 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs import _ANN_TOPK_SQL
-from lnex_spark.oracle_defs2 import _ANN_IVF_SQL, _kmeans_sql
+from lnex_spark.oracle_defs_library import _ANN_IVF_SQL, _ANN_TOPK_SQL, _kmeans_sql
 from lnex_spark.oracles import register
 
 
@@ -61,7 +60,7 @@ _F1_SQL = """
                   ELSE 2.0 * tp / (pred_pos + tot.np) END AS f1
       FROM cms, tot
     )
-    SELECT t, tp, pred_pos,
+    SELECT t, CAST(tp AS BIGINT) AS tp, pred_pos,
            ROUND(prec, 6) AS prec, ROUND(rec, 6) AS rec, ROUND(f1, 6) AS f1,
            CAST(ROUND(f1, 6) = (SELECT MAX(ROUND(f1, 6)) FROM scored) AS INTEGER) AS is_best
     FROM scored

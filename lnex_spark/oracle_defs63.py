@@ -1,16 +1,4 @@
-"""Sixty-third oracle-registry module: distributed PCA, robust
-regression, and propensity-score matching.
-
-  * pca_power_embeddings — top principal component of the embedding
-    covariance by THREE unrolled power-iteration rounds: covariance
-    in raw-moment form as a (i, j, c) relation (no centering join),
-    each round one matrix-vector join-aggregate (the same semiring
-    shape as matmul_embeddings) with the iterate re-normalized and
-    ROUNDED to 6 per round — the same round-each-iteration
-    determinism technique that made k-means unrollable.  Emits the
-    Rayleigh-quotient eigenvalue estimate and the first components.
-    Covariance shuffle volume is dims², independent of row count —
-    the reason power iteration is the 100 TB PCA.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * theilsen_events — Theil-Sen robust slope of the daily value
     series: the median of all pairwise slopes, as an exact ordered
@@ -21,14 +9,13 @@ regression, and propensity-score matching.
   * psm_events — propensity-score matching: md5 user arms, score =
     pre-period mean value, each treated user matched to the nearest
     control score via the two-directional IGNORE-NULLS window pick
-    (the nearest_event_join machinery applied to the score axis,
-    no quadratic treated×control join), ATT = mean post-period
+    (a nearest-event pick applied to the score axis, no quadratic treated×control join), ATT = mean post-period
     difference against the matched control.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -37,116 +24,6 @@ from lnex_spark.oracles import register
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-
-# ---------------------------------------------------------------------------
-# pca_power_embeddings
-# ---------------------------------------------------------------------------
-
-_PCA_DIM = 64
-_PCA_N = 300
-_PCA_ROUNDS = 3
-
-
-def _pca_sql() -> str:
-    blocks = [
-        f"""v AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-      FROM embeddings WHERE vec_id < {_PCA_N}
-    ),
-    flat AS (
-      SELECT vec_id, u.i, emb[u.i] AS x
-      FROM v, (SELECT unnest(range(1, {_PCA_DIM + 1})) AS i) u
-    ),
-    mu AS (SELECT i, avg(x) AS m FROM flat GROUP BY i),
-    cov AS (
-      SELECT a.i AS i, b.i AS j,
-             round(sum(a.x * b.x) / {_PCA_N} - ma.m * mb.m, 6) AS c
-      FROM flat a
-      JOIN flat b ON a.vec_id = b.vec_id
-      JOIN mu ma ON ma.i = a.i
-      JOIN mu mb ON mb.i = b.i
-      GROUP BY a.i, b.i, ma.m, mb.m
-    ),
-    p0 AS (SELECT i, 1.0 / sqrt({_PCA_DIM}) AS vi FROM (SELECT unnest(range(1, {_PCA_DIM + 1})) AS i))"""
-    ]
-    for r in range(1, _PCA_ROUNDS + 1):
-        p = r - 1
-        blocks.append(
-            f"""w{r} AS (
-      SELECT cov.i, sum(cov.c * p{p}.vi) AS wi
-      FROM cov JOIN p{p} ON cov.j = p{p}.i GROUP BY cov.i
-    ),
-    n{r} AS (SELECT sqrt(sum(wi * wi)) AS nrm FROM w{r}),
-    p{r} AS (SELECT i, round(wi / (SELECT nrm FROM n{r}), 6) AS vi FROM w{r})"""
-        )
-    last = f"p{_PCA_ROUNDS}"
-    return (
-        "WITH "
-        + ",\n    ".join(blocks)
-        + f""",
-    ray AS (
-      SELECT sum({last}.vi * cov.c * pj.vi) AS lam
-      FROM cov JOIN {last} ON cov.i = {last}.i JOIN {last} pj ON cov.j = pj.i
-    )
-    SELECT {last}.i AS dim, {last}.vi AS component,
-           (SELECT round(lam, 6) FROM ray) AS eigenvalue
-    FROM {last} WHERE {last}.i <= 8
-    """
-    )
-
-
-@register("pca_power_embeddings", _pca_sql())
-def pca_power_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _PCA_N)
-    flat = e.select(
-        "vec_id",
-        F.posexplode(F.transform(F.col("embedding"), lambda x: x.cast("double"))).alias(
-            "i0", "x"
-        ),
-    ).select("vec_id", (F.col("i0") + 1).alias("i"), "x")
-    mu = flat.groupBy("i").agg(F.avg("x").alias("m"))
-    a = flat.select(F.col("vec_id"), F.col("i"), F.col("x"))
-    b = flat.select(
-        F.col("vec_id").alias("vid2"), F.col("i").alias("j"), F.col("x").alias("y")
-    )
-    cov = (
-        a.join(b, F.col("vec_id") == F.col("vid2"))
-        .groupBy("i", "j")
-        .agg((F.sum(F.col("x") * F.col("y")) / _PCA_N).alias("raw"))
-        .join(mu.withColumnRenamed("m", "mi"), "i")
-        .join(mu.withColumnRenamed("i", "j").withColumnRenamed("m", "mj"), "j")
-        .select("i", "j", F.round(F.col("raw") - F.col("mi") * F.col("mj"), 6).alias("c"))
-    )
-    p = (
-        flat.select("i")
-        .distinct()
-        .select("i", F.lit(1.0 / (_PCA_DIM ** 0.5)).alias("vi"))
-    )
-    for _ in range(_PCA_ROUNDS):
-        w = (
-            cov.join(p.withColumnRenamed("i", "j"), "j")
-            .groupBy("i")
-            .agg(F.sum(F.col("c") * F.col("vi")).alias("wi"))
-        )
-        nrm = w.agg(F.sqrt(F.sum(F.col("wi") * F.col("wi"))).alias("nrm"))
-        p = w.crossJoin(nrm).select("i", F.round(F.col("wi") / F.col("nrm"), 6).alias("vi"))
-    ray = (
-        cov.join(p.withColumnRenamed("vi", "vi_i"), "i")
-        .join(
-            p.withColumnRenamed("i", "j").withColumnRenamed("vi", "vi_j"), "j"
-        )
-        .agg(F.round(F.sum(F.col("vi_i") * F.col("c") * F.col("vi_j")), 6).alias("lam"))
-    )
-    return (
-        p.filter(F.col("i") <= 8)
-        .crossJoin(ray)
-        .select(F.col("i").alias("dim"), F.col("vi").alias("component"), F.col("lam").alias("eigenvalue"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# theilsen_events
-# ---------------------------------------------------------------------------
 
 _TS_SQL = """
     WITH daily AS (

@@ -8,8 +8,8 @@ SLO burn-rate monitoring.
     reshapes neighboring chunks, unlike fixed-size chunking).
     Chunk ids via cumulative boundary counts per doc; emits per-doc
     chunk count, average and max chunk length over a fixed 100-doc
-    slice.  The storage-dedup complement of the sliding-window
-    chunker (chunk_docs), whose boundaries are positional.
+    slice.  The storage-dedup complement of a sliding-window
+    chunker, whose boundaries are positional.
 
   * slo_burn_events — error-budget burn rate: hourly error share
     over a 1% SLO budget, with the fast-burn (>=14x) and slow-burn
@@ -107,7 +107,7 @@ _SLO_SQL = """
              SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS errs
       FROM events GROUP BY 1
     )
-    SELECT hb, n, errs,
+    SELECT hb, n, CAST(errs AS BIGINT) AS errs,
            ROUND(errs * 1.0 / n, 6) AS err_rate,
            ROUND((errs * 1.0 / n) / 0.01, 6) AS burn_rate,
            CAST((errs * 1.0 / n) / 0.01 >= 14 AS INTEGER) AS fast_burn,

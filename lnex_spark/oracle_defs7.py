@@ -1,17 +1,14 @@
-"""Seventh oracle-registry module: corpus / distribution profiling —
-the monitoring half of a training-data pipeline (what you alert on
-before a bad batch poisons a 100 TB training run).
+"""Oracle pairs that run ``operators.curation``,
+``operators.scalable_windows``.
 
-  * token_entropy_by_lang — Shannon entropy of the token distribution
-    per language (vocab collapse shows up as an entropy drop);
   * zipf_slope_docs — least-squares slope of log(freq) vs log(rank)
     over the token frequency table (natural text ≈ -1; generated or
     corrupted text drifts);
+
   * ks_drift_events — two-sample Kolmogorov-Smirnov statistic between
     the value distributions of two event types, computed relationally
     (running ECDFs over the union, max |F_a - F_b|);
-  * chi2_type_user — chi-square statistic of independence between
-    event_type and a user bucket (category mix drift);
+
   * label_balance_by_split — class composition per train/val/test
     split (a skewed val split invalidates eval) — composes the
     md5-gated split with a two-key aggregation.
@@ -21,7 +18,7 @@ All pure built-ins; each is one or two hash aggs over a scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -29,41 +26,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- Shannon entropy of token distribution per language -----------------
-@register(
-    "token_entropy_by_lang",
-    r"""
-    WITH toks AS (
-      SELECT lang, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-      FROM documents WHERE doc_id < 400
-    ),
-    tf AS (SELECT lang, tok, count(*) AS c FROM toks WHERE len(tok) > 0 GROUP BY 1, 2),
-    tot AS (SELECT lang, sum(c) AS n FROM tf GROUP BY 1)
-    SELECT tf.lang,
-           round(-sum((c * 1.0 / n) * ln(c * 1.0 / n)), 6) AS entropy,
-           count(*) AS vocab
-    FROM tf JOIN tot ON tf.lang = tot.lang
-    GROUP BY tf.lang
-    """,
-)
-def token_entropy_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    toks = d.select(
-        "lang", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")
-    ).filter(F.length("tok") > 0)
-    tf = toks.groupBy("lang", "tok").agg(F.count("*").alias("c"))
-    tot = tf.groupBy("lang").agg(F.sum("c").alias("n"))
-    p = F.col("c") / F.col("n")
-    return (
-        tf.join(F.broadcast(tot), "lang")
-        .groupBy("lang")
-        .agg(
-            F.round(-F.sum(p * F.log(p)), 6).alias("entropy"),
-            F.count("*").alias("vocab"),
-        )
-    )
 
 
 # --- Zipf slope: log(freq) ~ log(rank) least squares --------------------
@@ -151,42 +113,6 @@ def ks_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.max(F.abs(F.col("ca") / F.col("na") - F.col("cb") / F.col("nb"))), 6
         ).alias("ks_stat")
-    )
-
-
-# --- chi-square independence: event_type x user bucket ------------------
-@register(
-    "chi2_type_user",
-    """
-    WITH o AS (
-      SELECT event_type, user_id % 5 AS ub, count(*) AS obs
-      FROM events GROUP BY 1, 2
-    ),
-    rt AS (SELECT event_type, sum(obs) AS rn FROM o GROUP BY 1),
-    ct AS (SELECT ub, sum(obs) AS cn FROM o GROUP BY 1),
-    n AS (SELECT sum(obs) AS total FROM o)
-    SELECT round(sum(pow(obs - rn * cn * 1.0 / total, 2) / (rn * cn * 1.0 / total)), 6) AS chi2,
-           count(*) AS cells
-    FROM o JOIN rt USING (event_type) JOIN ct USING (ub) CROSS JOIN n
-    """,
-)
-def chi2_type_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    o = ev.groupBy("event_type", (F.col("user_id") % 5).alias("ub")).agg(
-        F.count("*").alias("obs")
-    )
-    rt = o.groupBy("event_type").agg(F.sum("obs").alias("rn"))
-    ct = o.groupBy("ub").agg(F.sum("obs").alias("cn"))
-    n = o.agg(F.sum("obs").alias("total"))
-    exp = F.col("rn") * F.col("cn") / F.col("total")
-    return (
-        o.join(F.broadcast(rt), "event_type")
-        .join(F.broadcast(ct), "ub")
-        .crossJoin(F.broadcast(n))
-        .agg(
-            F.round(F.sum(F.pow(F.col("obs") - exp, 2) / exp), 6).alias("chi2"),
-            F.count("*").alias("cells"),
-        )
     )
 
 

@@ -16,8 +16,8 @@ sketch-based set similarity.
     Jaccard.  On the oracle side the "sketch" is exact counting (the
     estimate-vs-exact gap is the Spark side's approx_count_distinct
     error), so this op pins the inclusion-exclusion DERIVATION and
-    reports the sketch's relative error as a column — tolerance-style
-    like approx_distinct_sanity, value-checked on the exact parts.
+    reports the sketch's relative error as a column, value-checked
+    on the exact parts.
 """
 
 from __future__ import annotations

@@ -7,8 +7,7 @@ dedup operational report.
     top-10 — identical row sets (TakeOrderedAndProject relies on
     exactly this: local top-k per partition, merge at the driver).
     Emitted as the direct top-10 plus a match flag per rank against
-    the merged form; the algebraic sibling of moments_merge_events
-    and hll_union_users.
+    the merged form.
 
   * dedup_cluster_sizes_docs — the operational readout of a dedup
     run over the clone-injected corpus: cluster-size histogram,

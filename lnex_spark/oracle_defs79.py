@@ -1,5 +1,4 @@
-"""Seventy-ninth oracle-registry module: design-based estimation and
-lead-lag diagnostics.
+"""Oracle pairs that run ``operators.curation``.
 
   * horvitz_thompson_docs — the Horvitz-Thompson estimator over the
     already-verified deterministic stratified sample
@@ -11,19 +10,11 @@ lead-lag diagnostics.
     integer sample sums divided ONCE by the rational pi, never
     per-row double accumulation — the estimate a sampling pipeline
     publishes when scanning the full corpus is too expensive.
-
-  * cross_corr_events — lagged cross-correlation between the daily
-    click-count and error-count series at lags -3..+3: Pearson in
-    raw-moment form over the inner join of day with day+lag, plus a
-    best-lag flag (argmax over corr ROUNDED first, ties to the
-    smaller lag, so the argmax is cross-engine exact).  The lead-lag
-    diagnostic behind "do errors follow clicks?" — one tiny join
-    per lag over the day-aggregated series, never over raw events.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracles import register
@@ -50,7 +41,7 @@ _HT_SQL = """
       SELECT lang, COUNT(*) AS true_docs, SUM(n_chars) AS true_chars
       FROM documents GROUP BY lang
     )
-    SELECT t.lang, t.true_docs, t.true_chars,
+    SELECT t.lang, t.true_docs, CAST(t.true_chars AS BIGINT) AS true_chars,
            ROUND(s.s_docs * 65536.0 / s.thr, 6) AS est_docs,
            ROUND(s.s_chars * 65536.0 / s.thr, 6) AS est_chars,
            ROUND(s.s_docs * 65536.0 / s.thr / t.true_docs - 1.0, 6) AS docs_rel_err,
@@ -94,73 +85,4 @@ def horvitz_thompson_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(est_chars, 6).alias("est_chars"),
         F.round(est_docs / F.col("true_docs") - 1.0, 6).alias("docs_rel_err"),
         F.round(est_chars / F.col("true_chars") - 1.0, 6).alias("chars_rel_err"),
-    )
-
-
-_XC_SQL = """
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x,
-             SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS y
-      FROM events GROUP BY CAST(date_trunc('day', ts) AS DATE)
-    ),
-    lagged AS (
-      SELECT l.lag, a.x, b.y
-      FROM (SELECT unnest(range(-3, 4)) AS lag) l
-      JOIN daily a ON TRUE
-      JOIN daily b ON b.day = a.day + CAST(l.lag AS INTEGER)
-    ),
-    corrs AS (
-      SELECT lag, COUNT(*) AS n_days,
-             ROUND(
-               (AVG(x * y * 1.0) - AVG(x * 1.0) * AVG(y * 1.0))
-               / sqrt((AVG(x * x * 1.0) - AVG(x * 1.0) * AVG(x * 1.0))
-                      * (AVG(y * y * 1.0) - AVG(y * 1.0) * AVG(y * 1.0))), 6)
-               AS xcorr
-      FROM lagged GROUP BY lag
-    )
-    SELECT lag, n_days, xcorr,
-           CAST(row_number() OVER (ORDER BY xcorr DESC, lag) = 1 AS INTEGER) AS is_best
-    FROM corrs
-"""
-
-
-@register("cross_corr_events", _XC_SQL)
-def cross_corr_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date(F.date_trunc("day", F.col("ts"))).alias("day")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("x"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias("y"),
-    )
-    lags = spark.range(-3, 4).select(F.col("id").cast("int").alias("lag"))
-    a = daily.select(F.col("day").alias("xday"), "x")
-    b = daily.select(F.col("day").alias("yday"), "y")
-    lagged = (
-        lags.crossJoin(a)
-        .join(b, F.col("yday") == F.date_add(F.col("xday"), F.col("lag")))
-        .select("lag", "x", "y")
-    )
-
-    def dbl(c):
-        return F.col(c).cast("double")
-
-    corrs = lagged.groupBy("lag").agg(
-        F.count("*").alias("n_days"),
-        F.round(
-            (F.avg(dbl("x") * dbl("y")) - F.avg(dbl("x")) * F.avg(dbl("y")))
-            / F.sqrt(
-                (F.avg(dbl("x") * dbl("x")) - F.avg(dbl("x")) * F.avg(dbl("x")))
-                * (F.avg(dbl("y") * dbl("y")) - F.avg(dbl("y")) * F.avg(dbl("y")))
-            ),
-            6,
-        ).alias("xcorr"),
-    )
-    # the window runs over the 7 lag rows only
-    return corrs.select(
-        "lag",
-        "n_days",
-        "xcorr",
-        (F.row_number().over(Window.orderBy(F.desc("xcorr"), F.asc("lag"))) == 1)
-        .cast("int")
-        .alias("is_best"),
     )

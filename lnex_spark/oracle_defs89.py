@@ -1,22 +1,13 @@
-"""Eighty-ninth oracle-registry module: negative-sampling table
-construction and order-2 sequence contexts.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * negsample_table_docs — the word2vec negative-sampling table:
     unigram counts raised to the 3/4 power, normalized, and laid out
     as cumulative [lo, hi) probability ranges under a fully-specified
     (p desc, token) order — the inverse-CDF structure skip-gram
     training samples negatives from (md5 uniform → binary search
-    over ranges, no alias table needed).  Completes the
-    skipgram_pairs_docs training pipeline: pairs + negatives are
-    the entire SGNS input.  Top-10 rows reported; the cumulative
+    over ranges, no alias table needed): the negatives half of the
+    SGNS input.  Top-10 rows reported; the cumulative
     ranges are computed over the FULL vocabulary.
-
-  * type_trigrams_events — global top-10 consecutive event-type
-    trigrams across user streams (two leads over the per-user time
-    order, fully-specified tie order) — the order-2 context counts
-    that extend the order-1 Markov suite (role_transitions,
-    markov_backtest); the n-gram-over-sequences sibling of the
-    text bigram ops.
 """
 
 from __future__ import annotations
@@ -96,47 +87,4 @@ def negsample_table_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("cum_hi") - F.col("p"), 6).alias("cum_lo"),
             F.round("cum_hi", 6).alias("cum_hi"),
         )
-    )
-
-
-_TRI_SQL = """
-    WITH ordered AS (
-      SELECT event_type AS t1,
-             lead(event_type, 1) OVER w AS t2,
-             lead(event_type, 2) OVER w AS t3
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    tri AS (
-      SELECT t1 || '>' || t2 || '>' || t3 AS trigram, COUNT(*) AS c
-      FROM ordered WHERE t3 IS NOT NULL
-      GROUP BY 1
-    )
-    SELECT rk, trigram, c FROM (
-      SELECT *, row_number() OVER (ORDER BY c DESC, trigram) AS rk FROM tri
-    ) WHERE rk <= 10
-"""
-
-
-@register("type_trigrams_events", _TRI_SQL)
-def type_trigrams_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = ev.select(
-        F.col("event_type").alias("t1"),
-        F.lead("event_type", 1).over(w).alias("t2"),
-        F.lead("event_type", 2).over(w).alias("t3"),
-    )
-    tri = (
-        ordered.filter(F.col("t3").isNotNull())
-        .select(F.concat_ws(">", "t1", "t2", "t3").alias("trigram"))
-        .groupBy("trigram")
-        .agg(F.count("*").alias("c"))
-    )
-    # 125-row (5^3) bounded global window
-    w_rk = Window.orderBy(F.desc("c"), F.asc("trigram"))
-    return (
-        tri.withColumn("rk", F.row_number().over(w_rk))
-        .filter(F.col("rk") <= 10)
-        .select("rk", "trigram", "c")
     )

@@ -1,15 +1,4 @@
-"""Ninety-seventh oracle-registry module: model-based funnel
-reachability and exact energy distance.
-
-  * reach_probability_events — P(reach 'purchase' within k steps |
-    current state) for k = 1..3 under the empirical order-1 Markov
-    chain: the recursion r_k(s) = P(s→target) + Σ_{t≠target}
-    P(s,t)·r_{k-1}(t) unrolled twice over the 5×5 transition table
-    (tiny joins — the matrix-vector product shape of
-    matmul/gnn_aggregate on the chain).  The MODEL-based funnel:
-    funnel_conversion_events counts what happened; this predicts
-    reach from any state, the quantity a nudge/intervention
-    simulation needs.
+"""Oracle pairs that run ``operators.scalable_windows``.
 
   * energy_distance_docs — the exact two-sample energy distance
     D² = 2·E|X−Y| − E|X−X'| − E|Y−Y'| between the en and de n_chars
@@ -32,105 +21,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-_REACH_SQL = """
-    WITH ordered AS (
-      SELECT event_type AS s,
-             lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS t
-      FROM events
-    ),
-    trans AS (
-      SELECT s, t, COUNT(*) AS c FROM ordered WHERE t IS NOT NULL GROUP BY s, t
-    ),
-    marg AS (SELECT s, SUM(c) AS cs FROM trans GROUP BY s),
-    p AS (
-      SELECT t.s, t.t, t.c * 1.0 / m.cs AS p
-      FROM trans t JOIN marg m ON t.s = m.s
-    ),
-    r1 AS (
-      SELECT m.s, COALESCE(MAX(CASE WHEN p.t = 'purchase' THEN p.p END), 0.0) AS r
-      FROM marg m LEFT JOIN p ON p.s = m.s GROUP BY m.s
-    ),
-    r2 AS (
-      SELECT a.s, a.r + COALESCE(SUM(p.p * b.r), 0.0) AS r
-      FROM r1 a
-      LEFT JOIN p ON p.s = a.s AND p.t <> 'purchase'
-      LEFT JOIN r1 b ON b.s = p.t
-      GROUP BY a.s, a.r
-    ),
-    r3 AS (
-      SELECT a.s, a.r + COALESCE(SUM(p.p * b.r), 0.0) AS r
-      FROM r1 a
-      LEFT JOIN p ON p.s = a.s AND p.t <> 'purchase'
-      LEFT JOIN r2 b ON b.s = p.t
-      GROUP BY a.s, a.r
-    )
-    SELECT r1.s AS state,
-           ROUND(r1.r, 6) AS p_reach_1,
-           ROUND(r2.r, 6) AS p_reach_2,
-           ROUND(r3.r, 6) AS p_reach_3
-    FROM r1 JOIN r2 ON r1.s = r2.s JOIN r3 ON r1.s = r3.s
-"""
-
-
-@register("reach_probability_events", _REACH_SQL)
-def reach_probability_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = ev.select(
-        F.col("event_type").alias("s"), F.lead("event_type").over(w).alias("t")
-    )
-    trans = (
-        ordered.filter(F.col("t").isNotNull()).groupBy("s", "t").agg(F.count("*").alias("c"))
-    )
-    marg = trans.groupBy("s").agg(F.sum("c").alias("cs"))
-    p = trans.join(marg, "s").select(
-        "s", "t", (F.col("c") * 1.0 / F.col("cs")).alias("p")
-    )
-    r1 = (
-        marg.join(p, "s", "left")
-        .groupBy("s")
-        .agg(
-            F.coalesce(
-                F.max(F.when(F.col("t") == "purchase", F.col("p"))), F.lit(0.0)
-            ).alias("r")
-        )
-    )
-
-    def step(prev: DataFrame) -> DataFrame:
-        pnp = p.filter(F.col("t") != "purchase")
-        return (
-            r1.alias("a")
-            .join(pnp.alias("e"), F.col("a.s") == F.col("e.s"), "left")
-            .join(
-                prev.select(F.col("s").alias("bs"), F.col("r").alias("br")),
-                F.col("e.t") == F.col("bs"),
-                "left",
-            )
-            .groupBy(F.col("a.s").alias("s"), F.col("a.r").alias("base_r"))
-            .agg(
-                (
-                    F.col("base_r")
-                    + F.coalesce(F.sum(F.col("e.p") * F.col("br")), F.lit(0.0))
-                ).alias("r")
-            )
-            .select("s", "r")
-        )
-
-    r2 = step(r1)
-    r3 = step(r2)
-    return (
-        r1.select(F.col("s").alias("state"), F.col("r").alias("p_reach_1"))
-        .join(r2.select(F.col("s").alias("state"), F.col("r").alias("p_reach_2")), "state")
-        .join(r3.select(F.col("s").alias("state"), F.col("r").alias("p_reach_3")), "state")
-        .select(
-            "state",
-            F.round("p_reach_1", 6).alias("p_reach_1"),
-            F.round("p_reach_2", 6).alias("p_reach_2"),
-            F.round("p_reach_3", 6).alias("p_reach_3"),
-        )
-    )
 
 
 _ENERGY_SQL = """

@@ -40,7 +40,7 @@ from lnex_spark.gazetteer.build import (
     scan_gazetteer,
     variants_frame,
 )
-from lnex_spark.operators.extract import extract_mentions_dedup_df, extract_mentions_df
+from lnex_spark.operators.extract import extract_mentions_df
 from lnex_spark.operators.link import best_by_norm, link_mentions
 from lnex_spark.operators.skew import salt_repartition
 from lnex_spark.operators.triples import mention_triples, region_triples
@@ -113,38 +113,14 @@ def extract_link(
     transcripts: DataFrame,
     model: GazetteerModel,
     salt_partitions: int | None = None,
-    dedup_texts: bool | str = False,
 ) -> DataFrame:
     """transcripts → linked mentions (conv_id, turn_idx, start, end,
     surface, norm, geo_id, ...): extraction, then one broadcast join
-    against ``model.best``.
-
-    ``dedup_texts``: False → direct extraction over every turn;
-    True → extract once per distinct text and join back
-    (operators/extract.extract_mentions_dedup_df — identical output,
-    pays two text-keyed shuffles to divide the Python stage by the
-    duplication ratio); 'auto' → one cheap JVM-side
-    approx_count_distinct pass decides (dedup iff distinct/total <
-    0.3 — MEASURED at sf0.1/local[16], 300-variant gazetteer, 200k
-    turns: 40x verbatim duplication (ratio 0.025) direct 1.36s vs
-    dedup 1.16s, while mild 2.4x duplication (ratio 0.42) direct
-    1.40s vs dedup 1.64s — this matcher is cheap enough that only
-    heavy duplication beats the two text-keyed shuffles; a costlier
-    matcher (planet gazetteer, long documents) moves the break-even
-    toward 1.0, so the threshold is a job parameter, not an engine
-    constant).
-    """
+    against ``model.best``."""
     t = transcripts
     if salt_partitions:
         t = salt_repartition(t, salt_partitions)
-    if dedup_texts == "auto":
-        stats = t.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct("text").alias("d"),
-        ).first()
-        dedup_texts = stats.n > 0 and stats.d / stats.n < 0.3
-    extract = extract_mentions_dedup_df if dedup_texts else extract_mentions_df
-    return link_mentions(extract(t, model.bc_struct), model.best)
+    return link_mentions(extract_mentions_df(t, model.bc_struct), model.best)
 
 
 def run_pipeline(
@@ -173,7 +149,6 @@ def run_resumable(
     buckets_per_batch: int = 4,
     fail_after_batches: int | None = None,
     salt_partitions: int | None = None,
-    dedup_texts: bool = False,
 ) -> list[int]:
     """X3 stage 1: checkpoint-resumable extraction over conv_id buckets.
 
@@ -208,7 +183,7 @@ def run_resumable(
         obs_mentions = Observation(f"mentions-{batch_no}")
         with StageTimer() as timer:
             t = bucketed.filter(F.col("bucket").isin(batch)).observe(obs_turns, *per_bucket)
-            linked = extract_link(t.drop("bucket"), model, salt_partitions, dedup_texts)
+            linked = extract_link(t.drop("bucket"), model, salt_partitions)
             (
                 with_bucket(linked, n_buckets)
                 .observe(obs_mentions, *per_bucket)

@@ -1,6 +1,6 @@
 """SparkSession factory with scale-oriented defaults.
 
-Centralizes the conf so tests, bench, and spark-submit jobs agree.
+Centralizes the conf so tests, the benchmark and spark-submit jobs agree.
 Tuned for the Arrow-UDF-heavy extraction stage: AQE on (post-shuffle
 coalescing + skew-join splitting), Arrow batches sized so the Python
 matcher amortizes broadcast-dict access across ~10k rows per batch.
@@ -55,7 +55,7 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     master defaults to ``local[$SPARK_GRAFT_CPUS or *]`` so the same
-    code path serves pytest, bench.py, and spark-submit (where master
+    code path serves pytest, perfbench, and spark-submit (where master
     comes from the launcher and this arg stays None on purpose).
     """
     if master is None:

@@ -56,36 +56,6 @@ def stream_mention_rates(
     )
 
 
-def stream_session_stats(
-    events_stream: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming gap sessionization via the native ``session_window``
-    — the unbounded-data form of operators.sessions.sessionize (same
-    gap rule; the batch op numbers sessions, this one keys them by
-    window bounds). Watermark bounds state: a session closes once the
-    watermark passes its end, late events beyond it are dropped.
-
-    Parity with the batch form (asserted in tests): per (key, session)
-    the event count and start timestamp match batch session_stats;
-    ``session_window.end`` is last-event + gap by definition, so the
-    batch ``end_us`` (last event) equals ``end - gap``."""
-    return (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("win"), F.col(key))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            key,
-            F.col("win.start").alias("start_ts"),
-            F.col("win.end").alias("end_ts"),
-            "n_events",
-        )
-    )
-
-
 def stream_triples_foreach_batch(
     transcripts_stream: DataFrame,
     model,
@@ -127,8 +97,8 @@ def stream_link_static(mention_stream: DataFrame, variants: DataFrame) -> DataFr
     Stream-static inner equi-joins are stateless (the static side is
     planned fresh each micro-batch, so a gazetteer table update is
     picked up on the next batch), no watermark required — unlike the
-    stream-stream interval join in streaming/join.py, which must bound
-    both sides' state. This is the deployment shape for continuous KG
-    ingestion: the dimension stays a table, the fact side streams.
+    stream-stream interval join, which must bound both sides' state.
+    This is the deployment shape for continuous KG ingestion: the
+    dimension stays a table, the fact side streams.
     """
     return link_mentions(mention_stream, variants)

@@ -1,6 +1,5 @@
 """Semantic invariants for the curation operators
-(operators/curation.py).  Value-level equality vs DuckDB lives in the
-oracle harness; these pin behavior on hand-checkable inputs.
+(operators/curation.py), pinned on hand-checkable inputs.
 """
 
 from __future__ import annotations
@@ -105,86 +104,6 @@ def test_quality_funnel_attribution(spark):
     )
     out = {r.reason: r.n for r in quality_funnel(df).collect()}
     assert out == {"kept": 1, "dup_fingerprint": 1, "too_short": 1, "high_punct": 1}
-
-
-def test_oracle_registry_batches5_6_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {
-        "split_assign_docs", "class_weights_embeddings", "pii_scrub_docs",
-        "contamination_check", "quality_funnel_docs",
-        "merge_upsert_turns", "moving_avg_orders", "nth_value_orders",
-        "nullsafe_join_events", "seq_zip_parts",
-    }
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())  # all fully SQL-verified
-
-
-def test_oracle_registry_batch7_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {
-        "token_entropy_by_lang", "zipf_slope_docs", "ks_drift_events",
-        "chi2_type_user", "label_balance_by_split",
-    }
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())
-
-
-def test_oracle_registry_batch8_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {"recursive_cte_ancestors", "groupby_all_orders", "decimal_money_agg", "ilike_parts"}
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())
-
-
-def test_oracle_registry_batch9_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {"kg_ambiguity_report", "geo_grid_cells"}
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())
-
-
-def test_oracle_registry_batch10_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {"filter_clause_orders", "percentile_disc_prices", "regr_price_qty"}
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())
-
-
-def test_oracle_registry_batch11_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {
-        "explode_outer_longtoks", "try_timestamp_events",
-        "scalar_funcs_lineitem", "union_byname_mixed",
-    }
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())
-
-
-def test_oracle_registry_batch12_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {"label_centroids", "vector_norms"}
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())
-
-
-def test_oracle_registry_batch13_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    keys = {
-        "zscore_outliers_events", "funnel_conversion_events",
-        "retention_cohorts_events", "ewma_values_events",
-        "lpa_communities_events", "stratified_sample_docs",
-        "label_centroids", "vector_norms",
-    }
-    assert keys <= set(spark_queries())
-    assert keys <= set(duckdb_sql())
 
 
 def test_pack_sequences_greedy_and_oversize(spark):
@@ -319,23 +238,6 @@ def test_token_arithmetic_matches_string_assembly(spark):
         curate_transcripts(t, budget=10_000, shards=4, **kw)
         .agg(F.sum("n_pairs")).collect()[0][0]
     ) == 4
-
-
-def test_driver_window_order_contract():
-    """The driver samples the first 50 queries() keys; _PRIORITY pins
-    that window to the showcase set.  Guard against a future module
-    import accidentally displacing it."""
-    import __spark_entry__ as E
-    from lnex_spark.oracles import _PRIORITY
-
-    qk = list(E.queries())
-    assert qk[: len(_PRIORITY)] == _PRIORITY
-    assert len(_PRIORITY) == 50
-    sql = E.oracle_sql()
-    rows_only = {k for k in _PRIORITY if k not in sql}
-    # round-5 window: 100% never-driver-checked ops (VERDICT r04 item
-    # 1), every slot hash-checkable — no rows-only entries
-    assert rows_only == set()
 
 
 def test_classify_new_conversations(spark):

@@ -62,8 +62,8 @@ def _rows(df) -> Counter:
 
 @pytest.mark.parametrize(
     "kwargs",
-    [{}, {"salt_partitions": 4}, {"dedup_texts": True}],
-    ids=["unsalted", "salted", "dedup"],
+    [{}, {"salt_partitions": 4}],
+    ids=["unsalted", "salted"],
 )
 def test_extract_link_equals_reference_chain(model, transcripts, kwargs):
     w = score_candidates(

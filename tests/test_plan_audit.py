@@ -2,14 +2,15 @@
 
 tools/explain_audit.py greps the formatted plans of the engine's key
 operators for the shapes we require at scale (flagship broadcast join,
-pushdown, codegen fusion, no-join as-of, no-Python minhash, ...); the
-closing gates run it by hand each round.  This test runs the same
-audit in a subprocess and asserts zero want/forbid failures, so a
-plan-shape regression (a lost broadcast, a reintroduced self-join, a
-Python island reappearing in a relational pipeline) fails CI instead
-of only the next manual audit.
+pushdown, codegen fusion, no-Python minhash, broadcast-anti triple
+merge, ...); the closing gates run it by hand each round.  This test
+runs the same audit in a subprocess and asserts zero want/forbid
+failures, so a plan-shape regression (a lost broadcast, a reintroduced
+self-join, a Python island reappearing in a relational pipeline) fails
+CI instead of only the next manual audit.
 
-Boots a Spark JVM and plans ~25 operators (~2-4 min), so env-gated:
+Boots a second Spark JVM and plans 20 operators (~25 s on 4 vCPU), so
+env-gated:
 
     PLAN_AUDIT=1 python -m pytest tests/test_plan_audit.py -q
 """
@@ -28,7 +29,7 @@ ROOT = Path(__file__).resolve().parent.parent
 
 pytestmark = pytest.mark.skipif(
     os.environ.get("PLAN_AUDIT") != "1",
-    reason="boots Spark and plans ~25 operators (~2-4 min); opt in with PLAN_AUDIT=1",
+    reason="boots a second Spark JVM (~25 s); opt in with PLAN_AUDIT=1",
 )
 
 

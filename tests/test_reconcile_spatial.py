@@ -1,5 +1,5 @@
 """Unit tests for reconciliation, interval sweep, negative sampling,
-and the grid-bucketed nearest-site join (oracle_defs23 operators)."""
+and the grid-bucketed nearest-site join."""
 
 from __future__ import annotations
 

@@ -1,8 +1,7 @@
 """RocksDB state store provider: the state backend a 100 TB streaming
 deployment actually runs (bounded executor memory, state spills to
 local SST files + changelog). Results must be identical to the
-default HDFS-backed provider, for both a built-in streaming
-aggregation and the custom applyInPandasWithState operator.
+default HDFS-backed provider for a built-in streaming aggregation.
 """
 
 from __future__ import annotations
@@ -12,9 +11,6 @@ import pytest
 
 ROCKS = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 EVENTS_SCHEMA = "user_id long, event_type string"
-MENTIONS_SCHEMA = (
-    "conv_id string, turn_idx int, start int, end int, surface string, norm string"
-)
 
 
 @pytest.fixture()
@@ -60,31 +56,3 @@ def test_rocksdb_agg_matches_batch(spark, tmp_path, rocksdb_conf):
     got_state = {r["key"]["event_type"]: r["value"]["count"] for r in state.collect()}
     assert got_state == expect
 
-
-def test_rocksdb_first_mentions_matches_default(spark, tmp_path, rocksdb_conf):
-    from lnex_spark.streaming.stateful import stream_first_mentions
-
-    src = str(tmp_path / "src")
-    rows = [
-        (f"c{i % 5}", i, 0, 4, "Addr", f"norm{i % 3}")
-        for i in range(60)
-    ]
-    spark.createDataFrame(rows, MENTIONS_SCHEMA).repartition(3).write.parquet(src)
-
-    out = str(tmp_path / "out")
-    q = (
-        stream_first_mentions(spark.readStream.schema(MENTIONS_SCHEMA).parquet(src))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    res = spark.read.parquet(out)
-    assert res.count() == 60
-    firsts = [(r["conv_id"], r["norm"]) for r in res.filter("is_first").collect()]
-    # exactly one first-mention flag per (conv_id, norm) pair
-    assert len(firsts) == len(set(firsts)) == 15

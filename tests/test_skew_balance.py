@@ -73,24 +73,3 @@ def test_suggest_salt_detects_hot_key(spark):
 
     # deterministic sampling probe agrees on the obvious skew
     assert suggest_salt_partitions(skewed, 8, sample_fraction=0.5) == 8
-
-
-def test_key_skew_profile_uniform_and_hot(spark):
-    from lnex_spark.operators.skew import key_skew_profile
-
-    uniform = spark.createDataFrame(
-        [(f"k{i}", j) for i in range(4) for j in range(5)], "conv_id string, v int"
-    )
-    r = key_skew_profile(uniform).collect()[0]
-    assert (r["n_keys"], r["total"], r["gini"], r["top1_share"]) == (4, 20, 0.0, 0.25)
-
-    # counts a:8, b:1, c:1 -> ascending rank sum 1*1+2*1+3*8 = 27
-    # gini = 2*27/(3*10) - 4/3 = 0.466667, top1 = 0.8
-    hot = spark.createDataFrame(
-        [("a", i) for i in range(8)] + [("b", 0), ("c", 0)], "conv_id string, v int"
-    )
-    r = key_skew_profile(hot).collect()[0]
-    assert (r["n_keys"], r["total"]) == (3, 10)
-    assert abs(r["gini"] - 0.466667) < 1e-6
-    assert abs(r["top1_share"] - 0.8) < 1e-6
-    assert r["top10_share"] == 1.0

@@ -53,109 +53,3 @@ def test_stream_matches_batch(spark, fixture_data, model, tmp_path):
     assert sorted(tuple(r) for r in got.select(*cols).collect()) == sorted(
         tuple(r) for r in batch.select(*cols).collect()
     )
-
-
-MENTIONS_SCHEMA = (
-    "conv_id string, turn_idx int, start int, end int, surface string, norm string"
-)
-
-
-def _run_first_mentions_stream(spark, src, tmp_path, name, **reader_opts):
-    from lnex_spark.streaming.stateful import stream_first_mentions
-
-    reader = spark.readStream.schema(MENTIONS_SCHEMA)
-    for k, v in reader_opts.items():
-        reader = reader.option(k, v)
-    out_dir = str(tmp_path / f"{name}_out")
-    q = (
-        stream_first_mentions(reader.parquet(src))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.read.parquet(out_dir)
-
-
-def test_stateful_first_mentions_stream_matches_batch(spark, fixture_data, model, tmp_path):
-    """applyInPandasWithState first-mention flags: exact parity with
-    the relational batch form when all data arrives in one micro-batch,
-    and the one-True-per-(conv,norm) invariant across arbitrary
-    micro-batch splits (arrival order then defines which row wins —
-    batch parity is only promised for in-order streams)."""
-    from lnex_spark.operators.extract import extract_mentions_df
-    from lnex_spark.streaming.stateful import first_mention_flags
-
-    transcripts = to_spark_transcripts(spark, fixture_data["transcripts"])
-    mentions = extract_mentions_df(transcripts, model.bc_struct)
-    src = str(tmp_path / "mentions_src")
-    mentions.repartition(2).write.parquet(src)
-
-    # single micro-batch -> exact parity with the window form
-    got = _run_first_mentions_stream(spark, src, tmp_path, "single")
-    want = first_mention_flags(mentions)
-    got_rows = sorted(tuple(r) for r in got.collect())
-    want_rows = sorted(
-        tuple(r) for r in want.select("conv_id", "turn_idx", "start", "norm", "is_first").collect()
-    )
-    assert got_rows == want_rows
-    assert any(not r[-1] for r in got_rows)  # repeats exist in the fixture
-
-    # one file per micro-batch -> state carries across batches; the
-    # row set and the exactly-one-first invariant must still hold
-    got2 = _run_first_mentions_stream(
-        spark, src, tmp_path, "multi", maxFilesPerTrigger=1
-    )
-    assert sorted(tuple(r)[:4] for r in got2.collect()) == sorted(r[:4] for r in want_rows)
-    firsts = (
-        got2.filter("is_first").groupBy("conv_id", "norm").count().filter("count != 1").count()
-    )
-    assert firsts == 0
-
-
-def test_stream_session_window_matches_batch_sessionize(spark, tmp_path):
-    """Native session_window streaming agg agrees with the batch
-    lag+cumsum sessionization on closed data: same session count,
-    per-session event counts, and start timestamps."""
-    from pyspark.sql import functions as F
-
-    from lnex_spark.operators.sessions import session_stats, sessionize
-    from lnex_spark.streaming.stream import stream_session_stats
-
-    ev = spark.range(0, 300).select(
-        F.col("id").alias("event_id"),
-        (F.col("id") % 5).alias("user_id"),
-        # bursts of 10 events 1 min apart, then a 2h gap
-        F.timestamp_seconds(
-            F.lit(1704067200) + (F.col("id") / 50).cast("int") * 7200 + (F.col("id") % 50) * 60
-        ).alias("ts"),
-    )
-    src = str(tmp_path / "ev_src")
-    ev.write.parquet(src)
-
-    stream = spark.readStream.schema("event_id long, user_id long, ts timestamp").parquet(src)
-    q = (
-        stream_session_stats(stream, gap="30 minutes")
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["start_ts"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM sess_out").collect()
-    }
-
-    batch = session_stats(sessionize(ev, gap_seconds=1800))
-    want = {
-        (r["user_id"], r["start_us"]): r["n_events"]
-        for r in batch.collect()
-    }
-    # align keys: streaming start_ts (timestamp) -> epoch micros
-    got_us = {(u, int(ts.timestamp() * 1_000_000)): n for (u, ts), n in got.items()}
-    assert got_us == want

@@ -1,8 +1,5 @@
 """Engine-level invariants for the corpus-statistics operators
-(operators/textstats.py) and registry completeness of the fourth
-oracle batch.  The value-level correctness of every op lives in the
-DuckDB oracle harness (tools/check_oracles.py / the driver); these
-tests pin the semantics on tiny hand-checkable inputs.
+(operators/textstats.py), pinned on tiny hand-checkable inputs.
 """
 
 from __future__ import annotations
@@ -65,22 +62,6 @@ def test_pmi_pair_ordering_and_value(docs):
     # min_pair_count filters the singleton pairs
     out2 = {(r.tok_a, r.tok_b) for r in pmi_pairs(docs, min_pair_count=2).collect()}
     assert out2 == {("apple", "banana"), ("banana", "cherry")}
-
-
-def test_oracle_registry_batch4_complete():
-    from lnex_spark.oracles import duckdb_sql, spark_queries
-
-    batch4 = {
-        "tfidf_top_terms", "bm25_scores", "pmi_copairs", "window_suite_orders",
-        "set_all_priorities", "string_agg_orders", "stats_corr_lineitem",
-        "hist_totalprice", "fuzzy_link_brands", "tpch_q3_shipping",
-        "tpch_q18_bigorders", "tri_count_events", "mode_median_events",
-        "date_funcs_orders", "bit_agg_events", "pareto_parts",
-    }
-    qs, sqls = spark_queries(), duckdb_sql()
-    assert batch4 <= set(qs)
-    # every batch-4 op is fully SQL-verified — none fall back to rows-only
-    assert batch4 <= set(sqls)
 
 
 def test_bpe_merges_hand_corpus(spark):

@@ -17,7 +17,8 @@ new genuine finding in the same op still fails:
 It also asserts that every op still plans: an op that stops planning
 drops out of the audit's coverage.
 
-Planning 652 ops boots Spark and takes ~4-6 min, so it is env-gated:
+Planning all 198 ops takes ~2 min (127 s on 4 vCPU), so it is
+env-gated:
 
     WINDOW_AUDIT=1 python -m pytest tests/test_window_audit.py -q
 """
@@ -31,11 +32,14 @@ from pathlib import Path
 
 import pytest
 
+from tests.test_registry_doc import KG_OPS
+
 ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT / "tools"))
 
 pytestmark = pytest.mark.skipif(
     os.environ.get("WINDOW_AUDIT") != "1",
-    reason="plans all registry ops (~4-6 min); opt in with WINDOW_AUDIT=1",
+    reason="plans all registry ops (~2 min); opt in with WINDOW_AUDIT=1",
 )
 
 # classifier false-positives, dispositioned in BENCH.md round-4 audit:
@@ -86,6 +90,8 @@ def test_no_new_raw_scale_global_windows(spark):
     )
     # the audit must actually have seen the registry (catch silent
     # registry-load failures masquerading as a clean audit)
-    assert len(E.queries()) > 600
+    import gen_registry
+
+    assert KG_OPS <= set(E.queries()) == set(gen_registry.op_locations())
     # an op that fails planning is silently skipped by the audit
     assert errors.keys() <= PLANNING_ERRORS_ALLOWED, errors

@@ -43,7 +43,7 @@ def main() -> int:
     t = (
         transcripts_from_documents(docs, replicas=replicas)
         .select("conv_id", "turn_idx", "role", "text")
-        .repartition(cores * 2)  # match bench.py's input layout — the
+        .repartition(cores * 2)  # two tasks per core — the
         # derived frame otherwise inherits the tiny parquet scan's
         # partition count and caps every stage at ~4 tasks
         .persist()

@@ -30,17 +30,9 @@ CHECKS = {
     "agg": dict(want=["HashAggregate", r"partial_sum"]),
     # explicit codegen-mode dump: the whole built-in chain must fuse
     "codegen": dict(want=[r"Found 1 WholeStageCodegen subtrees|WholeStageCodegen \(1\)"]),
-    # as-of join must be the union+window form: one keyed Exchange,
-    # NO join operator of any kind in the plan
-    "asof": dict(want=["Window"], forbid=["Join", "CartesianProduct"]),
-    # both sessionize windows must share one shuffle (same keying)
-    "sessionize": dict(want=["Window"]),
     # IVF: centroid side broadcast; candidate join is broadcast too
     # (probes are tiny); no SortMergeJoin anywhere
     "ivf": dict(want=["BroadcastHashJoin"], forbid=["SortMergeJoin"]),
-    # correlated scalar subquery must be decorrelated into agg+join —
-    # a per-row subquery would show a (Scalar)Subquery node per row
-    "q17": dict(want=["HashAggregate", "Join"], forbid=["ScalarSubquery"]),
     # co-mention pairs are unrolled array-side from collect_set —
     # NO self-join anywhere in the plan
     "comention": dict(want=["HashAggregate", "Generate"], forbid=["Join"]),
@@ -111,24 +103,12 @@ CHECKS = {
         want=["Window"],
         forbid=["Join", "CartesianProduct", "EvalPython", "MapInPandas"],
     ),
-    # r2 duplicate-5-gram spans: explode + gram-frequency hash agg +
-    # flag-back equi-join — never all-pairs, never Python
-    "dup_spans": dict(
-        want=["HashAggregate", "Generate", "Join"],
-        forbid=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
-    ),
     # r2 conversation fingerprint: ONE groupBy(conv_id) with
     # sort_array(collect_list(struct)) — deterministic order WITHOUT a
     # window pass, so exactly one Exchange and no Window/Join
     "conv_fp": dict(
         want=[r"(Hash|Sort|ObjectHash)Aggregate"],
         forbid=["Window", "Join", "EvalPython", "MapInPandas"],
-    ),
-    # r2 Gopher gates: two-level aggregate with map-side partials —
-    # all built-ins
-    "gopher": dict(
-        want=["HashAggregate", r"partial_sum"],
-        forbid=["Join", "EvalPython", "MapInPandas"],
     ),
 }
 
@@ -185,25 +165,14 @@ def main() -> int:
 
     plans["codegen"] = grab_codegen(quality_features(docs))
 
-    from lnex_spark.operators.asof import asof_join_backward
-    from lnex_spark.operators.sessions import session_stats, sessionize
     from lnex_spark.operators.similarity import cosine_topk_ivf
 
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "user_id", "ts", F.col("value").alias("err_value")
-    )
-    plans["asof"] = grab(asof_join_backward(clicks, errors, on=["user_id"]))
-    plans["sessionize"] = grab(session_stats(sessionize(ev)))
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
     plans["ivf"] = grab(cosine_topk_ivf(emb, q))
 
-    from lnex_spark.oracle_defs3 import scalar_subquery_q17
     from lnex_spark.operators.graph import comention_edges
 
-    plans["q17"] = grab(scalar_subquery_q17(spark, sf))
     triples = spark.createDataFrame(
         [("c1#0", "mentionsLocation", 7), ("c1#1", "mentionsLocation", 3)],
         "subj string, pred string, obj long",
@@ -265,17 +234,10 @@ def main() -> int:
     )
     plans["kg_merge"] = grab(merge_triples(big, batch))
 
-    from lnex_spark.oracle_defs223 import (
-        conv_dedup_fingerprint,
-        dup_ngram_spans,
-        gopher_quality_gates,
-        turn_context_assembly,
-    )
+    from lnex_spark.oracle_defs223 import conv_dedup_fingerprint, turn_context_assembly
 
     plans["ctx_assembly"] = grab(turn_context_assembly(spark, sf))
-    plans["dup_spans"] = grab(dup_ngram_spans(spark, sf))
     plans["conv_fp"] = grab(conv_dedup_fingerprint(spark, sf))
-    plans["gopher"] = grab(gopher_quality_gates(spark, sf))
 
     import re
 

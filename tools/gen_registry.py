@@ -1,10 +1,10 @@
 """Generate REGISTRY.md — the grep-able index of every queries() op:
 op name → defining module:line → oracle kind → driver-check history.
 
-The 225 oracle_defs*.py modules register ops via side effect, which
-makes "where is op X?" a grep across 48k LoC; this table is the map
-(VERDICT r04 item 8).  Regenerated by tests/test_registry_doc.py so it
-can never drift from the code.
+The oracle_defs modules that oracles._load_all_defs imports register
+ops via side effect; this table is the map from op name to its
+decorator (VERDICT r04 item 8).
+tests/test_registry_doc.py fails when it drifts from the code.
 
 Usage:  python tools/gen_registry.py [--check]
   --check: exit 1 if REGISTRY.md is stale instead of rewriting it.
@@ -47,44 +47,32 @@ def driver_history() -> dict[str, list[int]]:
 
 
 def build_markdown() -> str:
-    from lnex_spark.oracles import _PRIORITY, duckdb_sql, spark_queries
+    from lnex_spark.oracles import duckdb_sql, spark_queries
 
     qs = spark_queries()
     sql = duckdb_sql()
     locs = op_locations()
     hist = driver_history()
-    window = set(_PRIORITY[:50])
 
-    # STABLE row order: the registry dict's tail order is
-    # first-registration order, which shifts if some test imported an
-    # oracle_defs module before the sorted bulk load — order the doc by
-    # (priority window first, then module file + line), which depends
-    # only on the source tree
+    # row order depends only on the source tree: module file, then line
     def sort_key(name: str):
-        loc = locs.get(name, "~:0")
-        mod, _, line = loc.partition(":")
+        mod, _, line = locs.get(name, "~:0").partition(":")
         return (mod, int(line or 0), name)
-
-    head = [k for k in _PRIORITY if k in qs]
-    tail = sorted((k for k in qs if k not in set(head)), key=sort_key)
-    ordered_ops = head + tail
 
     lines = [
         "# REGISTRY — operator index (generated by tools/gen_registry.py; do not edit)",
         "",
         f"{len(qs)} queries() ops; {len(sql)} carry a DuckDB value-hash oracle,",
-        f"{len(qs) - len(sql)} are rows-only by design.  'driver rounds' lists the",
-        "rounds whose CORRECTNESS_r*.json checked the op; 'r5w' marks membership",
-        "in the round-5 driver window (the first 50 queries() keys).",
+        f"{len(qs) - len(sql)} are rows-only by design.  'rounds checked' lists the",
+        "rounds whose CORRECTNESS_r*.json checked the op.",
         "",
-        "| op | where | oracle | driver rounds | r5w |",
-        "|---|---|---|---|---|",
+        "| op | where | oracle | rounds checked |",
+        "|---|---|---|---|",
     ]
-    for name in ordered_ops:
+    for name in sorted(qs, key=sort_key):
         kind = "sql-hash" if name in sql else "rows-only"
         rounds = ",".join(f"r{r}" for r in hist.get(name, [])) or "—"
-        w = "●" if name in window else ""
-        lines.append(f"| {name} | {locs.get(name, '?')} | {kind} | {rounds} | {w} |")
+        lines.append(f"| {name} | {locs.get(name, '?')} | {kind} | {rounds} |")
     lines.append("")
     return "\n".join(lines)
 
