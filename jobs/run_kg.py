@@ -1,8 +1,9 @@
 """spark-submit entrypoint for the KG construction job (north rule:
 ``spark-submit --py-files lnex_spark.zip jobs/run_kg.py ...``).
 
-Master/executor conf comes from the launcher (cluster mode); this
-script only declares the job. Resumable by default: rerunning with the
+Master/executor conf comes from the launcher (``--master``; local only
+when none is set); this script only declares the job and prints the
+master it ran on. Resumable by default: rerunning with the
 same --manifest skips completed conv_id buckets.
 
 Example (cluster):
@@ -85,7 +86,11 @@ def main(argv=None) -> None:
     write_triples(triples, f"{args.out}/mention_triples")
     write_triples(region_triples(gaz), f"{args.out}/region_triples")
     n = spark.read.parquet(f"{args.out}/mention_triples").count()
-    print(json.dumps({"processed_buckets": len(processed), "mention_triples": n}))
+    print(json.dumps({
+        "master": spark.sparkContext.master,
+        "processed_buckets": len(processed),
+        "mention_triples": n,
+    }))
 
 
 if __name__ == "__main__":

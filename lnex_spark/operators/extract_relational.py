@@ -226,7 +226,7 @@ def ngram_candidates(
 def _greedy(pdf: pd.DataFrame) -> pd.DataFrame:
     cands = sorted(
         zip(pdf["start"].values, pdf["end"].values, pdf["norm"].values),
-        key=lambda c: (-(c[1] - c[0]), c[0], c[2]),
+        key=lambda c: (-(c[1] - c[0]), -(c[2].count(" ") + 1), c[0], c[2]),
     )
     accepted: list[tuple[int, int, str]] = []
     for s, e, g in cands:

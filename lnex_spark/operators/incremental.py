@@ -36,8 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-VOTES_SCHEMA = "norm string, geo_id long, votes long"
-
 
 def batch_votes(winners: DataFrame) -> DataFrame:
     """Vote contribution of one batch of L2 winners."""

@@ -17,6 +17,13 @@ Protocol:
      ``bucket`` is read back);
   3. a killed job reruns step 1 and skips finished buckets; bucket
      output is overwritten atomically per-partition → idempotent.
+
+The run identity (bucket count, gazetteer fingerprint, input files) is
+written once next to the manifest, at ``<manifest>_identity``. A resume
+whose identity differs is refused: a different bucket count re-buckets
+conversations under done bucket ids (their turns are never processed),
+and a different gazetteer or input mixes old and new linked mentions.
+Manifests written before the identity existed get it on their next run.
 """
 
 from __future__ import annotations
@@ -27,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = "bucket int, n_turns long, n_mentions long, wall_ms long, batch_id string"
+IDENTITY_SCHEMA = "n_buckets int, model string, input array<string>"
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -61,6 +69,30 @@ def completed_buckets(spark: SparkSession, manifest_path: str) -> list[int]:
 def pending_buckets(spark: SparkSession, manifest_path: str, n_buckets: int) -> list[int]:
     done = set(completed_buckets(spark, manifest_path))
     return [b for b in range(n_buckets) if b not in done]
+
+
+def check_run_identity(spark: SparkSession, manifest_path: str, identity: dict) -> None:
+    """Write ``identity`` (the IDENTITY_SCHEMA fields) next to the
+    manifest on the first run; on a resume, raise ValueError naming the
+    first field that differs from the stored identity."""
+    path = f"{manifest_path.rstrip('/')}_identity"
+    stored = None
+    if path_exists(spark, path) is not False:
+        try:
+            stored = spark.read.parquet(path).first()
+        except Exception:
+            stored = None
+    if stored is None:
+        row = (identity["n_buckets"], identity["model"], identity["input"])
+        spark.createDataFrame([row], IDENTITY_SCHEMA).coalesce(1).write.parquet(path)
+        return
+    for field, was in stored.asDict().items():
+        if was != identity[field]:
+            raise ValueError(
+                f"cannot resume {manifest_path}: run identity field {field!r} changed "
+                f"(manifest: {str(was)[:200]}, this run: {str(identity[field])[:200]}); "
+                "use the original settings or a fresh manifest and output path"
+            )
 
 
 def record_buckets(

@@ -19,10 +19,9 @@ routinely:
   (end,-1) deltas, aggregated per timestamp (one hash agg with
   map-side partials), then ONE running sum ordered by time.  The
   naive form is an O(n²) interval self-join; the sweep is linear and
-  shuffles only the boundary table.  The final running sum is a
-  global window — bounded here because the boundary table is
-  key-count-sized (2 rows per interval); at full scale the ECDF-style
-  pre-bucketing used by ks_drift_events applies.  Coincident
+  shuffles only the boundary table.  The running sum is the
+  distributed prefix sum of operators/scalable_windows, so no stage
+  moves the boundary table to one partition.  Coincident
   boundaries are netted per timestamp first, so a start and an end at
   the same instant are order-independent (closed-interval
   convention) and the result is deterministic.

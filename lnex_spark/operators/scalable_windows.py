@@ -189,10 +189,6 @@ def _bucket_expr(
     return out
 
 
-def _order_exprs(order: list[Column | str]) -> list[Column]:
-    return [F.col(o) if isinstance(o, str) else o for o in order]
-
-
 def attach_rank(
     df: DataFrame,
     order: list[Column | str],

@@ -192,8 +192,11 @@ def extract_mentions(
                 candidates.append((start0, endj, gram))
             j += 1
     # M2: longest-match-wins — reject any candidate overlapping an
-    # already-accepted longer (or equal-length, earlier) one.
-    candidates.sort(key=lambda c: (-(c[1] - c[0]), c[0], c[2]))
+    # already-accepted longer one: longer in characters, then in tokens
+    # (every token of a hashtag carries the hashtag's whole span, so
+    # only the token count tells "adyar nagar" from "adyar" there),
+    # then earlier.
+    candidates.sort(key=lambda c: (-(c[1] - c[0]), -(c[2].count(" ") + 1), c[0], c[2]))
     accepted: list[tuple[int, int, str]] = []
     for s, e, g in candidates:
         if all(e <= as_ or s >= ae for as_, ae, _ in accepted):

@@ -1,12 +1,5 @@
-"""Sixty-second oracle-registry module: operating-point selection,
-clustering quality, and rank correlation.
-
-  * f1_threshold_docs — precision/recall/F1 of the rule
-    "lang='en' iff n_chars > t" over the same fixed 64-char
-    threshold grid as stump_threshold_docs, with an is_best argmax
-    flag on rounded F1.  Threshold selection is the deployment step
-    after AUC says the score is usable; one pass builds the
-    cumulative counts, the grid join is broadcast-sized.
+"""Oracle pairs that run ``operators.clustering`` and
+``operators.similarity``: clustering quality and rank correlation.
 
   * silhouette_embeddings — simplified (centroid-based) silhouette
     of the verified k-means clustering: per vector a = distance to
@@ -38,76 +31,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-_F1_SQL = """
-    WITH labeled AS (
-      SELECT n_chars, CAST(lang = 'en' AS INTEGER) AS pos FROM documents
-    ),
-    tot AS (SELECT COUNT(*) AS n, SUM(pos) AS np FROM labeled),
-    grid AS (SELECT unnest(range(1, 16)) * 64 AS t),
-    cms AS (
-      SELECT g.t,
-             (SELECT COALESCE(SUM(pos), 0) FROM labeled l WHERE l.n_chars > g.t) AS tp,
-             (SELECT COUNT(*) FROM labeled l WHERE l.n_chars > g.t) AS pred_pos
-      FROM grid g
-    ),
-    scored AS (
-      SELECT t, tp, pred_pos, tot.np,
-             CASE WHEN pred_pos = 0 THEN 0.0 ELSE tp * 1.0 / pred_pos END AS prec,
-             tp * 1.0 / tot.np AS rec,
-             CASE WHEN tp = 0 THEN 0.0
-                  ELSE 2.0 * tp / (pred_pos + tot.np) END AS f1
-      FROM cms, tot
-    )
-    SELECT t, CAST(tp AS BIGINT) AS tp, pred_pos,
-           ROUND(prec, 6) AS prec, ROUND(rec, 6) AS rec, ROUND(f1, 6) AS f1,
-           CAST(ROUND(f1, 6) = (SELECT MAX(ROUND(f1, 6)) FROM scored) AS INTEGER) AS is_best
-    FROM scored
-"""
-
-
-@register("f1_threshold_docs", _F1_SQL)
-def f1_threshold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    labeled = d.select("n_chars", (F.col("lang") == "en").cast("int").alias("pos"))
-    tot = labeled.agg(F.count("*").alias("n"), F.sum("pos").alias("np"))
-    grid = spark.range(1, 16).select((F.col("id") * 64).alias("t"))
-    per_score = labeled.groupBy("n_chars").agg(
-        F.count("*").alias("cnt"), F.sum("pos").alias("p")
-    )
-    cms = (
-        grid.join(per_score, per_score["n_chars"] > grid["t"], "left")
-        .groupBy("t")
-        .agg(
-            F.coalesce(F.sum("p"), F.lit(0)).alias("tp"),
-            F.coalesce(F.sum("cnt"), F.lit(0)).alias("pred_pos"),
-        )
-        .crossJoin(tot)
-    )
-    prec = F.when(F.col("pred_pos") == 0, 0.0).otherwise(F.col("tp") * 1.0 / F.col("pred_pos"))
-    rec = F.col("tp") * 1.0 / F.col("np")
-    f1 = F.when(F.col("tp") == 0, 0.0).otherwise(
-        2.0 * F.col("tp") / (F.col("pred_pos") + F.col("np"))
-    )
-    scored = cms.select(
-        "t",
-        "tp",
-        "pred_pos",
-        F.round(prec, 6).alias("prec"),
-        F.round(rec, 6).alias("rec"),
-        F.round(f1, 6).alias("f1"),
-    )
-    best = scored.agg(F.max("f1").alias("best_f1"))
-    return scored.crossJoin(best).select(
-        "t",
-        "tp",
-        "pred_pos",
-        "prec",
-        "rec",
-        "f1",
-        (F.col("f1") == F.col("best_f1")).cast("int").alias("is_best"),
-    )
 
 
 _SIL_SQL = f"""

@@ -1,12 +1,11 @@
 """Operator-level correctness pairs for the driver's DuckDB oracle.
 
-Every SURVEY.md §2A operator, each library operator kept in
-``operators/`` and ``sources/``, and each analytics op kept for its
-invariant tests gets a (Spark callable, ANSI-SQL string) pair
-exercised on the sf0.01 parquet tables (region nation customer
-supplier part orders lineitem events documents embeddings). Column
-names/aliases must match exactly between the two — the comparison
-hashes values after sorting columns by name.
+Every SURVEY.md §2A operator and each library operator kept in
+``operators/`` and ``sources/`` gets a (Spark callable, ANSI-SQL
+string) pair exercised on the sf0.01 parquet tables (region nation
+customer supplier part orders lineitem events documents embeddings).
+Column names/aliases must match exactly between the two — the
+comparison hashes values after sorting columns by name.
 
 Ops whose semantics aren't SQL-expressible (broadcast match structure,
 Arrow matcher) appear in ``spark_queries`` only → rows-only check.
@@ -36,28 +35,17 @@ def register(name: str, sql: str | None = None):
 # first, so the SURVEY.md §2A ops are the first keys of queries() and
 # any 50-key prefix sample holds all of them; the rest check the
 # library operators (similarity, dedup, curation, graph, multimodal,
-# ...) and the analytics ops that keep invariant tests of their own.
+# ...).  An op stays only while it runs code it checks.
 MODULES: tuple[str, ...] = (
     "oracle_defs", "oracle_defs2", "oracle_defs3", "oracle_defs4",
     "oracle_defs5", "oracle_defs7", "oracle_defs12", "oracle_defs14",
     "oracle_defs23", "oracle_defs24", "oracle_defs25", "oracle_defs26",
     "oracle_defs27", "oracle_defs28", "oracle_defs29", "oracle_defs30",
     "oracle_defs31", "oracle_defs32", "oracle_defs33", "oracle_defs35",
-    "oracle_defs36", "oracle_defs38", "oracle_defs39", "oracle_defs44",
-    "oracle_defs45", "oracle_defs46", "oracle_defs48", "oracle_defs49",
-    "oracle_defs50", "oracle_defs51", "oracle_defs52", "oracle_defs53",
-    "oracle_defs54", "oracle_defs55", "oracle_defs57", "oracle_defs58",
-    "oracle_defs61", "oracle_defs62", "oracle_defs63", "oracle_defs66",
-    "oracle_defs67", "oracle_defs68", "oracle_defs70", "oracle_defs76",
-    "oracle_defs79", "oracle_defs89", "oracle_defs97", "oracle_defs104",
-    "oracle_defs109", "oracle_defs112", "oracle_defs125", "oracle_defs128",
-    "oracle_defs134", "oracle_defs137", "oracle_defs141", "oracle_defs147",
-    "oracle_defs155", "oracle_defs157", "oracle_defs158", "oracle_defs163",
-    "oracle_defs173", "oracle_defs174", "oracle_defs176", "oracle_defs184",
-    "oracle_defs185", "oracle_defs193", "oracle_defs204", "oracle_defs209",
-    "oracle_defs213", "oracle_defs217", "oracle_defs222", "oracle_defs223",
-    "oracle_defs224", "oracle_defs225", "oracle_defs_library",
-    "oracle_defs_media",
+    "oracle_defs38", "oracle_defs39", "oracle_defs44", "oracle_defs45",
+    "oracle_defs46", "oracle_defs53", "oracle_defs62", "oracle_defs79",
+    "oracle_defs147", "oracle_defs223", "oracle_defs224",
+    "oracle_defs225", "oracle_defs_library", "oracle_defs_media",
 )
 
 

@@ -25,6 +25,7 @@ again need a corpus-global canonicalization in ``finalize_triples``.
 
 from __future__ import annotations
 
+import hashlib
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -139,6 +140,28 @@ def run_pipeline(
     return mention_triples(final), region_triples(gazetteer_df)
 
 
+def run_identity(transcripts: DataFrame, model: GazetteerModel, n_buckets: int) -> dict:
+    """What a resumed run must share with the run that wrote its
+    manifest: the bucket count, a fingerprint of the gazetteer (the
+    ``best`` link lookup plus the match structure) and the sorted input
+    files of ``transcripts``."""
+    best = model.best
+    n, h = best.agg(
+        F.count(F.lit(1)), F.sum(F.xxhash64(*best.columns).cast("decimal(38,0)"))
+    ).first()
+    struct = model.bc_struct.value
+    digest = hashlib.sha256(f"{n}:{h}:{struct.max_tokens}".encode())
+    for name in sorted(struct.full_names):
+        digest.update(f"\n{name}".encode())
+    for word, freq in sorted(struct.unigram.items()):
+        digest.update(f"\n{word}={freq}".encode())
+    return {
+        "n_buckets": n_buckets,
+        "model": digest.hexdigest(),
+        "input": sorted(transcripts.inputFiles()),
+    }
+
+
 def run_resumable(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -159,15 +182,19 @@ def run_resumable(
     mentions, and the batch's wall time. Linked mentions are final
     (context-free L2, see the module docstring), so a resumed run is
     bit-identical to an uninterrupted one regardless of where it was
-    killed. Returns the bucket ids processed in this invocation.
+    killed. A resume whose run identity (:func:`run_identity`) differs
+    from the one stored next to the manifest raises ValueError. Returns
+    the bucket ids processed in this invocation.
     """
     from lnex_spark.operators.lineage import (
         StageTimer,
+        check_run_identity,
         pending_buckets,
         record_buckets,
         with_bucket,
     )
 
+    check_run_identity(spark, manifest_path, run_identity(transcripts, model, n_buckets))
     pending = pending_buckets(spark, manifest_path, n_buckets)
     bucketed = with_bucket(transcripts, n_buckets)
     processed: list[int] = []

@@ -46,6 +46,19 @@ def _default_driver_memory() -> str:
     return f"{min(physical_mb // 2, _MAX_DRIVER_MB)}m"
 
 
+def _launcher_conf():
+    """The spark.* properties a launcher already set (``spark-submit
+    --master/--conf``, or the JVM of a session this process started);
+    empty when no JVM is up yet."""
+    from pyspark import SparkConf, SparkContext
+
+    if SparkContext._jvm is None and "PYSPARK_GATEWAY_PORT" in os.environ:
+        # under spark-submit the driver JVM is already up: attach to it so
+        # SparkConf() loads the launcher's properties
+        SparkContext._ensure_initialized()
+    return SparkConf()
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "lnex_spark",
@@ -54,24 +67,29 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS or *]`` so the same
-    code path serves pytest, perfbench, and spark-submit (where master
-    comes from the launcher and this arg stays None on purpose).
+    master=None keeps the launcher's master (spark-submit ``--master``,
+    so a job runs on whatever cluster it was submitted to) and falls
+    back to ``local[$SPARK_GRAFT_CPUS or *]`` only when none is set.
+    The shuffle-partition default is the launcher's setting, else
+    follows the master in use; the local driver heap is set only when
+    no launcher set a master, i.e. when this call starts the JVM.
     """
+    launcher = _launcher_conf()
+    launched = launcher.get("spark.master")
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = SparkSession.builder.appName(app_name)
-    if master:
-        builder = builder.master(master)
+        master = launched or (f"local[{cpus}]" if cpus else "local[*]")
+    builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_BASE_CONF)
+    if shuffle_partitions is None:
+        shuffle_partitions = launcher.get("spark.sql.shuffle.partitions")
     if shuffle_partitions is None:
         # match parallelism, not the 200 default: at local[N] a 200-way
         # shuffle just fragments the Arrow batches the matcher feeds on.
         n = master.split("[")[-1].rstrip("]") if "[" in master else "32"
         shuffle_partitions = 32 if n in ("*", "") else max(int(n), 4)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if "local" in master:
+    if "local" in master and launched is None:
         conf["spark.driver.memory"] = _default_driver_memory()
     if extra_conf:
         conf.update(extra_conf)

@@ -1,20 +1,17 @@
-"""Streaming extraction (SURVEY.md §2C — optional beyond the batch
-north rule, included for API completeness).
+"""Streaming KG build (SURVEY.md §2C).
 
 The extraction stage is stateless per turn (the only shared state —
 the gazetteer — is a broadcast), so the streaming variant is the SAME
 operators over a streaming DataFrame:
 
-  * ``stream_mentions``: readStream → fused extraction mapInPandas →
-    per-mention rows. No watermark needed (no aggregation state).
-  * ``stream_mention_rates``: windowed mention counts with a watermark
-    for late data — the monitoring companion query.
   * ``stream_triples_foreach_batch``: foreachBatch sink that links
     each micro-batch's mentions through the gazetteer model's
     best-per-norm lookup and appends them; epoch id is recorded so
     replayed batches stay idempotent. Linked mentions are final when
     written (context-free L2, see pipeline.py), so no periodic
     canonicalization job runs over the accumulated output.
+  * ``stream_link_static``: the link step as a stream-static join
+    inside the streaming query itself.
 """
 
 from __future__ import annotations
@@ -24,36 +21,6 @@ from pyspark.sql import functions as F
 
 from lnex_spark.operators.extract import extract_mentions_df
 from lnex_spark.operators.link import link_mentions
-
-
-def stream_mentions(transcripts_stream: DataFrame, bc_struct) -> DataFrame:
-    """Streaming DF in (same transcripts schema) → streaming mentions."""
-    return extract_mentions_df(transcripts_stream, bc_struct)
-
-
-def stream_mention_rates(
-    transcripts_stream: DataFrame,
-    bc_struct,
-    window: str = "5 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Mentions per (window, norm) with late-data tolerance.
-
-    Needs the event-time column, so extraction runs on a projection
-    that carries ``ts`` through the Arrow stage."""
-    with_ts = transcripts_stream.withWatermark("ts", watermark)
-    mentions = extract_mentions_df(
-        with_ts.select("conv_id", "turn_idx", "text"), bc_struct
-    )
-    keyed = mentions.join(
-        with_ts.select("conv_id", "turn_idx", "ts"), ["conv_id", "turn_idx"]
-    )
-    return (
-        keyed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "norm")
-        .agg(F.count("*").alias("n_mentions"))
-        .select(F.col("win.start").alias("win_start"), "norm", "n_mentions")
-    )
 
 
 def stream_triples_foreach_batch(

@@ -1,4 +1,4 @@
-"""Dedup / similarity / text-quality / multimodal operator tests."""
+"""Dedup / similarity / clustering / text-quality / multimodal operator tests."""
 
 from __future__ import annotations
 
@@ -7,6 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import SF0001 as SF
 from lnex_spark.operators import dedup, multimodal, similarity, textquality
 
 
@@ -457,3 +458,12 @@ def test_arrow_query_set_guard(emb):
         similarity.pq_adc_topk(emb, q, k=2, max_queries=1)
     # under the cap: unchanged behavior
     assert similarity.cosine_topk_bruteforce_arrow(emb, q, k=2, max_queries=3).count() > 0
+
+
+def test_silhouette_bounded(spark):
+    from lnex_spark.oracle_defs62 import silhouette_embeddings
+
+    rows = silhouette_embeddings(spark, SF).collect()
+    assert rows and sum(r.n for r in rows) == 300
+    for r in rows:
+        assert -1.0 <= r.avg_silhouette <= 1.0

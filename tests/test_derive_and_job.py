@@ -72,7 +72,8 @@ def test_spark_submit_pyfiles_launch(tmp_path):
     points at tmp, where no lnex_spark package exists), so every
     lnex_spark import — driver-side and inside executors' UDFs — must
     resolve from the shipped zip; the repo checkout is not on any
-    path. Asserts the job completes and materializes triples."""
+    path. Asserts the job completes on the launcher's master and
+    materializes triples."""
     import shutil
     import subprocess
 
@@ -107,6 +108,7 @@ def test_spark_submit_pyfiles_launch(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     report = json.loads(proc.stdout.strip().splitlines()[-1])
     assert report["processed_buckets"] == 2 and report["mention_triples"] > 0
+    assert report["master"] == "local[2]"  # the launcher's master, not local[*]
     assert (out / "mention_triples").is_dir()
 
 

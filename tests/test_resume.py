@@ -144,3 +144,56 @@ def test_triple_write_partitioned_and_pruned(spark, tmp_path):
         one.explain("formatted")
     assert "PartitionFilters" in buf.getvalue()
     assert "chennai" in buf.getvalue()
+
+
+def _killed_run(spark, t_df, model, tmp_path):
+    """An 8-bucket run killed after its first batch of 4; returns
+    (winners, manifest)."""
+    winners, manifest = str(tmp_path / "winners"), str(tmp_path / "manifest")
+    run_resumable(
+        spark, t_df, model, winners, manifest, n_buckets=8, buckets_per_batch=4, fail_after_batches=1
+    )
+    return winners, manifest
+
+
+def test_resume_refuses_changed_n_buckets(spark, fixture_data, model, tmp_path):
+    """Re-bucketing under a manifest of done bucket ids would skip the
+    turns that move into a done id."""
+    t_df = to_spark_transcripts(spark, fixture_data["transcripts"])
+    winners, manifest = _killed_run(spark, t_df, model, tmp_path)
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_resumable(spark, t_df, model, winners, manifest, n_buckets=12, buckets_per_batch=4)
+
+
+def test_resume_refuses_changed_gazetteer(spark, fixture_data, model, tmp_path):
+    """A resume with another gazetteer model (here: one entry fewer)
+    would mix its linked mentions with the first model's."""
+    t_df = to_spark_transcripts(spark, fixture_data["transcripts"])
+    winners, manifest = _killed_run(spark, t_df, model, tmp_path)
+    other = build_gazetteer(
+        spark,
+        to_spark_gaz(spark, fixture_data["gaz"][1:]),
+        to_spark_stopwords(spark, fixture_data["stopwords"]),
+        to_spark_wordlist(spark, fixture_data["wordlist"]),
+    )
+    with pytest.raises(ValueError, match="model"):
+        run_resumable(spark, t_df, other, winners, manifest, n_buckets=8, buckets_per_batch=4)
+
+
+def test_matching_resume_of_file_input_equals_uninterrupted(spark, fixture_data, model, tmp_path):
+    """Same bucket count, model and input files: the resume is accepted
+    and finalizes to the triples of an uninterrupted run."""
+    path = str(tmp_path / "transcripts")
+    to_spark_transcripts(spark, fixture_data["transcripts"]).write.parquet(path)
+    t_df = spark.read.parquet(path)
+    winners, manifest = _killed_run(spark, t_df, model, tmp_path)
+    rest = run_resumable(
+        spark, spark.read.parquet(path), model, winners, manifest, n_buckets=8, buckets_per_batch=4
+    )
+    assert len(rest) == 4
+
+    full = tmp_path / "full"
+    run_resumable(spark, t_df, model, str(full / "winners"), str(full / "manifest"), n_buckets=8)
+    resumed = {tuple(r) for r in finalize_triples(spark, winners).collect()}
+    assert resumed == {tuple(r) for r in finalize_triples(spark, str(full / "winners")).collect()}
+    assert resumed

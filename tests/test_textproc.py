@@ -203,3 +203,23 @@ def test_spans_roundtrip_adversarial():
     text = "RT :-p @u café <3 #tag x) ^___^ … 8)ok"
     for raw, s, e, _kind in tokenize_with_spans(text):
         assert text[s:e] == raw
+
+
+def test_hashtag_keeps_the_longest_name():
+    """Inside a hashtag every token carries the hashtag's span, so all
+    candidates tie on characters; the name with the most tokens must
+    win, as it does for the same words without the ``#`` (chennai
+    gazetteer, hp mode, built by the engine's driver-side G2-G7)."""
+    from lnex_spark.data import fixtures as FX
+    from lnex_spark.gazetteer.build import build_match_struct, build_unigram, build_variants
+
+    variants = build_variants(FX.gen_gazetteer("chennai"), set(FX.gen_stopwords()), "hp")
+    s = build_match_struct((v[0] for v in variants), build_unigram(variants, FX.gen_wordlist()))
+    seg = HashtagSegmenter(s.unigram)
+
+    def norms(text):
+        return [m[3] for m in extract_mentions(text, s.full_names, s.prefixes, s.max_tokens, seg)]
+
+    assert norms("adyar nagar is flooded") == ["adyar nagar"]
+    assert norms("#adyarnagar is flooded") == ["adyar nagar"]
+    assert norms("stuck in #velacherycentralnagar") == ["velachery central nagar"]

@@ -1,59 +1,32 @@
-"""Global-window audit as a regression gate (VERDICT r04 wart 2), opt-in.
+"""Global-window audit as a regression gate (VERDICT r04 wart 2).
 
 BENCH.md's round-4 audit table classified every registry op's global
 windows (0 raw / 0 raw-agg after the scalable_windows conversion); the
 table alone cannot stop a future edit from silently reintroducing an
 unpartitioned window over row-scale input.  This test re-runs
-tools/window_audit.py's plan walk over ALL registry ops and asserts
-every raw / raw-agg finding is one of the two known classifier
-false-positives documented in BENCH.md, pinned to its evidence so a
-new genuine finding in the same op still fails:
-
-  energy_distance_docs  2-group per-side aggregate; the key "side"
-                        matches the classifier's "id" fragment
-  err_ranking_docs      cascade window over a rank<=20-filtered
-                        frame the static plan walk cannot bound
+tools/window_audit.py's plan walk over ALL registry ops and fails on
+any raw / raw-agg finding.
 
 It also asserts that every op still plans: an op that stops planning
 drops out of the audit's coverage.
 
-Planning all 198 ops takes ~2 min (127 s on 4 vCPU), so it is
-env-gated:
-
-    WINDOW_AUDIT=1 python -m pytest tests/test_window_audit.py -q
+Planning all 124 ops takes ~1.5 min (85 s on 4 vCPU), so it runs in
+tier-1.
 """
 
 from __future__ import annotations
 
 import importlib.util
-import os
 import sys
 from pathlib import Path
-
-import pytest
 
 from tests.test_registry_doc import KG_OPS
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT / "tools"))
 
-pytestmark = pytest.mark.skipif(
-    os.environ.get("WINDOW_AUDIT") != "1",
-    reason="plans all registry ops (~2 min); opt in with WINDOW_AUDIT=1",
-)
-
-# classifier false-positives, dispositioned in BENCH.md round-4 audit:
-# (op, fragment of the finding's evidence)
-KNOWN_FALSE_POSITIVES = {
-    ("energy_distance_docs", "HashAggregate(keys=[side#"),
-    ("err_ranking_docs", "HashAggregate(keys=[doc_id#"),
-}
 # ops allowed to fail planning on the sf0.001 inputs (none today)
 PLANNING_ERRORS_ALLOWED: frozenset[str] = frozenset()
-
-
-def _known(name: str, evidence: str) -> bool:
-    return any(name == op and frag in evidence for op, frag in KNOWN_FALSE_POSITIVES)
 
 
 def _load_audit():
@@ -81,7 +54,7 @@ def test_no_new_raw_scale_global_windows(spark):
             errors[name] = str(e)[:200]
             continue
         for f in audit.audit_plan(plan):
-            if f["class"] in ("raw", "raw-agg") and not _known(name, f["evidence"]):
+            if f["class"] in ("raw", "raw-agg"):
                 offenders.setdefault(name, []).append(f"{f['class']}: {f['evidence'][:100]}")
 
     assert not offenders, (

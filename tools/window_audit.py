@@ -15,9 +15,10 @@ its input subtree and classify what actually flows in:
                  bounds the input rows
   raw            no aggregate/limit between the window and a scan/join:
                  the window consumes row-scale input
-  offsets        the known partition-count-bounded offsets table of
-                 operators/scalable_windows (matched by its __sw_pid
-                 column) — the audited scale pattern itself
+  offsets        the known bucket-count-bounded offsets table of
+                 operators/scalable_windows (matched by its __sw_bucket
+                 / _sw_n / _sw_s0 / __sw_b0 / __sw_px columns) — the
+                 audited scale pattern itself
 
 Usage:
     python tools/window_audit.py [--json out.json] [only_op ...]
@@ -91,7 +92,7 @@ def audit_plan(plan_str: str) -> list[dict]:
         is_global = any("Exchange SinglePartition" in t for _, t in sub[:6])
         if not is_global:
             continue
-        marker = ("__sw_pid", "__sw_bucket", "_sw_n", "_sw_s0", "__sw_b0", "__sw_px")
+        marker = ("__sw_bucket", "_sw_n", "_sw_s0", "__sw_b0", "__sw_px")
         near = [txt] + [t for _, t in sub[:6]]
         if any(m in t for m in marker for t in near):
             findings.append({"class": "offsets", "window": txt[:160], "evidence": "scalable_windows bucket-offsets table"})
