@@ -23,13 +23,12 @@ Layout:
                  plus library operators kept for their unit tests
                  (dedup, similarity, curation, graph, media decode, ...)
     sources/     table-format seam (parquet locally, Iceberg on
-                 cluster); Avro / sink / synthetic-transcript sources
+                 cluster); JSONL sink and synthetic-transcript sources
     streaming/   Structured Streaming wrapper for incremental extraction
     oracles.py, oracle_defs*.py
                  the operator registry: (Spark, DuckDB-SQL) pairs behind
                  queries() / oracle_sql() in __spark_entry__.py — the
-                 §2A ops first, then the library-operator checks and
-                 the tested analytics ops
+                 §2A ops first, then the library-operator checks
 """
 
 __version__ = "0.1.0"

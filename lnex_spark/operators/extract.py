@@ -24,7 +24,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from lnex_spark.operators.textproc import HashtagSegmenter, extract_mentions
 
@@ -70,14 +69,3 @@ def extract_mentions_df(transcripts: DataFrame, bc_struct) -> DataFrame:
         run, schema=MENTIONS_SCHEMA
     )
 
-
-def preprocess_cols(transcripts: DataFrame) -> DataFrame:
-    """T2 (relational half): the cheap regex cleanup as a pure built-in
-    chain — used by reporting queries / the DuckDB oracle; the matcher
-    itself preprocesses inside the UDF to keep original-text offsets."""
-    c = F.col("text")
-    c = F.regexp_replace(c, r"https?://\S+|www\.\S+", " ")
-    c = F.regexp_replace(c, r"@\w+", " ")
-    c = F.regexp_replace(c, r"(^|\s)RT(\s|$)", " ")
-    c = F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
-    return transcripts.withColumn("clean_text", c)

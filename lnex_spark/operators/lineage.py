@@ -74,17 +74,36 @@ def pending_buckets(spark: SparkSession, manifest_path: str, n_buckets: int) -> 
 def check_run_identity(spark: SparkSession, manifest_path: str, identity: dict) -> None:
     """Write ``identity`` (the IDENTITY_SCHEMA fields) next to the
     manifest on the first run; on a resume, raise ValueError naming the
-    first field that differs from the stored identity."""
+    first field that differs from the stored identity.
+
+    The identity is committed once its ``_SUCCESS`` marker exists. A
+    write killed before that (a directory holding only ``_temporary/``)
+    counts as absent and is rewritten. A committed identity that cannot
+    be read is an error, never overwritten: overwriting it would accept
+    a changed run."""
     path = f"{manifest_path.rstrip('/')}_identity"
+    committed = path_exists(spark, f"{path}/_SUCCESS")  # None: no JVM probe
     stored = None
-    if path_exists(spark, path) is not False:
+    if committed is not False:
         try:
             stored = spark.read.parquet(path).first()
-        except Exception:
-            stored = None
+        except Exception as e:
+            if committed:
+                raise ValueError(
+                    f"cannot resume {manifest_path}: its committed run identity at {path} "
+                    f"is unreadable ({type(e).__name__}); restore it, or use a fresh "
+                    "manifest and output path"
+                ) from e
     if stored is None:
         row = (identity["n_buckets"], identity["model"], identity["input"])
-        spark.createDataFrame([row], IDENTITY_SCHEMA).coalesce(1).write.parquet(path)
+        (
+            spark.createDataFrame([row], IDENTITY_SCHEMA)
+            .coalesce(1)
+            .write.mode("overwrite")
+            # the marker is the commit record above, whatever the cluster's default
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
+            .parquet(path)
+        )
         return
     for field, was in stored.asDict().items():
         if was != identity[field]:

@@ -19,15 +19,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salt_repartition(df: DataFrame, num_partitions: int, salt_buckets: int | None = None) -> DataFrame:
-    """salt_buckets must comfortably exceed num_partitions: a hot
-    conv_id only spreads across min(salt_buckets, num_partitions)
-    tasks, so too few buckets re-creates the skew at high parallelism
-    (defaults to 4x partitions)."""
-    if salt_buckets is None:
-        salt_buckets = num_partitions * 4
+def salt_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Salt with 4 x num_partitions buckets: the bucket count must
+    comfortably exceed num_partitions, because a hot conv_id only
+    spreads across min(buckets, num_partitions) tasks, so too few
+    buckets re-creates the skew at high parallelism."""
+    buckets = num_partitions * 4
     salted = df.withColumn(
-        "_salt", F.pmod(F.hash(F.col("conv_id"), F.col("turn_idx")), F.lit(salt_buckets))
+        "_salt", F.pmod(F.hash(F.col("conv_id"), F.col("turn_idx")), F.lit(buckets))
     )
     return salted.repartition(num_partitions, F.col("conv_id"), F.col("_salt")).drop("_salt")
 

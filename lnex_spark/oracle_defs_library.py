@@ -4,9 +4,9 @@ LSH, multi-probe LSH, IVF, PQ and IVF-PQ top-k and embedding near-dups
 (``operators.similarity``); k-means (``operators.clustering``); token
 counts, fingerprints, language id and quality features
 (``operators.textquality``); media frame plans and decoded features
-(``operators.multimodal``); the Avro round trip (``sources.avro_py``);
-transitive closure and its rollup (``operators.graph``); and the
-assert/retract triple merge (``operators.incremental.merge_triples``).
+(``operators.multimodal``); transitive closure and its rollup
+(``operators.graph``); and the assert/retract triple merge
+(``operators.incremental.merge_triples``).
 
 The ANN, k-means, LSH and SimHash SQL twins here are shared with the
 later registry modules that check rank metrics over the same indexes.
@@ -585,33 +585,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "feat_idx",
         F.floor(F.col("feat_value") * 1000000.0).cast("long").alias("feat_scaled"),
     )
-
-
-@register(
-    "avro_roundtrip_events",
-    "SELECT event_id, ts, event_type, value FROM events",
-)
-def avro_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Avro source/sink fidelity (sources/avro_py.py — pure-Python OCF
-    codec over the Python Data Source API, closing SURVEY §8.2's
-    spark-avro classpath gap).  Write-then-READBACK like k2: the rows
-    returned are decoded from the deflate-compressed Avro container
-    files the sink just wrote (one OCF file per task, manifest
-    commit), so the oracle value-checks long/timestamp/string/double
-    encode→decode byte-for-byte against the parquet ground truth."""
-    import os
-    import tempfile
-
-    from lnex_spark.sources import avro_py
-
-    avro_py.register(spark)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"lnex_avro_rt_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    src = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    src.write.format("avro_py").option("codec", "deflate").mode("overwrite").save(path)
-    return spark.read.format("avro_py").load(path)
 
 
 @register("dedup_lsh_pairs_sql", LSH_PAIRS_SQL)

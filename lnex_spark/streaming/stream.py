@@ -10,8 +10,10 @@ operators over a streaming DataFrame:
     replayed batches stay idempotent. Linked mentions are final when
     written (context-free L2, see pipeline.py), so no periodic
     canonicalization job runs over the accumulated output.
-  * ``stream_link_static``: the link step as a stream-static join
-    inside the streaming query itself.
+
+``link_mentions`` also runs unchanged inside a streaming query: on a
+streaming mentions DataFrame it is a stateless stream-static join
+against the static gazetteer (tests/test_stream_static.py).
 """
 
 from __future__ import annotations
@@ -55,17 +57,3 @@ def stream_triples_foreach_batch(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def stream_link_static(mention_stream: DataFrame, variants: DataFrame) -> DataFrame:
-    """L1 as a NATIVE stream-static join: streaming mentions joined to
-    the static gazetteer variants DataFrame (broadcast equi-join on
-    norm) inside the streaming query itself — no foreachBatch.
-
-    Stream-static inner equi-joins are stateless (the static side is
-    planned fresh each micro-batch, so a gazetteer table update is
-    picked up on the next batch), no watermark required — unlike the
-    stream-stream interval join, which must bound both sides' state.
-    This is the deployment shape for continuous KG ingestion: the
-    dimension stays a table, the fact side streams.
-    """
-    return link_mentions(mention_stream, variants)

@@ -95,19 +95,11 @@ t = (spark.read.format("transcripts_synth")
      .where("turn_idx < 3 and conv_id in ('c1','c2')"))
 assert t.count() == 6, t.count()
 
-# 2. avro_py: write + read round-trip
-from lnex_spark.sources import avro_py
-avro_py.register(spark)
-d = tempfile.mkdtemp()
-df = spark.range(100).selectExpr("id", "cast(id as string) as s")
-df.write.format("avro_py").mode("overwrite").save(d)
-back = spark.read.format("avro_py").load(d)
-assert back.count() == 100 and set(back.columns) == {"id", "s"}
-
-# 3. jsonl_sink: batch write
+# 2. jsonl_sink: batch write
 from lnex_spark.sources import pysink
 pysink.register(spark)
 d2 = tempfile.mkdtemp()
+df = spark.range(100).selectExpr("id", "cast(id as string) as s")
 df.write.format("jsonl_sink").mode("overwrite").save(d2)
 n_lines = sum(1 for p in os.listdir(d2) if not p.startswith("_")
               for _ in open(os.path.join(d2, p)))

@@ -1,4 +1,4 @@
-"""Physical-plan audit as a regression gate, opt-in.
+"""Physical-plan audit as a regression gate.
 
 tools/explain_audit.py greps the formatted plans of the engine's key
 operators for the shapes we require at scale (flagship broadcast join,
@@ -9,28 +9,19 @@ failures, so a plan-shape regression (a lost broadcast, a reintroduced
 self-join, a Python island reappearing in a relational pipeline) fails
 CI instead of only the next manual audit.
 
-Boots a second Spark JVM and plans 20 operators (~25 s on 4 vCPU), so
-env-gated:
-
-    PLAN_AUDIT=1 python -m pytest tests/test_plan_audit.py -q
+Boots a second Spark JVM and plans 20 operators (~30 s on 4 vCPU). It
+is the only tier-1 check of the KG plan shapes (the flagship broadcast
+join, the relational matcher), so it runs on every suite run.
 """
 
 from __future__ import annotations
 
-import os
 import re
 import subprocess
 import sys
 from pathlib import Path
 
-import pytest
-
 ROOT = Path(__file__).resolve().parent.parent
-
-pytestmark = pytest.mark.skipif(
-    os.environ.get("PLAN_AUDIT") != "1",
-    reason="boots a second Spark JVM (~25 s); opt in with PLAN_AUDIT=1",
-)
 
 
 def test_plan_audit_has_zero_failures():

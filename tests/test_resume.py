@@ -197,3 +197,34 @@ def test_matching_resume_of_file_input_equals_uninterrupted(spark, fixture_data,
     resumed = {tuple(r) for r in finalize_triples(spark, winners).collect()}
     assert resumed == {tuple(r) for r in finalize_triples(spark, str(full / "winners")).collect()}
     assert resumed
+
+
+def test_resume_over_an_uncommitted_identity_write(spark, fixture_data, model, tmp_path):
+    """A run killed while writing its identity leaves a directory that
+    holds only ``_temporary/``. The next run treats it as absent,
+    rewrites it, and finalizes to the triples of an uninterrupted run."""
+    t_df = to_spark_transcripts(spark, fixture_data["transcripts"])
+    winners, manifest = str(tmp_path / "winners"), str(tmp_path / "manifest")
+    (tmp_path / "manifest_identity" / "_temporary" / "0").mkdir(parents=True)
+    done = run_resumable(spark, t_df, model, winners, manifest, n_buckets=8, buckets_per_batch=4)
+    assert sorted(done) == list(range(8))
+    assert (tmp_path / "manifest_identity" / "_SUCCESS").exists()
+
+    full = tmp_path / "full"
+    run_resumable(spark, t_df, model, str(full / "winners"), str(full / "manifest"), n_buckets=8)
+    got = {tuple(r) for r in finalize_triples(spark, winners).collect()}
+    assert got == {tuple(r) for r in finalize_triples(spark, str(full / "winners")).collect()}
+    assert got
+
+
+def test_resume_refuses_an_unreadable_committed_identity(spark, fixture_data, model, tmp_path):
+    """A committed identity that cannot be read is not rewritten: the
+    run stops instead of accepting settings it cannot compare."""
+    t_df = to_spark_transcripts(spark, fixture_data["transcripts"])
+    winners, manifest = str(tmp_path / "winners"), str(tmp_path / "manifest")
+    ident = tmp_path / "manifest_identity"
+    ident.mkdir()
+    (ident / "_SUCCESS").touch()
+    with pytest.raises(ValueError, match="unreadable"):
+        run_resumable(spark, t_df, model, winners, manifest, n_buckets=8)
+    assert sorted(p.name for p in ident.iterdir()) == ["_SUCCESS"]

@@ -1,4 +1,4 @@
-"""Native stream-static join: the L1 link runs INSIDE a streaming
+"""Native stream-static join: ``link_mentions`` runs INSIDE a streaming
 query (streaming mentions × static gazetteer variants) and must equal
 the batch join on the same data."""
 
@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 
 from lnex_spark.pipeline import build_gazetteer
-from lnex_spark.streaming.stream import stream_link_static
 from tests.conftest import (
     to_spark_gaz,
     to_spark_stopwords,
@@ -41,7 +40,7 @@ def test_stream_static_join_matches_batch(spark, fixture_data, model, tmp_path):
     mentions_stream = extract_mentions_df(
         stream.select("conv_id", "turn_idx", "text"), model.bc_struct
     )
-    linked = stream_link_static(mentions_stream, model.variants)
+    linked = link_mentions(mentions_stream, model.variants)
     assert linked.isStreaming
 
     q = (
