@@ -16,10 +16,31 @@ Scale notes:
     20% of the data;
   * output is exploded mentions (0..n rows per turn) — mapInPandas
     (not a scalar UDF) precisely because the cardinality changes.
+
+Worker fixed cost: at the start of every Python task, PySpark's worker
+calls ``importlib.invalidate_caches()``
+(``pyspark.worker_util.setup_spark_files``). On CPython 3.11/3.12 that
+makes every ``zipimport.zipimporter`` re-parse its whole archive
+directory, and a worker holds one importer per imported subpackage of
+pyspark.zip (16 in a KG build's worker): ~0.2 CPU-s per task, about
+0.8 of a 30k-turn build's ~5 CPU-s. CPython 3.13 made that method
+lazy: it only drops the cache entry (``Lib/zipimport.py``,
+``zipimporter.invalidate_caches``).
+So the UDF body first calls :func:`_skip_unchanged_zip_rereads`, which
+makes an importer re-read its archive only when the archive's
+``(st_mtime_ns, st_size)`` changed since that importer last read it.
+It patches the worker's own interpreter, never the driver's, and it is
+not a setting: it ships in this module, so it runs wherever extraction
+runs (``--py-files`` included). It pays off from a worker's second task
+on, so it needs ``spark.python.worker.reuse`` (the default); without
+reuse each task starts a fresh worker and the helper costs one call.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from typing import Iterator
 
 import pandas as pd
@@ -32,11 +53,45 @@ MENTIONS_SCHEMA = (
 )
 
 
+def _skip_unchanged_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when the archive changed (see the module docstring). Idempotent; a
+    no-op on CPython >= 3.13, whose method is already lazy.
+
+    An importer's first call reads as before. A stat that fails
+    (deleted or unreachable archive) and a read that fails (the stock
+    method then empties ``_files``) leave no stamp, so the next call
+    takes the stock path again."""
+    if sys.version_info >= (3, 13):
+        return
+    stock = zipimport.zipimporter.invalidate_caches
+    if getattr(stock, "_skips_unchanged", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            stamp = None
+        else:
+            stamp = (st.st_mtime_ns, st.st_size)
+            if self.__dict__.get("_archive_stamp") == stamp:
+                return
+        self.__dict__.pop("_archive_stamp", None)
+        stock(self)
+        if stamp and self._files:
+            self._archive_stamp = stamp
+
+    invalidate_caches._skips_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
 def extract_mentions_df(transcripts: DataFrame, bc_struct) -> DataFrame:
     """transcripts(conv_id, turn_idx, ..., text) → mentions(conv_id,
     turn_idx, start, end, surface, norm); text[start:end] == surface."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _skip_unchanged_zip_rereads()
         struct = bc_struct.value
         segmenter = HashtagSegmenter(struct.unigram)
         full, pref, mx = struct.full_names, struct.prefixes, struct.max_tokens

@@ -57,11 +57,25 @@ def path_exists(spark: SparkSession, path: str) -> bool | None:
 
 
 def completed_buckets(spark: SparkSession, manifest_path: str) -> list[int]:
-    if path_exists(spark, manifest_path) is False:
+    """Bucket ids the manifest records as done.
+
+    Same commit rule as the run identity (:func:`check_run_identity`):
+    a manifest without ``_SUCCESS`` — absent, or only the
+    ``_temporary/`` of a killed first append — is empty. A committed
+    manifest that cannot be read raises ValueError: reading it as empty
+    would redo every bucket and append to the same unreadable directory
+    on every later run."""
+    committed = path_exists(spark, f"{manifest_path.rstrip('/')}/_SUCCESS")  # None: no JVM probe
+    if committed is False:
         return []
     try:
         rows = spark.read.parquet(manifest_path).select("bucket").distinct().collect()
-    except Exception:
+    except Exception as e:
+        if committed:
+            raise ValueError(
+                f"cannot resume {manifest_path}: the committed manifest is unreadable "
+                f"({type(e).__name__}); restore it, or use a fresh manifest and output path"
+            ) from e
         return []
     return sorted(r[0] for r in rows)
 
@@ -120,7 +134,13 @@ def record_buckets(
     rows: list[tuple[int, int, int, int, str]],
 ) -> None:
     if rows:
-        spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(manifest_path)
+        (
+            spark.createDataFrame(rows, MANIFEST_SCHEMA)
+            .write.mode("append")
+            # _SUCCESS marks the manifest committed (completed_buckets)
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
+            .parquet(manifest_path)
+        )
 
 
 class StageTimer:

@@ -228,3 +228,39 @@ def test_resume_refuses_an_unreadable_committed_identity(spark, fixture_data, mo
     with pytest.raises(ValueError, match="unreadable"):
         run_resumable(spark, t_df, model, winners, manifest, n_buckets=8)
     assert sorted(p.name for p in ident.iterdir()) == ["_SUCCESS"]
+
+
+def test_resume_refuses_an_unreadable_committed_manifest(spark, fixture_data, model, tmp_path):
+    """A committed manifest whose part file is corrupt is an error: read
+    as empty, every rerun would redo every bucket and append to the same
+    unreadable directory."""
+    t_df = to_spark_transcripts(spark, fixture_data["transcripts"])
+    winners, manifest = str(tmp_path / "winners"), tmp_path / "manifest"
+    first = run_resumable(
+        spark, t_df, model, winners, str(manifest), n_buckets=4, buckets_per_batch=2, fail_after_batches=1
+    )
+    assert len(first) == 2
+    parts = list(manifest.glob("part-*.parquet"))
+    assert parts and (manifest / "_SUCCESS").exists()
+    for part in parts:
+        part.write_bytes(b"not a parquet file")
+    with pytest.raises(ValueError, match="unreadable"):
+        run_resumable(spark, t_df, model, winners, str(manifest), n_buckets=4, buckets_per_batch=2)
+
+
+def test_resume_over_an_uncommitted_manifest_append(spark, fixture_data, model, tmp_path):
+    """A first manifest append killed before its commit leaves only
+    ``_temporary/``: the manifest counts as empty, and the run finalizes
+    to the triples of an uninterrupted run."""
+    t_df = to_spark_transcripts(spark, fixture_data["transcripts"])
+    winners, manifest = str(tmp_path / "winners"), str(tmp_path / "manifest")
+    (tmp_path / "manifest" / "_temporary" / "0").mkdir(parents=True)
+    done = run_resumable(spark, t_df, model, winners, manifest, n_buckets=8, buckets_per_batch=4)
+    assert sorted(done) == list(range(8))
+    assert completed_buckets(spark, manifest) == list(range(8))
+
+    full = tmp_path / "full"
+    run_resumable(spark, t_df, model, str(full / "winners"), str(full / "manifest"), n_buckets=8)
+    got = {tuple(r) for r in finalize_triples(spark, winners).collect()}
+    assert got == {tuple(r) for r in finalize_triples(spark, str(full / "winners")).collect()}
+    assert got
