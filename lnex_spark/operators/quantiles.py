@@ -37,8 +37,8 @@ def bucketed_exact_quantile(
     two-pass bucketed selection.  Returns (n, k, value).
 
     Driver-side state is three scalars (n, target bucket, in-bucket
-    offset) — the same scalar-decision pattern as the k-means / BPE
-    steps, never a row collect.
+    offset) — the same scalar-decision pattern as the BPE merge step,
+    never a row collect.
     """
     v = F.col(col)
     from lnex_spark.operators.scalable_windows import attach_running_sum

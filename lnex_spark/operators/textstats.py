@@ -268,8 +268,8 @@ def bpe_merges(docs: DataFrame, rounds: int = 3, text_col: str = "text") -> Data
     is only scanned once for word counts.  Per round: one lead()
     window per word (partitioned by word — no global window), one
     vocabulary-sized pair agg, a 1-row top-1 collect to the driver
-    (the merge decision — same scalar-broadcast pattern as the k-means
-    centroid step), and one filter+renumber pass.  Lineage is
+    (the merge decision, broadcast back as a scalar), and one
+    filter+renumber pass.  Lineage is
     truncated per round.
     """
     w = (

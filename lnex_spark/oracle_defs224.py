@@ -206,73 +206,3 @@ def curation_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return classify_new_conversations(state_fp, batch)
-
-
-_SEMDEDUP_SQL = """
-WITH uni AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200
-  UNION ALL
-  SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings WHERE vec_id < 60
-),
-cent AS (
-  SELECT CAST(vec_id AS INT) AS cell_id, embedding AS cemb
-  FROM uni ORDER BY vec_id LIMIT 8
-),
-ac_flat AS (
-  SELECT u.vec_id, c.cell_id, unnest(u.embedding) AS x, unnest(c.cemb) AS y
-  FROM uni u CROSS JOIN cent c
-),
-ac AS (
-  SELECT vec_id, cell_id,
-         round(sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-               / (sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                  * sqrt(sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))), 6) AS csim
-  FROM ac_flat GROUP BY vec_id, cell_id
-),
-asg AS (
-  SELECT vec_id, cell_id, csim FROM (
-    SELECT vec_id, cell_id, csim,
-           row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell_id ASC) AS rk
-    FROM ac
-  ) WHERE rk = 1
-),
-pair_flat AS (
-  SELECT a.vec_id AS va, b.vec_id AS vb,
-         unnest(ua.embedding) AS x, unnest(ub.embedding) AS y
-  FROM asg a
-  JOIN asg b ON a.cell_id = b.cell_id
-   AND (a.csim < b.csim OR (a.csim = b.csim AND a.vec_id < b.vec_id))
-  JOIN uni ua ON ua.vec_id = a.vec_id
-  JOIN uni ub ON ub.vec_id = b.vec_id
-),
-pairs AS (
-  SELECT va, vb,
-         round(sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-               / (sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                  * sqrt(sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))), 6) AS cos
-  FROM pair_flat GROUP BY va, vb
-),
-dropped AS (SELECT DISTINCT vb AS vec_id FROM pairs WHERE cos >= 0.98)
-SELECT a.vec_id, a.cell_id, a.csim, (d.vec_id IS NULL) AS keep
-FROM asg a LEFT JOIN dropped d ON a.vec_id = d.vec_id
-"""
-
-
-@register("semantic_dedup_embeddings", _SEMDEDUP_SQL)
-def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style embedding dedup (similarity.semantic_dedup): the
-    corpus plus re-labeled exact copies of the first 60 vectors is
-    clustered by the deterministic first-8 coarse quantizer, and the
-    keep/drop decision for EVERY vector is value-hash checked against
-    a full SQL re-derivation (assignment argmax, keeper ordering, and
-    the intra-cluster domination EXISTS)."""
-    from lnex_spark.oracle_defs2 import _t
-    from lnex_spark.operators.similarity import semantic_dedup
-
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    uni = e.filter(F.col("vec_id") < 200).unionByName(
-        e.filter(F.col("vec_id") < 60).select(
-            (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
-        )
-    )
-    return semantic_dedup(uni, n_cells=8, tau=0.98)

@@ -13,7 +13,7 @@ deterministic weighted sampling.
     Spark side is the genuinely iterative operators/graph.k_core job
     (per round: one hash agg + two left-semi joins reusing the edge
     partitioning); DuckDB side an independent fully-unrolled
-    re-derivation (same pattern as lpa/kmeans/pagerank oracles).
+    re-derivation (same pattern as the lpa/pagerank oracles).
   * weighted_sample_docs — Efraimidis-Spirakis weighted sampling
     without replacement: skey = -ln(u)/w with u an md5-gated uniform,
     k smallest keys win (operators/curation.weighted_sample).

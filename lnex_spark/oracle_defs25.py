@@ -25,8 +25,7 @@ prediction, and sparse TF-IDF cosine.
 Reference parity note: none exist in LNEx (SURVEY.md §0); all three
 are corpus-scale machinery around its KG semantics (blocking guards
 the dedup pass, link prediction extends the co-mention graph, sparse
-cosine is the classic IR similarity the dense-embedding ANN ops
-complement).
+cosine is the classic IR similarity).
 """
 
 from __future__ import annotations

@@ -1,12 +1,6 @@
-"""Twenty-seventh oracle-registry module: ANN quality measurement,
-vocabulary coverage, and dialogue transition structure.
+"""Twenty-seventh oracle-registry module: vocabulary coverage and
+dialogue transition structure.
 
-  * ann_recall_at_k — recall@5 of the IVF approximate top-k against
-    the brute-force truth, per query: the measurement loop every ANN
-    deployment runs before trusting its index (nprobe/recall
-    trade-off).  Both sides reuse the ALREADY-VERIFIED derivations
-    (_ANN_TOPK_SQL / _ANN_IVF_SQL as nested CTEs), so the recall op
-    composes two value-checked paths and is itself value-checked.
   * vocab_coverage_docs — smallest top-frequency token prefix covering
     50/90/99% of token mass (textstats.vocab_coverage): the Zipf-head
     statistic behind tokenizer-vocab sizing.  Integer counts ⇒ the
@@ -29,51 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs_library import _ANN_IVF_SQL, _ANN_TOPK_SQL
 from lnex_spark.oracles import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- ANN recall@k: IVF vs brute-force truth --------------------------------
-_RECALL_SQL = f"""
-    WITH truth AS ({_ANN_TOPK_SQL}),
-    ivf AS ({_ANN_IVF_SQL})
-    SELECT t.query_id,
-           count(i.vec_id) AS caught,
-           count(*) AS k,
-           round(count(i.vec_id) * 1.0 / count(*), 6) AS recall_at_k
-    FROM truth t LEFT JOIN ivf i
-      ON i.query_id = t.query_id AND i.vec_id = t.vec_id
-    GROUP BY t.query_id
-"""
-
-
-@register("ann_recall_at_k", _RECALL_SQL)
-def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lnex_spark.operators.similarity import cosine_topk_bruteforce, cosine_topk_ivf
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    truth = cosine_topk_bruteforce(e, q, k=5).select("query_id", "vec_id")
-    ivf = cosine_topk_ivf(e, q, n_cells=8, nprobe=2, k=5).select(
-        "query_id", F.col("vec_id").alias("ivf_vec_id")
-    )
-    j = truth.join(
-        ivf,
-        (truth["query_id"] == ivf["query_id"])
-        & (truth["vec_id"] == ivf["ivf_vec_id"]),
-        "left",
-    )
-    return j.groupBy(truth["query_id"].alias("query_id")).agg(
-        F.count("ivf_vec_id").alias("caught"),
-        F.count("*").alias("k"),
-        F.round(F.count("ivf_vec_id") * 1.0 / F.count("*"), 6).alias("recall_at_k"),
-    )
 
 
 # --- vocabulary coverage curve ----------------------------------------------

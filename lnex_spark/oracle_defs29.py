@@ -4,8 +4,8 @@
   * bpe_merges_docs — byte-pair-encoding merge induction
     (textstats.bpe_merges): the first 3 learned merges over the
     frequency-weighted word vocabulary.  Tokenizer TRAINING as a
-    Spark job — the iterative-algorithm class (like k-means /
-    PageRank) applied to the op a training-data pipeline runs before
+    Spark job — the iterative-algorithm class (like PageRank)
+    applied to the op a training-data pipeline runs before
     any token counting is meaningful.  The lhs != rhs candidate
     restriction makes "merge all occurrences" overlap-free and hence
     exactly relational; the DuckDB twin unrolls all three rounds,

@@ -184,8 +184,7 @@ _SQL_PR_ITER = """
 def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Location importance: 3-iteration PageRank over the co-mention
     graph of the SQL-verified KG pipeline, value-checked against
-    fully-unrolled DuckDB iterations (same iterative-algorithm oracle
-    technique as kmeans_cells)."""
+    fully-unrolled DuckDB iterations."""
     from lnex_spark.operators.graph import comention_edges, pagerank
     from lnex_spark.operators.link import (
         apply_canonical,

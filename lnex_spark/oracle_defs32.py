@@ -1,12 +1,4 @@
-"""Oracle pairs that run ``operators.similarity``,
-``operators.textquality``.
-
-  * ann_rrf_fusion — reciprocal-rank fusion (RRF, k=60) of the two
-    verified ANN rankings (brute-force truth and the IVF index):
-    the standard way hybrid search combines retrievers without score
-    normalization.  Composes two value-checked derivations; ties on
-    the fused score break by vec_id, and ranking happens on the
-    ROUNDED score so both engines order identically.
+"""Oracle pairs that run ``operators.textquality``.
 
   * lang_confusion_docs — per-class precision/recall/F1 of the
     heuristic language ID against corpus labels: the per-class
@@ -18,61 +10,15 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lnex_spark.oracle_defs29 import _KAPPA_SQL
-from lnex_spark.oracle_defs_library import _ANN_IVF_SQL, _ANN_TOPK_SQL
 from lnex_spark.oracles import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- reciprocal-rank fusion of two ANN rankings ----------------------------
-_RRF_SQL = f"""
-    WITH truth AS ({_ANN_TOPK_SQL}),
-    ivf AS ({_ANN_IVF_SQL}),
-    u AS (
-      SELECT query_id, vec_id, 1.0 / (60 + rank) AS s FROM truth
-      UNION ALL
-      SELECT query_id, vec_id, 1.0 / (60 + rank) AS s FROM ivf
-    ),
-    fused AS (
-      SELECT query_id, vec_id, round(sum(s), 6) AS rrf_score
-      FROM u GROUP BY query_id, vec_id
-    )
-    SELECT query_id, vec_id, rrf_score, rk FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY rrf_score DESC, vec_id ASC) AS rk
-      FROM fused)
-    WHERE rk <= 5
-"""
-
-
-@register("ann_rrf_fusion", _RRF_SQL)
-def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lnex_spark.operators.similarity import cosine_topk_bruteforce, cosine_topk_ivf
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    truth = cosine_topk_bruteforce(e, q, k=5).select("query_id", "vec_id", "rank")
-    ivf = cosine_topk_ivf(e, q, n_cells=8, nprobe=2, k=5).select(
-        "query_id", "vec_id", "rank"
-    )
-    u = truth.unionByName(ivf).select(
-        "query_id", "vec_id", (1.0 / (60 + F.col("rank"))).alias("s")
-    )
-    fused = u.groupBy("query_id", "vec_id").agg(F.round(F.sum("s"), 6).alias("rrf_score"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col("vec_id").asc()
-    )
-    return fused.select(
-        "query_id", "vec_id", "rrf_score", F.row_number().over(w).alias("rk")
-    ).filter(F.col("rk") <= 5)
 
 
 # --- per-class confusion / F1 of the language labeler ----------------------

@@ -1,11 +1,5 @@
-"""Forty-fifth oracle-registry module: mutual nearest neighbors and
-split leakage.
+"""Forty-fifth oracle-registry module: split leakage.
 
-  * mutual_nn_embeddings — mutual top-1 cosine pairs (a's nearest is
-    b AND b's nearest is a): the reciprocal-best-match primitive
-    behind dataset alignment and cross-batch anchor pairing —
-    composes the verified brute-force ranking into a self-join on
-    reciprocity, emitting each pair once (a < b).
   * split_leakage_docs — train/val/test LEAKAGE report: exact-dup
     fingerprint groups whose members land in more than one md5-gated
     split (injected here by cloning the first 30 docs with shifted
@@ -21,58 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lnex_spark.oracle_defs_library import _ANN_TOPK_SQL
 from lnex_spark.oracles import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- mutual top-1 cosine pairs ---------------------------------------------
-_MNN_SQL = f"""
-    WITH ranked AS ({_ANN_TOPK_SQL.replace("WHERE vec_id < 5", "WHERE vec_id < 60")}),
-    top1 AS (SELECT query_id, vec_id, cosine FROM ranked WHERE rank = 1)
-    SELECT a.query_id AS vec_a, a.vec_id AS vec_b,
-           round(a.cosine, 6) AS cosine
-    FROM top1 a JOIN top1 b
-      ON a.vec_id = b.query_id AND b.vec_id = a.query_id
-     AND a.query_id < a.vec_id
-"""
-
-
-@register("mutual_nn_embeddings", _MNN_SQL)
-def mutual_nn_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocal best matches among the first 60 vectors: top-1 by
-    the verified brute-force cosine ranking, kept only when the
-    relation is symmetric.  The query set is the probe set (each
-    vector queries the full table), so top-1 reciprocity is
-    well-defined; pairs emit once with vec_a < vec_b."""
-    from lnex_spark.operators.similarity import cosine_topk_bruteforce
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 60).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    top1 = (
-        cosine_topk_bruteforce(e, q, k=5)
-        .filter(F.col("rank") == 1)
-        .select("query_id", "vec_id", "cosine")
-    )
-    a, b = top1.alias("a"), top1.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.vec_id") == F.col("b.query_id"))
-            & (F.col("b.vec_id") == F.col("a.query_id"))
-            & (F.col("a.query_id") < F.col("a.vec_id")),
-        )
-        .select(
-            F.col("a.query_id").alias("vec_a"),
-            F.col("a.vec_id").alias("vec_b"),
-            F.round(F.col("a.cosine"), 6).alias("cosine"),
-        )
-    )
 
 
 # --- duplicate-content split leakage ---------------------------------------

@@ -1,15 +1,13 @@
 """Oracle pairs for the library operators outside the KG path: exact,
-MinHash, LSH and SimHash dedup (``operators.dedup``); brute-force,
-LSH, multi-probe LSH, IVF, PQ and IVF-PQ top-k and embedding near-dups
-(``operators.similarity``); k-means (``operators.clustering``); token
-counts, fingerprints, language id and quality features
+MinHash, LSH and SimHash dedup (``operators.dedup``); token counts,
+fingerprints, language id and quality features
 (``operators.textquality``); media frame plans and decoded features
 (``operators.multimodal``); transitive closure and its rollup
 (``operators.graph``); and the assert/retract triple merge
 (``operators.incremental.merge_triples``).
 
-The ANN, k-means, LSH and SimHash SQL twins here are shared with the
-later registry modules that check rank metrics over the same indexes.
+The stopword counter ``_dd_word_count`` here is shared with the later
+registry modules that re-derive the language id and quality features.
 """
 
 from __future__ import annotations
@@ -207,217 +205,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = simhash_signatures(d.unionByName(dup))
     return simhash_near_dups(sigs, max_hamming=3).select(
         "doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming")
-    )
-
-
-_ANN_TOPK_SQL = """
-    WITH q AS (SELECT vec_id AS query_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-    pairs AS (
-      SELECT query_id, vec_id, eq, embedding AS ev
-      FROM embeddings, q WHERE vec_id != query_id
-    ),
-    flat AS (
-      SELECT query_id, vec_id,
-             unnest(eq) AS x, unnest(ev) AS y
-      FROM pairs
-    ),
-    dots AS (
-      SELECT query_id, vec_id,
-             sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-             sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nx,
-             sqrt(sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE))) AS ny
-      FROM flat GROUP BY query_id, vec_id
-    ),
-    ranked AS (
-      SELECT query_id, vec_id, round(dot / greatest(nx * ny, 1e-300), 6) AS cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY round(dot / greatest(nx * ny, 1e-300), 6) DESC, vec_id ASC) AS rank
-      FROM dots
-    )
-    SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= 5
-    """
-
-
-@register(
-    "ann_cosine_topk",
-    _ANN_TOPK_SQL,
-)
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lnex_spark.operators.similarity import cosine_topk_bruteforce
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    return cosine_topk_bruteforce(e, q, k=5).withColumn("rank", F.col("rank").cast("long"))
-
-
-# Shared SQL fragment: md5-derived ±1 (Rademacher) hyperplane LSH
-# signatures over integer-quantized vectors — bit-identical to
-# similarity.lsh_signatures_rademacher (exact integer dot products, no
-# float summation-order hazard).  __SRC__ is the vector CTE name.
-_RADEMACHER_SIG_SQL = """
-    signs AS (
-      SELECT p, d,
-             CASE WHEN CAST(('0x' || substr(md5(CAST(p AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 8)) AS UINTEGER) & 1 = 1
-                  THEN 1 ELSE -1 END AS sgn
-      FROM (SELECT unnest(range(0, 8)) AS p), (SELECT unnest(range(0, 64)) AS d)
-    ),
-    qflat AS (
-      SELECT vec_id, i - 1 AS d,
-             CAST(floor(CAST(embedding[CAST(i AS INT)] AS DOUBLE) * 1048576.0) AS BIGINT) AS qx
-      FROM __SRC__, LATERAL (SELECT unnest(range(1, 65)) AS i)
-    ),
-    proj AS (
-      SELECT f.vec_id, s.p, sum(f.qx * s.sgn) AS dot
-      FROM qflat f JOIN signs s ON s.d = f.d GROUP BY 1, 2
-    ),
-    sigs AS (
-      SELECT vec_id, sum(CASE WHEN dot > 0 THEN 1 << p ELSE 0 END) AS lsh_sig
-      FROM proj GROUP BY vec_id
-    )
-"""
-
-
-@register(
-    "ann_cosine_lsh",
-    f"""
-    WITH {_RADEMACHER_SIG_SQL.replace('__SRC__', 'embeddings')},
-    cand AS (
-      SELECT q.vec_id AS query_id, e.vec_id
-      FROM sigs q JOIN sigs e ON q.lsh_sig = e.lsh_sig AND e.vec_id != q.vec_id
-      WHERE q.vec_id < 5
-    ),
-    pflat AS (
-      SELECT c.query_id, c.vec_id,
-             CAST(a.embedding[CAST(i AS INT)] AS DOUBLE) AS x,
-             CAST(b.embedding[CAST(i AS INT)] AS DOUBLE) AS y
-      FROM cand c
-      JOIN embeddings a ON a.vec_id = c.query_id
-      JOIN embeddings b ON b.vec_id = c.vec_id,
-      LATERAL (SELECT unnest(range(1, 65)) AS i)
-    ),
-    dots AS (
-      SELECT query_id, vec_id, sum(x * y) AS dot,
-             sqrt(sum(x * x)) AS nx, sqrt(sum(y * y)) AS ny
-      FROM pflat GROUP BY 1, 2
-    ),
-    ranked AS (
-      SELECT query_id, vec_id, round(dot / greatest(nx * ny, 1e-300), 6) AS cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY round(dot / greatest(nx * ny, 1e-300), 6) DESC, vec_id ASC) AS rank
-      FROM dots
-    )
-    SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= 5
-    """,
-)
-def ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH top-k, value-checked (was rows-only in round 1): Rademacher
-    planes make the bucket assignment reproducible in SQL, so DuckDB
-    re-derives candidates + exact re-rank independently."""
-    from lnex_spark.operators.similarity import cosine_topk_lsh
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    return cosine_topk_lsh(e, q, dim=64, k=5, n_planes=8, planes="rademacher").withColumn(
-        "rank", F.col("rank").cast("long")
-    )
-
-
-@register(
-    "ann_cosine_lsh_multiprobe",
-    f"""
-    WITH {_RADEMACHER_SIG_SQL.replace('__SRC__', 'embeddings')},
-    cand AS (
-      SELECT q.vec_id AS query_id, e.vec_id
-      FROM sigs q JOIN sigs e
-        ON bit_count(xor(q.lsh_sig, e.lsh_sig)) <= 1 AND e.vec_id != q.vec_id
-      WHERE q.vec_id < 5
-    ),
-    pflat AS (
-      SELECT c.query_id, c.vec_id,
-             CAST(a.embedding[CAST(i AS INT)] AS DOUBLE) AS x,
-             CAST(b.embedding[CAST(i AS INT)] AS DOUBLE) AS y
-      FROM cand c
-      JOIN embeddings a ON a.vec_id = c.query_id
-      JOIN embeddings b ON b.vec_id = c.vec_id,
-      LATERAL (SELECT unnest(range(1, 65)) AS i)
-    ),
-    dots AS (
-      SELECT query_id, vec_id, sum(x * y) AS dot,
-             sqrt(sum(x * x)) AS nx, sqrt(sum(y * y)) AS ny
-      FROM pflat GROUP BY 1, 2
-    ),
-    ranked AS (
-      SELECT query_id, vec_id, round(dot / greatest(nx * ny, 1e-300), 6) AS cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY round(dot / greatest(nx * ny, 1e-300), 6) DESC, vec_id ASC) AS rank
-      FROM dots
-    )
-    SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= 5
-    """,
-)
-def ann_cosine_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH top-k (probe_bits=1 Hamming ball): fixes the
-    single-probe recall cliff the round-1 verdict flagged.  The oracle
-    re-derives the Hamming-≤1 candidate set from the same integer
-    Rademacher signatures (bit_count(xor(...)) <= 1), so the probe
-    expansion itself is value-checked, not just the re-rank."""
-    from lnex_spark.operators.similarity import cosine_topk_lsh
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    return cosine_topk_lsh(
-        e, q, dim=64, k=5, n_planes=8, planes="rademacher", probe_bits=1
-    ).withColumn("rank", F.col("rank").cast("long"))
-
-
-@register(
-    "embedding_near_dups",
-    f"""
-    WITH uni AS (
-      SELECT vec_id, embedding FROM embeddings
-      UNION ALL
-      SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings WHERE vec_id < 50
-    ),
-    {_RADEMACHER_SIG_SQL.replace('__SRC__', 'uni')},
-    pairs AS (
-      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-      FROM sigs a JOIN sigs b ON a.lsh_sig = b.lsh_sig AND a.vec_id < b.vec_id
-    ),
-    pflat AS (
-      SELECT p.vec_a, p.vec_b,
-             CAST(a.embedding[CAST(i AS INT)] AS DOUBLE) AS x,
-             CAST(b.embedding[CAST(i AS INT)] AS DOUBLE) AS y
-      FROM pairs p
-      JOIN uni a ON a.vec_id = p.vec_a
-      JOIN uni b ON b.vec_id = p.vec_b,
-      LATERAL (SELECT unnest(range(1, 65)) AS i)
-    ),
-    dots AS (
-      SELECT vec_a, vec_b, sum(x * y) AS dot,
-             sqrt(sum(x * x)) AS nx, sqrt(sum(y * y)) AS ny
-      FROM pflat GROUP BY 1, 2
-    )
-    SELECT vec_a, vec_b, round(dot / greatest(nx * ny, 1e-300), 6) AS cosine
-    FROM dots WHERE round(dot / greatest(nx * ny, 1e-300), 6) >= 0.95
-    """,
-)
-def embedding_near_dups_op(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH near-dup pairs, value-checked (was rows-only in round 1) —
-    same Rademacher-plane trick as ann_cosine_lsh; the planted exact
-    copies always share every bucket, so the check is non-vacuous."""
-    from lnex_spark.operators.similarity import embedding_near_dups
-
-    e = _t(spark, sf_dir, "embeddings")
-    # plant known near-dups: exact copies of vec_id < 50 under new ids
-    dup = e.filter(F.col("vec_id") < 50).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
-    )
-    return embedding_near_dups(
-        e.select("vec_id", "embedding").unionByName(dup),
-        threshold=0.95,
-        dim=64,
-        n_planes=8,
-        planes="rademacher",
     )
 
 
@@ -620,347 +407,6 @@ def dedup_simhash_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_dups(sigs, max_hamming=3).select(
         F.col("doc_a"), F.col("doc_b"), F.col("hamming").cast("long").alias("hamming")
     )
-
-
-@register(
-    "embedding_near_dups_exact",
-    """
-    WITH uni AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200
-      UNION ALL
-      SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id < 50
-    ),
-    pairs AS (
-      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.embedding AS ea, b.embedding AS eb
-      FROM uni a JOIN uni b ON a.vec_id < b.vec_id
-    ),
-    flat AS (
-      SELECT vec_a, vec_b, unnest(ea) AS x, unnest(eb) AS y FROM pairs
-    ),
-    dots AS (
-      SELECT vec_a, vec_b,
-             sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-             sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nx,
-             sqrt(sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE))) AS ny
-      FROM flat GROUP BY vec_a, vec_b
-    )
-    SELECT vec_a, vec_b, round(dot / greatest(nx * ny, 1e-300), 6) AS cosine
-    FROM dots WHERE round(dot / greatest(nx * ny, 1e-300), 6) >= 0.95
-    """,
-)
-def embedding_near_dups_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact (non-LSH) embedding near-dup pairs on a bounded subset —
-    the correctness baseline the LSH path approximates."""
-    from lnex_spark.operators.similarity import _as_double, _cosine
-
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding").filter(F.col("vec_id") < 200)
-    dup = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 50)
-        .select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
-    )
-    uni = e.unionByName(dup).select("vec_id", _as_double(F.col("embedding")).alias("emb"))
-    a, b = uni.alias("a"), uni.alias("b")
-    pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
-        F.col("a.vec_id").alias("vec_a"),
-        F.col("b.vec_id").alias("vec_b"),
-        F.round(_cosine(F.col("a.emb"), F.col("b.emb")), 6).alias("cosine"),
-    )
-    return pairs.filter(F.col("cosine") >= 0.95)
-
-
-_ANN_IVF_SQL = """
-    WITH cents AS (
-      SELECT CAST(vec_id AS INT) AS cell_id, embedding AS cemb
-      FROM embeddings ORDER BY vec_id LIMIT 8
-    ),
-    flat_vc AS (
-      SELECT vec_id, cell_id, unnest(embedding) AS x, unnest(cemb) AS y
-      FROM embeddings, cents
-    ),
-    cos_vc AS (
-      SELECT vec_id, cell_id,
-             round(sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-                   / (sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                    * sqrt(sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))), 6) AS csim
-      FROM flat_vc GROUP BY vec_id, cell_id
-    ),
-    assigned AS (
-      SELECT vec_id, cell_id FROM (
-        SELECT vec_id, cell_id,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell_id ASC) AS rk
-        FROM cos_vc) WHERE rk = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, cell_id FROM (
-        SELECT vec_id, cell_id,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell_id ASC) AS rk
-        FROM cos_vc WHERE vec_id < 5) WHERE rk <= 2
-    ),
-    cand AS (
-      SELECT p.query_id, a.vec_id
-      FROM probes p JOIN assigned a ON a.cell_id = p.cell_id
-      WHERE a.vec_id != p.query_id
-    ),
-    flat_qv AS (
-      SELECT c.query_id, c.vec_id, unnest(eq.embedding) AS x, unnest(ev.embedding) AS y
-      FROM cand c
-      JOIN embeddings eq ON eq.vec_id = c.query_id
-      JOIN embeddings ev ON ev.vec_id = c.vec_id
-    ),
-    scored AS (
-      SELECT query_id, vec_id,
-             round(sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-                   / (sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                    * sqrt(sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))), 6) AS cosine
-      FROM flat_qv GROUP BY query_id, vec_id
-    )
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, vec_id ASC) AS rank
-      FROM scored) WHERE rank <= 5
-    """
-
-
-@register(
-    "ann_cosine_ivf",
-    _ANN_IVF_SQL,
-)
-def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-bucketed approximate top-k, value-checked: deterministic
-    centroids make the whole assign→probe→re-rank path reproducible
-    in SQL."""
-    from lnex_spark.operators.similarity import cosine_topk_ivf
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    return cosine_topk_ivf(e, q, n_cells=8, nprobe=2, k=5).withColumn(
-        "rank", F.col("rank").cast("long")
-    )
-
-
-def _kmeans_sql(iters: int = 3, k: int = 8, dim: int = 64, nvec: int = 300) -> str:
-    """Unrolled Lloyd iterations as DuckDB CTEs — possible because the
-    engine's k-means is deterministic by construction (rounded
-    distances/means, id tiebreaks; operators/clustering.py)."""
-    blocks = [
-        f"""v AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-      FROM embeddings WHERE vec_id < {nvec}
-    )""",
-        f"""c0 AS (
-      SELECT CAST(vec_id AS INT) AS cell_id,
-             list_transform(embedding, x -> round(CAST(x AS DOUBLE), 6)) AS cemb
-      FROM embeddings ORDER BY vec_id LIMIT {k}
-    )""",
-    ]
-    for j in range(1, iters + 1):
-        p = j - 1
-        blocks.append(
-            f"""f{j} AS (
-      SELECT v.vec_id, c.cell_id, unnest(v.emb) AS x, unnest(c.cemb) AS y
-      FROM v, c{p} c
-    ),
-    d{j} AS (
-      SELECT vec_id, cell_id, round(sum((x - y) * (x - y)), 6) AS d
-      FROM f{j} GROUP BY vec_id, cell_id
-    ),
-    a{j} AS (
-      SELECT vec_id, cell_id FROM (
-        SELECT vec_id, cell_id,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cell_id ASC) AS rk
-        FROM d{j}) WHERE rk = 1
-    ),
-    e{j} AS (
-      SELECT a.cell_id, u.i, v.emb[u.i] AS val
-      FROM a{j} a JOIN v USING (vec_id), (SELECT unnest(range(1, {dim + 1})) AS i) u
-    ),
-    m{j} AS (SELECT cell_id, i, round(avg(val), 6) AS m FROM e{j} GROUP BY cell_id, i),
-    c{j} AS (SELECT cell_id, list(m ORDER BY i) AS cemb FROM m{j} GROUP BY cell_id)"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(blocks)
-        + f"""
-    SELECT c.cell_id, n.n_members, c.cemb AS centroid
-    FROM c{iters} c JOIN (SELECT cell_id, count(*) AS n_members FROM a{iters} GROUP BY cell_id) n
-      USING (cell_id)
-    """
-    )
-
-
-# Centroids leave both engines as ','-joined %.6f strings: the elements
-# are rounded to 6 dp, so the fixed-point text is exact on either side,
-# and a string cell sorts where a list cell cannot.
-_CENTROIDS_SQL = (
-    "SELECT * REPLACE (array_to_string(list_transform(centroid,"
-    " x -> format('{:.6f}', x)), ',') AS centroid) FROM (\n" + _kmeans_sql() + "\n)"
-)
-
-
-def _centroid_text(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "centroid",
-        F.concat_ws(",", F.transform("centroid", lambda x: F.format_string("%.6f", x))),
-    )
-
-
-@register("kmeans_cells", _CENTROIDS_SQL)
-def kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative Lloyd's k-means (3 iterations, deterministic init and
-    rounding), value-checked against fully-unrolled SQL iterations."""
-    from lnex_spark.operators.clustering import kmeans_lloyd
-
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
-    centroids, assignment = kmeans_lloyd(e, k=8, iters=3)
-    counts = assignment.groupBy("cell_id").agg(F.count("*").alias("n_members"))
-    return _centroid_text(
-        centroids.join(counts, "cell_id").select(
-            "cell_id", "n_members", F.col("cemb").alias("centroid")
-        )
-    )
-
-
-# --- product quantization (Jégou et al., TPAMI 2011) -------------------
-# Shared derivation: embeddings quantized to floor(x * 2^20) int64
-# (exact — see similarity._pq_quantize), split into M=8 subspaces of 8
-# dims, codebook = subvectors of vec_id < 16, every distance an exact
-# integer — so DuckDB re-derives codes and ADC distances identically.
-_PQ_BASE_SQL = """
-    v AS (
-      SELECT vec_id,
-             [CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT) for x in embedding] AS qv
-      FROM embeddings
-    ),
-    sub AS (
-      SELECT v.vec_id, m.m, v.qv[m.m*8+1 : m.m*8+8] AS s
-      FROM v, generate_series(0, 7) AS m(m)
-    ),
-    cb AS (SELECT m, vec_id AS c, s FROM sub WHERE vec_id < 16),
-    dist AS (
-      SELECT sub.vec_id, sub.m, cb.c,
-             CAST(list_sum(list_transform(sub.s, (x, i) -> (x - cb.s[i]) * (x - cb.s[i]))) AS BIGINT) AS d2
-      FROM sub JOIN cb USING (m)
-    ),
-    codes AS (
-      SELECT vec_id, m, c AS code FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2 ASC, c ASC) AS rk
-        FROM dist) WHERE rk = 1
-    )
-"""
-
-
-@register(
-    "pq_codes_embeddings",
-    f"""
-    WITH {_PQ_BASE_SQL}
-    SELECT vec_id, CAST(m AS INT) AS m, CAST(code AS INT) AS code FROM codes
-    """,
-)
-def pq_codes_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ encode (similarity.pq_codes): one zero-shuffle Arrow pass,
-    codebook broadcast in the UDF closure, exploded (vec_id, m, code)
-    output value-checked against the full SQL re-derivation."""
-    from lnex_spark.operators.similarity import pq_codes
-
-    return pq_codes(_t(spark, sf_dir, "embeddings"), m_subspaces=8, n_codes=16)
-
-
-@register(
-    "ann_pq_adc",
-    f"""
-    WITH {_PQ_BASE_SQL},
-    dtq AS (
-      SELECT q.vec_id AS query_id, q.m, cb.c,
-             CAST(list_sum(list_transform(q.s, (x, i) -> (x - cb.s[i]) * (x - cb.s[i]))) AS BIGINT) AS d2
-      FROM sub q JOIN cb USING (m) WHERE q.vec_id < 5
-    ),
-    adc AS (
-      SELECT dtq.query_id, codes.vec_id, CAST(sum(dtq.d2) AS BIGINT) AS adc
-      FROM codes JOIN dtq ON codes.m = dtq.m AND codes.code = dtq.c
-      WHERE codes.vec_id <> dtq.query_id
-      GROUP BY dtq.query_id, codes.vec_id
-    )
-    SELECT query_id, vec_id, adc, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc ASC, vec_id ASC) AS rank
-      FROM adc) WHERE rank <= 5
-    """,
-)
-def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ asymmetric-distance top-k (similarity.pq_adc_topk): the
-    compressed-exhaustive-scan ANN path alongside brute-force / LSH /
-    IVF — per-batch top-k inside one Arrow pass, exact-integer ADC
-    values identical to the SQL twin."""
-    from lnex_spark.operators.similarity import pq_adc_topk
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    return pq_adc_topk(e, q, m_subspaces=8, n_codes=16, k=5)
-
-
-@register(
-    "ann_ivfpq",
-    f"""
-    WITH {_PQ_BASE_SQL},
-    cents AS (
-      SELECT CAST(vec_id AS INT) AS cell_id, embedding AS cemb
-      FROM embeddings ORDER BY vec_id LIMIT 8
-    ),
-    flat_vc AS (
-      SELECT vec_id, cell_id, unnest(embedding) AS x, unnest(cemb) AS y
-      FROM embeddings, cents
-    ),
-    cos_vc AS (
-      SELECT vec_id, cell_id,
-             round(sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-                   / (sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                    * sqrt(sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))), 6) AS csim
-      FROM flat_vc GROUP BY vec_id, cell_id
-    ),
-    assigned AS (
-      SELECT vec_id, cell_id FROM (
-        SELECT vec_id, cell_id,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell_id ASC) AS rk
-        FROM cos_vc) WHERE rk = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, cell_id FROM (
-        SELECT vec_id, cell_id,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell_id ASC) AS rk
-        FROM cos_vc WHERE vec_id < 5) WHERE rk <= 2
-    ),
-    cand AS (
-      SELECT p.query_id, a.vec_id
-      FROM probes p JOIN assigned a ON a.cell_id = p.cell_id
-      WHERE a.vec_id != p.query_id
-    ),
-    dtq AS (
-      SELECT q.vec_id AS query_id, q.m, cb.c,
-             CAST(list_sum(list_transform(q.s, (x, i) -> (x - cb.s[i]) * (x - cb.s[i]))) AS BIGINT) AS d2
-      FROM sub q JOIN cb USING (m) WHERE q.vec_id < 5
-    ),
-    adc AS (
-      SELECT c.query_id, c.vec_id, CAST(sum(dtq.d2) AS BIGINT) AS adc
-      FROM cand c
-      JOIN codes ON codes.vec_id = c.vec_id
-      JOIN dtq ON dtq.query_id = c.query_id AND dtq.m = codes.m AND dtq.c = codes.code
-      GROUP BY c.query_id, c.vec_id
-    )
-    SELECT query_id, vec_id, adc, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc ASC, vec_id ASC) AS rank
-      FROM adc) WHERE rank <= 5
-    """,
-)
-def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ composition (similarity.ann_ivfpq_topk): IVF cell probing
-    restricts candidates, PQ asymmetric distance re-ranks them — coarse
-    and fine quantizer both deterministic, the whole composed index
-    value-checked against one SQL re-derivation."""
-    from lnex_spark.operators.similarity import ann_ivfpq_topk
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    return ann_ivfpq_topk(e, q, n_cells=8, nprobe=2, m_subspaces=8, n_codes=16, k=5)
 
 
 # ======================================================================

@@ -183,9 +183,15 @@ def run_resumable(
     (context-free L2, see the module docstring), so a resumed run is
     bit-identical to an uninterrupted one regardless of where it was
     killed. A resume whose run identity (:func:`run_identity`) differs
-    from the one stored next to the manifest raises ValueError. Returns
-    the bucket ids processed in this invocation.
+    from the one stored next to the manifest raises ValueError, and so
+    does an ``n_buckets`` or ``buckets_per_batch`` below 1 (checked
+    before anything is written). Returns the bucket ids processed in
+    this invocation.
     """
+    for name, value in (("n_buckets", n_buckets), ("buckets_per_batch", buckets_per_batch)):
+        if value < 1:
+            raise ValueError(f"{name} must be at least 1, got {value}")
+
     from lnex_spark.operators.lineage import (
         StageTimer,
         check_run_identity,

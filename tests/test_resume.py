@@ -180,6 +180,26 @@ def test_resume_refuses_changed_gazetteer(spark, fixture_data, model, tmp_path):
         run_resumable(spark, t_df, other, winners, manifest, n_buckets=8, buckets_per_batch=4)
 
 
+def test_resume_refuses_a_batch_size_below_one(spark, fixture_data, model, tmp_path):
+    """A negative batch size would process no bucket and return [], so
+    the job would finalize the killed run's partial winners."""
+    t_df = to_spark_transcripts(spark, fixture_data["transcripts"])
+    winners, manifest = _killed_run(spark, t_df, model, tmp_path)
+    with pytest.raises(ValueError, match="buckets_per_batch"):
+        run_resumable(spark, t_df, model, winners, manifest, n_buckets=8, buckets_per_batch=-1)
+    assert completed_buckets(spark, manifest) == [0, 1, 2, 3]
+
+
+def test_zero_buckets_is_refused_before_the_identity_is_written(spark, fixture_data, model, tmp_path):
+    """An identity stored with n_buckets=0 would refuse every later run
+    with a valid bucket count as a changed identity."""
+    t_df = to_spark_transcripts(spark, fixture_data["transcripts"])
+    winners, manifest = str(tmp_path / "winners"), str(tmp_path / "manifest")
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_resumable(spark, t_df, model, winners, manifest, n_buckets=0)
+    assert not (tmp_path / "manifest_identity").exists()
+
+
 def test_matching_resume_of_file_input_equals_uninterrupted(spark, fixture_data, model, tmp_path):
     """Same bucket count, model and input files: the resume is accepted
     and finalizes to the triples of an uninterrupted run."""

@@ -30,9 +30,6 @@ CHECKS = {
     "agg": dict(want=["HashAggregate", r"partial_sum"]),
     # explicit codegen-mode dump: the whole built-in chain must fuse
     "codegen": dict(want=[r"Found 1 WholeStageCodegen subtrees|WholeStageCodegen \(1\)"]),
-    # IVF: centroid side broadcast; candidate join is broadcast too
-    # (probes are tiny); no SortMergeJoin anywhere
-    "ivf": dict(want=["BroadcastHashJoin"], forbid=["SortMergeJoin"]),
     # co-mention pairs are unrolled array-side from collect_set —
     # NO self-join anywhere in the plan
     "comention": dict(want=["HashAggregate", "Generate"], forbid=["Join"]),
@@ -75,22 +72,9 @@ CHECKS = {
         want=["HashAggregate", r"partial_sum"],
         forbid=["EvalPython", "MapInPandas", "Join"],
     ),
-    # r2 multi-probe LSH ANN: bucket-equi join after Hamming-ball
-    # probe expansion — never an all-pairs stage
-    "lsh_multiprobe": dict(
-        want=["Join", "Generate"],
-        forbid=["CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin"],
-    ),
     # r2 real media decode: synthesize + decode are chained MapInPandas
     # islands over the same scan — ZERO exchanges end-to-end
     "media": dict(want=["MapInPandas"], forbid=["Exchange", "Join"]),
-    # r2 PQ ADC scan: ONE Arrow island over the corpus (codebook +
-    # distance tables ride the UDF closure), then only the tiny
-    # per-batch top-k rows reach the final window — never a join
-    "pq_adc": dict(
-        want=["MapInPandas", "Window"],
-        forbid=["Join", "CartesianProduct", "BroadcastNestedLoopJoin"],
-    ),
     # r2 triple MERGE: the batch must broadcast into a left-anti hash
     # join — the big triple table is never shuffled or sort-merged
     "kg_merge": dict(
@@ -165,12 +149,6 @@ def main() -> int:
 
     plans["codegen"] = grab_codegen(quality_features(docs))
 
-    from lnex_spark.operators.similarity import cosine_topk_ivf
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    plans["ivf"] = grab(cosine_topk_ivf(emb, q))
-
     from lnex_spark.operators.graph import comention_edges
 
     triples = spark.createDataFrame(
@@ -210,16 +188,10 @@ def main() -> int:
 
     from lnex_spark.operators.dedup import minhash_signatures, simhash_signatures
     from lnex_spark.operators.multimodal import image_stats, synthesize_real_media
-    from lnex_spark.operators.similarity import cosine_topk_lsh
 
     plans["minhash"] = grab(minhash_signatures(docs, k=8, n=3))
     plans["simhash"] = grab(simhash_signatures(docs))
-    plans["lsh_multiprobe"] = grab(cosine_topk_lsh(emb, q, dim=16, probe_bits=1))
     plans["media"] = grab(image_stats(synthesize_real_media(docs)))
-
-    from lnex_spark.operators.similarity import pq_adc_topk
-
-    plans["pq_adc"] = grab(pq_adc_topk(emb, q, m_subspaces=8, n_codes=16))
 
     from lnex_spark.operators.incremental import merge_triples
 
