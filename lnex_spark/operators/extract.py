@@ -23,7 +23,8 @@ calls ``importlib.invalidate_caches()``
 makes every ``zipimport.zipimporter`` re-parse its whole archive
 directory, and a worker holds one importer per imported subpackage of
 pyspark.zip (16 in a KG build's worker): ~0.2 CPU-s per task, about
-0.8 of a 30k-turn build's ~5 CPU-s. CPython 3.13 made that method
+0.8 of what a 30k-turn build cost before this fix (~5 CPU-s on local[4],
+4 vCPU). CPython 3.13 made that method
 lazy: it only drops the cache entry (``Lib/zipimport.py``,
 ``zipimporter.invalidate_caches``).
 So the UDF body first calls :func:`_skip_unchanged_zip_rereads`, which
@@ -34,6 +35,12 @@ not a setting: it ships in this module, so it runs wherever extraction
 runs (``--py-files`` included). It pays off from a worker's second task
 on, so it needs ``spark.python.worker.reuse`` (the default); without
 reuse each task starts a fresh worker and the helper costs one call.
+
+Where a warm 30k-turn build's CPU goes now (local[4], 4 vCPU, summed
+over the driver's process tree): ~2.2 CPU-s in the JVM, ~1.0 in the
+Python workers and ~0.5 in the driver's Python. Most of the workers'
+share is the matcher, ``textproc.extract_mentions``: ~0.6 CPU-s for the
+same turns in one process, ~0.3-0.4 of it the tokenizer.
 """
 
 from __future__ import annotations
@@ -88,7 +95,13 @@ def _skip_unchanged_zip_rereads() -> None:
 
 def extract_mentions_df(transcripts: DataFrame, bc_struct) -> DataFrame:
     """transcripts(conv_id, turn_idx, ..., text) → mentions(conv_id,
-    turn_idx, start, end, surface, norm); text[start:end] == surface."""
+    turn_idx, start, end, surface, norm); text[start:end] == surface.
+
+    A row with a null ``conv_id`` or ``turn_idx`` fails the stage with
+    a ValueError naming the column: the pair is the triple subject
+    ``conv_id#turn_idx``, and ``concat_ws`` would silently drop a null
+    half of it. Every build path (``extract_link``, ``run_resumable``,
+    the streaming sink) extracts here."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _skip_unchanged_zip_rereads()
@@ -96,6 +109,9 @@ def extract_mentions_df(transcripts: DataFrame, bc_struct) -> DataFrame:
         segmenter = HashtagSegmenter(struct.unigram)
         full, pref, mx = struct.full_names, struct.prefixes, struct.max_tokens
         for pdf in batches:
+            for key in ("conv_id", "turn_idx"):
+                if pdf[key].isna().any():
+                    raise ValueError(f"extraction input has a null {key}")
             out_conv, out_turn, out_s, out_e, out_surf, out_norm = [], [], [], [], [], []
             for conv_id, turn_idx, text in zip(
                 pdf["conv_id"].values, pdf["turn_idx"].values, pdf["text"].values

@@ -1,21 +1,36 @@
-"""Tweet-style preprocessing, tokenization, hashtag segmentation, and
-the bottom-up n-gram matcher (T2, T3, M1, M2, M3).
+"""Tweet-style tokenization, hashtag segmentation and the bottom-up
+n-gram matcher (T2, T3, M1, M2, M3).
 
-Pure functions — no Spark imports. These run INSIDE the single
-mapInPandas extraction stage (one Arrow boundary for T2+T3+M1-M3, per
-SURVEY.md §4.3 "UDF-stage fusion") and are unit-tested without a
-SparkSession.
+Pure functions, no Spark imports. They run inside the one mapInPandas
+extraction stage (operators/extract.py) and in the driver-side gold
+annotator, and are unit-tested without a SparkSession. The behavioral
+model is LNEx's (COLING 2018 §3.3-§4.2): tweet-aware tokens (URLs,
+@mentions and punctuation are not matchable and break n-gram
+adjacency), unigram-LM hashtag segmentation, bottom-up n-gram growth
+pruned by the gazetteer's prefix set, longest-match-wins overlap
+resolution, and char offsets into the original text
+(``text[start:end] == surface``).
 
-Behavioral model (reference: halolimat/LNEx ``LNEx/core.py`` +
-``LNEx/tokenizer.py`` — mount empty, semantics from the COLING 2018
-paper §3.3-§4.2):
-  * tweet-aware tokenization (URLs / @mentions / punctuation are not
-    matchable tokens; punctuation breaks n-gram adjacency),
-  * hashtag segmentation via a unigram LM (Viterbi / Norvig-style),
-  * bottom-up n-gram growth with sub-gram (prefix) pruning against the
-    gazetteer matching structure,
-  * longest-match-wins overlap resolution,
-  * char offsets into the ORIGINAL text (``text[start:end] == surface``).
+Tokenizer rule (:func:`build_token_stream`): split the text on single
+spaces and keep a running offset. A chunk of ASCII letters only that
+is not one of the 32 letter-only emoticons (``_LETTER_EMOTICONS``) is
+exactly one ``word`` token, or a break if it is a ``_SKIP_WORDS``
+word; every other chunk goes through ``_TOKEN_RE`` on that chunk
+alone, with its offsets shifted by the chunk's start. That gives the
+same stream as ``_TOKEN_RE`` over the whole text:
+
+  * no ``_TOKEN_RE`` alternative matches whitespace, and its only
+    look-around is the emoticon look-ahead ``(?![A-Za-z0-9])``; at a
+    chunk boundary it sees whitespace or the end of the string, and
+    both satisfy it, so tokenizing each chunk alone gives the same
+    tokens as tokenizing the whole text;
+  * in an all-ASCII-letter chunk an emoticon-shaped prefix is followed
+    by an ASCII letter, so the look-ahead fails unless the emoticon is
+    the whole chunk (the 32 are every such 1-3-letter string);
+  * ``url``, ``mention`` and ``hashtag`` each need a ``:``, ``.``,
+    ``@`` or ``#``, so ``word`` takes the whole chunk;
+  * the ASCII gate is required: the look-ahead rejects only ASCII
+    alphanumerics, so ``xDéjà`` is emoticon ``xD`` + word ``éjà``.
 """
 
 from __future__ import annotations
@@ -53,6 +68,13 @@ _TOKEN_RE = re.compile(
 
 # "RT" retweet marker is skipped like the reference's preprocessing.
 _SKIP_WORDS = frozenset({"rt"})
+
+# Every ASCII-letter string that _TOKEN_RE reads as an emoticon, not a
+# word: all are 2-3 letters (eyes-mouth, eyes-nose-mouth, mouth-first).
+_LETTER_EMOTICONS = frozenset(
+    "xd xD xo xO xp xP Xd XD Xo XO Xp XP dx dX Dx DX "
+    "xod xoD xoo xoO xop xoP Xod XoD Xoo XoO Xop XoP dox doX Dox DoX".split()
+)
 
 
 # Stream token = (norm, start, end, is_break, group):
@@ -120,34 +142,48 @@ def build_token_stream(
     the hashtag's full span and a shared group id (a match inside a
     hashtag reports the hashtag's span, per the reference's behavior of
     annotating the hashtag itself).
+
+    A space-separated chunk of plain ASCII letters skips the regex; the
+    module docstring gives the rule and why the stream still equals one
+    ``_TOKEN_RE`` pass over the whole text.
     """
-    # fused tokenize+classify loop (not tokenize_with_spans + re-scan):
-    # the per-token Match-method overhead is the single hottest part of
-    # the whole extraction stage, so spans come from one span() call
-    # and the intermediate (raw, start, end, kind) list is skipped
     stream: list[tuple[str, int, int, bool, int]] = []
     append = stream.append
+    finditer = _TOKEN_RE.finditer
     group = 0
-    for m in _TOKEN_RE.finditer(text):
-        kind = m.lastgroup
-        start, end = m.span()
-        if kind == "word":
-            low = m.group(0).lower()
+    pos = 0
+    for chunk in text.split(" "):
+        end = pos + len(chunk)
+        if chunk.isascii() and chunk.isalpha() and chunk not in _LETTER_EMOTICONS:
+            low = chunk.lower()
             if low in _SKIP_WORDS:
-                append(("", start, end, True, -1))
+                append(("", pos, end, True, -1))
             else:
-                append((low, start, end, False, -1))
-        elif kind == "num":
-            append((m.group(0).lower(), start, end, False, -1))
-        elif kind == "hashtag":
-            body = m.group(0)[1:].lower()
-            words = segmenter.segment(body) if segmenter else [body]
-            group += 1
-            for w in words:
-                append((w, start, end, False, group))
-            append(("", end, end, True, -1))
-        else:  # url / mention / punct break adjacency
-            append(("", start, end, True, -1))
+                append((low, pos, end, False, -1))
+        elif chunk:
+            for m in finditer(chunk):
+                kind = m.lastgroup
+                start, stop = m.span()
+                start += pos
+                stop += pos
+                if kind == "word":
+                    low = m.group(0).lower()
+                    if low in _SKIP_WORDS:
+                        append(("", start, stop, True, -1))
+                    else:
+                        append((low, start, stop, False, -1))
+                elif kind == "num":
+                    append((m.group(0).lower(), start, stop, False, -1))
+                elif kind == "hashtag":
+                    body = m.group(0)[1:].lower()
+                    words = segmenter.segment(body) if segmenter else [body]
+                    group += 1
+                    for w in words:
+                        append((w, start, stop, False, group))
+                    append(("", stop, stop, True, -1))
+                else:  # url / mention / punct / emoticon break adjacency
+                    append(("", start, stop, True, -1))
+        pos = end + 1
     return stream
 
 
@@ -195,11 +231,18 @@ def extract_mentions(
     # already-accepted longer one: longer in characters, then in tokens
     # (every token of a hashtag carries the hashtag's whole span, so
     # only the token count tells "adyar nagar" from "adyar" there),
-    # then earlier.
-    candidates.sort(key=lambda c: (-(c[1] - c[0]), -(c[2].count(" ") + 1), c[0], c[2]))
-    accepted: list[tuple[int, int, str]] = []
-    for s, e, g in candidates:
-        if all(e <= as_ or s >= ae for as_, ae, _ in accepted):
-            accepted.append((s, e, g))
-    accepted.sort(key=lambda c: (c[0], c[1]))
+    # then earlier. Accepted spans are disjoint and non-empty, so a plain
+    # tuple sort puts them in text order.
+    accepted = candidates
+    if len(candidates) > 1:
+        candidates.sort(key=lambda c: (-(c[1] - c[0]), -(c[2].count(" ") + 1), c[0], c[2]))
+        accepted = []
+        for c in candidates:
+            s, e = c[0], c[1]
+            for a in accepted:
+                if s < a[1] and e > a[0]:  # overlaps a longer match
+                    break
+            else:
+                accepted.append(c)
+        accepted.sort()
     return [(s, e, text[s:e], g) for s, e, g in accepted]

@@ -80,3 +80,26 @@ def test_determinism_across_parallelism(spark, fixture_data):
         return sorted(tuple(r) for r in m.collect())
 
     assert run(2) == run(7)
+
+
+@pytest.fixture(scope="module")
+def chennai_model(spark, fixture_data):
+    return build_gazetteer(
+        spark,
+        to_spark_gaz(spark, fixture_data["gaz"]),
+        to_spark_stopwords(spark, fixture_data["stopwords"]),
+    )
+
+
+@pytest.mark.parametrize("key", ["conv_id", "turn_idx"])
+def test_null_subject_key_is_refused(spark, chennai_model, key):
+    """A turn with a null conv_id or turn_idx fails extraction with an
+    error that names the column. Unchecked, a null conv_id became the
+    subject '5' (concat_ws skips nulls) and a null turn_idx failed in
+    pandas on a NaN."""
+    name = sorted(chennai_model.bc_struct.value.full_names)[0]
+    row = {"conv_id": "c1", "turn_idx": 5, "text": f"flooding near {name} now"}
+    row[key] = None
+    t = spark.createDataFrame([row], "conv_id string, turn_idx int, text string")
+    with pytest.raises(Exception, match=f"null {key}"):
+        mention_triples(extract_link(t, chennai_model)).collect()

@@ -8,7 +8,10 @@ from hypothesis import strategies as st
 
 from lnex_spark.gazetteer.augment import name_variants, normalize_name
 from lnex_spark.operators.textproc import (
+    _SKIP_WORDS,
+    _TOKEN_RE,
     HashtagSegmenter,
+    build_token_stream,
     extract_mentions,
     tokenize_with_spans,
 )
@@ -33,6 +36,60 @@ def test_normalize_idempotent(s):
 def test_tokenize_spans_exact(s):
     for raw, start, end, _kind in tokenize_with_spans(s):
         assert s[start:end] == raw
+
+
+def _whole_text_stream(text, segmenter):
+    """The token stream as one ``_TOKEN_RE`` pass over the whole text
+    builds it: the reference for ``build_token_stream``'s chunked path."""
+    stream, group = [], 0
+    for m in _TOKEN_RE.finditer(text):
+        kind = m.lastgroup
+        start, end = m.span()
+        if kind == "word":
+            low = m.group(0).lower()
+            if low in _SKIP_WORDS:
+                stream.append(("", start, end, True, -1))
+            else:
+                stream.append((low, start, end, False, -1))
+        elif kind == "num":
+            stream.append((m.group(0).lower(), start, end, False, -1))
+        elif kind == "hashtag":
+            body = m.group(0)[1:].lower()
+            group += 1
+            for w in segmenter.segment(body) if segmenter else [body]:
+                stream.append((w, start, end, False, group))
+            stream.append(("", end, end, True, -1))
+        else:
+            stream.append(("", start, end, True, -1))
+    return stream
+
+
+# Pieces that sit at the edges of the plain-word fast path: letter
+# emoticons and emoticon prefixes glued to non-ASCII letters, retweet
+# markers, every kind of whitespace, hashtags, URLs, a lone "@",
+# apostrophes, digits and letters whose case mapping changes length.
+_ADVERSARIAL = st.lists(
+    st.sampled_from(
+        [
+            "xD", "xo", "dox", "Dx", "XP", "xod", "x", "D", "o", "p",
+            "xDéjà", "xoé", "éjà", "café",
+            "rt", "RT", "Rt",
+            " ", " ", " ",  # weighted up: single spaces split chunks
+            "  ", "\t", "\n", "\u00a0", "\u3000",
+            "#adyarnagar", "#chennai", "#", "http://t.co/x", "www.a.in", "@", "@user",
+            "'", "it's", "7", "42nd", "İ", "Σ", "ß",
+            "adyar", "Nagar", "RIVER", ":", ";", ")", "(", "-", ".", "^_^", "<3",
+        ]
+    ),
+    max_size=24,
+).map("".join)
+
+
+@given(st.one_of(_ADVERSARIAL, TEXTS), st.booleans())
+@settings(max_examples=500)
+def test_token_stream_equals_whole_text_regex(text, with_segmenter):
+    seg = HashtagSegmenter({"adyar": 5, "nagar": 5, "chennai": 3}) if with_segmenter else None
+    assert build_token_stream(text, seg) == _whole_text_stream(text, seg)
 
 
 @given(st.text(alphabet="abcdefgh", min_size=1, max_size=24))

@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import itertools
+import string
+
 from lnex_spark.gazetteer.augment import is_noise_name, name_variants, normalize_name
 from lnex_spark.operators.textproc import (
     HashtagSegmenter,
+    build_token_stream,
     extract_mentions,
     tokenize_with_spans,
 )
@@ -223,3 +227,75 @@ def test_hashtag_keeps_the_longest_name():
     assert norms("adyar nagar is flooded") == ["adyar nagar"]
     assert norms("#adyarnagar is flooded") == ["adyar nagar"]
     assert norms("stuck in #velacherycentralnagar") == ["velachery central nagar"]
+
+
+# --- the plain-word fast path of build_token_stream ----------------------
+
+
+def _stream_from_spans(text):
+    """The stream ``tokenize_with_spans`` implies for a text without
+    hashtags."""
+    out = []
+    for raw, s, e, kind in tokenize_with_spans(text):
+        if kind == "num" or (kind == "word" and raw.lower() != "rt"):
+            out.append((raw.lower(), s, e, False, -1))
+        else:
+            out.append(("", s, e, True, -1))
+    return out
+
+
+def test_token_stream_equals_regex_on_every_short_ascii_word():
+    """Every 1-3-letter ASCII string (52 + 52**2 + 52**3) gives the
+    stream the whole-text regex gives, alone and between other words."""
+    letters = string.ascii_letters
+    for n in (1, 2, 3):
+        for t in itertools.product(letters, repeat=n):
+            w = "".join(t)
+            assert build_token_stream(w, None) == _stream_from_spans(w), w
+            text = f"go {w} now"
+            assert build_token_stream(text, None) == _stream_from_spans(text), text
+
+
+def test_token_stream_keeps_letter_emoticons():
+    """ASCII-letter chunks that the regex reads as emoticons stay one
+    break token; one letter more and they are words again."""
+    text = "go xD dox Dx xo XP now xDR doxa"
+    assert build_token_stream(text, None) == [
+        ("go", 0, 2, False, -1),
+        ("", 3, 5, True, -1),
+        ("", 6, 9, True, -1),
+        ("", 10, 12, True, -1),
+        ("", 13, 15, True, -1),
+        ("", 16, 18, True, -1),
+        ("now", 19, 22, False, -1),
+        ("xdr", 23, 26, False, -1),
+        ("doxa", 27, 31, False, -1),
+    ]
+
+
+def test_token_stream_needs_the_ascii_gate():
+    """The emoticon look-ahead rejects only ASCII alphanumerics, so an
+    emoticon-shaped start of a non-ASCII word is an emoticon."""
+    assert build_token_stream("xDéjà vu", None) == [
+        ("", 0, 2, True, -1),
+        ("éjà", 2, 5, False, -1),
+        ("vu", 6, 8, False, -1),
+    ]
+    assert build_token_stream("xoé", None) == [("", 0, 2, True, -1), ("é", 2, 3, False, -1)]
+    assert build_token_stream("café", None) == [("café", 0, 4, False, -1)]
+
+
+def test_token_stream_offsets_across_whitespace_and_retweets():
+    text = "RT  adyar\tnagar rt\u00a0guindy #adyarNagar  x"
+    seg = HashtagSegmenter({"adyar": 5, "nagar": 5})
+    assert build_token_stream(text, seg) == [
+        ("", 0, 2, True, -1),
+        ("adyar", 4, 9, False, -1),
+        ("nagar", 10, 15, False, -1),
+        ("", 16, 18, True, -1),
+        ("guindy", 19, 25, False, -1),
+        ("adyar", 26, 37, False, 1),
+        ("nagar", 26, 37, False, 1),
+        ("", 37, 37, True, -1),
+        ("x", 39, 40, False, -1),
+    ]
