@@ -7,10 +7,11 @@ gazetteer table to a region. Its output is collected once, bounded by
 ``MAX_NAMES``, and G2-G7 run in process on the driver over the pure
 functions of ``augment`` — the ones the gold annotator uses too, so
 "what is a name variant" has one definition. That is how LNEx builds
-its dictionaries (COLING 2018 §3.2); the match structure is then
-broadcast — the Spark correspondence of the reference's
-process-global dictionaries (LNEx ``set_global_env``,
-``LNEx/core.py``; mount empty, see SURVEY.md §0). The variant table
+its dictionaries (COLING 2018 §3.2); the match structure, which also
+maps every name to its L2 winner, is then broadcast — the Spark
+correspondence of the reference's process-global dictionaries (LNEx
+``set_global_env``, ``LNEx/core.py``; mount empty, see SURVEY.md §0),
+and the extraction UDF links by a lookup in it. The variant table
 goes back to Spark as Arrow batches handed to the JVM, so the build
 adds no Python boundary of its own.
 
@@ -30,8 +31,11 @@ not a Spark G4.
 
 from __future__ import annotations
 
+from array import array
 from collections import Counter
 from collections.abc import Collection, Iterable, Iterator, Mapping
+from itertools import accumulate
+from operator import itemgetter
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +45,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from lnex_spark.common import cat_priority
 from lnex_spark.gazetteer import augment as A
+from lnex_spark.operators.textproc import HashtagSegmenter
 
 GAZETTEER_SCHEMA = T.StructType(
     [
@@ -68,12 +73,15 @@ VARIANTS_SCHEMA = T.StructType(
     ]
 )
 
+# what L2 reads of a variant row: one row per (norm, geo_id) candidate
+CANDIDATE_COLS = ("norm", "geo_id", "match_type", "cat_priority", "category", "region")
+
 # Driver-OOM guard: the build is meant for a REGION-SCOPED gazetteer
 # (city ≈ 10^4-10^5 names ≈ a few MB broadcast). It bounds the rows
 # collected for the build, the variant rows augmentation holds (before
-# the noise filter) and the names a load collects. Measured on 4 vCPU,
-# local[4]: 1M synthetic names (3.15M hp variant rows) peak the Python
-# driver at ~2.2 GB and build in ~108 s (G2-G5 ~70 s of it), so near
+# the noise filter) and the variant rows a load collects. Measured on
+# 4 vCPU, local[4]: 1M synthetic names (3.15M hp variant rows) peak the
+# Python driver at ~2.2 GB and build in ~108 s (G2-G5 ~70 s of it), so near
 # the limit the driver needs ~10 GB. Past the limit the caller forgot
 # the bbox scope (G1) or genuinely needs the sharded fallback (module
 # docstring). The limit is read when checked.
@@ -113,11 +121,24 @@ def collect_gazetteer(gaz: DataFrame) -> Iterator[dict]:
     return (row for batch in table.to_batches() for row in batch.to_pylist())
 
 
-def collect_norms(variants: DataFrame) -> list[str]:
-    """The distinct names of a (saved) variant table, under the guard."""
-    norms = [r[0] for r in variants.select("norm").distinct().limit(MAX_NAMES + 1).collect()]
-    check_max_names(len(norms), "match structure names")
-    return norms
+def collect_candidates(variants: DataFrame) -> Iterator[tuple]:
+    """The candidate rows (``CANDIDATE_COLS``) of a (saved) variant
+    table, in one Spark job and under the guard; a row without a name
+    can never match, so it is left out."""
+    table = (
+        variants.select(*CANDIDATE_COLS)
+        .where(F.col("norm").isNotNull())
+        .limit(MAX_NAMES + 1)
+        .toArrow()
+    )
+    check_max_names(table.num_rows, "variant rows")
+    return zip(*(table.column(c).to_pylist() for c in CANDIDATE_COLS))
+
+
+def candidate_rows(variants: Iterable[tuple]) -> Iterator[tuple]:
+    """``VARIANTS_SCHEMA`` rows → candidate rows (``CANDIDATE_COLS``)."""
+    pick = itemgetter(*(VARIANTS_SCHEMA.names.index(c) for c in CANDIDATE_COLS))
+    return map(pick, variants)
 
 
 def build_variants(gazetteer: Iterable[Mapping], stopwords: Collection[str], mode: str = "hp") -> list[tuple]:
@@ -164,37 +185,147 @@ def build_unigram(variants: Iterable[tuple], wordlist: Iterable[tuple] = ()) -> 
     return dict(freq)
 
 
+def l2_winners(candidates: Iterable[tuple]) -> dict[str, tuple]:
+    """The L2 winner of every name over candidate rows
+    (``CANDIDATE_COLS``, several per name): name → (geo_id, match_type,
+    cat_priority, category, region) of the candidate with the highest
+    match_type, then the lowest cat_priority, then the lowest geo_id.
+    That is the key of ``link._top1_by``, which the per-mention
+    reference chain applies (tests/test_link_lookup.py pins the two
+    together). Equal winners are one tuple object, so names of one
+    entity share it."""
+    winners: dict[str, tuple] = {}
+    shared: dict[tuple, tuple] = {}
+    for norm, geo_id, match_type, cat_prio, category, region in candidates:
+        old = winners.get(norm)
+        if old is None or (-match_type, cat_prio, geo_id) < (-old[1], old[2], old[0]):
+            w = (geo_id, match_type, cat_prio, category, region)
+            winners[norm] = shared.setdefault(w, w)
+    return winners
+
+
+def _uints(values: Iterable[int]) -> array:
+    """Non-negative ints in the narrowest array type that holds them."""
+    values = list(values)
+    top = max(values, default=0)
+    return array(next(c for c in "BHIQ" if top < 1 << 8 * array(c).itemsize), values)
+
+
+def _join(strings: list[str]) -> tuple[str, array]:
+    """Strings as one string plus the length of each. Pickle memoizes
+    string objects by identity, so a list of strings pickles to bytes
+    that depend on which of its equal strings happen to be one object;
+    one string does not."""
+    return "".join(strings), _uints(map(len, strings))
+
+
+def _split(text: str, lengths: array) -> list[str]:
+    """The inverse of :func:`_join`."""
+    ends = list(accumulate(lengths))
+    return [text[a:b] for a, b in zip([0, *ends], ends)]
+
+
 class MatchStruct:
     """G7: the driver-built matching structure shipped to executors.
 
     LNEx's process-global dicts ≙ one Spark broadcast variable:
-      full_names  — every matchable normalized variant
+      winners     — every matchable normalized variant → its L2 winner
+                    (geo_id, match_type, cat_priority, category,
+                    region): linking is a lookup here, as LNEx's
+                    gazetteer dict maps a name to its geo-ids
+      full_names  — a read-only view of the winners' keys
       prefixes    — every space-joined token prefix of every variant
                     (bottom-up n-gram growth pruning, paper §4.1)
       unigram     — G6 freq dict for hashtag segmentation
       max_tokens  — longest variant length, caps n-gram growth
+
+    It pickles to values only (:meth:`__reduce__`): the same gazetteer
+    pickles to the same bytes under any ``PYTHONHASHSEED``. The hashtag
+    segmenter a worker builds from it (:meth:`segmenter`) is not
+    pickled.
     """
 
-    __slots__ = ("full_names", "prefixes", "unigram", "max_tokens")
+    __slots__ = ("winners", "prefixes", "unigram", "max_tokens", "_segmenter")
 
-    def __init__(self, full_names: frozenset, prefixes: frozenset, unigram: dict, max_tokens: int):
-        self.full_names = full_names
+    def __init__(self, winners: dict, prefixes: frozenset, unigram: dict, max_tokens: int):
+        self.winners = winners
         self.prefixes = prefixes
         self.unigram = unigram
         self.max_tokens = max_tokens
+        self._segmenter = None
+
+    @property
+    def full_names(self):
+        return self.winners.keys()
+
+    def segmenter(self) -> HashtagSegmenter:
+        """The hashtag segmenter over ``unigram``, built on first use and
+        kept: a reused Python worker keeps its memo across tasks."""
+        if self._segmenter is None:
+            self._segmenter = HashtagSegmenter(self.unigram)
+        return self._segmenter
+
+    def _values(self) -> tuple:
+        return self.winners, self.prefixes, self.unigram, self.max_tokens
+
+    def __eq__(self, other):
+        return isinstance(other, MatchStruct) and self._values() == other._values()
+
+    def __reduce__(self):
+        """Sorted names, prefixes and unigram words, each joined into one
+        string; the distinct winners as columns, sorted by repr, with
+        their category and region strings as indices into one sorted
+        label list (0 is None); one winner index per name."""
+        names = sorted(self.winners)
+        words = sorted(self.unigram)
+        table = sorted(set(self.winners.values()), key=repr)
+        row = {w: i for i, w in enumerate(table)}
+        labels = sorted({x for w in table for x in w[3:] if x is not None})
+        label = {None: 0, **{x: i + 1 for i, x in enumerate(labels)}}
+        return (
+            _restore_match_struct,
+            (
+                _join(names),
+                _join(sorted(self.prefixes)),
+                _join(words),
+                array("q", [self.unigram[w] for w in words]),
+                array("q", [w[0] for w in table]),
+                array("i", [w[1] for w in table]),
+                array("i", [w[2] for w in table]),
+                _join(labels),
+                _uints(label[w[3]] for w in table),
+                _uints(label[w[4]] for w in table),
+                _uints(row[self.winners[n]] for n in names),
+                self.max_tokens,
+            ),
+        )
 
 
-def build_match_struct(norms: Iterable[str], unigram: dict[str, int]) -> MatchStruct:
-    """G7 over the variant names (duplicates allowed) and the G6 LM."""
-    full_names = frozenset(norms)
+def _restore_match_struct(
+    names, prefixes, words, freqs, geo_id, match_type, cat_prio, labels, category, region, index, max_tokens
+) -> MatchStruct:
+    label = [None, *_split(*labels)].__getitem__
+    rows = list(zip(geo_id, match_type, cat_prio, map(label, category), map(label, region)))
+    return MatchStruct(
+        dict(zip(_split(*names), map(rows.__getitem__, index))),
+        frozenset(_split(*prefixes)),
+        dict(zip(_split(*words), freqs)),
+        max_tokens,
+    )
+
+
+def build_match_struct(candidates: Iterable[tuple], unigram: dict[str, int]) -> MatchStruct:
+    """G7 over candidate rows (``CANDIDATE_COLS``, several per name) and
+    the G6 LM."""
+    winners = l2_winners(candidates)
     prefixes = set()
     max_tokens = 1
-    for n in full_names:
+    for n in winners:
         toks = n.split(" ")
         max_tokens = max(max_tokens, len(toks))
         for i in range(1, len(toks) + 1):
             prefixes.add(" ".join(toks[:i]))
-    return MatchStruct(full_names, frozenset(prefixes), unigram, max_tokens)
+    return MatchStruct(winners, frozenset(prefixes), unigram, max_tokens)
 
 
 def variants_frame(spark: SparkSession, variants: list[tuple]) -> DataFrame:

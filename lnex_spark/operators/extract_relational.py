@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lnex_spark.operators.extract import refuse_null_keys
 from lnex_spark.operators.textproc import HashtagSegmenter, build_token_stream
 
 TOKEN_SCHEMA = (
@@ -61,6 +62,7 @@ def tokenize_relational(transcripts: DataFrame, bc_unigram=None) -> DataFrame:
             HashtagSegmenter(bc_unigram.value) if bc_unigram is not None else None
         )
         for pdf in batches:
+            refuse_null_keys(pdf)
             conv, turn, seg_c, pos_c, norm_c, s_c, e_c = [], [], [], [], [], [], []
             for conv_id, turn_idx, text in zip(
                 pdf["conv_id"].values, pdf["turn_idx"].values, pdf["text"].values
@@ -130,6 +132,7 @@ def gram_rows(
         )
         starts = bc_start_tokens.value if bc_start_tokens is not None else None
         for pdf in batches:
+            refuse_null_keys(pdf)
             conv, turn, s_c, e_c, g_c = [], [], [], [], []
             for conv_id, turn_idx, text in zip(
                 pdf["conv_id"].values, pdf["turn_idx"].values, pdf["text"].values
@@ -258,7 +261,9 @@ def extract_mentions_relational(
     past the cap the gate is skipped (pure-join semantics, unchanged
     results). ``use_window_form`` switches stage A+B to the
     fully-relational window variant (slower; kept for the plan-shape
-    tests and as the zero-collect escape hatch)."""
+    tests and as the zero-collect escape hatch). A turn with a null
+    ``conv_id`` or ``turn_idx`` fails the tokenize island with a
+    ValueError naming the column, as in ``extract_mentions_df``."""
     spark = transcripts.sparkSession
     start_tokens = variants.select(
         F.split(F.col("norm"), " ").getItem(0).alias("norm")

@@ -27,7 +27,7 @@ broadcast join as apply_canonical.
 
 Like link.canonicalize, these are the reference chain: with a
 context-free L2 (see pipeline.py) the vote is the identity and the KG
-build paths link through GazetteerModel.best instead. perfbench's
+build paths link by a lookup inside the extraction UDF instead. perfbench's
 kg_incremental workload drives them.
 """
 

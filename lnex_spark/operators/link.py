@@ -1,19 +1,22 @@
-"""Entity linking (L1-L3), all relational built-ins.
+"""Entity linking (L1-L3): the per-mention reference chain, all
+relational built-ins.
+
+No build path runs this module. Every one of them links inside the
+extraction UDF (operators/extract.extract_linked_df): the broadcast
+match structure maps each name to its L2 winner, built on the driver
+under the same key as :func:`_top1_by` (gazetteer/build.l2_winners).
+That is exact because the L2 score (match_type desc, cat_priority asc,
+geo_id asc) reads only the variant row (pipeline.py decision record).
 
 Reference behavior: LNEx returns the full candidate geo-id set per
 mention (a dict lookup at match time ≙ a broadcast hash equi-join);
 scoring and canonicalization are the KG mandate on top (SURVEY.md §2A
-L2/L3). The L2 score (match_type desc, cat_priority asc, geo_id asc)
-reads only the variant row, so the KG build paths link through one
-lookup, ``best_by_norm`` (the L2 winner per norm, built once per
-gazetteer model): ``link_mentions(mentions, best)`` is one broadcast
-join, no shuffle.
-
-The per-mention reference chain — ``link_mentions`` over all variants
-(L1), ``score_candidates`` (L2), ``canonicalize`` + ``apply_canonical``
-(L3 corpus vote, the identity on context-free L2 output) — serves the
-§2A SQL-twin oracles, perfbench's traced and incremental paths, and the
-differential test that pins the lookup to it (tests/test_link_lookup.py).
+L2/L3). The chain here — ``link_mentions`` over all variants (L1),
+``score_candidates`` (L2), ``canonicalize`` + ``apply_canonical`` (L3
+corpus vote, the identity on context-free L2 output) — serves the §2A
+SQL-twin oracles, perfbench's traced and incremental paths, and the
+differential test that pins the in-UDF lookup to it
+(tests/test_link_lookup.py).
 """
 
 from __future__ import annotations
@@ -21,13 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_CANDIDATE_COLS = ("norm", "geo_id", "match_type", "cat_priority", "category", "region")
+from lnex_spark.gazetteer.build import CANDIDATE_COLS
 
 
 def _top1_by(df: DataFrame, keys: list[str]) -> DataFrame:
     """Best row per ``keys`` group, all columns kept, under the L2
-    linking policy — the one place it is written: match_type desc,
-    cat_priority asc, geo_id asc. The key is unique per candidate of a
+    linking policy: match_type desc, cat_priority asc, geo_id asc —
+    written once here and once for the driver-side lookup
+    (gazetteer/build.l2_winners), pinned together by
+    tests/test_link_lookup.py. The key is unique per candidate of a
     norm (geo_id), so the pick is deterministic."""
     cols = df.columns
     l2_key = F.struct(
@@ -41,24 +46,17 @@ def _top1_by(df: DataFrame, keys: list[str]) -> DataFrame:
     return picked.select(*[F.col(f"_best.{c}").alias(c) for c in cols])
 
 
-def best_by_norm(variants: DataFrame) -> DataFrame:
-    """The L2 winner of every normalized name: (norm, geo_id,
-    match_type, cat_priority, category, region), one row per norm."""
-    return _top1_by(variants.select(*_CANDIDATE_COLS), ["norm"])
-
-
 def link_mentions(
     mentions: DataFrame, variants: DataFrame, hint_broadcast: bool = True
 ) -> DataFrame:
-    """L1: surface form → gazetteer candidates (broadcast hash join):
-    every candidate per mention against the variant table, the linked
-    mention itself against ``best_by_norm``.
+    """L1: surface form → every gazetteer candidate of each mention
+    (broadcast hash join against the variant table).
 
     ``hint_broadcast=False`` drops the hint for the planet-scale case
     where the gazetteer exceeds broadcast limits — Catalyst then picks
     sort-merge, and results are identical
     (plan-invariance is tested in tests/test_scale_fallbacks.py)."""
-    gaz = variants.select(*_CANDIDATE_COLS)
+    gaz = variants.select(*CANDIDATE_COLS)
     if hint_broadcast:
         gaz = F.broadcast(gaz)
     return mentions.join(gaz, on="norm", how="inner")
@@ -66,7 +64,8 @@ def link_mentions(
 
 def score_candidates(linked: DataFrame) -> DataFrame:
     """L2 reference: keep the best candidate per mention span under the
-    same key as ``best_by_norm``.
+    same key as the match structure's winners
+    (gazetteer/build.l2_winners).
 
     Top-1-per-group is an AGGREGATION (min_by over a sort-key struct),
     not a ranking window: windows get no map-side partial aggregation,

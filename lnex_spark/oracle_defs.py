@@ -221,10 +221,10 @@ def t3_hashtag_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("g7_match_struct")
 def g7_match_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lnex_spark.data import fixtures as FX
-    from lnex_spark.gazetteer.build import build_match_struct, build_unigram, build_variants
+    from lnex_spark.gazetteer.build import build_match_struct, build_unigram, build_variants, candidate_rows
 
     variants = build_variants(FX.gen_gazetteer("chennai"), set(FX.gen_stopwords()))
-    st = build_match_struct((v[0] for v in variants), build_unigram(variants))
+    st = build_match_struct(candidate_rows(variants), build_unigram(variants))
     rows = [(n, len(n.split(" ")), n in st.prefixes) for n in sorted(st.full_names)]
     return spark.createDataFrame(rows, "norm string, n_tokens int, is_own_prefix boolean")
 
@@ -234,13 +234,13 @@ def g7_match_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m1_ngram_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lnex_spark.data import fixtures as FX
     from lnex_spark.data.derive import transcripts_from_documents
-    from lnex_spark.gazetteer.build import build_match_struct, build_unigram, build_variants
+    from lnex_spark.gazetteer.build import build_match_struct, build_unigram, build_variants, candidate_rows
     from lnex_spark.operators.extract import extract_mentions_df
 
     docs = _t(spark, sf_dir, "documents")
     transcripts = transcripts_from_documents(docs, "chennai")
     variants = build_variants(FX.gen_gazetteer("chennai"), set(FX.gen_stopwords()))
-    st = build_match_struct((v[0] for v in variants), build_unigram(variants, FX.gen_wordlist()))
+    st = build_match_struct(candidate_rows(variants), build_unigram(variants, FX.gen_wordlist()))
     return extract_mentions_df(transcripts, spark.sparkContext.broadcast(st))
 
 

@@ -116,7 +116,8 @@ def _oracle_struct(spark: SparkSession):
     """The broadcast match structure of the literal gazetteer."""
     from lnex_spark.gazetteer.build import build_match_struct, build_unigram
 
-    struct = build_match_struct((n for n, *_ in ORACLE_GAZ), build_unigram(ORACLE_GAZ))
+    candidates = [(n, g, mt, cp, "poi", "chennai") for n, g, mt, cp in ORACLE_GAZ]
+    struct = build_match_struct(candidates, build_unigram(ORACLE_GAZ))
     return spark.sparkContext.broadcast(struct)
 
 
@@ -286,11 +287,9 @@ def compat_extract_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate list is compared as a ','-joined string: a list cell
     makes pandas ``sort_values``-based row hashing raise."""
     from lnex_spark import compat
-    from lnex_spark.operators.link import best_by_norm
     from lnex_spark.pipeline import GazetteerModel
 
-    variants = _oracle_variants(spark)
-    model = GazetteerModel(variants, best_by_norm(variants), _oracle_struct(spark))
+    model = GazetteerModel(_oracle_variants(spark), _oracle_struct(spark))
     out = compat.extract(model, _docs_as_transcripts(spark, sf_dir))
     # rank spans per doc by char start to align with token-position rank
     w = Window.partitionBy("conv_id").orderBy(F.col("start").asc())

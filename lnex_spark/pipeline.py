@@ -2,25 +2,33 @@
 (SURVEY.md §3.3). Composes G1-G7 → X2 → (T2+T3+M1-M3) → L → K1-K2.
 
 Physical plan of record (§4.4): one shuffle on the transcript side —
-the salted repartition in front of the extraction UDF (skew). The
-extraction stage is one mapInPandas (one Arrow boundary); linking is
-one broadcast hash join of its mentions against ``GazetteerModel.best``,
-the L2 winner per normalized name (operators/link.best_by_norm), built
-once per gazetteer model. Every production path — ``extract_link``,
-``run_resumable`` → ``finalize_triples`` and the streaming
-``foreachBatch`` sink — links that way. The gazetteer build adds no
-Python boundary: G1 is a Spark scan, G2-G7 run on the driver
-(gazetteer/build.py).
+the salted repartition in front of the extraction UDF (skew) — and one
+mapInPandas (one Arrow boundary), no join. Linking is a lookup inside
+that UDF: the broadcast match structure maps every name to its L2
+winner (``MatchStruct.winners``, built on the driver with the variant
+table), as LNEx's gazetteer dict maps a name to its geo-ids at match
+time. Every production path — ``extract_link``, ``run_resumable`` →
+``finalize_triples`` and the streaming ``foreachBatch`` sink — links
+that way. The gazetteer build adds no Python boundary: G1 is a Spark
+scan, G2-G7 run on the driver (gazetteer/build.py).
 
 Decision record: L2 stays context-free. Its score (match_type desc,
 cat_priority asc, geo_id asc) reads only the variant row and the M2
 overlap resolver keeps one norm per span, so a mention's winner is a
 function of its norm and the L3 corpus vote is the identity. That is
-what makes the lookup exact (tests/test_link_lookup.py pins it to the
-per-mention L1 → L2 → L3 reference chain). A context-aware L2 — e.g.
-geo proximity to the other mentions of a conversation (SURVEY §2A L2)
-— would need the per-mention chain back, and a resumable run would
-again need a corpus-global canonicalization in ``finalize_triples``.
+what makes the lookup exact: tests/test_link_lookup.py pins it to the
+per-mention reference chain (``link_mentions`` over every candidate →
+``score_candidates`` → ``canonicalize``), which no build path runs. A
+context-aware L2 — e.g. geo proximity to the other mentions of a
+conversation (SURVEY §2A L2) — would need the per-mention chain back,
+and a resumable run would again need a corpus-global canonicalization
+in ``finalize_triples``.
+
+Decision record: the lookup is a dict inside the UDF, not a broadcast
+hash join against a cached Spark table of the winners. The join cost a
+set-up job for that table and, per build, one Spark job (5 → 4) and a
+BroadcastExchange of a 279-row relation; dropping it took a warm
+30k-turn build on local[4] from ~3.0 to ~2.4 CPU-s, mostly JVM time.
 """
 
 from __future__ import annotations
@@ -36,35 +44,32 @@ from lnex_spark.gazetteer.build import (
     build_match_struct,
     build_unigram,
     build_variants,
+    candidate_rows,
+    collect_candidates,
     collect_gazetteer,
-    collect_norms,
     scan_gazetteer,
     variants_frame,
 )
-from lnex_spark.operators.extract import extract_mentions_df
-from lnex_spark.operators.link import best_by_norm, link_mentions
+from lnex_spark.operators.extract import extract_linked_df
 from lnex_spark.operators.skew import salt_repartition
 from lnex_spark.operators.triples import mention_triples, region_triples
 
 
 @dataclass
 class GazetteerModel:
-    """Built gazetteer artifacts: the variant table, its L2 winner per
-    norm (the link lookup) and the broadcast match structure
-    (imperative side of M1; its ``unigram`` is the G6 LM)."""
+    """Built gazetteer artifacts: the variant table (every candidate of
+    every name; ``compat.extract`` and the reference chain read it) and
+    the broadcast match structure (imperative side of M1 and the link
+    lookup; its ``unigram`` is the G6 LM)."""
 
     variants: DataFrame
-    best: DataFrame
     bc_struct: object = field(repr=False, default=None)
 
 
 def _model(spark: SparkSession, variants: DataFrame, struct: MatchStruct) -> GazetteerModel:
-    """Cache the variant table and materialize the link lookup now: both
-    are gazetteer-sized and every build reads them."""
-    variants = variants.cache()
-    best = best_by_norm(variants).cache()
-    best.count()
-    return GazetteerModel(variants, best, spark.sparkContext.broadcast(struct))
+    """Cache the (gazetteer-sized) variant table and broadcast the match
+    structure."""
+    return GazetteerModel(variants.cache(), spark.sparkContext.broadcast(struct))
 
 
 def build_gazetteer(
@@ -82,7 +87,7 @@ def build_gazetteer(
     stop = {r[0] for r in stopwords_df.select("word").collect()}
     wordlist = wordlist_df.select("word", "freq").collect() if wordlist_df is not None else []
     variants = build_variants(gaz, stop, mode)
-    struct = build_match_struct((v[0] for v in variants), build_unigram(variants, wordlist))
+    struct = build_match_struct(candidate_rows(variants), build_unigram(variants, wordlist))
     return _model(spark, variants_frame(spark, variants), struct)
 
 
@@ -101,13 +106,14 @@ def save_gazetteer_model(model: GazetteerModel, path: str) -> None:
 
 def load_gazetteer_model(spark: SparkSession, path: str) -> GazetteerModel:
     """Load a saved gazetteer model and rebuild the broadcast match
-    structure (skips the scan/normalize/augment/filter stages — the
-    cache-hit path of the reference's ``initialize(cache=True)``),
-    under the build's ``MAX_NAMES`` guard."""
+    structure and its L2 winners from the variant rows (skips the
+    scan/normalize/augment/filter stages — the cache-hit path of the
+    reference's ``initialize(cache=True)``), under the build's
+    ``MAX_NAMES`` guard."""
     variants = spark.read.parquet(f"{path}/variants")
-    norms = collect_norms(variants)
+    candidates = collect_candidates(variants)
     unigram = {r[0]: int(r[1]) for r in spark.read.parquet(f"{path}/unigram").collect()}
-    return _model(spark, variants, build_match_struct(norms, unigram))
+    return _model(spark, variants, build_match_struct(candidates, unigram))
 
 
 def extract_link(
@@ -115,13 +121,14 @@ def extract_link(
     model: GazetteerModel,
     salt_partitions: int | None = None,
 ) -> DataFrame:
-    """transcripts → linked mentions (conv_id, turn_idx, start, end,
-    surface, norm, geo_id, ...): extraction, then one broadcast join
-    against ``model.best``."""
+    """transcripts → linked mentions (norm, conv_id, turn_idx, start,
+    end, surface, geo_id, match_type, cat_priority, category, region):
+    the optional salted shuffle, then the extraction UDF, which looks
+    each mention's L2 winner up in the match structure. No join."""
     t = transcripts
     if salt_partitions:
         t = salt_repartition(t, salt_partitions)
-    return link_mentions(extract_mentions_df(t, model.bc_struct), model.best)
+    return extract_linked_df(t, model.bc_struct)
 
 
 def run_pipeline(
@@ -143,16 +150,13 @@ def run_pipeline(
 def run_identity(transcripts: DataFrame, model: GazetteerModel, n_buckets: int) -> dict:
     """What a resumed run must share with the run that wrote its
     manifest: the bucket count, a fingerprint of the gazetteer (the
-    ``best`` link lookup plus the match structure) and the sorted input
-    files of ``transcripts``."""
-    best = model.best
-    n, h = best.agg(
-        F.count(F.lit(1)), F.sum(F.xxhash64(*best.columns).cast("decimal(38,0)"))
-    ).first()
+    match structure's names with their L2 winners, its unigram LM and
+    ``max_tokens``; taken on the driver, no Spark job) and the sorted
+    input files of ``transcripts``."""
     struct = model.bc_struct.value
-    digest = hashlib.sha256(f"{n}:{h}:{struct.max_tokens}".encode())
-    for name in sorted(struct.full_names):
-        digest.update(f"\n{name}".encode())
+    digest = hashlib.sha256(f"{struct.max_tokens}".encode())
+    for name, winner in sorted(struct.winners.items()):
+        digest.update(f"\n{(name, winner)!r}".encode())
     for word, freq in sorted(struct.unigram.items()):
         digest.update(f"\n{word}={freq}".encode())
     return {

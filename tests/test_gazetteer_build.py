@@ -4,14 +4,29 @@ the link, relational-matcher and compat paths read."""
 
 from __future__ import annotations
 
+import os
+import pickle
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import types as T
 
 from lnex_spark.common import cat_priority
 from lnex_spark.data import fixtures as FX
-from lnex_spark.gazetteer.build import scan_gazetteer
+from lnex_spark.gazetteer.build import (
+    build_match_struct,
+    build_unigram,
+    build_variants,
+    candidate_rows,
+    scan_gazetteer,
+)
+from lnex_spark.operators.textproc import HashtagSegmenter
 from lnex_spark.pipeline import build_gazetteer, load_gazetteer_model, save_gazetteer_model
 from tests.conftest import to_spark_gaz, to_spark_stopwords, to_spark_wordlist
+
+ROOT = Path(__file__).resolve().parent.parent
 
 # the variant table's schema before G2-G6 moved to the driver
 VARIANTS_SCHEMA_CONTRACT = T.StructType(
@@ -100,7 +115,7 @@ def test_variants_schema_contract(model):
 
 def test_save_load_roundtrip_contract(spark, model, tmp_path):
     """A saved model (parquet variants/ + unigram/) loads back to the
-    same match structure and the same link lookup."""
+    same match structure and the same winner map (the link lookup)."""
     save_gazetteer_model(model, str(tmp_path / "model"))
     loaded = load_gazetteer_model(spark, str(tmp_path / "model"))
     a, b = model.bc_struct.value, loaded.bc_struct.value
@@ -108,4 +123,49 @@ def test_save_load_roundtrip_contract(spark, model, tmp_path):
     assert b.prefixes == a.prefixes
     assert b.unigram == a.unigram
     assert b.max_tokens == a.max_tokens
-    assert sorted(map(tuple, loaded.best.collect())) == sorted(map(tuple, model.best.collect()))
+    assert b.winners == a.winners
+    assert b == a
+
+
+_PICKLE_STRUCT = """
+import pickle, sys
+from lnex_spark.data import fixtures as FX
+from lnex_spark.gazetteer.build import build_match_struct, build_unigram, build_variants, candidate_rows
+v = build_variants(FX.gen_gazetteer("chennai"), set(FX.gen_stopwords()), "hp")
+s = build_match_struct(candidate_rows(v), build_unigram(v, FX.gen_wordlist()))
+sys.stdout.buffer.write(pickle.dumps(s, protocol=pickle.HIGHEST_PROTOCOL))
+"""
+
+
+def test_match_struct_pickle_is_repeatable():
+    """The same gazetteer's match structure pickles to the same bytes
+    whatever the string hash seed, and unpickles to an equal struct."""
+    out = [
+        subprocess.run(
+            [sys.executable, "-c", _PICKLE_STRUCT],
+            capture_output=True,
+            check=True,
+            cwd=str(ROOT),
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout
+        for seed in ("1", "2")
+    ]
+    assert out[0] == out[1]
+    variants = build_variants(FX.gen_gazetteer("chennai"), set(FX.gen_stopwords()), "hp")
+    struct = build_match_struct(candidate_rows(variants), build_unigram(variants, FX.gen_wordlist()))
+    assert pickle.loads(out[0]) == struct
+    back = pickle.loads(pickle.dumps(struct))
+    assert back == struct and back.winners == struct.winners
+    assert back.full_names == struct.full_names
+    # winners stay shared between the names of one entity
+    assert len({id(w) for w in back.winners.values()}) == len(set(struct.winners.values()))
+
+
+def test_match_struct_keeps_its_segmenter_out_of_the_pickle():
+    struct = build_match_struct([("adyar river", 1, 1, 3, None, "chennai")], {"adyar": 2, "river": 1})
+    seg = struct.segmenter()
+    assert isinstance(seg, HashtagSegmenter) and struct.segmenter() is seg
+    back = pickle.loads(pickle.dumps(struct))
+    assert back._segmenter is None
+    assert back.segmenter() is not seg and back.segmenter().freq == seg.freq
+    assert back.winners == {"adyar river": (1, 1, 3, None, "chennai")}

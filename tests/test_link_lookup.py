@@ -1,10 +1,12 @@
 """The KG build paths link every mention through ONE precomputed
-``norm → best variant`` lookup (``GazetteerModel.best``). These tests
-pin that lookup to the per-mention reference chain it replaced — L1
-over every candidate, L2 best per mention, L3 corpus-wide vote — row
-for row on every column, on the fixture transcripts and on seeded
-benchmark inputs, plus the two properties that make it exact: one
-lookup row per norm, and at most one mention per span."""
+``norm → L2 winner`` lookup, built on the driver and shipped in the
+broadcast match structure (``MatchStruct.winners``); the extraction
+UDF looks it up. These tests pin that lookup to the per-mention
+reference chain it replaced — L1 over every candidate, L2 best per
+mention, L3 corpus-wide vote — row for row on every column, on the
+fixture transcripts and on seeded benchmark inputs, plus the two
+properties that make it exact: one winner per norm, and at most one
+mention per span."""
 
 from __future__ import annotations
 
@@ -17,6 +19,7 @@ from hypothesis import strategies as st
 
 from lnex_spark.data import fixtures as FX
 from lnex_spark.gazetteer.augment import name_variants, normalize_name
+from lnex_spark.gazetteer.build import l2_winners
 from lnex_spark.operators.extract import extract_mentions_df
 from lnex_spark.operators.link import (
     apply_canonical,
@@ -77,8 +80,52 @@ def test_extract_link_equals_reference_chain(model, transcripts, kwargs):
 
 
 def test_best_has_one_row_per_norm(model):
-    norms = model.variants.select("norm").distinct().count()
-    assert model.best.count() == model.best.select("norm").distinct().count() == norms
+    """The match structure holds one L2 winner for every distinct name
+    of the variant table, and nothing else."""
+    norms = {r[0] for r in model.variants.select("norm").distinct().collect()}
+    winners = model.bc_struct.value.winners
+    assert set(winners) == norms
+    assert all(len(w) == 5 for w in winners.values())
+
+
+def test_driver_winners_equal_score_candidates(spark):
+    """Hand-made candidates where one name's candidates differ by
+    match_type, another's by cat_priority only and a third's only by
+    geo_id: the driver-side winners equal ``score_candidates`` over the
+    same rows, one mention per name."""
+    rows = [
+        # by match_type: the exact row (1) beats a better cat_priority
+        ("adyar", 30, 0, 1, "poi", "chennai"),
+        ("adyar", 40, 1, 5, "river", "chennai"),
+        # by cat_priority only
+        ("guindy", 12, 1, 4, "park", "chennai"),
+        ("guindy", 11, 1, 2, "neighborhood", None),
+        ("guindy", 10, 1, 3, None, "chennai"),
+        # by geo_id only
+        ("velachery", 9, 0, 2, "lake", "chennai"),
+        ("velachery", 7, 0, 2, "road", "south"),
+        ("velachery", 8, 0, 2, "lake", "chennai"),
+    ]
+    cols = (
+        "norm string, geo_id long, match_type int, cat_priority int, "
+        "category string, region string"
+    )
+    mentions = spark.createDataFrame(
+        [("c1", i, 0, len(n), n, n) for i, n in enumerate(("adyar", "guindy", "velachery"))],
+        "conv_id string, turn_idx int, start int, end int, surface string, norm string",
+    )
+    scored = score_candidates(link_mentions(mentions, spark.createDataFrame(rows, cols)))
+    fields = ("geo_id", "match_type", "cat_priority", "category", "region")
+    want = {r["norm"]: tuple(r[f] for f in fields) for r in scored.collect()}
+    got = l2_winners(rows)
+    assert got == want
+    assert got == {
+        "adyar": (40, 1, 5, "river", "chennai"),
+        "guindy": (11, 1, 2, "neighborhood", None),
+        "velachery": (7, 0, 2, "road", "south"),
+    }
+    # in any row order
+    assert l2_winners(reversed(rows)) == got
 
 
 def _match_inputs():

@@ -1,7 +1,7 @@
 """Physical-plan audit as a regression gate.
 
 tools/explain_audit.py greps the formatted plans of the engine's key
-operators for the shapes we require at scale (flagship broadcast join,
+operators for the shapes we require at scale (a join-free flagship,
 pushdown, codegen fusion, no-Python minhash, broadcast-anti triple
 merge, ...); the closing gates run it by hand each round.  This test
 runs the same audit in a subprocess and asserts zero want/forbid
@@ -10,8 +10,9 @@ self-join, a Python island reappearing in a relational pipeline) fails
 CI instead of only the next manual audit.
 
 Boots a second Spark JVM and plans 17 operators (~30 s on 4 vCPU). It
-is the only tier-1 check of the KG plan shapes (the flagship broadcast
-join, the relational matcher), so it runs on every suite run.
+is the only tier-1 check of the KG plan shapes (the join-free flagship,
+the reference chain's broadcast join, the relational matcher), so it
+runs on every suite run.
 """
 
 from __future__ import annotations

@@ -5,9 +5,10 @@ overlaps and all."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from lnex_spark.gazetteer.build import build_match_struct
+from lnex_spark.gazetteer.build import build_match_struct, candidate_rows
 from lnex_spark.operators.extract import extract_mentions_df
 from lnex_spark.operators.extract_relational import (
     extract_mentions_relational,
@@ -87,13 +88,14 @@ def test_fuzz_differential_random_texts(spark):
         rows,
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
+    variant_rows = [(n, i + 1, 1, "poi", 13.0, 80.0, "r", 3) for i, n in enumerate(sorted(names))]
     variants = spark.createDataFrame(
-        [(n, i + 1, 1, "poi", 13.0, 80.0, "r", 3) for i, n in enumerate(sorted(names))],
+        variant_rows,
         "norm string, geo_id long, match_type int, category string, "
         "lat double, lon double, region string, cat_priority int",
     )
     unigram = {w: 5 for w in vocab}
-    bc = spark.sparkContext.broadcast(build_match_struct(names, unigram))
+    bc = spark.sparkContext.broadcast(build_match_struct(candidate_rows(variant_rows), unigram))
     bc_uni = spark.sparkContext.broadcast(bc.value.unigram)
     got_b = sorted(map(tuple, extract_mentions_df(t, bc).collect()))
     got_r = sorted(
@@ -157,3 +159,25 @@ def test_big_gazetteer_plan_never_broadcasts_gazetteer_side(spark):
     semi_nodes = [ln for ln in plan.split("\n") if "LeftSemi" in ln]
     assert semi_nodes, "expected a semi join against the gazetteer"
     assert all("Broadcast" not in ln for ln in semi_nodes), semi_nodes
+
+
+@pytest.mark.parametrize("use_window_form", [False, True], ids=["gram_rows", "window_form"])
+@pytest.mark.parametrize("key", ["conv_id", "turn_idx"])
+def test_null_subject_key_is_refused(spark, key, use_window_form):
+    """A turn with a null conv_id or turn_idx fails the relational
+    matcher with an error that names the column, as the broadcast
+    matcher's does. Unchecked, a null conv_id turn's mentions vanished
+    in the final join and a null turn_idx failed on a NaN."""
+    variants = spark.createDataFrame(
+        [("adyar", 1, 1, "river", 13.0, 80.0, "chennai", 3)],
+        "norm string, geo_id long, match_type int, category string, "
+        "lat double, lon double, region string, cat_priority int",
+    )
+    row = {"conv_id": "c1", "turn_idx": 6, "text": "flooding near adyar now"}
+    row[key] = None
+    t = spark.createDataFrame(
+        [("c1", 5, "flooding near adyar now"), tuple(row.values())],
+        "conv_id string, turn_idx int, text string",
+    )
+    with pytest.raises(Exception, match=f"null {key}"):
+        extract_mentions_relational(t, variants, use_window_form=use_window_form).collect()

@@ -16,6 +16,7 @@ from lnex_spark.gazetteer.build import (
     build_match_struct,
     build_unigram,
     build_variants,
+    candidate_rows,
     collect_gazetteer,
 )
 from lnex_spark.operators.link import link_mentions, score_candidates
@@ -84,7 +85,7 @@ def test_match_struct_guard_rejects_unscoped_gazetteer(spark, monkeypatch):
     # under the limit: builds fine
     monkeypatch.setattr(build, "MAX_NAMES", 100)
     variants = build_variants(rows, set())
-    struct = build_match_struct((v[0] for v in variants), build_unigram(variants))
+    struct = build_match_struct(candidate_rows(variants), build_unigram(variants))
     assert len(struct.full_names) == 100
 
 

@@ -53,3 +53,23 @@ def test_stream_matches_batch(spark, fixture_data, model, tmp_path):
     assert sorted(tuple(r) for r in got.select(*cols).collect()) == sorted(
         tuple(r) for r in batch.select(*cols).collect()
     )
+
+
+def test_stream_sink_equals_extract_link(spark, fixture_data, model, tmp_path):
+    """The foreachBatch sink writes, column for column, the rows that
+    ``extract_link`` returns for the same turns."""
+    from lnex_spark.pipeline import extract_link
+
+    src = str(tmp_path / "src")
+    to_spark_transcripts(spark, fixture_data["transcripts"]).write.parquet(src)
+    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(src)
+    q = stream_triples_foreach_batch(
+        stream, model, str(tmp_path / "winners"), str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(120)
+
+    got = spark.read.parquet(str(tmp_path / "winners")).drop("epoch")
+    want = extract_link(to_spark_transcripts(spark, fixture_data["transcripts"]), model)
+    assert sorted(got.columns) == sorted(want.columns)
+    rows = sorted(tuple(r) for r in want.collect())
+    assert rows and sorted(tuple(r) for r in got.select(*want.columns).collect()) == rows

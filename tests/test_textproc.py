@@ -215,10 +215,10 @@ def test_hashtag_keeps_the_longest_name():
     win, as it does for the same words without the ``#`` (chennai
     gazetteer, hp mode, built by the engine's driver-side G2-G7)."""
     from lnex_spark.data import fixtures as FX
-    from lnex_spark.gazetteer.build import build_match_struct, build_unigram, build_variants
+    from lnex_spark.gazetteer.build import build_match_struct, build_unigram, build_variants, candidate_rows
 
     variants = build_variants(FX.gen_gazetteer("chennai"), set(FX.gen_stopwords()), "hp")
-    s = build_match_struct((v[0] for v in variants), build_unigram(variants, FX.gen_wordlist()))
+    s = build_match_struct(candidate_rows(variants), build_unigram(variants, FX.gen_wordlist()))
     seg = HashtagSegmenter(s.unigram)
 
     def norms(text):
