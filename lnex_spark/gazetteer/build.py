@@ -76,16 +76,25 @@ VARIANTS_SCHEMA = T.StructType(
 # what L2 reads of a variant row: one row per (norm, geo_id) candidate
 CANDIDATE_COLS = ("norm", "geo_id", "match_type", "cat_priority", "category", "region")
 
-# Driver-OOM guard: the build is meant for a REGION-SCOPED gazetteer
-# (city ≈ 10^4-10^5 names ≈ a few MB broadcast). It bounds the rows
-# collected for the build, the variant rows augmentation holds (before
-# the noise filter) and the variant rows a load collects. Measured on
+# OOM guard: the build is meant for a REGION-SCOPED gazetteer (city ≈
+# 10^4-10^5 names ≈ a few MB broadcast). It bounds the rows collected
+# for the build, the variant rows augmentation holds (before the noise
+# filter) and the variant rows a load collects, so it is in effect a
+# bound on variant rows (each name yields at least one). Measured on
 # 4 vCPU, local[4]: 1M synthetic names (3.15M hp variant rows) peak the
-# Python driver at ~2.2 GB and build in ~108 s (G2-G5 ~70 s of it), so near
-# the limit the driver needs ~10 GB. Past the limit the caller forgot
+# Python driver at ~2.2 GB (~0.7 GB per 1M variant rows) and build in
+# ~108 s (G2-G5 ~70 s of it). Every Python worker unpickles its own copy
+# of the match structure. Its worst case is one entity per name, so no
+# two names share a winner tuple: in one process, 1M such names (an
+# 85 MB pickle) cost +527 MB resident after `pickle.load` and +720 MB
+# at its peak; 2M cost +993 MB and +1,356 MB. At 1M rows that is
+# ~0.7 GB in the driver plus 4 x ~0.72 GB in local[4]'s workers (all
+# four load at their first task), ~3.6 GB. Beside the driver JVM's
+# default heap (half of RAM, session.py) that fits a 15 GB host; 2M
+# rows (~1.4 + 4 x 1.36 GB) would not. Past the limit the caller forgot
 # the bbox scope (G1) or genuinely needs the sharded fallback (module
-# docstring). The limit is read when checked.
-MAX_NAMES = 5_000_000
+# docstring); a bigger host can raise it. The limit is read when checked.
+MAX_NAMES = 1_000_000
 
 
 def check_max_names(n: int, what: str) -> None:
@@ -93,7 +102,8 @@ def check_max_names(n: int, what: str) -> None:
         raise ValueError(
             f"{what} would exceed {MAX_NAMES}; scope the gazetteer with a "
             "bounding box (scan_gazetteer bbox) or shard by token prefix "
-            "and union per-shard mentions"
+            "and union per-shard mentions, or, on a host with the memory, "
+            "raise lnex_spark.gazetteer.build.MAX_NAMES"
         )
 
 

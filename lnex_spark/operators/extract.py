@@ -40,14 +40,16 @@ on, so it needs ``spark.python.worker.reuse`` (the default); without
 reuse each task starts a fresh worker and the helper costs one call.
 
 Where a warm 30k-turn build's CPU goes now (``extract_link`` +
-``mention_triples``, local[4], 4 vCPU, summed over the driver's process
-tree, median of builds 4-11 of one session): ~1.3 CPU-s in the JVM,
-~0.7 in the Python workers and ~0.4 in the driver's Python, in 4 Spark
-jobs. Most of the workers' share is the matcher,
+``mention_triples``, local[4], 4 vCPU, ``tools/jvm_cpu_split.py``,
+median of builds 4-30 of one session, two seeds): ~2.2 CPU-s in 4
+Spark jobs, ~1.2 of it in the driver JVM, ~0.8 in the Python workers
+and ~0.2 in the driver's Python. Most of the workers' share is the matcher,
 ``textproc.extract_mentions``: ~0.6 CPU-s for the same turns in one
-process, ~0.3-0.4 of it the tokenizer. The JVM's largest item is JIT
-compilation (~0.4 CPU-s per build, even after 17 builds), then its
-task threads (~0.27) and query planning (~0.12).
+process, ~0.3-0.4 of it the tokenizer. With the driver JVM on C1 only
+(session.py), JIT compilation is no longer the JVM's largest item
+(~0.1 CPU-s per build, from ~0.36 under tiered C2). The largest is now
+its executor task threads (~0.5, ~0.3 under tiered C2's faster code),
+then its planning, Py4J and shuffle threads (~0.45) and GC (0.1-0.2).
 """
 
 from __future__ import annotations

@@ -27,6 +27,9 @@ from tests.conftest import (
     to_spark_wordlist,
 )
 
+# the guard's error gives the bbox / shard advice and names the override
+_GUARD_ADVICE = r"bounding box.*raise lnex_spark\.gazetteer\.build\.MAX_NAMES"
+
 
 def test_l1_results_identical_under_sort_merge_fallback(spark, fixture_data):
     """link+score output is identical with broadcast joins disabled
@@ -73,14 +76,14 @@ def test_match_struct_guard_rejects_unscoped_gazetteer(spark, monkeypatch):
         F.lit("chennai").alias("region"),
     )
     monkeypatch.setattr(build, "MAX_NAMES", 10)
-    with pytest.raises(ValueError, match="bounding box"):
+    with pytest.raises(ValueError, match=_GUARD_ADVICE):
         collect_gazetteer(gaz)
     monkeypatch.setattr(build, "MAX_NAMES", 100)
     rows = list(collect_gazetteer(gaz))
     assert len(rows) == 50
     # each "nameN road" also spawns "nameN": 100 variant rows
     monkeypatch.setattr(build, "MAX_NAMES", 60)
-    with pytest.raises(ValueError, match="bounding box"):
+    with pytest.raises(ValueError, match=_GUARD_ADVICE):
         build_variants(rows, set())
     # under the limit: builds fine
     monkeypatch.setattr(build, "MAX_NAMES", 100)
@@ -100,7 +103,7 @@ def test_load_guard_rejects_oversized_model(spark, fixture_data, tmp_path, monke
     model = pipeline.build_gazetteer(spark, gaz, stop)
     pipeline.save_gazetteer_model(model, str(tmp_path / "model"))
     monkeypatch.setattr(build, "MAX_NAMES", 10)
-    with pytest.raises(ValueError, match="bounding box"):
+    with pytest.raises(ValueError, match=_GUARD_ADVICE):
         pipeline.load_gazetteer_model(spark, str(tmp_path / "model"))
-    with pytest.raises(ValueError, match="bounding box"):
+    with pytest.raises(ValueError, match=_GUARD_ADVICE):
         pipeline.build_gazetteer(spark, gaz, stop)

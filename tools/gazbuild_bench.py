@@ -59,9 +59,13 @@ def main() -> int:
     mode = sys.argv[2] if len(sys.argv) > 2 else "hp"
 
     from lnex_spark.data import fixtures as FX
+    from lnex_spark.gazetteer import build
     from lnex_spark.pipeline import build_gazetteer
     from lnex_spark.session import get_spark
 
+    # measures driver cost up to and past the default guard on purpose
+    # (hp makes ~3.15 variant rows per name)
+    build.MAX_NAMES = max(build.MAX_NAMES, 4 * n)
     with tempfile.TemporaryDirectory() as tmp:
         path = f"{tmp}/gaz.parquet"
         write_synth_gazetteer(n, path)
