@@ -1,8 +1,7 @@
 """Oracle pairs for the library operators outside the KG path: exact,
 MinHash, LSH and SimHash dedup (``operators.dedup``); token counts,
 fingerprints, language id and quality features
-(``operators.textquality``); media frame plans and decoded features
-(``operators.multimodal``); transitive closure and its rollup
+(``operators.textquality``); transitive closure and its rollup
 (``operators.graph``); and the assert/retract triple merge
 (``operators.incremental.merge_triples``).
 
@@ -297,81 +296,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lnex_spark.operators.textquality import quality_features
 
     return quality_features(_t(spark, sf_dir, "documents"))
-
-
-@register(
-    "multimodal_frame_plan",
-    """
-    SELECT doc_id AS media_id, CAST(r AS INT) AS frame_no, CAST(r * 1000 AS BIGINT) AS ts_ms
-    FROM documents, LATERAL (SELECT unnest(range(0, (doc_id % 300) + 1)) AS r)
-    WHERE doc_id % 3 = 2
-    """,
-)
-def multimodal_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lnex_spark.operators.multimodal import frame_sample_plan, synthesize_media
-
-    docs = _t(spark, sf_dir, "documents")
-    return frame_sample_plan(synthesize_media(docs), every_ms=1000).select(
-        "media_id", F.col("frame_no").cast("int").alias("frame_no"), F.col("ts_ms").cast("long").alias("ts_ms")
-    )
-
-
-@register(
-    "multimodal_features",
-    """
-    WITH m AS (
-      SELECT doc_id AS media_id,
-             CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-             text,
-             octet_length(encode(text)) AS n_bytes,
-             md5(text) AS payload_md5
-      FROM documents
-    ),
-    chars AS (
-      SELECT media_id, CAST(i % 8 AS INT) AS feat_idx,
-             ord(substr(text, CAST(i AS INT) + 1, 1)) AS cp
-      FROM m, LATERAL (SELECT unnest(range(0, length(text))) AS i)
-    ),
-    stride AS (
-      SELECT media_id, feat_idx,
-             CAST(floor(avg(cp) * 1000000.0) AS BIGINT) AS feat_scaled
-      FROM chars GROUP BY 1, 2
-    ),
-    grid AS (
-      SELECT media_id, kind, n_bytes, payload_md5, CAST(j AS INT) AS feat_idx
-      FROM m, LATERAL (SELECT unnest(range(0, 8)) AS j)
-    )
-    SELECT g.media_id, g.kind, g.n_bytes, g.payload_md5, g.feat_idx,
-           coalesce(s.feat_scaled, 0) AS feat_scaled
-    FROM grid g LEFT JOIN stride s USING (media_id, feat_idx)
-    """,
-)
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow decode plumbing, value-checked end-to-end: the stub
-    features are strided code-point means, which the DuckDB oracle
-    recomputes in SQL (avg(ord) by position % 8).  The array column is
-    posexploded to scalar rows — a pandas-based canonicalizer cannot
-    sort list cells (it crashed on them in round 1) — and the double is
-    floor-scaled to a BIGINT so float formatting can't diverge (both
-    engines floor the bit-identical double)."""
-    from lnex_spark.operators.multimodal import decode_features, synthesize_media
-
-    docs = _t(spark, sf_dir, "documents")
-    feats = decode_features(synthesize_media(docs))
-    return feats.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        "payload_md5",
-        F.posexplode("feature").alias("feat_idx", "feat_value"),
-    ).select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        "payload_md5",
-        "feat_idx",
-        F.floor(F.col("feat_value") * 1000000.0).cast("long").alias("feat_scaled"),
-    )
 
 
 @register("dedup_lsh_pairs_sql", LSH_PAIRS_SQL)

@@ -34,8 +34,8 @@ def register(name: str, sql: str | None = None):
 # Registry modules in registration order.  The two KG modules come
 # first, so the SURVEY.md §2A ops are the first keys of queries() and
 # any 50-key prefix sample holds all of them; the rest check the
-# library operators (dedup, curation, graph, multimodal, ...).  An op
-# stays only while it runs code it checks.
+# library operators (dedup, curation, graph, ...).  An op stays only
+# while it runs code it checks.
 MODULES: tuple[str, ...] = (
     "oracle_defs", "oracle_defs2", "oracle_defs3", "oracle_defs4",
     "oracle_defs5", "oracle_defs7", "oracle_defs12", "oracle_defs14",
@@ -44,7 +44,7 @@ MODULES: tuple[str, ...] = (
     "oracle_defs31", "oracle_defs32", "oracle_defs33", "oracle_defs35",
     "oracle_defs38", "oracle_defs39", "oracle_defs44", "oracle_defs45",
     "oracle_defs46", "oracle_defs79", "oracle_defs147", "oracle_defs223",
-    "oracle_defs224", "oracle_defs_library", "oracle_defs_media",
+    "oracle_defs224", "oracle_defs_library",
 )
 
 

@@ -66,11 +66,13 @@ for the whole process at sf0.01 and 36.0-42.0 -> 19.8-23.0 at sf0.1,
 wall level (3 runs each). The tier-1 test suite is not: its ~280
 tests share one session, and the planning-heavy ones (the window audit
 plans every op) keep Spark's code hot; one run each took 513 -> 612 s
-wall and 1250 -> 1303 CPU-s, the window audit 45 -> 68 s. A long-lived
-local streaming session past a few dozen batches, or one that repeats
-builds of 300k+ turns, is on the tiered side. ``get_spark`` cannot see
-how long a session will live, and the JIT mode is fixed when the JVM
-starts, so the caller chooses: such a session should pass
+wall and 1250 -> 1303 CPU-s, the window audit 45 -> 68 s, so its
+shared session (``tests/conftest.py``) passes the tiered override
+below. A long-lived local streaming session past a few dozen batches,
+or one that repeats builds of 300k+ turns, is on the tiered side.
+``get_spark`` cannot see how long a session will live, and the JIT
+mode is fixed when the JVM starts, so the caller chooses: such a
+session should pass
 ``extra_conf={"spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=4"}``
 (``extra_conf`` overrides every default) or launch with
 ``spark-submit``. Where it does not apply: a JVM a launcher started
@@ -162,6 +164,39 @@ def _launcher_conf():
     return SparkConf()
 
 
+def _session_conf(
+    master: str,
+    launcher,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf ``get_spark`` applies for ``master``, given the
+    properties a launcher set (``launcher.get(key)``, None if unset).
+
+    The shuffle-partition default is the launcher's setting, else
+    follows the master's task slots. The driver heap and JIT policy
+    are set only for a local master (Spark's local grammar, not any
+    URL that contains "local") that no launcher set, i.e. when this
+    process starts a JVM that hosts every task. ``extra_conf``
+    overrides any default.
+    """
+    conf = dict(_BASE_CONF)
+    slots = _master_parallelism(master)
+    if shuffle_partitions is None:
+        shuffle_partitions = launcher.get("spark.sql.shuffle.partitions")
+    if shuffle_partitions is None:
+        # match parallelism, not the 200 default: at local[N] a 200-way
+        # shuffle just fragments the Arrow batches the matcher feeds on.
+        shuffle_partitions = 32 if slots is None else max(slots, 4)
+    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if slots is not None and launcher.get("spark.master") is None:
+        conf["spark.driver.memory"] = _default_driver_memory()
+        conf["spark.driver.defaultJavaOptions"] = _LOCAL_DRIVER_JIT
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "lnex_spark",
@@ -173,33 +208,15 @@ def get_spark(
     master=None keeps the launcher's master (spark-submit ``--master``,
     so a job runs on whatever cluster it was submitted to) and falls
     back to ``local[$SPARK_GRAFT_CPUS or *]`` only when none is set.
-    The shuffle-partition default is the launcher's setting, else
-    follows the master in use; the local driver heap and JIT policy
-    are set only when no launcher set a master, i.e. when this call
-    starts the JVM. ``extra_conf`` overrides any default, including
-    ``spark.driver.defaultJavaOptions``.
+    The defaults are ``_session_conf``'s; ``extra_conf`` overrides any
+    of them, including ``spark.driver.defaultJavaOptions``.
     """
     launcher = _launcher_conf()
-    launched = launcher.get("spark.master")
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = launched or (f"local[{cpus}]" if cpus else "local[*]")
+        master = launcher.get("spark.master") or (f"local[{cpus}]" if cpus else "local[*]")
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_BASE_CONF)
-    if shuffle_partitions is None:
-        shuffle_partitions = launcher.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is None:
-        # match parallelism, not the 200 default: at local[N] a 200-way
-        # shuffle just fragments the Arrow batches the matcher feeds on.
-        slots = _master_parallelism(master)
-        shuffle_partitions = 32 if slots is None else max(slots, 4)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if "local" in master and launched is None:
-        conf["spark.driver.memory"] = _default_driver_memory()
-        conf["spark.driver.defaultJavaOptions"] = _LOCAL_DRIVER_JIT
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in _session_conf(master, launcher, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

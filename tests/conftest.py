@@ -12,7 +12,14 @@ from lnex_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[4]", app_name="lnex_spark_tests", shuffle_partitions=4)
+    # ~260 tests share this one long-lived JVM, which is on the tiered
+    # side of the session.py JIT trade-off: opt back into tiered C2
+    s = get_spark(
+        master="local[4]",
+        app_name="lnex_spark_tests",
+        shuffle_partitions=4,
+        extra_conf={"spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=4"},
+    )
     yield s
 
 

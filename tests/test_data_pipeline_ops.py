@@ -1,11 +1,11 @@
-"""Dedup / text-quality / multimodal operator tests."""
+"""Dedup and text-quality operator tests."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from lnex_spark.operators import dedup, multimodal, textquality
+from lnex_spark.operators import dedup, textquality
 
 
 @pytest.fixture(scope="module")
@@ -74,46 +74,6 @@ def test_quality_score_bounds(docs):
     for r in rows:
         assert 0.0 <= r["quality_score"] <= 1.0
         assert r["punct_ratio"] >= 0.0 and r["stop_ratio"] >= 0.0
-
-
-def test_multimodal_plumbing(docs):
-    media = multimodal.synthesize_media(docs)
-    feats = multimodal.decode_features(media).collect()
-    assert len(feats) == docs.count()
-    by_id = {r["media_id"]: r for r in feats}
-    assert by_id[4]["n_bytes"] == 0 and by_id[4]["feature"] == [0.0] * 8
-    assert by_id[0]["n_bytes"] == len("the quick brown fox jumps over the lazy dog")
-    assert all(len(r["feature"]) == 8 for r in feats)
-    # deterministic across invocations
-    feats2 = multimodal.decode_features(media).collect()
-    assert sorted(map(str, feats)) == sorted(map(str, feats2))
-
-
-def test_multimodal_real_decoder_stubbed(docs):
-    media = multimodal.synthesize_media(docs).limit(1)
-    with pytest.raises(Exception):  # NotImplementedError inside the worker
-        multimodal.decode_features(media, use_real_decoder=True).collect()
-
-
-def test_frame_sample_plan(docs):
-    media = multimodal.synthesize_media(docs)
-    plan = multimodal.frame_sample_plan(media, every_ms=1000)
-    rows = plan.collect()
-    assert all(r["ts_ms"] == r["frame_no"] * 1000 for r in rows)
-    vids = {r["media_id"] for r in rows}
-    assert vids == {2, 5}  # doc_id % 3 == 2
-
-
-def test_frame_plan_short_clip_yields_no_frames(spark):
-    """A clip shorter than the sampling interval produces zero frames,
-    not a descending-sequence frame -1."""
-    media = spark.createDataFrame(
-        [(1, "video", None, (16, 16, 16000, 500)), (2, "video", None, (16, 16, 16000, 2500))],
-        "media_id long, kind string, payload binary, "
-        "meta struct<width:int,height:int,sample_rate:int,duration_ms:int>",
-    )
-    got = {(r["media_id"], r["frame_no"]) for r in multimodal.frame_sample_plan(media, 1000).collect()}
-    assert got == {(2, 0), (2, 1)}
 
 
 def test_prefix_filter_matches_bruteforce(docs):

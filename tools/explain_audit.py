@@ -78,9 +78,6 @@ CHECKS = {
         want=["HashAggregate", r"partial_sum"],
         forbid=["EvalPython", "MapInPandas", "Join"],
     ),
-    # r2 real media decode: synthesize + decode are chained MapInPandas
-    # islands over the same scan — ZERO exchanges end-to-end
-    "media": dict(want=["MapInPandas"], forbid=["Exchange", "Join"]),
     # r2 triple MERGE: the batch must broadcast into a left-anti hash
     # join — the big triple table is never shuffled or sort-merged
     "kg_merge": dict(
@@ -193,11 +190,9 @@ def main() -> int:
     plans["pack"] = grab(pack_sequences(docs))
 
     from lnex_spark.operators.dedup import minhash_signatures, simhash_signatures
-    from lnex_spark.operators.multimodal import image_stats, synthesize_real_media
 
     plans["minhash"] = grab(minhash_signatures(docs, k=8, n=3))
     plans["simhash"] = grab(simhash_signatures(docs))
-    plans["media"] = grab(image_stats(synthesize_real_media(docs)))
 
     from lnex_spark.operators.incremental import merge_triples
 
