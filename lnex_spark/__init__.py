@@ -21,7 +21,7 @@ Layout:
                  relational), link, canonicalize, triples, geo math,
                  skew salting, lineage, incremental maintenance, eval;
                  plus library operators kept for their unit tests
-                 (dedup, curation, graph, the PPM codec, ...)
+                 (dedup, textquality, graph, ...)
     sources/     table-format seam (parquet locally, Iceberg on
                  cluster); JSONL sink and synthetic-transcript sources
     streaming/   Structured Streaming wrapper for incremental extraction

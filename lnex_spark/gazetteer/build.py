@@ -160,7 +160,11 @@ def build_variants(gazetteer: Iterable[Mapping], stopwords: Collection[str], mod
     variant that collides with an exact name of the same entity keeps
     the exact row only; G5 ``augment.is_noise_name`` plus the stopword
     list. The guard bounds the variant rows held while augmenting.
+    ``mode`` is ``"hp"`` or ``"hr"``; any other value is refused, since
+    ``name_variants`` would read it as ``"hp"``.
     """
+    if mode not in ("hp", "hr"):
+        raise ValueError(f"augmentation mode must be 'hp' or 'hr', got {mode!r}")
     # (norm, geo_id) -> (match_type, the entity's attribute tuple, shared
     # by all its variants; the first row of a geo_id supplies it)
     rows: dict[tuple[str, int], tuple[int, tuple]] = {}

@@ -54,8 +54,10 @@ def merge_votes(existing: DataFrame | None, new: DataFrame) -> DataFrame:
 
 
 def canonical_from_votes(votes: DataFrame) -> DataFrame:
-    """Same argmax + tie-break as link.canonicalize (highest votes,
-    smallest geo_id), but over the maintained table."""
+    """The L3 argmax per norm over a vote table: highest votes,
+    smallest geo_id on ties (max_by over (votes, -geo_id)). The one
+    definition of the tie-break; link.canonicalize runs it over a
+    single batch's votes."""
     return votes.groupBy("norm").agg(
         F.max_by(
             "geo_id", F.struct(F.col("votes").alias("v"), (-F.col("geo_id")).alias("g"))

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lnex_spark.gazetteer.build import CANDIDATE_COLS
+from lnex_spark.operators.incremental import batch_votes, canonical_from_votes
 
 
 def _top1_by(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -80,16 +81,11 @@ def canonicalize(winners: DataFrame) -> DataFrame:
     """L3 reference: one geo entity per normalized surface form,
     corpus-wide majority vote over L2 winners (ties → smaller geo_id).
 
-    Two hash aggregations, both partial+final (same agg-over-window
-    rationale as score_candidates): vote counting keyed by
-    (norm, geo_id), then max_by over (votes, -geo_id) keyed by norm —
-    highest vote count, smallest geo_id on ties."""
-    votes = winners.groupBy("norm", "geo_id").agg(F.count("*").alias("votes"))
-    return votes.groupBy("norm").agg(
-        F.max_by(
-            "geo_id", F.struct(F.col("votes").alias("v"), (-F.col("geo_id")).alias("g"))
-        ).alias("canonical_geo_id")
-    )
+    The vote over one batch of winners (incremental.batch_votes, then
+    incremental.canonical_from_votes, which holds the tie-break): two
+    hash aggregations, both partial+final (same agg-over-window
+    rationale as score_candidates)."""
+    return canonical_from_votes(batch_votes(winners))
 
 
 def apply_canonical(winners: DataFrame, canon: DataFrame) -> DataFrame:

@@ -9,7 +9,7 @@ partition) so a resumed job converges to the same table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 PRED_MENTIONS = "mentionsLocation"
@@ -40,6 +40,12 @@ def region_triples(gazetteer: DataFrame) -> DataFrame:
     )
 
 
+def _hash_bucket(id_col: Column, salt: str) -> Column:
+    """Deterministic bucket in [0, 65536) from md5(salt # id)."""
+    h = F.md5(F.concat(F.lit(salt + "#"), id_col.cast("string")))
+    return F.conv(F.substring(h, 1, 4), 16, 10).cast("long")
+
+
 def negative_samples(
     positives: DataFrame,
     vocab: DataFrame,
@@ -51,9 +57,8 @@ def negative_samples(
     training: per positive triple, one negative whose object is drawn
     from the entity vocabulary by an md5 gate over (subj, obj) — never
     engine RNG, so the training set is stable across engines, reruns,
-    repartitioning, and cluster sizes (same auditability property as
-    curation.split_assign).  Collision with the true object advances
-    to the next vocabulary slot, so neg_obj != pos_obj always.
+    repartitioning, and cluster sizes.  Collision with the true object
+    advances to the next vocabulary slot, so neg_obj != pos_obj always.
 
     The vocabulary gets a dense index from a distributed global rank
     (operators/scalable_windows.attach_rank — range-partitioned, no
@@ -61,7 +66,6 @@ def negative_samples(
     size; converted in the round-4 global-window audit); both index
     joins are broadcast.  Returns (subj, pos_obj, neg_obj).
     """
-    from lnex_spark.operators.curation import hash_bucket
     from lnex_spark.operators.scalable_windows import attach_rank
 
     v = (
@@ -73,7 +77,7 @@ def negative_samples(
         .withColumn("idx", F.col("idx") - 1)
     )
     nn = v.agg(F.count("*").alias("n"))
-    h = hash_bucket(F.concat_ws("|", F.col("subj"), F.col("pos_obj")), salt)
+    h = _hash_bucket(F.concat_ws("|", F.col("subj"), F.col("pos_obj")), salt)
     p = (
         positives.select(
             F.col(subj_col).alias("subj"), F.col(obj_col).cast("long").alias("pos_obj")

@@ -1,8 +1,5 @@
-"""Oracle pairs for two library operators: per-stratum deterministic
-sampling (``operators.curation.hash_bucket``: en 50%, de 20%, the rest
-10%, gated on an md5 bucket both engines derive the same way) and
-3-round synchronous label propagation over the hour-bucket
-co-occurrence graph (``operators.graph.label_propagation``).
+"""Oracle pair for 3-round synchronous label propagation over the
+hour-bucket co-occurrence graph (``operators.graph.label_propagation``).
 """
 
 from __future__ import annotations
@@ -15,36 +12,6 @@ from lnex_spark.oracles import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --- stratified deterministic sampling ----------------------------------
-@register(
-    "stratified_sample_docs",
-    """
-    WITH gated AS (
-      SELECT doc_id, lang,
-             CAST(('0x' || substr(md5('strat-v1#' || CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) AS bucket
-      FROM documents
-    )
-    SELECT doc_id, lang FROM gated
-    WHERE bucket < CASE lang WHEN 'en' THEN 32768 WHEN 'de' THEN 13107 ELSE 6554 END
-    """,
-)
-def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-stratum deterministic sampling (en 50%, de 20%, rest 10%):
-    the language-rebalancing subset step of corpus assembly, as md5
-    gating so the sample is reproducible across engines and reruns —
-    ``df.sampleBy`` is engine-private RNG and is not."""
-    from lnex_spark.operators.curation import hash_bucket
-
-    d = _t(spark, sf_dir, "documents")
-    bucket = hash_bucket(F.col("doc_id"), "strat-v1")
-    rate = (
-        F.when(F.col("lang") == "en", 32768)
-        .when(F.col("lang") == "de", 13107)
-        .otherwise(6554)
-    )
-    return d.filter(bucket < rate).select("doc_id", "lang")
 
 
 def _lpa_round(prev: str, cur: str) -> str:

@@ -1,5 +1,4 @@
-"""Twenty-fourth oracle-registry module: k-core decomposition and
-deterministic weighted sampling.
+"""Twenty-fourth oracle-registry module: k-core decomposition.
 
   * kcore_events — fixed-round k-core peeling of the hour-bucket
     co-occurrence graph (same edge construction as tri_count /
@@ -14,21 +13,10 @@ deterministic weighted sampling.
     (per round: one hash agg + two left-semi joins reusing the edge
     partitioning); DuckDB side an independent fully-unrolled
     re-derivation (same pattern as the lpa/pagerank oracles).
-  * weighted_sample_docs — Efraimidis-Spirakis weighted sampling
-    without replacement: skey = -ln(u)/w with u an md5-gated uniform,
-    k smallest keys win (operators/curation.weighted_sample).
-    Inclusion odds proportional to document length, yet a pure
-    function of content — reproducible across engines, reruns, and
-    partitionings, unlike df.sample's engine-private RNG.  The global
-    top-k plans as TakeOrderedAndProject (per-partition heaps, no
-    full sort).  Key values are rounded only in the OUTPUT; selection
-    ranks the raw doubles, identical on both engines because u is
-    lattice-quantized and weights are integers (exact-equality ties
-    break on doc_id).
 
-Reference parity note: LNEx has neither graph analytics nor corpus
-sampling (single-tweet pipeline — SURVEY.md §0); both ops serve the
-KG/training-data deployment of its semantics.
+Reference parity note: LNEx has no graph analytics (single-tweet
+pipeline — SURVEY.md §0); the op serves the KG deployment of its
+semantics.
 """
 
 from __future__ import annotations
@@ -108,31 +96,3 @@ def kcore_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return k_core(edges, k=int(k), rounds=3)
 
-
-# --- deterministic weighted sampling ---------------------------------------
-_WSAMP_SQL = """
-    WITH g AS (
-      SELECT doc_id, n_chars,
-             CAST(('0x' || substr(md5('wsamp-v1#' || CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) AS bucket
-      FROM documents
-    ),
-    keyed AS (
-      SELECT doc_id,
-             -ln((bucket + 1) / 65537.0) / (n_chars + 1.0) AS skey
-      FROM g
-    )
-    SELECT doc_id, round(skey, 10) AS skey
-    FROM keyed ORDER BY skey ASC, doc_id ASC LIMIT 200
-"""
-
-
-@register("weighted_sample_docs", _WSAMP_SQL)
-def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lnex_spark.operators.curation import weighted_sample
-
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "w", F.col("n_chars") + 1.0
-    )
-    return weighted_sample(d, "w", k=200).select(
-        "doc_id", F.round("skey", 10).alias("skey")
-    )

@@ -3,7 +3,7 @@
 Every SURVEY.md §2A operator and each library operator kept in
 ``operators/`` and ``sources/`` gets a (Spark callable, ANSI-SQL
 string) pair exercised on the sf0.01 parquet tables (region nation
-customer supplier part orders lineitem events documents embeddings).
+customer supplier part orders lineitem events documents).
 Column names/aliases must match exactly between the two — the
 comparison hashes values after sorting columns by name.
 
@@ -34,17 +34,16 @@ def register(name: str, sql: str | None = None):
 # Registry modules in registration order.  The two KG modules come
 # first, so the SURVEY.md §2A ops are the first keys of queries() and
 # any 50-key prefix sample holds all of them; the rest check the
-# library operators (dedup, curation, graph, ...).  An op stays only
+# library operators (dedup, graph, textquality, ...).  An op stays only
 # while it runs code it checks.
 MODULES: tuple[str, ...] = (
     "oracle_defs", "oracle_defs2", "oracle_defs3", "oracle_defs4",
-    "oracle_defs5", "oracle_defs7", "oracle_defs12", "oracle_defs14",
-    "oracle_defs23", "oracle_defs24", "oracle_defs25", "oracle_defs26",
-    "oracle_defs27", "oracle_defs28", "oracle_defs29", "oracle_defs30",
-    "oracle_defs31", "oracle_defs32", "oracle_defs33", "oracle_defs35",
-    "oracle_defs38", "oracle_defs39", "oracle_defs44", "oracle_defs45",
-    "oracle_defs46", "oracle_defs79", "oracle_defs147", "oracle_defs223",
-    "oracle_defs224", "oracle_defs_library",
+    "oracle_defs12", "oracle_defs14", "oracle_defs23", "oracle_defs24",
+    "oracle_defs25", "oracle_defs26", "oracle_defs27", "oracle_defs28",
+    "oracle_defs29", "oracle_defs31", "oracle_defs32", "oracle_defs33",
+    "oracle_defs35", "oracle_defs38", "oracle_defs39", "oracle_defs44",
+    "oracle_defs46", "oracle_defs147", "oracle_defs223",
+    "oracle_defs_library",
 )
 
 

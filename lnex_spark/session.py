@@ -60,10 +60,11 @@ because tiered compiles on otherwise idle cores.
 Which side a local process is on: perfbench's two workloads (2-3 warm
 operations, then 4-7 measured) are on the C1 side; ``turns_per_cpu_s``
 rose 253 -> 417 on kg_incremental and 9531 -> 11860 on kg_batch
-(medians of 12 and 10 interleaved pairs, every pair higher). So is a
-one-pass local ``jobs/run_curation.py``: 34.5-37.4 -> 18.6-21.2 CPU-s
-for the whole process at sf0.01 and 36.0-42.0 -> 19.8-23.0 at sf0.1,
-wall level (3 runs each). The tier-1 test suite is not: its ~280
+(medians of 12 and 10 interleaved pairs, every pair higher). So was
+a one-pass local run of the training-data curation job, since deleted
+with its library: 34.5-37.4 -> 18.6-21.2 CPU-s for the whole process
+at sf0.01 and 36.0-42.0 -> 19.8-23.0 at sf0.1, wall level (3 runs
+each). The tier-1 test suite is not: its ~280
 tests share one session, and the planning-heavy ones (the window audit
 plans every op) keep Spark's code hot; one run each took 513 -> 612 s
 wall and 1250 -> 1303 CPU-s, the window audit 45 -> 68 s, so its

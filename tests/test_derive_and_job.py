@@ -111,28 +111,3 @@ def test_spark_submit_pyfiles_launch(tmp_path):
     assert report["master"] == "local[2]"  # the launcher's master, not local[*]
     assert (out / "mention_triples").is_dir()
 
-
-def test_run_curation_job_smoke(tmp_path, capsys):
-    """The curation spark-submit entrypoint end-to-end, including the
-    incremental fingerprint state: a second run of the SAME batch must
-    classify every conversation dup_of_state and emit nothing."""
-    from jobs.run_curation import main
-
-    out = str(tmp_path / "curated")
-    state = str(tmp_path / "fp_state")
-    argv = [
-        "--transcripts", "/root/testdata/sf0.001/documents.parquet",
-        "--derive-from-documents",
-        "--out", out,
-        "--state", state,
-        "--emit-pairs",
-    ]
-    main(argv)
-    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert first["novel_conversations"] == first["batch_conversations"] > 0
-    assert first["packed_sequences"] > 0 and first["training_pairs"] > 0
-
-    main(argv)  # identical batch: all duplicates of state
-    second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert second["novel_conversations"] == 0
-    assert second["packed_sequences"] == 0 and second["training_pairs"] == 0

@@ -53,6 +53,21 @@ def model(spark, fixture_data):
     )
 
 
+@pytest.mark.parametrize("mode", ["HR", "hx", ""])
+def test_unknown_augmentation_mode_is_refused(mode):
+    """name_variants reads any mode but "hr" as "hp", so build_variants
+    refuses the rest; every build path (build_gazetteer, both compat
+    initializers) goes through it."""
+    gaz = [
+        {
+            "geo_id": 1, "name": "t nagar bus terminus", "alt_names": None,
+            "category": "transit", "lat": 13.0, "lon": 80.2, "region": "chennai",
+        }
+    ]
+    with pytest.raises(ValueError, match="'hp' or 'hr'"):
+        build_variants(gaz, set(), mode)
+
+
 def test_bbox_scan_filters(spark, fixture_data):
     gaz = to_spark_gaz(spark, fixture_data["gaz"])
     inside = scan_gazetteer(spark, gaz, FX.EVENTS["chennai"]["bbox"]).count()

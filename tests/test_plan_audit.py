@@ -9,7 +9,7 @@ failures, so a plan-shape regression (a lost broadcast, a reintroduced
 self-join, a Python island reappearing in a relational pipeline) fails
 CI instead of only the next manual audit.
 
-Boots a second Spark JVM and plans 16 operators (~30 s on 4 vCPU). It
+Boots a second Spark JVM and plans 14 operators (~25 s on 4 vCPU). It
 is the only tier-1 check of the KG plan shapes (the join-free flagship,
 the reference chain's broadcast join, the relational matcher), so it
 runs on every suite run.

@@ -104,23 +104,6 @@ def test_k_core_peeling(spark):
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
-def test_weighted_sample_properties(spark):
-    from lnex_spark.operators.curation import weighted_sample
-
-    df = spark.range(0, 2000).select(
-        F.col("id").alias("doc_id"),
-        (F.when(F.col("id") < 100, 1000.0).otherwise(1.0)).alias("w"),
-    )
-    out = weighted_sample(df, "w", k=150).collect()
-    assert len(out) == 150
-    # heavy-weight rows (ids < 100, weight 1000x) must dominate the sample
-    heavy = sum(1 for r in out if r["doc_id"] < 100)
-    assert heavy >= 90
-    # deterministic under repartitioning
-    out2 = weighted_sample(df.repartition(13), "w", k=150).collect()
-    assert sorted(r["doc_id"] for r in out) == sorted(r["doc_id"] for r in out2)
-
-
 def test_link_prediction_scores(spark):
     """Star around node 2: all non-adjacent leaf pairs share exactly
     neighbor 2 (deg 3), so cn=1 and aa=1/ln(3) for each."""

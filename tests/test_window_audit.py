@@ -10,8 +10,7 @@ any raw / raw-agg finding.
 It also asserts that every op still plans: an op that stops planning
 drops out of the audit's coverage.
 
-Planning all 96 ops takes ~50 s (47-54 s on 4 vCPU), so it runs in
-tier-1.
+Planning all 83 ops takes ~41 s on 4 vCPU, so it runs in tier-1.
 """
 
 from __future__ import annotations

@@ -45,7 +45,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "region nation customer supplier part orders lineitem events documents".split()
 
 _UNSORTABLE = (list, tuple, dict, set, np.ndarray)
 

@@ -50,18 +50,12 @@ CHECKS = {
         want=["BroadcastHashJoin", r"(Hash|Sort|ObjectHash)Aggregate", r"partial_min"],
         forbid=["SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin"],
     ),
-    # weighted sampling: global top-k must plan as TakeOrderedAndProject
-    # (per-partition heaps), never a full global Sort
-    "wsample": dict(want=["TakeOrderedAndProject"]),
     # prefix-filtered set-similarity: equi-join on prefix shingles —
     # never a cartesian/nested-loop pair enumeration
     "setsim": dict(
         want=["Join", "Generate"],
         forbid=["CartesianProduct", "BroadcastNestedLoopJoin"],
     ),
-    # sharded greedy packing: ONE grouped-map Python island on the
-    # shard key; the sequential loop never leaks into a driver collect
-    "pack": dict(want=["FlatMapGroupsInPandas", "Exchange"]),
     # r2 minhash rewrite: ONE groupBy(doc_id) with k min-columns —
     # map-side partial_min, no join, and NO Python anywhere (tokenize,
     # shingle, hash, min are all built-ins). min(string) buffers aren't
@@ -164,7 +158,6 @@ def main() -> int:
 
     plans["m1rel"] = grab(extract_mentions_relational(t, model.variants))
 
-    from lnex_spark.operators.curation import weighted_sample
     from lnex_spark.operators.geomath import grid_nearest_join
 
     cust = spark.read.parquet(f"{sf}/customer.parquet")
@@ -179,15 +172,10 @@ def main() -> int:
         (F.floor(F.col("n_nationkey") / 5) * 8.0 + 4.0).alias("lon"),
     )
     plans["spatial_knn"] = grab(grid_nearest_join(points, sites))
-    plans["wsample"] = grab(
-        weighted_sample(docs.withColumn("w", F.col("n_chars") + 1.0), "w", k=200)
-    )
 
-    from lnex_spark.operators.curation import pack_sequences
     from lnex_spark.operators.dedup import prefix_filter_pairs
 
     plans["setsim"] = grab(prefix_filter_pairs(docs, n=3, threshold=0.5))
-    plans["pack"] = grab(pack_sequences(docs))
 
     from lnex_spark.operators.dedup import minhash_signatures, simhash_signatures
 
